@@ -28,6 +28,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on — a
+    fixed fallback oversubscribes small boxes (32 task threads on 4 vCPUs)."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "sample-deepbook-margin-spark",
     master: str | None = None,
@@ -36,11 +42,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
+    ``master`` defaults to ``local[<local_cpus()>]`` locally; on a real
     cluster leave it unset and submit through spark-submit/YARN/K8s — every
     other config below is cluster-safe.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -5,10 +5,10 @@ broadcast semi-join — right when the benchmark's distinct-shingle set
 fits comfortably in a broadcast. This module is the next rung: the
 held-out set is folded into a fixed ``n_bits``-bit Bloom filter (one
 array<bigint> row, e.g. 4 KiB for 2^15 bits regardless of set size),
-broadcast once, and the corpus side becomes a PURE NARROW MAP — no
-explode, no join, no shuffle; each document tests its shingle array
-against the bits inside whole-stage codegen. False-positive rate is the
-classic (1 - e^{-kn/m})^k; false negatives are impossible.
+shipped once in the probe's task closure, and the corpus side becomes a
+PURE NARROW MAP — no explode, no join, no shuffle; each document tests
+its shingles against the bits in one Arrow batch pass. False-positive
+rate is the classic (1 - e^{-kn/m})^k; false negatives are impossible.
 
 Engine-portability contract (same as the rest of the repo): ONE md5 per
 value, k positions by Kirsch–Mitzenmacher double hashing over two
@@ -27,9 +27,10 @@ Spark-specific notes:
 - ``F.shiftleft``/``shiftright`` take only literal shift amounts, so bit
   masks come from a precomputed 64-entry powers-of-two literal array
   (bit 63 is the sign bit: -(2^63)).
-- The single-row filter joins the corpus via ``crossJoin(broadcast(...))``
-  → a BroadcastNestedLoopJoin against ONE row, which is a plain map over
-  the corpus — the plan audit allows exactly this shape.
+- :func:`bloom_might_contain` is the Catalyst column form of the probe:
+  a single-row filter joined via ``crossJoin(broadcast(...))`` → a
+  BroadcastNestedLoopJoin against ONE row, which is a plain map over the
+  corpus — the plan audit allows exactly this shape.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import py_shingles, shingles
+from .dedup import _spread, py_shingles, shingles_vectorized
 
 DEFAULT_N_BITS = 1 << 15
 DEFAULT_K = 3
@@ -187,7 +188,6 @@ def bloom_decontaminate(
     n: int = 3,
     n_bits: int = DEFAULT_N_BITS,
     k: int = DEFAULT_K,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Flag documents sharing ANY word n-gram with the benchmark Bloom set.
 
@@ -196,64 +196,34 @@ def bloom_decontaminate(
     tested against the filter. Compare ``contamination.ngram_overlap``
     for the exact (semi-join) tier.
 
-    ``vectorized=True`` (production default): the filter is materialized
-    with ONE bounded job over the BENCHMARK side only (a single
-    ``n_bits/64``-long row — the held-out set is small by definition;
-    this is not the lazy-transform-recomputes-corpus-lineage pattern),
-    then the corpus side runs the fused Arrow probe
-    (:func:`bloom_probe_vectorized`): zero joins, zero exchanges, filter
-    in the 4 KiB task closure. ``vectorized=False`` keeps the pure-lazy
-    Catalyst plan (scan → BroadcastNestedLoopJoin vs ONE row → project)
-    as the engine-portable oracle-shape reference; value parity between
-    the two is pinned by tests and both hash-match the DuckDB oracle.
+    The filter is materialized with ONE bounded job over the BENCHMARK
+    side only (a single ``n_bits/64``-long row — the held-out set is
+    small by definition; this is not the lazy-transform-recomputes-
+    corpus-lineage pattern), then the corpus side runs the fused Arrow
+    probe (:func:`bloom_probe_vectorized`): zero joins, zero exchanges,
+    filter in the 4 KiB task closure. Hash-matches the DuckDB oracle.
     """
-    bench_col = bench_text_col or text_col
-    from .dedup import shingles_vectorized
-
-    _sh = shingles_vectorized if vectorized else shingles
     bench_sh = (
-        benchmark.select(F.explode(_sh(F.col(bench_col), n)).alias("_s"))
+        benchmark.select(
+            F.explode(
+                shingles_vectorized(F.col(bench_text_col or text_col), n)
+            ).alias("_s")
+        )
         .distinct()
     )
-    if vectorized:
-        from .dedup import _spread
-
-        words = list(bloom_build(bench_sh, "_s", n_bits, k).collect()[0]["bloom"])
-        probe = bloom_probe_vectorized(F.col(text_col), words, n, n_bits, k)
-        # _spread: hash-repartition the (id, text) projection before the
-        # CPU-heavy probe — a small local corpus arrives as one file → one
-        # partition, serializing the batch UDF on a single core; at
-        # cluster scale the same repartition balances executors
-        return (
-            _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
-            .select(F.col(id_col), probe.alias("_p"))
-            .select(
-                F.col(id_col),
-                F.col("_p.n_shingles").alias("n_shingles"),
-                F.col("_p.n_hits_bloom").alias("n_hits_bloom"),
-            )
-            .withColumn("flagged", F.col("n_hits_bloom") > 0)
-        )
-    bf = F.broadcast(bloom_build(bench_sh, "_s", n_bits, k))
-    # project the shingle array ONCE: referencing the shingles() expression
-    # from both size() and filter() re-built it per reference (HOF trees
-    # are not CSE'd) — the array build, not the md5, dominated the r8
-    # full-evaluation probe measurement
-    shingled = df.select(
-        F.col(id_col), shingles(F.col(text_col), n).alias("_sh")
-    )
-    hits = F.size(
-        F.filter(
-            F.col("_sh"),
-            lambda s: bloom_might_contain(F.col("bloom"), s, n_bits, k),
-        )
-    )
+    words = list(bloom_build(bench_sh, "_s", n_bits, k).collect()[0]["bloom"])
+    probe = bloom_probe_vectorized(F.col(text_col), words, n, n_bits, k)
+    # _spread: hash-repartition the (id, text) projection before the
+    # CPU-heavy probe — a small local corpus arrives as one file → one
+    # partition, serializing the batch UDF on a single core; at cluster
+    # scale the same repartition balances executors
     return (
-        shingled.crossJoin(bf)
+        _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
+        .select(F.col(id_col), probe.alias("_p"))
         .select(
             F.col(id_col),
-            F.size(F.col("_sh")).cast("long").alias("n_shingles"),
-            hits.cast("long").alias("n_hits_bloom"),
+            F.col("_p.n_shingles").alias("n_shingles"),
+            F.col("_p.n_hits_bloom").alias("n_hits_bloom"),
         )
         .withColumn("flagged", F.col("n_hits_bloom") > 0)
     )

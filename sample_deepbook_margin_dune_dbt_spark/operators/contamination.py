@@ -6,9 +6,9 @@ The training-data hygiene step the big-model reports all describe
 evaluation/benchmark corpus, and must be dropped (or flagged) before
 training. Spark-first shape:
 
-- the corpus side reuses ``dedup.shingles`` — distinct n-grams built
-  inside codegen, exploded once, NO extra dedup shuffle (the array is
-  already distinct per document);
+- the corpus side reuses ``dedup.shingles_vectorized`` — distinct
+  n-grams built in one Arrow batch pass, exploded once, NO extra dedup
+  shuffle (the array is already distinct per document);
 - the benchmark side is collapsed to a distinct shingle set and
   broadcast — benchmark suites are tiny (thousands of documents)
   relative to a 100 TB corpus, so the membership probe is a map-side
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _spread, shingles, shingles_vectorized
+from .dedup import _spread, shingles_vectorized
 
 
 def ngram_overlap(
@@ -36,7 +36,6 @@ def ngram_overlap(
     bench_text_col: str | None = None,
     n: int = 3,
     threshold: float = 0.5,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Per-document overlap with the benchmark's n-gram shingle set.
 
@@ -48,14 +47,16 @@ def ngram_overlap(
     ``round`` diverges between Spark and DuckDB.)
     """
     bench_col = bench_text_col or text_col
-    _sh_fn = shingles_vectorized if vectorized else shingles
     # repartition before the CPU-heavy shingle explode: small corpora
     # arrive as one file → one task (same guard as the dedup pipeline)
     doc_sh = _spread(df.select(id_col, text_col), id_col).select(
-        F.col(id_col), F.explode(_sh_fn(F.col(text_col), n)).alias("_s")
+        F.col(id_col),
+        F.explode(shingles_vectorized(F.col(text_col), n)).alias("_s"),
     )
     bench_sh = F.broadcast(
-        benchmark.select(F.explode(_sh_fn(F.col(bench_col), n)).alias("_s"))
+        benchmark.select(
+            F.explode(shingles_vectorized(F.col(bench_col), n)).alias("_s")
+        )
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
@@ -83,7 +84,6 @@ def benchmark_leakage(
     text_col: str,
     n: int = 3,
     threshold_e6: int = 500_000,
-    vectorized: bool = True,
     broadcast_bench: bool = True,
 ) -> DataFrame:
     """REVERSE-direction decontamination: per BENCHMARK document, the
@@ -110,17 +110,16 @@ def benchmark_leakage(
     on ``decontaminate_spans``): a shuffle-hash equi-join on the shingle
     with identical output, pinned by parity test.
     """
-    _sh_fn = shingles_vectorized if vectorized else shingles
     bench_sh = benchmark.select(
         F.col(id_col).alias("bench_id"),
-        F.explode(_sh_fn(F.col(text_col), n)).alias("_s"),
+        F.explode(shingles_vectorized(F.col(text_col), n)).alias("_s"),
     )
     bench_sizes = bench_sh.groupBy("bench_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_shingles")
     )
     corpus_sh = _spread(corpus.select(id_col, text_col), id_col).select(
         F.col(id_col).alias("corpus_id"),
-        F.explode(_sh_fn(F.col(text_col), n)).alias("_s"),
+        F.explode(shingles_vectorized(F.col(text_col), n)).alias("_s"),
     )
     probe = F.broadcast(bench_sh) if broadcast_bench else bench_sh.hint("shuffle_hash")
     inter = (

@@ -143,7 +143,7 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # ------------------------------------------------------------ n-gram jaccard
 
 
-def _intersect_shingle_rows(df, id_col, text_col, n, sh_fn):
+def _intersect_shingle_rows(df, id_col, text_col, n):
     """(_id, _fp) rows: one per (doc, distinct shingle), shingles carried
     as 8-byte ``xxhash64`` fingerprints, NOT strings — the exchange that
     feeds the pairwise self-join moves 8 bytes/key instead of ~30-byte
@@ -177,7 +177,7 @@ def _intersect_shingle_rows(df, id_col, text_col, n, sh_fn):
         .select(
             "_id",
             F.transform(
-                sh_fn(F.col(text_col), n), lambda c: F.xxhash64(c)
+                shingles_vectorized(F.col(text_col), n), lambda c: F.xxhash64(c)
             ).alias("_fps"),
         )
         .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
@@ -191,7 +191,7 @@ def _intersect_shingle_rows(df, id_col, text_col, n, sh_fn):
     return sh, sizes
 
 
-def _sh_rows_or_inline(df, id_col, text_col, n, vectorized, fp_rows):
+def _sh_rows_or_inline(df, id_col, text_col, n, fp_rows):
     """The (sh, sizes) pair for the exact-pair tiers: either the inline
     shingle projection (``_intersect_shingle_rows``) or a MAINTAINED
     (id, fp) projection — the ``corpus_fp_bucketed`` mirror — whose
@@ -202,8 +202,7 @@ def _sh_rows_or_inline(df, id_col, text_col, n, vectorized, fp_rows):
     wire; the inline path reads them free off the staged array — the
     maintained path trades that for never re-shingling)."""
     if fp_rows is None:
-        sh_fn = shingles_vectorized if vectorized else shingles
-        return _intersect_shingle_rows(df, id_col, text_col, n, sh_fn)
+        return _intersect_shingle_rows(df, id_col, text_col, n)
     sh = fp_rows.select(
         F.col(fp_rows.columns[0]).alias("_id"),
         F.col(fp_rows.columns[1]).alias("_fp"),
@@ -291,7 +290,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    vectorized: bool = True,
     join_strategy: str = "shuffle_hash",
     fp_rows: DataFrame | None = None,
 ) -> DataFrame:
@@ -309,10 +307,10 @@ def ngram_jaccard_pairs(
 
     ``fp_rows`` (r12): a MAINTAINED (id, shingle-fp) projection — the
     ``corpus_fp_bucketed`` DAG model's bucketed mirror — replaces the
-    inline shingling entirely; ``df``/``text_col``/``n``/``vectorized``
-    are ignored. Read from a ``bucketBy(fp) sortBy(fp)`` table, the
-    self-join plans bucket-local (ZERO Exchange on the join — the
-    PERF.md r11 Part B shape) and pair generation pays no re-shingling:
+    inline shingling entirely; ``df``/``text_col``/``n`` are ignored.
+    Read from a ``bucketBy(fp) sortBy(fp)`` table, the self-join plans
+    bucket-local (ZERO Exchange on the join — the PERF.md r11 Part B
+    shape) and pair generation pays no re-shingling:
     the projection cost amortizes across every dedup query, the way the
     reference amortizes its daily fact
     (``models/fct_deepbook_margin_pool_daily.sql:33-35``). Pass
@@ -323,7 +321,7 @@ def ngram_jaccard_pairs(
     mirror is the fourth-decade per-task-memory escape and the
     cross-run amortization of shingling, not a same-session speedup.
     """
-    sh, sizes = _sh_rows_or_inline(df, id_col, text_col, n, vectorized, fp_rows)
+    sh, sizes = _sh_rows_or_inline(df, id_col, text_col, n, fp_rows)
     inter = _shingle_self_intersections(sh, join_strategy).withColumnRenamed("n_inter", "_inter")
     sa = sizes.select(F.col("_id").alias("id_a"), F.col("_size").alias("_size_a"))
     sb = sizes.select(F.col("_id").alias("id_b"), F.col("_size").alias("_size_b"))
@@ -345,7 +343,6 @@ def prefix_filter_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    vectorized: bool = True,
     fp_rows: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard pairs via PREFIX FILTERING (SSJoin/PPJoin,
@@ -379,7 +376,7 @@ def prefix_filter_jaccard_pairs(
     """
     from pyspark.storagelevel import StorageLevel
 
-    sh, _ = _sh_rows_or_inline(df, id_col, text_col, n, vectorized, fp_rows)
+    sh, _ = _sh_rows_or_inline(df, id_col, text_col, n, fp_rows)
     # document frequency per fingerprint → per-doc rarity-sorted arrays.
     # Staged ONCE (r14, guide §2.4): three consumers read `ranked` (the
     # prefix explode feeding both self-join sides plus the two
@@ -486,7 +483,6 @@ def jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     strategy: str = "auto",
-    vectorized: bool = True,
     join_strategy: str = "shuffle_hash",
     fp_rows: DataFrame | None = None,
     allow_approx: bool = False,
@@ -524,11 +520,11 @@ def jaccard_pairs(
         strategy = choose_jaccard_strategy(threshold, n_docs, allow_approx)
     if strategy == "self_join":
         return ngram_jaccard_pairs(
-            df, id_col, text_col, n, threshold, vectorized, join_strategy, fp_rows
+            df, id_col, text_col, n, threshold, join_strategy, fp_rows
         )
     if strategy == "prefix":
         return prefix_filter_jaccard_pairs(
-            df, id_col, text_col, n, threshold, vectorized, fp_rows
+            df, id_col, text_col, n, threshold, fp_rows
         )
     if strategy != "lsh":
         raise ValueError(
@@ -537,7 +533,7 @@ def jaccard_pairs(
     # LSH tier: banded-minhash candidates from the SAME (id, fp) rows the
     # exact tiers use (any consistent 64-bit shingle fingerprint is a
     # valid minhash domain), verified to exact jaccard in-task
-    sh, _ = _sh_rows_or_inline(df, id_col, text_col, n, vectorized, fp_rows)
+    sh, _ = _sh_rows_or_inline(df, id_col, text_col, n, fp_rows)
     x = F.pmod(F.col("_fp"), F.lit(MINHASH_P))
     aggs = [
         F.min((F.lit(MINHASH_AS[i]) * x + F.lit(MINHASH_BS[i])) % MINHASH_P).alias(
@@ -615,7 +611,6 @@ def shingle_containment_pairs(
     text_col: str,
     n: int = 3,
     threshold_e6: int = 800_000,
-    vectorized: bool = True,
     join_strategy: str = "shuffle_hash",
     fp_rows: DataFrame | None = None,
 ) -> DataFrame:
@@ -637,7 +632,7 @@ def shingle_containment_pairs(
     contract applies — feed it LSH/bucket candidates for verification
     rather than running it corpus-wide.
     """
-    sh, sizes = _sh_rows_or_inline(df, id_col, text_col, n, vectorized, fp_rows)
+    sh, sizes = _sh_rows_or_inline(df, id_col, text_col, n, fp_rows)
     inter = _shingle_self_intersections(sh, join_strategy)
     sa = sizes.select(F.col("_id").alias("id_a"), F.col("_size").alias("size_a"))
     sb = sizes.select(F.col("_id").alias("id_b"), F.col("_size").alias("size_b"))
@@ -662,20 +657,17 @@ def minhash_signatures(
     text_col: str,
     num_hashes: int = 8,
     shingle_n: int = 3,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Per-document minhash signature: (id, h0..h{k-1}).
 
     minhash_i = min over shingles of (a_i * (fp(shingle) mod P) + b_i) mod P.
     One explode + one groupBy(id) with k min() aggregates — map-side partial
     mins mean the shuffle carries k longs per doc per task. No pairwise work.
-    ``vectorized`` switches shingle construction to the value-identical
-    Arrow twin (the hashing/aggregation stays JVM-side either way).
+    Shingles come from the Arrow twin; hashing/aggregation stays JVM-side.
     """
     assert num_hashes <= len(MINHASH_AS)
-    _sh_fn = shingles_vectorized if vectorized else shingles
     sh = _spread(df.select(F.col(id_col).alias("_id"), F.col(text_col)), "_id").select(
-        "_id", F.explode(_sh_fn(F.col(text_col), shingle_n)).alias("_sh")
+        "_id", F.explode(shingles_vectorized(F.col(text_col), shingle_n)).alias("_sh")
     )
     x = fingerprint64(F.col("_sh")) % MINHASH_P
     aggs = [

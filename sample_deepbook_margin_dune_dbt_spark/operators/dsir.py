@@ -34,7 +34,7 @@ fixed-point discipline as the r9 BM25 overflow fix
 (``operators/retrieval.py``).
 
 Scale shape (100 TB): features are the bigram fingerprints of
-``operators/ngram_lm.py`` (Arrow-vectorized twin by default) hashed into
+``operators/ngram_lm.py`` (the Arrow fingerprint pass) hashed into
 ``n_buckets`` buckets, so the weight table is B-bounded — KILOBYTES
 regardless of corpus size — and broadcasts to the scoring join. ONE
 corpus scan (r15): the explode aggregates straight to staged
@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .ngram_lm import _bigram_fps, bigram_fps_vectorized
+from .ngram_lm import bigram_fps_vectorized
 from .retrieval import _ranked_topk
 
 DEFAULT_N_BUCKETS = 4096
@@ -62,7 +62,6 @@ def _bucketed_features(
     id_col: str,
     text_col: str,
     n_buckets: int,
-    vectorized: bool,
     extra_cols: list[str] | None = None,
 ) -> DataFrame:
     """One row per (doc, feature-occurrence): ``(id, b)`` with ``b`` the
@@ -70,17 +69,15 @@ def _bucketed_features(
     bits positive, so ``%`` agrees across engines."""
     from .dedup import _spread
 
-    fps: Column = (
-        bigram_fps_vectorized(text_col) if vectorized else _bigram_fps(text_col)
-    )
     out_cols = [id_col] + (extra_cols or [])
-    if vectorized:
-        # balance the CPU-heavy Arrow fingerprint batch across cores —
-        # file-split partitioning underfills the cluster and one fat
-        # split straggles the whole pass (measured: 35 → ~4 s per pass
-        # at the 100× fixture; same move as bigram_lm_stats)
-        df = _spread(df.select(*out_cols, text_col), id_col)
-    return df.select(*out_cols, F.explode(fps).alias("fp")).select(
+    # balance the CPU-heavy Arrow fingerprint batch across cores —
+    # file-split partitioning underfills the cluster and one fat split
+    # straggles the whole pass (measured: 35 → ~4 s per pass at the 100×
+    # fixture; same move as bigram_lm_stats)
+    df = _spread(df.select(*out_cols, text_col), id_col)
+    return df.select(
+        *out_cols, F.explode(bigram_fps_vectorized(text_col)).alias("fp")
+    ).select(
         *out_cols, (F.col("fp") % F.lit(n_buckets)).alias("b")
     )
 
@@ -91,7 +88,6 @@ def dsir_weights(
     text_col: str,
     is_target: Column,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Per-bucket importance weights ``(b, ct, cr, w_e6)`` — ≤ B rows.
 
@@ -106,7 +102,6 @@ def dsir_weights(
         id_col,
         text_col,
         n_buckets,
-        vectorized,
         extra_cols=["_t"],
     )
     cnt = feats.groupBy("b").agg(
@@ -144,7 +139,6 @@ def dsir_select(
     is_target: Column,
     top_k: int,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Top-``k`` most target-like documents of the pool:
     ``(id, n_feats, score_e6, rank)``, rank 1..k by (score desc, id).
@@ -173,7 +167,6 @@ def dsir_select(
         id_col,
         text_col,
         n_buckets,
-        vectorized,
         extra_cols=["_t"],
     )
     doc_feats = (

@@ -641,7 +641,7 @@ def _banded_hamming_pairs(
     join shape streams a sort-merge self-join on the bucket key after
     anti-joining away capped buckets (both aggregations fixed-width →
     spill-safe), trading the collect shape's single-pass expansion for
-    memory-bounded execution — the ``sessionize_presplit`` precedent."""
+    memory-bounded execution."""
     from pyspark.storagelevel import StorageLevel
 
     if candidate_shape not in ("collect", "join"):

@@ -85,7 +85,6 @@ def bigram_lm_stats(
     text_col: str,
     train_frac: float = 0.5,
     salt: str = "lm",
-    vectorized: bool = True,
 ) -> DataFrame:
     """Bigram occurrence counts over a reproducible hash split.
 
@@ -95,16 +94,15 @@ def bigram_lm_stats(
     """
     from .dedup import _spread
 
-    train = hash_sample(df, id_col, train_frac, salt)
-    _fps = bigram_fps_vectorized if vectorized else _bigram_fps
-    if vectorized:
-        # balance the CPU-heavy Arrow fingerprint batch across cores
-        # (small corpora arrive as one file → one partition)
-        train = _spread(train.select(id_col, text_col), id_col)
-    # no token-count pre-filter: the fps builders already yield an empty
+    # balance the CPU-heavy Arrow fingerprint batch across cores (small
+    # corpora arrive as one file → one partition)
+    train = _spread(
+        hash_sample(df, id_col, train_frac, salt).select(id_col, text_col), id_col
+    )
+    # no token-count pre-filter: the fps builder already yields an empty
     # array for sub-bigram docs, which explode drops
     return (
-        train.select(F.explode(_fps(text_col)).alias("bigram_fp"))
+        train.select(F.explode(bigram_fps_vectorized(text_col)).alias("bigram_fp"))
         .groupBy("bigram_fp")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
@@ -115,7 +113,6 @@ def bigram_lm_score(
     id_col: str,
     text_col: str,
     stats: DataFrame,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Score every document (with >= 1 bigram) against trained counts.
 
@@ -129,10 +126,8 @@ def bigram_lm_score(
     """
     from .dedup import _spread
 
-    _fps = bigram_fps_vectorized if vectorized else _bigram_fps
-    src = _spread(df.select(id_col, text_col), id_col) if vectorized else df
-    occ = src.select(
-        F.col(id_col), F.explode(_fps(text_col)).alias("bigram_fp")
+    occ = _spread(df.select(id_col, text_col), id_col).select(
+        F.col(id_col), F.explode(bigram_fps_vectorized(text_col)).alias("bigram_fp")
     )
     joined = occ.join(stats, "bigram_fp", "left")
     return joined.groupBy(id_col).agg(

@@ -24,7 +24,7 @@ any earlier document scores 0.
 Scale shape (100 TB corpus, 1000 executors):
 
 - One pass computes per-doc shingle sets (Arrow-vectorized
-  ``shingles_vectorized`` — the shared twin, ~1 µs/shingle), explodes
+  ``shingles_vectorized``, ~1 µs/shingle), explodes
   them, and fingerprints each shingle to 8 bytes (``xxhash64`` — the
   exchange-width discipline every shingle tier follows; the fingerprint
   never reaches the output).
@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import shingles, shingles_vectorized
+from .dedup import shingles_vectorized
 
 
 def shingle_novelty(
@@ -56,28 +56,23 @@ def shingle_novelty(
     id_col: str,
     text_col: str,
     n: int = 3,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Per-document first-occurrence novelty over word ``n``-gram shingles.
 
     Returns ``(id, n_shingles, n_novel, novelty_e6)`` — one row per input
     document; ``novelty_e6 = n_novel * 1e6 div n_shingles`` (fixed-point,
-    exact in int64: n_novel ≤ n_shingles ≤ ~1e6 per doc).
-
-    ``vectorized=True`` uses the Arrow shingle twin (production path);
-    ``False`` keeps shingle construction in pure Catalyst expressions
-    (the engine-portable oracle shape) — both produce identical arrays.
+    exact in int64: n_novel ≤ n_shingles ≤ ~1e6 per doc). Shingles come
+    from the Arrow twin ``shingles_vectorized``.
     """
     from .dedup import _spread
 
-    mk = shingles_vectorized if vectorized else shingles
-    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
-    if vectorized:
-        # balance the CPU-heavy Arrow shingle batch across cores before
-        # BOTH consumers below — file-split partitioning left the 100×
-        # fixture's UDF pass 15-wide with a straggler (the same measured
-        # failure the DSIR feature pass fixed; ~25 s/pass → ~4 s)
-        base = _spread(base, "id")
+    # balance the CPU-heavy Arrow shingle batch across cores before BOTH
+    # consumers below — file-split partitioning left the 100× fixture's
+    # UDF pass 15-wide with a straggler (the same measured failure the
+    # DSIR feature pass fixed; ~25 s/pass → ~4 s)
+    base = _spread(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t")), "id"
+    )
     # ONE shingle-UDF execution feeds both consumers: the (id, fp-array)
     # projection is materialized via localCheckpoint — 8 bytes per
     # shingle (xxhash64 inside a transform lambda, the r7 span-tier /
@@ -95,7 +90,9 @@ def shingle_novelty(
 
     staged = base.select(
         "id",
-        F.transform(mk(F.col("_t"), n), lambda c: F.xxhash64(c)).alias("_fps"),
+        F.transform(
+            shingles_vectorized(F.col("_t"), n), lambda c: F.xxhash64(c)
+        ).alias("_fps"),
     ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     sh = staged.select("id", F.explode("_fps").alias("s"))
     # first owner per shingle, then novel counts per owner — pure

@@ -107,118 +107,3 @@ def session_stats(
     if value_col:
         aggs.append(F.sum(F.col(value_col).cast("decimal(12,2)")).cast("double").alias("session_value"))
     return s.groupBy(user_col, "session_id").agg(*aggs)
-
-
-def sessionize_presplit(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    gap: int,
-    bucket: int | None = None,
-    extra_cols: list[str] | None = None,
-) -> DataFrame:
-    """:func:`sessionize` with the per-key window PRE-SPLIT on a time
-    bucket — the productized hot-key mitigation (PERF.md r12: a single
-    user owning a partition-sized history serializes the plain window
-    through ONE task; the memory stays bounded — streaming frames +
-    external sort — but the wall grows linearly with the hot key's
-    history at zero parallelism).
-
-    Identical output to :func:`sessionize` (same columns, same 1-based
-    per-user ``session_id`` numbering) — pinned by equality tests — from
-    a three-stage plan whose event-level windows are all
-    (user, bucket)-sized:
-
-    1. LOCAL sessionize within each (user, time-bucket) partition — the
-       hot user's history splits across ``history/bucket`` parallel
-       window tasks;
-    2. STITCH: per (user, bucket) boundary rows (first/last event ts,
-       last local session seq — one row per bucket with events) link a
-       bucket's last session to the user's next event-carrying bucket's
-       first session when the time gap ≤ ``gap``; connected components
-       over the (tiny) link graph merge chains spanning any number of
-       buckets. Non-adjacent buckets can never link because
-       ``bucket > gap`` is enforced — the inter-bucket time distance
-       already exceeds the gap;
-    3. RENUMBER: ``session_id`` = per-user rank of the merged session's
-       start time — a window over SESSION rows (16-byte tuples, orders
-       of magnitude fewer than events; the one remaining per-user
-       serialization, documented).
-
-    ``bucket`` defaults to 1000·gap (≈ 3 weeks at a 30-min gap): wide
-    enough that stitching is rare, narrow enough that a years-long hot
-    history still splits into many tasks.
-
-    MEASURED HONESTLY (PERF.md r12): at every locally testable scale the
-    plain window WINS — 17.8 s vs 47.3 s at 20M single-user events with
-    natural session structure — because WindowExec's external sort makes
-    the hot-key task cheap while this plan pays three extra passes
-    (bounds, stitch-CC, renumber + join-back), and the per-user session
-    renumbering is itself serialized when sessions ≈ events. Use this
-    form ONLY when one key's history exceeds single-TASK operational
-    limits (multi-hour task runtimes, shuffle-block caps at 1e9+ rows
-    per key) — it trades total work for bounded per-task size; it is
-    not a speedup below that regime.
-    """
-    from .dedup import duplicate_clusters
-
-    if bucket is None:
-        bucket = 1000 * gap
-    if bucket <= gap:
-        raise ValueError(
-            f"bucket ({bucket}) must exceed gap ({gap}) so non-adjacent "
-            "buckets can never need stitching"
-        )
-    extra = extra_cols or []
-    ev = df.select(user_col, ts_col, *extra).withColumn(
-        "_b", F.floor(F.col(ts_col) / bucket).cast("long")
-    )
-    w_local = Window.partitionBy(user_col, "_b").orderBy(ts_col)
-    prev = F.lag(F.col(ts_col)).over(w_local)
-    is_start = F.when(
-        prev.isNull() | ((F.col(ts_col) - prev) > gap), F.lit(1)
-    ).otherwise(F.lit(0))
-    local = ev.withColumn(
-        "_ls",
-        F.sum(is_start).over(w_local.rowsBetween(Window.unboundedPreceding, 0)).cast("long"),
-    )
-    node = F.xxhash64(F.col(user_col), F.col("_b"), F.col("_ls"))
-
-    # boundary rows: one per (user, bucket with events)
-    bounds = local.groupBy(user_col, "_b").agg(
-        F.min(ts_col).alias("_first_ts"),
-        F.max(ts_col).alias("_last_ts"),
-        F.max("_ls").alias("_last_seq"),
-    )
-    w_user = Window.partitionBy(user_col).orderBy("_b")
-    links = (
-        bounds.withColumn("_nb", F.lead("_b").over(w_user))
-        .withColumn("_nfirst", F.lead("_first_ts").over(w_user))
-        .filter(F.col("_nb").isNotNull() & (F.col("_nfirst") - F.col("_last_ts") <= gap))
-        .select(
-            F.xxhash64(F.col(user_col), F.col("_b"), F.col("_last_seq")).alias("id_a"),
-            F.xxhash64(F.col(user_col), F.col("_nb"), F.lit(1).cast("long")).alias("id_b"),
-        )
-    )
-    labels = duplicate_clusters(links, algorithm="auto").withColumnRenamed(
-        "id", "_node"
-    )
-    merged = local.withColumn("_node", node).join(
-        labels, "_node", "left"
-    ).withColumn("_sess", F.coalesce("cluster_id", "_node"))
-
-    # canonical per-session start → 1-based per-user numbering (a window
-    # over SESSION rows, not events)
-    sess_rows = merged.groupBy(user_col, "_sess").agg(
-        F.min(ts_col).alias("_sstart")
-    )
-    numbered = sess_rows.withColumn(
-        "session_id",
-        F.row_number()
-        .over(Window.partitionBy(user_col).orderBy("_sstart", "_sess"))
-        .cast("long"),
-    )
-    return (
-        merged.join(numbered.select(user_col, "_sess", "session_id"), [user_col, "_sess"])
-        .select(user_col, ts_col, *extra, "session_id")
-    )

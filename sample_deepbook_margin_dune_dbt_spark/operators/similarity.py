@@ -3,9 +3,11 @@
 Two tiers, per the usual ANN playbook:
 
 - **Brute-force cosine** (`cosine_topk`, `cosine_pairs`): exact, O(N·Q).
-  The dot product is a single Catalyst ``aggregate`` over zipped arrays —
-  JVM-side, no Python. Right answer for verification, small query sets, and
-  as the within-bucket scorer for the bucketed tier.
+  `cosine_pairs` folds the dot product in a single Catalyst ``aggregate``
+  over zipped arrays — JVM-side, no Python — and is the verification
+  reference for the pair tiers; `cosine_topk` scores the corpus against a
+  closure-shipped anchor matrix in one Arrow pass at the fold's exact
+  IEEE operation order.
 - **Hyperplane-LSH bucketed ANN** (`lsh_ann_topk`): random-hyperplane
   signatures (SimHash for vectors) shard vectors into buckets; queries only
   score their own bucket (plus optional multi-probe neighbors). At 100 TB
@@ -192,42 +194,18 @@ def cosine_topk(
     vec_col: str,
     query_id_col: str,
     k: int = 10,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine (brute force).
 
     Output: (query_id, neighbor_id, cosine, rank). Deterministic tie-break
-    on neighbor id. ``vectorized=True`` scores every vector against the
-    closure-shipped anchor matrix in one Arrow pass (bit-parity contract
-    in :func:`_anchor_cosines_vectorized`); ``False`` keeps the
-    crossJoin(broadcast) × HOF-fold form — the engine-portable
-    oracle-shape reference.
+    on neighbor id. Every vector is scored against the closure-shipped
+    anchor matrix in one Arrow pass (bit-parity contract with the
+    ``_dot``/``_norm`` fold in :func:`_anchor_cosines_vectorized`).
     """
-    if vectorized:
-        anchors = queries.select(query_id_col, vec_col).collect()
-        scored = _anchor_cosines_vectorized(vectors, id_col, vec_col, anchors).filter(
-            F.col("query_id") != F.col("neighbor_id")
-        )
-    else:
-        q = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("_vq"),
-            _norm(F.col(vec_col)).alias("_nq"),
-        )
-        v = vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_vn"),
-            _norm(F.col(vec_col)).alias("_nn"),
-        )
-        scored = (
-            F.broadcast(q)
-            .crossJoin(v)
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn(
-                "cosine",
-                _dot(F.col("_vq"), F.col("_vn")) / (F.col("_nq") * F.col("_nn")),
-            )
-        )
+    anchors = queries.select(query_id_col, vec_col).collect()
+    scored = _anchor_cosines_vectorized(vectors, id_col, vec_col, anchors).filter(
+        F.col("query_id") != F.col("neighbor_id")
+    )
     return _bounded_topk(scored, k).select("query_id", "neighbor_id", "cosine", "rank")
 
 
@@ -238,18 +216,18 @@ def _anchor_cosines_vectorized(
     anchors: list,
 ) -> DataFrame:
     """(neighbor_id, query_id, cosine) rows: every vector scored against
-    the closure-shipped anchor matrix in ONE Arrow batch pass — the
-    production twin of the crossJoin(broadcast) × interpreted-HOF form
-    (10 anchors × corpus HOF evaluations measured ~29 s at the 100×
-    embeddings fixture; this path is one narrow map).
+    the closure-shipped anchor matrix in ONE Arrow batch pass (a
+    crossJoin(broadcast) × interpreted-HOF form measured ~29 s for 10
+    anchors at the 100× embeddings fixture; this path is one narrow map).
 
     BIT-parity with ``_dot``/``_norm``: the numpy accumulation runs
     dimension-sequentially (``acc = acc + M[:, d] * q[d]``), reproducing
     the HOF fold's exact IEEE operation order per row — same products,
-    same addition sequence, same sqrt and division — so the twin's
-    doubles (and the floor-e6 projection computed downstream by the SAME
-    Catalyst expression) are identical, not merely close. Pinned by
-    tests; anchors are |queries|-bounded by contract (driver-side list,
+    same addition sequence, same sqrt and division — so the doubles (and
+    the floor-e6 projection computed downstream by a Catalyst
+    expression) equal the DuckDB oracle's, not merely come close. Pinned
+    by the ``ann_cosine_topk`` / ``emb_hard_negatives`` oracle hashes;
+    anchors are |queries|-bounded by contract (driver-side list,
     closure-shipped like the Bloom filter words).
     """
     import numpy as np
@@ -306,91 +284,78 @@ def max_cosine_vs_anchors(
     id_col: str,
     vec_col: str,
     anchor_vec_col: str,
-    vectorized: bool = True,
 ) -> DataFrame:
     """(id, max_cosine): each vector's maximum cosine against an anchor
     set — the semantic-decontamination / benchmark-proximity screen shape.
 
-    ``vectorized=True`` ships the anchor matrix in an Arrow UDF closure
-    and keeps a RUNNING max across anchors inside the batch pass — O(rows)
-    working memory however many anchors (unlike materializing the full
-    rows × anchors cosine frame), one narrow map, no corpus shuffle.
-    BIT-parity with the HOF form: per-anchor cosines reproduce the
-    ``_dot``/``_norm`` fold's IEEE operation order exactly (the
-    :func:`_anchor_cosines_vectorized` contract — IEEE multiplication
-    commutes, so the denominator's factor order is immaterial), and the
-    max of identical doubles is order-independent. ``vectorized=False``
-    keeps the crossJoin(broadcast) × HOF fold + per-id MAX aggregate —
-    the engine-portable oracle-shape reference.
+    The anchor matrix ships in an Arrow UDF closure and a RUNNING max
+    across anchors is kept inside the batch pass — O(rows) working memory
+    however many anchors (unlike materializing the full rows × anchors
+    cosine frame), one narrow map, no corpus shuffle. Per-anchor cosines
+    reproduce the ``_dot``/``_norm`` fold's IEEE operation order exactly
+    (the :func:`_anchor_cosines_vectorized` contract — IEEE
+    multiplication commutes, so the denominator's factor order is
+    immaterial), and the max of identical doubles is order-independent,
+    so the DuckDB oracle's crossJoin + MAX form hash-matches.
     """
-    if vectorized:
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-        rows = anchors_df.select(anchor_vec_col).collect()
-        qvecs = [np.asarray(list(r[0]), dtype=np.float64) for r in rows]
-        if not qvecs:
-            # the crossJoin oracle form returns zero rows against an empty
-            # anchor set; a silent -inf-per-row answer would diverge, so
-            # an empty benchmark is a caller error here
-            raise ValueError("max_cosine_vs_anchors: empty anchor set")
-        qnorms = []
-        for qv in qvecs:
-            acc = 0.0
-            for x in qv:
-                acc += x * x
-            qnorms.append(float(np.sqrt(acc)))
+    rows = anchors_df.select(anchor_vec_col).collect()
+    qvecs = [np.asarray(list(r[0]), dtype=np.float64) for r in rows]
+    if not qvecs:
+        # the oracle's crossJoin form returns zero rows against an empty
+        # anchor set; a silent -inf-per-row answer would diverge, so
+        # an empty benchmark is a caller error here
+        raise ValueError("max_cosine_vs_anchors: empty anchor set")
+    qnorms = []
+    for qv in qvecs:
+        acc = 0.0
+        for x in qv:
+            acc += x * x
+        qnorms.append(float(np.sqrt(acc)))
 
-        q_mat = np.asarray(qvecs)  # (n_anchors, dim)
-        qn_arr = np.asarray(qnorms)
-        q_dim = int(q_mat.shape[1])
+    q_mat = np.asarray(qvecs)  # (n_anchors, dim)
+    qn_arr = np.asarray(qnorms)
+    q_dim = int(q_mat.shape[1])
 
-        @pandas_udf("double")
-        def _maxcos(s: pd.Series) -> pd.Series:  # type: ignore[no-untyped-def]
-            n_rows = len(s)
-            if n_rows == 0:
-                return pd.Series([], dtype="float64")
-            # per-row degenerate masking (null / dim-mismatched embeddings
-            # get NaN individually) so one bad row can't poison its whole
-            # Arrow batch — results must not depend on batch composition
-            m = np.zeros((n_rows, q_dim))
-            valid = np.zeros(n_rows, dtype=bool)
-            for i, a in enumerate(s):
-                if a is None:
-                    continue
-                v = np.asarray(a, dtype=np.float64)
-                if v.ndim == 1 and v.shape[0] == q_dim:
-                    m[i] = v
-                    valid[i] = True
-            # dim-major contiguous layout: the d-sequential loops read
-            # mt[d] contiguously instead of striding a row-major matrix
-            # (same values, same operation order — layout, not math)
-            mt = np.ascontiguousarray(m.T)
-            nacc = np.zeros(n_rows)
-            for d in range(q_dim):
-                nacc = nacc + mt[d] * mt[d]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                norms = np.sqrt(nacc)
-                best = np.full(n_rows, -np.inf)
-                for j in range(q_mat.shape[0]):
-                    qv, qn = q_mat[j], qn_arr[j]
-                    acc = np.zeros(n_rows)
-                    for d in range(q_dim):
-                        acc = acc + mt[d] * qv[d]
-                    best = np.maximum(best, acc / (qn * norms))
-            best[~valid] = np.nan
-            return pd.Series(best)
+    @pandas_udf("double")
+    def _maxcos(s: pd.Series) -> pd.Series:  # type: ignore[no-untyped-def]
+        n_rows = len(s)
+        if n_rows == 0:
+            return pd.Series([], dtype="float64")
+        # per-row degenerate masking (null / dim-mismatched embeddings
+        # get NaN individually) so one bad row can't poison its whole
+        # Arrow batch — results must not depend on batch composition
+        m = np.zeros((n_rows, q_dim))
+        valid = np.zeros(n_rows, dtype=bool)
+        for i, a in enumerate(s):
+            if a is None:
+                continue
+            v = np.asarray(a, dtype=np.float64)
+            if v.ndim == 1 and v.shape[0] == q_dim:
+                m[i] = v
+                valid[i] = True
+        # dim-major contiguous layout: the d-sequential loops read
+        # mt[d] contiguously instead of striding a row-major matrix
+        # (same values, same operation order — layout, not math)
+        mt = np.ascontiguousarray(m.T)
+        nacc = np.zeros(n_rows)
+        for d in range(q_dim):
+            nacc = nacc + mt[d] * mt[d]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            norms = np.sqrt(nacc)
+            best = np.full(n_rows, -np.inf)
+            for j in range(q_mat.shape[0]):
+                qv, qn = q_mat[j], qn_arr[j]
+                acc = np.zeros(n_rows)
+                for d in range(q_dim):
+                    acc = acc + mt[d] * qv[d]
+                best = np.maximum(best, acc / (qn * norms))
+        best[~valid] = np.nan
+        return pd.Series(best)
 
-        return vectors.select(
-            F.col(id_col), _maxcos(F.col(vec_col)).alias("max_cosine")
-        )
-    a = anchors_df.select(F.col(anchor_vec_col).alias("_av"))
-    return (
-        vectors.join(F.broadcast(a))
-        .select(id_col, cosine(F.col(vec_col), F.col("_av")).alias("_c"))
-        .groupBy(id_col)
-        .agg(F.max("_c").alias("max_cosine"))
+    return vectors.select(
+        F.col(id_col), _maxcos(F.col(vec_col)).alias("max_cosine")
     )
 
 
@@ -402,7 +367,6 @@ def cosine_hard_negatives(
     query_id_col: str,
     k: int = 5,
     max_cosine_e6: int = 980_000,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: per query, the ``k``
     MOST similar vectors that are NOT near-duplicates.
@@ -421,32 +385,12 @@ def cosine_hard_negatives(
     path at 100 TB swaps the exact scan for the IVF/LSH candidate
     generator and keeps this band + top-k tail unchanged.
     """
-    if vectorized:
-        # |queries|-bounded driver list, closure-shipped to one Arrow
-        # pass (see _anchor_cosines_vectorized for the parity contract)
-        anchors = queries.select(query_id_col, vec_col).collect()
-        base = _anchor_cosines_vectorized(vectors, id_col, vec_col, anchors)
-        scored = base.filter(F.col("query_id") != F.col("neighbor_id"))
-    else:
-        q = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("_vq"),
-            _norm(F.col(vec_col)).alias("_nq"),
-        )
-        v = vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_vn"),
-            _norm(F.col(vec_col)).alias("_nn"),
-        )
-        scored = (
-            F.broadcast(q)
-            .crossJoin(v)
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn(
-                "cosine",
-                _dot(F.col("_vq"), F.col("_vn")) / (F.col("_nq") * F.col("_nn")),
-            )
-        )
+    # |queries|-bounded driver list, closure-shipped to one Arrow pass
+    # (see _anchor_cosines_vectorized for the parity contract)
+    anchors = queries.select(query_id_col, vec_col).collect()
+    scored = _anchor_cosines_vectorized(vectors, id_col, vec_col, anchors).filter(
+        F.col("query_id") != F.col("neighbor_id")
+    )
     scored = scored.withColumn(
         "cosine_e6", F.floor(F.col("cosine") * 1e6).cast("long")
     ).filter(F.col("cosine_e6") < max_cosine_e6)
@@ -663,48 +607,27 @@ def cosine_pairs_lsh(
     bands: int | None = None,
     max_bucket_size: int = 10_000,
     n_vectors: int | None = None,
-    refine: str = "bucket_local",
 ) -> DataFrame:
     """Scale-safe near-duplicate pairs: banded-LSH candidates + exact refine.
-
-    ``refine='bucket_local'`` (r11, the DEFAULT — measured) swaps step 3
-    for the in-bucket verification tail introduced on the IVF tier
-    (:func:`_bucket_local_verified_pairs`, bit-parity-pinned): vectors
-    ride into their (band, key) buckets — ONE corpus × ``bands``
-    exchange, linear in the corpus though ``bands``× heavier than IVF's
-    ``n_probes``× — and only threshold survivors exchange again. The
-    r11 fourth-decade probe showed the shared exchange refine's
-    candidate×vector intermediate filling a 250 GB disk at ~10⁹
-    candidates; at that scale the bucket-local tail is the one that
-    completes, and at bench scale it is ~2.3× faster too (0.95 s vs
-    2.17 s warm, sf0.1 — the fat exchange dominated there as well).
-    ``refine='exchange'`` keeps the two-shuffle-hash-join tail (the
-    historical default, step 3 below) as the parity twin for engines
-    where ``mapInPandas`` is unavailable.
 
     The production replacement for ``cosine_pairs``'s all-pairs cross join:
 
     1. Every vector gets ``bands`` independent band keys (one vectorized
-       matmul). Rows explode to (band, key, id) — linear, ``bands``× the id
-       column, not the vectors.
+       matmul). Rows explode to (band, key, id, vector).
     2. Bucket-collect per (band, key) — same no-self-join construction as
        ``minhash_lsh_candidates``: the signature pipeline runs ONCE and pair
        expansion happens inside each bucket. Buckets above
        ``max_bucket_size`` are dropped (a degenerate bucket means the band
        hashes collapsed, e.g. all-zero vectors — exact dedup's job, not
        LSH's); ``lsh_bucket_stats`` reports what a cap would drop.
-    3. Candidates join back to the vectors by id (two SHUFFLE-HASH
-       joins, hinted) and the exact cosine refine applies ``threshold``.
-       The hint is load-bearing at scale (r9, measured at 100×/200k
-       vectors): unhinted, Catalyst plans sort-merge joins, and the
-       SECOND join sorts the candidate×vector intermediate — ~10⁸
-       candidate rows each carrying a dim-wide double array — which
-       spilled ~80 GB of sort runs and filled the disk. A shuffle-hash
-       join partitions both sides by id and builds a hash map from the
-       (narrow, n·dim-bounded) vector side only: the fat candidate
-       stream is never sorted. The build side per partition is
-       |vectors| / shuffle-partitions — bounded by construction at any
-       corpus size by raising partitions, which is exactly what AQE does.
+    3. The vectors ride into their buckets, so verification is
+       bucket-local (:func:`_bucket_local_verified_pairs`): in-task
+       pairwise cosines at the ``_dot`` fold's exact IEEE order, and only
+       threshold survivors exchange again. ONE corpus × ``bands``
+       exchange, linear in the corpus. The r11 fourth-decade probe showed
+       the older candidate×vector join tail filling a 250 GB disk at ~10⁹
+       candidates; the bucket-local tail completes there and is ~2.3×
+       faster at bench scale too (0.95 s vs 2.17 s warm, sf0.1).
 
     ``band_planes``/``bands`` default to :func:`lsh_autotune` — planes
     track log2(n) so bucket occupancy (the quadratic axis) stays constant
@@ -716,33 +639,14 @@ def cosine_pairs_lsh(
     both knobs explicitly). Deterministic weights → for a fixed corpus
     and parameters the recall outcome is fixed, and the planted-pair test
     pins it at 1.0.
-    Shuffles: one groupBy on (band, key), two id equi-joins — no cross
-    join, no BNLJ (asserted in tests/test_plans.py).
+    Shuffles: one groupBy on (band, key) plus the survivors' dedup — no
+    cross join, no BNLJ, no join at all (asserted in tests/test_plans.py).
     """
     if band_planes is None or bands is None:
         n = n_vectors if n_vectors is not None else df.count()
         auto_planes, auto_bands = lsh_autotune(n, threshold)
         band_planes = band_planes if band_planes is not None else auto_planes
         bands = bands if bands is not None else auto_bands
-    if refine == "exchange":
-        ids = df.select(
-            F.col(id_col).alias("_id"),
-            F.posexplode(
-                band_signatures(F.col(vec_col), dim, band_planes, bands)
-            ).alias("_band", "_key"),
-        )
-        buckets = (
-            ids.groupBy("_band", "_key")
-            .agg(F.sort_array(F.collect_set("_id")).alias("ids"))
-            .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket_size))
-        )
-        return _refine_candidate_pairs(
-            df, _expand_bucket_pairs(buckets), id_col, vec_col, threshold
-        )
-    if refine != "bucket_local":
-        raise ValueError(
-            f"refine must be 'exchange' or 'bucket_local', got {refine!r}"
-        )
     ids = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
@@ -760,67 +664,6 @@ def cosine_pairs_lsh(
         )
     )
     return _bucket_local_verified_pairs(buckets, threshold)
-
-
-def _expand_bucket_pairs(buckets: DataFrame) -> DataFrame:
-    """(bucket, sorted ids array) → distinct (id_a < id_b) candidate pairs,
-    expanded INSIDE each bucket (no self-join of the signature pipeline)."""
-    return (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ids"),
-                                i + 2,
-                                F.greatest(F.size("ids") - i - 1, F.lit(0)),
-                            ),
-                            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                        ),
-                    )
-                )
-            ).alias("pair")
-        )
-        .select("pair.id_a", "pair.id_b")
-        .distinct()
-    )
-
-
-def _refine_candidate_pairs(
-    df: DataFrame,
-    cands: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-) -> DataFrame:
-    """Exact cosine refine of candidate pairs: two SHUFFLE-HASH vector
-    fetches + the threshold filter. The hint is load-bearing at scale
-    (r9, measured at 100×/200k vectors): unhinted SMJ sorts the fat
-    candidate×vector intermediate (~80 GB of sort spill at 10⁸
-    candidates)."""
-    a = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        _norm(F.col(vec_col)).alias("_na"),
-    )
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        _norm(F.col(vec_col)).alias("_nb"),
-    )
-    return (
-        cands.join(a.hint("shuffle_hash"), "id_a")
-        .join(b.hint("shuffle_hash"), "id_b")
-        .withColumn("cosine", _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")))
-        # zero-norm vectors make NaN cosines; Spark's NaN sorts ABOVE all
-        # doubles so `>= threshold` alone would KEEP them while the
-        # bucket-local tail's NumPy comparison drops them (ADVICE r11) —
-        # drop explicitly so both refine tails agree: no cosine, no pair.
-        .filter(~F.isnan(F.col("cosine")) & (F.col("cosine") >= threshold))
-        .select("id_a", "id_b", "cosine")
-    )
 
 
 def _mm_block_rows(k: int, budget_bytes: int = 1 << 26) -> int:
@@ -1130,33 +973,24 @@ def cosine_pairs_ivf(
     target_occupancy: int = 128,
     seed: int = 42,
     n_vectors: int | None = None,
-    refine: str = "bucket_local",
     train_strategy: str = "driver",
     train_iters: int = 5,
 ) -> DataFrame:
     """Near-duplicate pairs via IVF (coarse k-means) candidates + the same
-    exact shuffle-hash refine as :func:`cosine_pairs_lsh` — the opt-in
+    bucket-local exact refine as :func:`cosine_pairs_lsh` — the opt-in
     candidate generator the 100 TB contract promises for the embedding
     near-dup tier (VERDICT r9 item 2: measure the asserted swap).
 
-    ``refine`` picks the verification tail (identical output, pinned):
-
-    - ``'bucket_local'`` (default; measured r11): vectors ride into
-      their buckets (ONE corpus×n_probes exchange, linear in the
-      corpus), pairwise cosines computed in-task with the exact IEEE
-      operation order of ``_dot``/``_norm`` (bit-identical pairs), only
-      survivors + a survivor-sized distinct ever exchange again — the
-      FAISS-style in-cell verification. The quadratic candidate work
-      becomes CPU, never network/disk: at the fourth decade (2M
-      vectors) it completed in ~360 s ON THE 8 GB DEFAULT HEAP where
-      the exchange tail filled the host disk, and it is ~2.7× faster
-      even at bench scale (0.96 s vs 2.63 s warm at sf0.1).
-    - ``'exchange'``: :func:`_refine_candidate_pairs` — expand id
-      pairs, two shuffle-hash vector fetches (the tail shared with the
-      LSH tier). The second fetch re-exchanges (pair + full vector):
-      TB-scale logical at fourth-decade candidate volumes (the r11
-      probe's disk-full finding). Kept as the parity twin and for
-      engines where mapInPandas is unavailable.
+    Verification is bucket-local (:func:`_bucket_local_verified_pairs`):
+    vectors ride into their buckets (ONE corpus×n_probes exchange, linear
+    in the corpus), pairwise cosines are computed in-task with the exact
+    IEEE operation order of ``_dot``/``_norm``, and only survivors + a
+    survivor-sized distinct ever exchange again — the FAISS-style in-cell
+    verification. The quadratic candidate work becomes CPU, never
+    network/disk: at the fourth decade (2M vectors) it completed in
+    ~360 s ON THE 8 GB DEFAULT HEAP where the older candidate×vector
+    join tail filled the host disk, and it is ~2.7× faster even at bench
+    scale (0.96 s vs 2.63 s warm at sf0.1).
 
     ``n_probes=4`` is the MEASURED operating point (PERF.md r10, 100×/
     500k vectors): p=2 ran 370 s but recalled only 69/75 planted pairs —
@@ -1182,8 +1016,8 @@ def cosine_pairs_ivf(
        cells. Multi-probe on BOTH members means a pair is a candidate if
        any probed cell is shared — the self-join analog of query-side
        multi-probe.
-    3. Bucket-collect per cell, cap, expand pairs in-bucket, exact refine
-       (shared tail with the LSH tier, same pinned shuffle-hash plan).
+    3. Bucket-collect per cell with the vectors, cap, exact in-bucket
+       refine (shared tail with the LSH tier, same pinned plan shape).
 
     vs LSH: candidate generation is ONE matmul pass (n × n_lists) instead
     of ``bands`` signature matmuls + a bands×-exploded exchange, and cells
@@ -1252,22 +1086,6 @@ def cosine_pairs_ivf(
     # ---- 2. one Arrow pass: each vector → its n_probes nearest cells
     _cells = _cell_assign_udf(centers, n_probes)
 
-    if refine == "exchange":
-        ids = df.select(
-            F.col(id_col).alias("_id"), F.explode(_cells(F.col(vec_col))).alias("_cell")
-        )
-        buckets = (
-            ids.groupBy("_cell")
-            .agg(F.sort_array(F.collect_set("_id")).alias("ids"))
-            .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket_size))
-        )
-        return _refine_candidate_pairs(
-            df, _expand_bucket_pairs(buckets), id_col, vec_col, threshold
-        )
-    if refine != "bucket_local":
-        raise ValueError(
-            f"refine must be 'exchange' or 'bucket_local', got {refine!r}"
-        )
     # bucket-local verification: vectors ride INTO their buckets (one
     # corpus×n_probes exchange — linear in the corpus) and the quadratic
     # pair verification happens in-task; see _bucket_local_verified_pairs
@@ -1301,11 +1119,12 @@ def _bucket_local_verified_pairs(
     ``distinct`` collapses multi-probe duplicates (bit-identical
     cosines, so distinct on the full row is exact).
 
-    BIT-parity with the exchange refine: accumulation runs
+    BIT-parity with the ``_dot``/``_norm`` fold: accumulation runs
     dimension-sequentially (``acc += col_d ⊗ col_d``), reproducing the
-    ``_dot`` fold's IEEE operation order per pair — same products, same
-    addition sequence, same ``sqrt`` and division — so both refine
-    tails emit identical doubles (pinned by parity test).
+    fold's IEEE operation order per pair — same products, same addition
+    sequence, same ``sqrt`` and division — so the emitted doubles equal
+    :func:`cosine_pairs`'s exact cross join (pinned by test) and the
+    DuckDB oracle's all-pairs hash.
 
     Memory: the tile is ``block × occupancy`` float64 ≤ block ×
     max_bucket_size × 8 B (40 MB at the 512/10k defaults); the bucket's
@@ -1351,10 +1170,10 @@ def _bucket_local_verified_pairs(
                         cos = acc / (norms[i0:i1, None] * norms[None, :])
                     # strict upper triangle relative to GLOBAL indices:
                     # ids are sorted, so j > i  ⇔  id_b > id_a. NaN
-                    # (zero-norm) cosines fail the >= and are dropped —
-                    # matching the exchange tail's explicit ~isnan filter;
-                    # the id inequality drops self-pairs that duplicate
-                    # id rows would otherwise emit (ADVICE r11).
+                    # (zero-norm) cosines fail the >= and are dropped (no
+                    # cosine, no pair); the id inequality drops self-pairs
+                    # that duplicate id rows would otherwise emit (ADVICE
+                    # r11).
                     ii, jj = np.nonzero(cos >= threshold)
                     keep = (jj > (ii + i0)) & (ids[jj] != ids[ii + i0])
                     ii, jj = ii[keep], jj[keep]

@@ -580,7 +580,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_embedding_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF-candidate tier of the embedding near-dup family
     (``operators/similarity.py::cosine_pairs_ivf``): spherical-k-means
-    coarse cells + multi-probe self-pairing + the same exact shuffle-hash
+    coarse cells + multi-probe self-pairing + the same bucket-local exact
     refine. Shares the all-pairs oracle with ``dedup_embedding_cosine``,
     so a hash match proves the IVF candidates recalled every qualifying
     pair on the fixture — the measured form of the "swap the candidate
@@ -1222,15 +1222,13 @@ def q_emb_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the benchmark matrix ships in the Arrow UDF closure
     (``operators/similarity.py::max_cosine_vs_anchors`` — the
-    anchor-cosine twin pattern) and ONE narrow batch pass keeps a RUNNING
+    anchor-cosine pattern) and ONE narrow batch pass keeps a RUNNING
     max across benchmark vectors, so working memory is O(rows) however
     large the benchmark and the corpus never shuffles its payload.
-    Cross-engine exactness is preserved: the twin reproduces the HOF
-    fold's IEEE operation order per anchor (bit-parity pinned), DuckDB
-    sums in the same order, and a max of identical doubles is
-    order-independent, so ``floor(max·10⁶)`` stays exact. The
-    crossJoin(broadcast) × HOF form remains as the ``vectorized=False``
-    oracle-shape twin.
+    Cross-engine exactness is preserved: the pass reproduces the HOF
+    fold's IEEE operation order per anchor, DuckDB sums in the same
+    order, and a max of identical doubles is order-independent, so
+    ``floor(max·10⁶)`` stays exact (hash-checked by this query's oracle).
     """
     base = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")

@@ -241,35 +241,16 @@ def test_vectorized_shingles_match_catalyst(spark):
     assert mism == 0
 
 
-def test_bloom_vectorized_probe_matches_catalyst(spark):
-    """The fused Arrow probe (closure-captured 4 KiB filter, one md5 +
-    double hashing per shingle in Python) must agree ROW-FOR-ROW with the
-    Catalyst BroadcastNestedLoopJoin form — same counts, same hits
-    (including false positives: both probe the identical bit positions)."""
-    from sample_deepbook_margin_dune_dbt_spark.operators import bloom as B
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    cat = B.bloom_decontaminate(
-        docs, "doc_id", "text", bench, vectorized=False
-    ).orderBy("doc_id").collect()
-    vec = B.bloom_decontaminate(
-        docs, "doc_id", "text", bench, vectorized=True
-    ).orderBy("doc_id").collect()
-    assert cat == vec
-    assert any(r["flagged"] for r in cat)  # the planted benchmark rows hit
-
-
 def test_bloom_vectorized_probe_plan_is_pure_narrow_map(spark):
-    """vectorized=True removes even the broadcast join: the corpus plan is
-    scan → one repartition spread → ArrowEvalPython → project. No
+    """The fused Arrow probe removes even the broadcast join: the corpus
+    plan is scan → one repartition spread → ArrowEvalPython → project. No
     broadcast, no sort-merge, no shuffle beyond the single _spread."""
     from sample_deepbook_margin_dune_dbt_spark.operators import bloom as B
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     plan = (
-        B.bloom_decontaminate(docs, "doc_id", "text", bench, vectorized=True)
+        B.bloom_decontaminate(docs, "doc_id", "text", bench)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "ArrowEvalPython" in plan

@@ -74,19 +74,6 @@ def test_dsir_weight_table_bounded_and_ratio_capped(spark):
         assert ratio_e6 <= 1_000_000
 
 
-def test_dsir_vectorized_matches_catalyst(spark):
-    rows = [
-        (1, "the quick brown fox", "en"),
-        (2, "der schnelle braune fuchs", "de"),
-        (3, "Straße İstanbul ΟΔΟΣ mixed case", "de"),  # exotic case mapping
-        (4, "the quick brown dog", "en"),
-    ]
-    df = _corpus(spark, rows)
-    a = dsir_select(df, "doc_id", "text", F.col("lang") == "en", top_k=10, vectorized=True)
-    b = dsir_select(df, "doc_id", "text", F.col("lang") == "en", top_k=10, vectorized=False)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_dsir_plan_shape(spark, sf_dir):
     """Weight table broadcasts into the scoring join; global top-k plans
     TakeOrderedAndProject; the only window runs over the ≤ k survivors
@@ -174,7 +161,7 @@ def test_dsir_feature_pass_spreads_before_arrow_udf(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     plan = (
-        _bucketed_features(docs, "doc_id", "text", 4096, True)
+        _bucketed_features(docs, "doc_id", "text", 4096)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

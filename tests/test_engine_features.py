@@ -1043,3 +1043,31 @@ def test_builder_sha_stable_without_source(spark, tmp_path):
         assert sha1 == sha3
     finally:
         _REGISTRY.pop("sha_exec", None)
+
+
+def test_local_master_defaults_to_affinity_cpus(monkeypatch):
+    """Unset ``SPARK_GRAFT_CPUS`` must size ``local[N]`` to the CPUs this
+    process may run on, not a fixed 32 that oversubscribes small boxes."""
+    from sample_deepbook_margin_dune_dbt_spark.engine.session import local_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert f"local[{local_cpus()}]" == f"local[{len(os.sched_getaffinity(0))}]"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == "3"
+
+
+@pytest.mark.parametrize(
+    "val,deep",
+    [(None, False), ("", False), ("0", False), ("false", False),
+     ("FALSE", False), ("no", False), ("1", True), ("true", True)],
+)
+def test_deep_fuzz_env_parse(monkeypatch, val, deep):
+    """Only an affirmative ``SPARK_GRAFT_DEEP_FUZZ`` opts into the deep
+    Hypothesis tier; ``0`` / ``false`` / empty keep the fast one."""
+    from tests._util import fuzz_examples
+
+    if val is None:
+        monkeypatch.delenv("SPARK_GRAFT_DEEP_FUZZ", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_DEEP_FUZZ", val)
+    assert fuzz_examples(8, 4) == (8 if deep else 4)

@@ -6,10 +6,10 @@ family (``operators/novelty.py``, ``operators/retrieval.py::hybrid_rrf``,
 Oracle parity for the four query surfaces runs in
 ``tests/test_oracle_parity.py`` (registered in FULL_QUERIES); this file
 pins the operator-level contracts the oracles can't see: novelty
-set-semantics on hand-built corpora, the Arrow/Catalyst shingle-twin
-parity, RRF consensus arithmetic, the hard-negative band edge, gate axis
-independence, and the TakeOrderedAndProject plan shape that keeps the
-global rankers off a corpus-sized single-partition window.
+set-semantics on hand-built corpora, RRF consensus arithmetic, the
+hard-negative band edge, gate axis independence, and the
+TakeOrderedAndProject plan shape that keeps the global rankers off a
+corpus-sized single-partition window.
 """
 
 from __future__ import annotations
@@ -70,24 +70,6 @@ def test_novelty_short_and_empty_docs(spark):
     assert got[1]["n_shingles"] == 1 and got[1]["novelty_e6"] == 1_000_000
     assert got[2]["novelty_e6"] == 0
     assert got[3]["novelty_e6"] == 1_000_000
-
-
-def test_novelty_vectorized_matches_catalyst(spark):
-    rows = [
-        (1, "the quick brown fox jumps"),
-        (2, "the quick brown fox jumps"),
-        (3, "the quick brown cat sits"),
-        (4, "Straße İstanbul ΟΔΟΣ mixed case"),  # exotic case-mapping rows
-        (5, ""),
-    ]
-    a = _novelty(spark, rows, vectorized=True)
-    b = _novelty(spark, rows, vectorized=False)
-    assert a.keys() == b.keys()
-    for k in a:
-        assert (a[k]["n_shingles"], a[k]["n_novel"]) == (
-            b[k]["n_shingles"],
-            b[k]["n_novel"],
-        ), k
 
 
 # ------------------------------------------------------------------- RRF
@@ -250,51 +232,6 @@ def test_source_gate_plan_partial_aggregation(spark, sf_dir):
     assert "CartesianProduct" not in a["plan"]
 
 
-def test_hard_negatives_vectorized_bit_parity(spark, sf_dir):
-    """The Arrow anchor-cosine twin must be BIT-identical to the HOF
-    fold (dimension-sequential numpy accumulation reproduces the fold's
-    IEEE operation order), not merely close — a last-ulp difference
-    would flip floor(cos*1e6) at the band edge."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = emb.orderBy("vec_id").limit(7).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    a = cosine_hard_negatives(
-        emb, qs, "vec_id", "embedding", "qid", k=5, vectorized=True
-    ).collect()
-    b = cosine_hard_negatives(
-        emb, qs, "vec_id", "embedding", "qid", k=5, vectorized=False
-    ).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    assert len(a) > 0
-
-
-def test_max_cosine_vs_anchors_bit_parity(spark, sf_dir):
-    """The running-max Arrow twin must be BIT-identical to the
-    crossJoin(broadcast) × HOF fold + MAX aggregate: per-anchor cosines
-    reproduce the fold's IEEE operation order, and a max of identical
-    doubles is order-independent."""
-    from sample_deepbook_margin_dune_dbt_spark.operators.similarity import (
-        max_cosine_vs_anchors,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    anchors = emb.filter(F.col("vec_id") % 37 == 0).select(
-        F.col("v").alias("av")
-    )
-    a = {
-        r["vec_id"]: r["max_cosine"]
-        for r in max_cosine_vs_anchors(emb, anchors, "vec_id", "v", "av", vectorized=True).collect()
-    }
-    b = {
-        r["vec_id"]: r["max_cosine"]
-        for r in max_cosine_vs_anchors(emb, anchors, "vec_id", "v", "av", vectorized=False).collect()
-    }
-    assert a == b and len(a) == emb.count()
-
-
 def test_max_cosine_vs_anchors_edge_inputs(spark):
     """Edge contract: an empty anchor set raises (the crossJoin oracle
     returns zero rows — a silent -inf answer would diverge), and a null /
@@ -314,14 +251,12 @@ def test_max_cosine_vs_anchors_edge_inputs(spark):
 
     with pytest.raises(ValueError, match="empty anchor set"):
         max_cosine_vs_anchors(
-            emb, anchors.filter(F.lit(False)), "vec_id", "v", "av", vectorized=True
+            emb, anchors.filter(F.lit(False)), "vec_id", "v", "av"
         )
 
     got = {
         r["vec_id"]: r["max_cosine"]
-        for r in max_cosine_vs_anchors(
-            emb, anchors, "vec_id", "v", "av", vectorized=True
-        ).collect()
+        for r in max_cosine_vs_anchors(emb, anchors, "vec_id", "v", "av").collect()
     }
     assert got[1] == 1.0 and got[3] == 0.0
     assert got[2] is None and got[4] is None

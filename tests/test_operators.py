@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import fuzz_examples
+from tests._util import fuzz_examples
 from pyspark.sql import functions as F
 
 from sample_deepbook_margin_dune_dbt_spark.operators import dedup as D
@@ -1388,10 +1388,9 @@ def test_jaccard_bucketed_strategy_parity_and_plan(spark, sf_dir, no_aqe):
     from sample_deepbook_margin_dune_dbt_spark.operators.dedup import (
         _intersect_shingle_rows,
         _shingle_self_intersections,
-        shingles_vectorized,
     )
 
-    sh, _ = _intersect_shingle_rows(docs, "doc_id", "text", 3, shingles_vectorized)
+    sh, _ = _intersect_shingle_rows(docs, "doc_id", "text", 3)
     # at fixture scale Catalyst would broadcast the tiny bucketed table;
     # disable broadcast to pin the CORPUS-scale plan shape (what the
     # 1000x probe ran): bucket-local SMJ, no exchange before the join
@@ -1611,60 +1610,59 @@ def test_top_cells_block_budgeted():
     assert (a == b).all() and (a == c).all()
 
 
+def _exact_pairs(emb, threshold=0.9):
+    """The exact cross join's pair set — the reference every pair tier's
+    bucket-local refine must reproduce (ids AND cosine doubles)."""
+    return sorted(
+        map(tuple, S.cosine_pairs(emb, "vec_id", "embedding", threshold).collect())
+    )
+
+
 def test_ivf_bucket_local_refine_bit_parity(spark, sf_dir):
     """The bucket-local verification tail (r11: the fix for the fourth-
     decade candidate x vector exchange filling the disk) must emit the
-    EXACT pair set of the exchange refine -- ids and cosine DOUBLES bit-
-    identical (the in-task accumulation reproduces _dot's IEEE order)."""
+    EXACT pair set of the all-pairs cross join -- ids and cosine DOUBLES
+    bit-identical (the in-task accumulation reproduces _dot's IEEE
+    order) -- here under a sampled driver trainer (train_sample < n)."""
     from sample_deepbook_margin_dune_dbt_spark.queries.common import load
     from sample_deepbook_margin_dune_dbt_spark.queries.llmops import (
         _augment_near_dups,
     )
 
     emb = _augment_near_dups(load(spark, sf_dir, "embeddings"))
-    kw = dict(n_lists=64, train_sample=2_000, n_probes=4)
-    # ADVICE r11 (medium): pin refine='exchange' explicitly on side a —
-    # the module default is 'bucket_local', so omitting it would compare
-    # the new tail against itself (vacuous).
-    a = S.cosine_pairs_ivf(emb, "vec_id", "embedding", 0.9, refine="exchange", **kw)
-    b = S.cosine_pairs_ivf(
-        emb, "vec_id", "embedding", 0.9, refine="bucket_local", **kw
-    )
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert len(ra) > 0
-    assert ra == rb  # bit-exact, including the cosine doubles
+    got = sorted(map(tuple, S.cosine_pairs_ivf(
+        emb, "vec_id", "embedding", 0.9, n_lists=64, train_sample=2_000,
+        n_probes=4,
+    ).collect()))
+    want = _exact_pairs(emb)
+    assert len(want) > 0
+    assert got == want  # bit-exact, including the cosine doubles
 
 
 def test_lsh_bucket_local_refine_bit_parity(spark, sf_dir):
     """The bucket-local tail under the LSH bucketer must emit the exact
-    exchange-refine pair set, cosine doubles included."""
+    cross join's pair set, cosine doubles included."""
     from sample_deepbook_margin_dune_dbt_spark.queries.common import load
     from sample_deepbook_margin_dune_dbt_spark.queries.llmops import (
         _augment_near_dups,
     )
 
     emb = _augment_near_dups(load(spark, sf_dir, "embeddings"))
-    n = emb.count()
-    a = S.cosine_pairs_lsh(
-        emb, "vec_id", "embedding", 0.9, dim=64, n_vectors=n,
-        refine="exchange",
-    )
-    b = S.cosine_pairs_lsh(
-        emb, "vec_id", "embedding", 0.9, dim=64, n_vectors=n,
-        refine="bucket_local",
-    )
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert len(ra) > 0
-    assert ra == rb
+    got = sorted(map(tuple, S.cosine_pairs_lsh(
+        emb, "vec_id", "embedding", 0.9, dim=64, n_vectors=emb.count(),
+    ).collect()))
+    want = _exact_pairs(emb)
+    assert len(want) > 0
+    assert got == want
 
 
 def test_refine_tails_agree_on_degenerate_inputs(spark):
     """ADVICE r11 (low): zero-norm vectors (NaN cosine — Spark's NaN
-    sorts above all doubles, NumPy's comparison drops it) and duplicated
-    id rows (self-pair candidates) must behave identically in both
-    refine tails: NaN pairs dropped, id_a == id_b never emitted."""
+    sorts above all doubles, so the cross join's ``>=`` KEEPS them while
+    NumPy's comparison drops them) and duplicated id rows (self-pair
+    candidates, doubled cross-join rows) must leave the bucket-local
+    tail with exactly the cross join's non-NaN distinct pairs: NaN
+    pairs dropped, id_a == id_b never emitted."""
     rows = [
         (1, [1.0, 0.0, 0.0, 0.0]),
         (2, [1.0, 0.0, 0.0, 0.0]),   # exact dup of 1
@@ -1672,17 +1670,14 @@ def test_refine_tails_agree_on_degenerate_inputs(spark):
         (3, [0.0, 0.0, 0.0, 0.0]),   # zero-norm: NaN against everything
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(dim=4, band_planes=1, bands=2, n_vectors=4)
-    for refine in ("exchange", "bucket_local"):
-        got = sorted(
-            map(tuple, S.cosine_pairs_lsh(
-                emb, "vec_id", "embedding", 0.9, refine=refine, **kw
-            ).collect())
-        )
-        assert all(a != b for a, b, _ in got), (refine, got)
-        assert all(c == c for _, _, c in got), (refine, got)  # no NaN
-        assert all(3 not in (a, b) for a, b, _ in got), (refine, got)
-        assert (1, 2, 1.0) in got, (refine, got)
+    got = sorted(
+        map(tuple, S.cosine_pairs_lsh(
+            emb, "vec_id", "embedding", 0.9, dim=4, band_planes=1, bands=2,
+            n_vectors=4,
+        ).collect())
+    )
+    want = sorted({(a, b, c) for a, b, c in _exact_pairs(emb) if c == c})
+    assert got == want == [(1, 2, 1.0)], got
 
 
 def test_ivf_distributed_trainer_full_recall(spark, sf_dir):
@@ -1748,7 +1743,7 @@ def test_bucket_local_tile_boundary_bit_parity(spark):
     """VERDICT r11 item 8: the in-task pairwise tiles are (block=512 ×
     occupancy) — a bucket larger than the block exercises the partial
     last tile and the cross-tile global-index bookkeeping. 600 vectors
-    in ONE band bucket (> one tile) must produce the exact exchange-tail
+    in ONE band bucket (> one tile) must produce the exact cross join's
     pair set, cosine doubles bit-identical."""
     import numpy as np
 
@@ -1758,15 +1753,12 @@ def test_bucket_local_tile_boundary_bit_parity(spark):
         (i, (base + rng.standard_normal(8) * 0.02).tolist()) for i in range(600)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(dim=8, band_planes=1, bands=1, n_vectors=600, max_bucket_size=10_000)
-    a = sorted(map(tuple, S.cosine_pairs_lsh(
-        emb, "vec_id", "embedding", 0.9, refine="exchange", **kw
+    got = sorted(map(tuple, S.cosine_pairs_lsh(
+        emb, "vec_id", "embedding", 0.9, dim=8, band_planes=1, bands=1,
+        n_vectors=600, max_bucket_size=10_000,
     ).collect()))
-    b = sorted(map(tuple, S.cosine_pairs_lsh(
-        emb, "vec_id", "embedding", 0.9, refine="bucket_local", **kw
-    ).collect()))
-    assert len(a) > 600  # tight cloud: far more pairs than vectors
-    assert a == b
+    assert len(got) > 600  # tight cloud: far more pairs than vectors
+    assert got == _exact_pairs(emb)
 
 
 def test_bitext_mining_planted_pair(spark):
@@ -2155,38 +2147,6 @@ def test_jaccard_auto_dispatch_outputs_unchanged(spark, sf_dir):
     for a, b, j in lsh:
         assert exact.get((a, b)) == j  # exact value on every survivor
     assert len(lsh) >= 0.8 * len(exact)  # fixture recall stays high
-
-
-def test_sessionize_presplit_exact_parity(spark, sf_dir):
-    """The pre-split sessionizer (the hot-key escape hatch) must emit
-    EXACTLY the plain window's rows — same 1-based per-user numbering —
-    under both a stitch-heavy narrow bucket and the default."""
-    from pyspark.sql import functions as F
-
-    from sample_deepbook_margin_dune_dbt_spark.operators.sessions import (
-        sessionize,
-        sessionize_presplit,
-    )
-    from sample_deepbook_margin_dune_dbt_spark.queries.common import (
-        event_ts_us,
-        load,
-    )
-
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", event_ts_us().alias("ts_us"), "event_id"
-    )
-    gap = 30 * 60 * 1_000_000
-    want = sorted(map(tuple, sessionize(
-        ev, "user_id", "ts_us", gap, extra_cols=["event_id"]).collect()))
-    assert len(want) > 0
-    for bucket in (2 * gap, None):
-        got = sorted(map(tuple, sessionize_presplit(
-            ev, "user_id", "ts_us", gap, bucket=bucket,
-            extra_cols=["event_id"]).collect()))
-        assert got == want, bucket
-    import pytest as _p
-    with _p.raises(ValueError):
-        sessionize_presplit(ev, "user_id", "ts_us", gap, bucket=gap)
 
 
 def test_banded_hamming_cap_loss_accounting_property(spark, no_aqe):

@@ -239,11 +239,12 @@ def test_bloom_probe_corpus_never_shuffles(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from sample_deepbook_margin_dune_dbt_spark.operators import bloom as B
+    from sample_deepbook_margin_dune_dbt_spark.operators.dedup import shingles
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bench_sh = (
         docs.where(F.col("doc_id") % 97 == 0)
-        .select(F.explode(B.shingles(F.col("text"), 3)).alias("_s"))
+        .select(F.explode(shingles(F.col("text"), 3)).alias("_s"))
         .distinct()
     )
     bf = spark.createDataFrame(B.bloom_build(bench_sh, "_s").collect())
@@ -462,8 +463,9 @@ def test_aqe_splits_skewed_join_at_runtime(spark, tmp_path):
     try:
         # thresholds scaled down so the MB-scale test fact qualifies as
         # skewed; production keeps the defaults (256MB advisory). AQE is
-        # explicitly ON here — the test session default is off at MB
-        # scale (conftest), and this test pins the adaptive runtime.
+        # pinned ON here even though the test session default is already
+        # on (conftest): the pin guards this adaptive-runtime test against
+        # the `no_aqe` fixture and against SPARK_GRAFT_TEST_AQE=false.
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.2")
         spark.conf.set(

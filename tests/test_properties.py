@@ -11,9 +11,9 @@ import re
 
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 
-from tests.conftest import fuzz_examples
+from tests._util import fuzz_examples
 from pyspark.sql import functions as F
 
 from sample_deepbook_margin_dune_dbt_spark.engine import TableStore
@@ -528,52 +528,3 @@ def test_versioned_store_equals_plain_under_random_interleavings(
         for ver in vers.versions("t"):
             vers.read("t", version=ver["version"]).count()
             assert ver["op"] in {"overwrite", "merge", "append", "insert_overwrite"}
-
-
-@settings(
-    max_examples=fuzz_examples(8, 4),
-    deadline=None,
-    # no_aqe is function-scoped and intentionally spans all examples
-    # (one conf set/restore around the whole fuzz, not per example)
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=4),       # user
-            st.integers(min_value=0, max_value=5_000),   # ts
-        ),
-        min_size=1,
-        max_size=120,
-    ),
-    st.integers(min_value=1, max_value=400),             # gap
-    st.integers(min_value=1, max_value=2_000),           # bucket - gap
-)
-def test_sessionize_presplit_property(spark, no_aqe, events, gap, bucket_over):
-    """VERDICT r12 item 9 (optional hardening): `sessionize_presplit`
-    must equal the plain window under RANDOM gap/bucket/timestamp
-    interleavings — duplicated timestamps, empty buckets, chains
-    spanning many buckets — not just the two fixed shapes the r12 pins
-    exercised. The `bucket > gap` contract is honored by construction
-    (bucket = gap + bucket_over); duplicate (user, ts) rows are
-    deduplicated first so both forms see an identical ordered set (a
-    window over ties has no deterministic per-row numbering to pin)."""
-    from sample_deepbook_margin_dune_dbt_spark.operators.sessions import (
-        sessionize,
-        sessionize_presplit,
-    )
-
-    rows = sorted(set(events))
-    df = spark.createDataFrame(rows, "user_id long, ts_us long")
-    plain = sorted(
-        map(tuple, sessionize(df, "user_id", "ts_us", gap).collect())
-    )
-    split = sorted(
-        map(
-            tuple,
-            sessionize_presplit(
-                df, "user_id", "ts_us", gap, bucket=gap + bucket_over
-            ).collect(),
-        )
-    )
-    assert split == plain

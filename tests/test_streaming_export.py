@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from tests.conftest import fuzz_examples
+from tests._util import fuzz_examples
 
 from sample_deepbook_margin_dune_dbt_spark.engine import TableStore
 from sample_deepbook_margin_dune_dbt_spark.operators.export import (

@@ -65,12 +65,11 @@ def part_b(fixture: str, mem: str = "8g") -> None:
 
     from sample_deepbook_margin_dune_dbt_spark.operators.dedup import (
         _intersect_shingle_rows,
-        shingles_vectorized,
     )
 
     spark = _spark(mem, 128)
     docs = spark.read.parquet(os.path.join(fixture, "documents.parquet"))
-    sh, sizes = _intersect_shingle_rows(docs, "doc_id", "text", 3, shingles_vectorized)
+    sh, sizes = _intersect_shingle_rows(docs, "doc_id", "text", 3)
 
     wh = os.path.join(REPO, "spark-warehouse")
     tbl = "probe_sh_bucketed_1000x"

@@ -1,7 +1,7 @@
 """r11: the embedding family's fourth decade (VERDICT r10 item 8).
 
 Runs the IVF-candidate near-dup tier (`cosine_pairs_ivf` + exact
-shuffle-hash refine) over the streamed `sf0.1x1000` embeddings fixture
+bucket-local refine) over the streamed `sf0.1x1000` embeddings fixture
 (~2M rotated-copy vectors, every within-copy cosine preserved), with the
 query-level planted-near-dup augmentation — the same protocol as the r9
 LSH decades and the r10 1x/10x/100x IVF comparison.
@@ -13,7 +13,7 @@ expansion is quadratic in occupancy — the probe therefore passes
 clamp WARNING tells an operator to make) and records recall against the
 75 planted pairs.
 
-Usage: python tools/probe_ivf_1000x.py [n_lists] [train_sample] [refine] [n_probes] [train_strategy] [train_iters]
+Usage: python tools/probe_ivf_1000x.py [n_lists] [train_sample] [n_probes] [train_strategy] [train_iters]
 """
 
 from __future__ import annotations
@@ -28,10 +28,11 @@ sys.path.insert(0, REPO)
 FIXTURE = os.path.join(REPO, ".scale_fixtures", "sf0.1x1000")
 
 
-def main(n_lists: int | None, train_sample: int, refine: str = "exchange", n_probes: int = 4, train_strategy: str = "driver", train_iters: int = 5) -> None:
+def main(n_lists: int | None, train_sample: int, n_probes: int = 4, train_strategy: str = "driver", train_iters: int = 5) -> None:
     # default to the harness heap; overridable (the r11 run needed the
-    # r10 matrix's 48 GB PASS point — the refine tail's hash builds hit
-    # the same per-task memory floor as the shingle self-join family)
+    # r10 matrix's 48 GB PASS point — the old join refine tail's hash
+    # builds hit the same per-task memory floor as the shingle self-join
+    # family)
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "128")
     from pyspark.sql import functions as F
@@ -59,7 +60,6 @@ def main(n_lists: int | None, train_sample: int, refine: str = "exchange", n_pro
         n_lists=n_lists,
         train_sample=train_sample,
         n_vectors=n,
-        refine=refine,
         n_probes=n_probes,
         train_strategy=train_strategy,
         train_iters=train_iters,
@@ -71,7 +71,7 @@ def main(n_lists: int | None, train_sample: int, refine: str = "exchange", n_pro
         (F.col("id_b") >= 1_000_000) & (F.col("id_b") < 3_000_000)
     ).count()
     print(
-        f"IVF_1000X refine={refine} p={n_probes} strategy={train_strategy} pairs={rows} planted={planted} wall={wall:.1f}s",
+        f"IVF_1000X p={n_probes} strategy={train_strategy} pairs={rows} planted={planted} wall={wall:.1f}s",
         flush=True,
     )
     spark.stop()
@@ -80,8 +80,7 @@ def main(n_lists: int | None, train_sample: int, refine: str = "exchange", n_pro
 if __name__ == "__main__":
     nl = int(sys.argv[1]) if len(sys.argv) > 1 else 62502
     ts = int(sys.argv[2]) if len(sys.argv) > 2 else 125_000
-    rf = sys.argv[3] if len(sys.argv) > 3 else "exchange"
-    np_ = int(sys.argv[4]) if len(sys.argv) > 4 else 4
-    strat = sys.argv[5] if len(sys.argv) > 5 else "driver"
-    iters = int(sys.argv[6]) if len(sys.argv) > 6 else 5
-    main(nl, ts, rf, np_, strat, iters)
+    np_ = int(sys.argv[3]) if len(sys.argv) > 3 else 4
+    strat = sys.argv[4] if len(sys.argv) > 4 else "driver"
+    iters = int(sys.argv[5]) if len(sys.argv) > 5 else 5
+    main(nl, ts, np_, strat, iters)
