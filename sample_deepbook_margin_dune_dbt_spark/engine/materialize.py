@@ -13,19 +13,32 @@ in the environment, a table is a parquet directory and MERGE is expressed as::
     kept = old.join(new, on=unique_key, how="left_anti")   # rows not replaced
     result = kept.unionByName(new)
 
-Two physical strategies, chosen by whether the table is partitioned:
+Every sink (``write_full``, ``append``, ``insert_overwrite``, ``merge``,
+``replace_scope``) is one DataFrame expression plus one commit,
+``_commit(df, name, partition_by, op, keep)``, which writes ``df`` into a
+fresh directory, hard-links the previous files the sink keeps, and
+publishes. ``keep`` says which previous files carry over:
 
-1. **Partitioned tables** (e.g. a fact partitioned by ``snapshot_date``):
-   only the partitions *touched by new data* are read back and rewritten,
-   using Spark's dynamic partition overwrite. New data for 7 days out of 5
-   years rewrites 7 partitions, not the table. This is the strategy that
-   holds at 100 TB — the rewrite cost is proportional to the incremental
-   slice, not the table size. (Equivalent of Delta's MERGE file-pruning /
-   Hive dynamic-partition insert-overwrite.)
+- ``"none"``: full rewrite (``write_full``, ``replace_scope``, and a MERGE
+  of an unpartitioned or schema-altering table);
+- ``"untouched"``: every partition the write did not produce
+  (``insert_overwrite``, and the partitioned MERGE, whose ``df`` is the
+  merged slice of the touched partitions only). New data for 7 days out
+  of 5 years rewrites 7 partitions, not the table — the rewrite cost is
+  proportional to the incremental slice (Delta's MERGE file pruning /
+  Hive's insert-overwrite of touched partitions);
+- ``"all"``: ``append``.
 
-2. **Unpartitioned tables**: full anti-join + atomic directory swap. Fine for
-   dimension-sized tables; incremental *fact* tables should declare
-   ``partition_by``.
+Only tables declaring ``partition_by`` get the slice-sized rewrite;
+unpartitioned tables take the full anti-join rewrite, which is fine for
+dimension-sized tables. No write lands in a live directory, so the
+session's partition-overwrite mode never matters. This store
+publishes by swapping directories: the live table directory moves aside,
+the fresh one moves in, and the old one is deleted only after that; a
+failure in between moves the old one back. Only a kill between the two
+renames leaves the table missing, with its previous version intact under
+``.old-<name>-*``. The versioned store (``versioned.py``) publishes the
+same fresh directory by a manifest rename instead.
 
 On a cluster with Delta/Iceberg available, ``TableStore`` is the single seam
 to swap: ``merge`` becomes ``MERGE INTO target USING updates ON <keys> WHEN
@@ -37,6 +50,7 @@ post-hooks ``macros/dune_dbt_overrides/optimize_table.sql:3``,
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import time
@@ -65,6 +79,24 @@ def _split_merge_scope(
     return old.filter(in_scope), old.filter(~in_scope)
 
 
+def _upsert(
+    old: DataFrame,
+    new: DataFrame,
+    key_cols: list[str],
+    scope_keys: DataFrame | None = None,
+    incremental_predicates: list[str] | None = None,
+) -> DataFrame:
+    """``old`` minus every in-scope row whose ``key_cols`` tuple appears in
+    ``scope_keys`` (default: ``new``'s keys), plus ``new`` aligned to
+    ``old``'s columns — the merged content behind both ``merge`` and
+    ``replace_scope``."""
+    old, out_scope = _split_merge_scope(old, incremental_predicates)
+    keys = (new if scope_keys is None else scope_keys).select(*key_cols).distinct()
+    kept = old.join(keys, on=key_cols, how="left_anti")
+    result = kept.unionByName(new.select(*old.columns))
+    return result if out_scope is None else out_scope.unionByName(result)
+
+
 def _touched_partition_predicate(touched_rows, partition_by: list[str]) -> F.Column:
     """OR-of-ANDs predicate selecting exactly the touched partitions.
 
@@ -72,11 +104,10 @@ def _touched_partition_predicate(touched_rows, partition_by: list[str]) -> F.Col
     Hive's ``__HIVE_DEFAULT_PARTITION__`` directory and must select that
     partition's existing rows into the merge slice — plain ``=`` never
     matches NULL, which would exclude the null partition from the
-    old-slice read while the new snapshot still overwrites (or, in the
-    versioned store, skip-links) its directory, silently dropping every
-    non-updated key there (ADVICE r10). Catalyst prunes partitions on
-    ``EqualNullSafe`` the same as on ``EqualTo``, so the predicate still
-    reaches the scan as partition pruning.
+    old-slice read while the commit still replaces its directory,
+    silently dropping every non-updated key there (ADVICE r10). Catalyst
+    prunes partitions on ``EqualNullSafe`` the same as on ``EqualTo``, so
+    the predicate still reaches the scan as partition pruning.
     """
     pred = None
     for row in touched_rows:
@@ -86,6 +117,33 @@ def _touched_partition_predicate(touched_rows, partition_by: list[str]) -> F.Col
             clause = cond if clause is None else (clause & cond)
         pred = clause if pred is None else (pred | clause)
     return pred
+
+
+def _partition_subdirs(d: str) -> set[str]:
+    """Relative paths of the leaf partition directories holding data under ``d``."""
+    out: set[str] = set()
+    for root, _dirs, files in os.walk(d):
+        if any(f.endswith(".parquet") for f in files):
+            rel = os.path.relpath(root, d)
+            if rel != ".":
+                out.add(rel)
+    return out
+
+
+def _link_tree(src: str, dst: str, skip_partition_dirs: set[str]) -> None:
+    """Hard-link every parquet file under ``src`` into ``dst``, preserving
+    the relative (partition) layout, skipping files whose partition
+    subpath is in ``skip_partition_dirs``."""
+    for root, _dirs, files in os.walk(src):
+        rel = os.path.relpath(root, src)
+        rel = "" if rel == "." else rel
+        if rel in skip_partition_dirs:
+            continue
+        for f in files:
+            if not f.endswith(".parquet"):
+                continue
+            os.makedirs(os.path.join(dst, rel), exist_ok=True)
+            os.link(os.path.join(root, f), os.path.join(dst, rel, f))
 
 
 class TableStore:
@@ -122,13 +180,73 @@ class TableStore:
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.path(name))
 
-    # ------------------------------------------------------------------ sinks
+    # -------------------------------------------------------------- commits
 
-    def _has_partition_dirs(self, name: str) -> bool:
-        p = self.path(name)
-        return os.path.isdir(p) and any(
-            "=" in f and os.path.isdir(os.path.join(p, f)) for f in os.listdir(p)
-        )
+    def _data_dir(self, name: str) -> str | None:
+        """Directory holding the table's current files (``None``: no table)."""
+        return self.path(name)
+
+    def _write_lock(self, name: str):
+        """Held by every sink from its first read of the table to the
+        publish. The plain store's single-writer contract is not enforced;
+        the versioned store overrides this with a lockfile."""
+        return contextlib.nullcontext()
+
+    def _stage(
+        self, df: DataFrame, fresh: str, name: str, partition_by: list[str] | None, keep: str
+    ) -> None:
+        """Write ``df`` into the new directory ``fresh``, then hard-link the
+        current files ``keep`` retains: ``"none"``, ``"untouched"`` (every
+        partition the write did not produce, as Spark encoded it — never
+        re-encoded in Python) or ``"all"``.
+
+        Empty-input edge: a *partitioned* write of zero rows produces no
+        files at all (no partition dirs, no schema), so a full rewrite
+        (``keep="none"``, the only commit that can create a table) of zero
+        rows is written unpartitioned — one empty, schema-bearing parquet
+        file — and the table upgrades to the partitioned layout on the
+        first non-empty full rewrite (``merge`` detects the layout on
+        disk). Under the other ``keep`` values the previous files carry
+        the schema, and an empty write changes nothing.
+        """
+        writer = df.write.mode("overwrite")
+        if partition_by and (keep != "none" or not df.isEmpty()):
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(fresh)
+        if keep != "none":
+            skip = _partition_subdirs(fresh) if keep == "untouched" else set()
+            _link_tree(self._data_dir(name), fresh, skip)
+
+    def _commit(
+        self, df: DataFrame, name: str, partition_by: list[str] | None, op: str, keep: str
+    ) -> None:
+        """Stage ``df`` (see :meth:`_stage`) into ``.staging-*``, then swap
+        it in: the live directory moves aside, the staged one moves in, and
+        the old one is deleted only after that. A failure before the swap
+        leaves the live table untouched; a failed second rename moves the
+        old directory back. ``op`` is a label only the versioned store
+        records.
+        """
+        final = self.path(name)
+        tag = f"{name}-{uuid.uuid4().hex[:8]}"
+        staging, aside = self.path(f".staging-{tag}"), self.path(f".old-{tag}")
+        try:
+            self._stage(df, staging, name, partition_by, keep)
+            live = os.path.isdir(final)
+            if live:
+                os.replace(final, aside)
+            try:
+                os.replace(staging, final)
+            except BaseException:
+                if live:
+                    os.replace(aside, final)
+                raise
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        if live:
+            shutil.rmtree(aside)
+
+    # ------------------------------------------------------------------ sinks
 
     def write_full(
         self,
@@ -139,39 +257,27 @@ class TableStore:
     ) -> None:
         """CREATE TABLE AS (first run / full refresh; SURVEY §2.1 S7, C8).
 
-        Writes to a staging dir then atomically swaps, so a failed job never
-        leaves a half-written table (the reference gets this from Trino CTAS
-        atomicity).
+        A full rewrite commit: ``df`` may read the table's current files,
+        which stay in place until the commit publishes, so a failed job
+        never leaves a half-written table (the reference gets this from
+        Trino CTAS atomicity).
 
-        ``op`` labels what the full rewrite IS semantically ("merge",
-        "replace_scope", "optimize", …); the plain store ignores it, the
-        versioned store records it in the commit manifest so the history
-        can distinguish a MERGE that took the full-rewrite path from a
-        user full refresh (ADVICE r10).
-
-        Empty-input edge: a *partitioned* write of zero rows produces no
-        files at all (no partition dirs, no schema), which would leave a
-        schema-less unreadable table. Zero-row inputs are therefore written
-        unpartitioned — one empty, schema-bearing parquet file — and the
-        table upgrades to the partitioned layout on the first non-empty
-        write (``merge`` detects the actual layout on disk).
+        ``op`` labels what the full rewrite IS semantically ("optimize",
+        …); the plain store ignores it, the versioned store records it in
+        the commit manifest so the history can distinguish it from a user
+        full refresh (ADVICE r10).
         """
-        staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
-        writer = df.write.mode("overwrite")
-        if partition_by and not df.isEmpty():
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
-        final = self.path(name)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.replace(staging, final)
+        with self._write_lock(name):
+            self._commit(df, name, partition_by, op, "none")
 
     def append(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
-        """Pure insert-append incremental (SURVEY §2.1 S8)."""
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.path(name))
+        """Pure insert-append incremental (SURVEY §2.1 S8): every current
+        file is kept, the new ones are added."""
+        with self._write_lock(name):
+            if self.exists(name):
+                self._commit(df, name, partition_by, "append", "all")
+            else:
+                self._commit(df, name, partition_by, "overwrite", "none")
 
     def merge(
         self,
@@ -202,6 +308,13 @@ class TableStore:
         several rows for one key, all are kept (same as the reference, whose
         MERGE sources are already key-unique by construction).
 
+        A table with partition dirs on disk merges partition-pruned: the
+        (small) set of partitions the slice touches — bounded by the
+        lookback window, never by table size — is collected, only those
+        partitions of the target are read and merged, and the commit
+        keeps every other partition's files as they are. Any other table
+        is rewritten in full.
+
         ``on_schema_change`` mirrors dbt's contract for schema drift:
         ``'ignore'`` (default, the reference's effective setting) drops
         NEW source columns; ``'append_new_columns'`` widens the target
@@ -225,55 +338,62 @@ class TableStore:
                 f"unsupported on_schema_change={on_schema_change!r}; "
                 f"expected one of {modes}"
             )
-        if not self.exists(name):
-            self.write_full(updates, name, partition_by)
-            return
+        with self._write_lock(name):
+            if not self.exists(name):
+                self._commit(updates, name, partition_by, "overwrite", "none")
+                return
 
-        old0 = self.read(name)
-        new_fields = [
-            f for f in updates.schema.fields if f.name not in set(old0.columns)
-        ]
-        if new_fields and on_schema_change == "fail":
-            raise ValueError(
-                f"schema change on {name}: new column(s) "
-                f"{[f.name for f in new_fields]} with on_schema_change='fail'"
+            old = self.read(name)
+            new_fields = [
+                f for f in updates.schema.fields if f.name not in set(old.columns)
+            ]
+            if new_fields and on_schema_change == "fail":
+                raise ValueError(
+                    f"schema change on {name}: new column(s) "
+                    f"{[f.name for f in new_fields]} with on_schema_change='fail'"
+                )
+            sync = on_schema_change == "sync_all_columns"
+            gone_cols = (
+                [c for c in old.columns if c not in set(updates.columns)] if sync else []
             )
-        sync = on_schema_change == "sync_all_columns"
-        gone_cols = (
-            [c for c in old0.columns if c not in set(updates.columns)] if sync else []
-        )
-        if any(k in gone_cols for k in unique_key):
-            raise ValueError(
-                f"sync_all_columns would drop unique_key column(s) "
-                f"{[k for k in unique_key if k in gone_cols]} from {name}"
+            if any(k in gone_cols for k in unique_key):
+                raise ValueError(
+                    f"sync_all_columns would drop unique_key column(s) "
+                    f"{[k for k in unique_key if k in gone_cols]} from {name}"
+                )
+            widen = bool(new_fields) and on_schema_change in (
+                "append_new_columns",
+                "sync_all_columns",
             )
-        widen = bool(new_fields) and on_schema_change in (
-            "append_new_columns",
-            "sync_all_columns",
-        )
-        altering = widen or bool(gone_cols)
+            altering = widen or bool(gone_cols)
 
-        if partition_by and self._has_partition_dirs(name) and not altering:
-            self._merge_partitioned(
-                updates, name, unique_key, partition_by, incremental_predicates
-            )
-        else:
+            if partition_by and self.partition_cols(name) and not altering:
+                updates = updates.persist()
+                try:
+                    touched = updates.select(*partition_by).distinct().collect()
+                    if touched:
+                        old = old.filter(_touched_partition_predicate(touched, partition_by))
+                        merged = _upsert(
+                            old, updates, unique_key,
+                            incremental_predicates=incremental_predicates,
+                        )
+                        self._commit(merged, name, partition_by, "merge", "untouched")
+                finally:
+                    updates.unpersist()
+                return
+
             # unpartitioned layout (incl. a table created empty that now
             # receives its first real rows) or a schema-altering merge:
             # full rewrite, upgrading to the partitioned layout when declared
-            old = old0.drop(*gone_cols) if gone_cols else old0
+            if gone_cols:
+                old = old.drop(*gone_cols)
             if widen:
                 for f in new_fields:
                     old = old.withColumn(f.name, F.lit(None).cast(f.dataType))
-            old, out_scope = _split_merge_scope(old, incremental_predicates)
-            kept = old.join(updates.select(*unique_key).distinct(), on=unique_key, how="left_anti")
-            result = kept.unionByName(updates.select(*old.columns))
-            if out_scope is not None:
-                result = out_scope.unionByName(result)
-            # full rewrite; write_full stages then swaps, so the result
-            # (which reads the current table files) materializes before
-            # the old directory is replaced
-            self.write_full(result, name, partition_by, op="merge")
+            merged = _upsert(
+                old, updates, unique_key, incremental_predicates=incremental_predicates
+            )
+            self._commit(merged, name, partition_by, "merge", "none")
 
     def replace_scope(
         self,
@@ -297,17 +417,12 @@ class TableStore:
         detail for these keys", which is what makes an at-least-once
         foreachBatch replay idempotent.
         """
-        if not self.exists(name):
-            self.write_full(updates, name, partition_by)
-            return
-        old = self.read(name)
-        kept = old.join(
-            scope_keys.select(*key_cols).distinct(), on=key_cols, how="left_anti"
-        )
-        result = kept.unionByName(updates.select(*old.columns))
-        # full rewrite via write_full's staging swap (same constraint as
-        # merge: cannot stream onto the directory being read)
-        self.write_full(result, name, partition_by, op="replace_scope")
+        with self._write_lock(name):
+            if not self.exists(name):
+                self._commit(updates, name, partition_by, "overwrite", "none")
+                return
+            merged = _upsert(self.read(name), updates, key_cols, scope_keys=scope_keys)
+            self._commit(merged, name, partition_by, "replace_scope", "none")
 
     def insert_overwrite(
         self,
@@ -320,8 +435,8 @@ class TableStore:
 
         No key matching at all — the unit of idempotency is the
         partition, which is why this beats MERGE for append-mostly daily
-        data at 100 TB: the writer streams straight to the touched
-        directories (no anti-join, no old-slice read), and re-running a
+        data at 100 TB: the writer streams straight into the new
+        partitions (no anti-join, no old-slice read), and re-running a
         day reproduces it exactly. The trade: ``updates`` must carry the
         COMPLETE new content of each touched partition (a partial slice
         silently drops that partition's other rows — dbt's documented
@@ -329,92 +444,36 @@ class TableStore:
         """
         if not partition_by:
             raise ValueError("insert_overwrite requires partition_by")
-        if not self.exists(name):
-            self.write_full(updates, name, partition_by)
-            return
-        # same data-loss guard as the partitioned MERGE: only DYNAMIC
-        # mode scopes the overwrite to the partitions actually written
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            updates.write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(self.path(name))
-        )
-
-    def _merge_partitioned(
-        self,
-        updates: DataFrame,
-        name: str,
-        unique_key: list[str],
-        partition_by: list[str],
-        incremental_predicates: list[str] | None = None,
-    ) -> None:
-        """Partition-pruned upsert: rewrite only partitions present in ``updates``.
-
-        1. Collect the (small) set of touched partition values from the
-           incremental slice — bounded by the lookback window, never by table
-           size.
-        2. Read ONLY those partitions of the existing table (partition
-           pruning via filter on partition columns).
-        3. Anti-join old-slice against new keys, union with new rows.
-        4. ``INSERT OVERWRITE`` with dynamic partition overwrite — untouched
-           partitions are not rewritten.
-        """
-        updates = updates.persist()
-        touched = updates.select(*partition_by).distinct().collect()
-        if not touched:
-            updates.unpersist()
-            return
-        pred = _touched_partition_predicate(touched, partition_by)
-
-        old_slice = self.read(name).filter(pred)
-        old_slice, out_scope = _split_merge_scope(old_slice, incremental_predicates)
-        kept = old_slice.join(
-            updates.select(*unique_key).distinct(), on=unique_key, how="left_anti"
-        )
-        result = kept.unionByName(updates.select(*old_slice.columns))
-        if out_scope is not None:
-            result = out_scope.unionByName(result)
-        # Dynamic partition overwrite can't read and overwrite the same files in
-        # one job; stage the merged slice first (slice-sized, not table-sized).
-        staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
-        result.write.mode("overwrite").parquet(staging)
-        merged_slice = self.spark.read.parquet(staging)
-        # The overwrite below is only partition-scoped under DYNAMIC
-        # partition-overwrite; Spark's default is STATIC, under which this
-        # write would silently DELETE every untouched partition. get_spark()
-        # sets the conf, but TableStore must not trust its session's
-        # provenance — pin it here (runtime-settable) so a caller-supplied
-        # vanilla session can't turn an incremental merge into data loss.
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            merged_slice.write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(self.path(name))
-        )
-        shutil.rmtree(staging)
-        updates.unpersist()
+        with self._write_lock(name):
+            if self.exists(name):
+                self._commit(updates, name, partition_by, "insert_overwrite", "untouched")
+            else:
+                self._commit(updates, name, partition_by, "overwrite", "none")
 
     # ------------------------------------------------------------ maintenance
 
     def file_count(self, name: str) -> int:
         """Number of data files in the table (walked from the directory —
         no Spark job, no RDD conversion)."""
+        d = self._data_dir(name)
+        if d is None:
+            return 0
         total = 0
-        for _root, _dirs, files in os.walk(self.path(name)):
+        for _root, _dirs, files in os.walk(d):
             total += sum(1 for f in files if f.endswith(".parquet"))
         return total
 
     def partition_cols(self, name: str) -> list[str]:
         """Partition columns inferred from the on-disk ``col=value`` layout."""
         cols: list[str] = []
-        p = self.path(name)
-        while True:
+        p = self._data_dir(name)
+        while p and os.path.isdir(p):
             subs = [f for f in os.listdir(p) if "=" in f and os.path.isdir(os.path.join(p, f))]
             if not subs:
-                return cols
+                break
             cols.append(subs[0].split("=")[0])
             p = os.path.join(p, subs[0])
+        return cols
 
     def optimize(
         self,
@@ -430,8 +489,8 @@ class TableStore:
         count, derived from the on-disk file count (a directory walk — not
         an RDD conversion, which would spin up a job just to pick a
         number). Partitioned tables keep their layout: rows are
-        re-clustered on the partition columns so each partition compacts
-        to one file under dynamic partition overwrite.
+        hash-repartitioned on the partition columns, so each partition
+        compacts to one file in the full rewrite through ``write_full``.
 
         ``cluster_by`` is the Delta ``ZORDER``/``CLUSTER BY`` analog for
         range predicates: unpartitioned tables range-partition on the

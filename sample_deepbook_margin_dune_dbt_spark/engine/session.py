@@ -14,9 +14,9 @@ Centralizes the configuration that the rest of the engine depends on:
 - **AQE on** (+ skew join) — runtime re-planning; at 100 TB this converts
   skewed shuffle joins into split subjoins and coalesces tiny post-shuffle
   partitions without manual tuning.
-- **Dynamic partition overwrite** — the incremental MERGE sink rewrites only
-  the partitions touched by new data (see ``materialize.py``); at cluster
-  scale this is the difference between rewriting 100 TB and rewriting one day.
+- **Executor import path** — Python workers get the package's parent dir
+  on ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so ``mapInPandas``
+  and UDF code that imports the package works from any working directory.
 - **Arrow** — every pandas interchange (Pandas UDFs in
   ``operators/multimodal.py``, ``applyInPandas``) is Arrow-batched.
 """
@@ -51,6 +51,8 @@ def get_spark(
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
+    package_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    pythonpath = os.pathsep.join(p for p in (package_root, os.environ.get("PYTHONPATH")) if p)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -61,7 +63,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        .config("spark.executorEnv.PYTHONPATH", pythonpath)
         # tolerate TIMESTAMP(NANOS) parquet (surfaces as long ns); harmless
         # no-op on µs data — queries normalize either encoding via
         # queries.common.normalize_event_ts

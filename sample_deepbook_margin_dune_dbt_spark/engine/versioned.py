@@ -1,9 +1,10 @@
 """Manifest-versioned table store: Delta-style snapshots over parquet.
 
 The plain :class:`~.materialize.TableStore` emulates the reference's
-warehouse by overwriting each table's directory in place — semantically
-correct for every model (N incremental runs ≡ full refresh), but missing
-three Delta behaviors the reference actually relies on:
+warehouse by swapping each table's directory on every commit —
+semantically correct for every model (N incremental runs ≡ full refresh),
+but keeping only the newest version, so it misses three Delta behaviors
+the reference actually relies on:
 
 - **time travel** — Dune's Delta tables retain history; reference
   ``macros/dune_dbt_overrides/vacuum_table.sql:3`` retains *7 days of
@@ -12,8 +13,8 @@ three Delta behaviors the reference actually relies on:
 - **snapshot-isolated reads** — a reader that opened the table before a
   MERGE (reference ``models/deepbook_margin/daily/
   fct_deepbook_margin_pool_daily.sql:5`` ``incremental_strategy='merge'``)
-  keeps a consistent view while the MERGE commits; the in-place overwrite
-  deletes the files out from under it;
+  keeps a consistent view while the MERGE commits; the directory swap
+  deletes the replaced files out from under it;
 - **a real VACUUM** — pruning expired versions' files, not just stray
   staging directories.
 
@@ -33,21 +34,24 @@ crash mid-write leaves an orphan snapshot that no manifest references
 ``_v/`` → newest manifest → snapshot dir; a reader holding version N is
 never disturbed because N's files are immutable until vacuum expires them.
 
-**Incremental cost stays incremental.** A naive versioned store would
-rewrite the full table per commit. Instead, partition-pruned MERGE /
-insert_overwrite / append commits write ONLY the touched slice and
-**hard-link** every untouched file from the previous snapshot into the new
-one — the local-filesystem analog of Delta's manifest reusing unchanged
-data files (metadata-only, no data copy; vacuum of an old version just
-drops link counts). Touched partitions are identified from what Spark
-actually wrote into the new snapshot (same encoder both sides), never by
-re-encoding partition values in Python.
+**Incremental cost stays incremental.** The sinks live once, in the base
+store: each is one DataFrame expression plus one ``_commit``. This class
+supplies only where the current files live (``_data_dir``: the current
+snapshot) and how a commit publishes (``_commit``: the next snapshot dir,
+then the manifest rename). Partition-pruned MERGE / insert_overwrite /
+append commits write ONLY the touched slice and **hard-link** every file
+they keep from the previous snapshot into the new one — the
+local-filesystem analog of Delta's manifest reusing unchanged data files
+(metadata-only, no data copy; vacuum of an old version just drops link
+counts). Touched partitions are identified from
+what Spark actually wrote into the new snapshot (same encoder both sides),
+never by re-encoding partition values in Python.
 
 Single-writer per table is the contract, as in dbt (the reference's runs
 are serialized by the dbt scheduler) — and it is SELF-ENFORCING: every
-commit holds an ``O_EXCL`` lockfile (``_v/LOCK``) across snapshot write +
-manifest rename, so a racing second writer raises
-:class:`ConcurrentWriteError` loudly instead of silently orphaning a
+sink holds an ``O_EXCL`` lockfile (``_v/LOCK``) from its first read of
+the previous version to the manifest rename, so a racing second writer
+raises :class:`ConcurrentWriteError` loudly instead of silently orphaning a
 snapshot. A lock left by a crashed writer is reclaimed by :meth:`vacuum`
 once its owning pid is gone. Readers are lock-free at any concurrency.
 On a cluster this class is replaced wholesale by Delta/Iceberg — it
@@ -65,7 +69,7 @@ import time
 
 from pyspark.sql import DataFrame
 
-from .materialize import TableStore, _split_merge_scope, _touched_partition_predicate
+from .materialize import TableStore
 
 _VDIR = "_v"
 _SNAP = "snap-"
@@ -183,22 +187,13 @@ class VersionedTableStore(TableStore):
 
     @contextlib.contextmanager
     def _write_lock(self, name: str):
-        """Exclusive per-table writer lock held across snapshot write +
-        manifest commit. ``O_CREAT|O_EXCL`` makes acquisition atomic on
-        POSIX; a concurrent second writer raises
-        :class:`ConcurrentWriteError` loudly instead of silently racing
-        the manifest rename. Re-entrant within one store instance (the
-        sinks' first-write paths route through :meth:`write_full`).
-        Readers never touch the lock — they stay lock-free at any
-        concurrency."""
-        held = getattr(self, "_held_locks", None)
-        if held is None:
-            held = self._held_locks = set()
-        if name in held:  # re-entrant: outer frame owns the file
-            yield
-            return
-        vdir = self._vdir(name)
-        os.makedirs(vdir, exist_ok=True)
+        """Exclusive per-table writer lock held by every sink from its
+        first read of the previous version to the manifest rename.
+        ``O_CREAT|O_EXCL`` makes acquisition atomic on POSIX; a concurrent
+        second writer raises :class:`ConcurrentWriteError` loudly instead
+        of silently racing the manifest rename. Readers never touch the
+        lock — they stay lock-free at any concurrency."""
+        os.makedirs(self._vdir(name), exist_ok=True)
         lock = self._lock_path(name)
         try:
             fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
@@ -216,10 +211,8 @@ class VersionedTableStore(TableStore):
         try:
             os.write(fd, f"pid={os.getpid()} ts={time.time()}".encode())
             os.close(fd)
-            held.add(name)
             yield
         finally:
-            held.discard(name)
             with contextlib.suppress(OSError):
                 os.remove(lock)
 
@@ -238,160 +231,30 @@ class VersionedTableStore(TableStore):
         except PermissionError:
             return True  # exists, owned by someone else
 
-    def _commit(self, name: str, snap_rel: str, op: str) -> int:
-        """Publish a fully-written snapshot dir: rename a complete manifest
-        into ``_v/`` (the atomic commit point)."""
-        vdir = self._vdir(name)
-        os.makedirs(vdir, exist_ok=True)
+    def _data_dir(self, name: str) -> str | None:
+        v = self.current_version(name)
+        return self._snap_dir(name, v) if v is not None else None
+
+    def _commit(
+        self, df: DataFrame, name: str, partition_by: list[str] | None, op: str, keep: str
+    ) -> None:
+        """Stage ``df`` (see :meth:`TableStore._stage`) into the next
+        snapshot dir, then rename a complete manifest into ``_v/`` — the
+        atomic commit point. The previous snapshot's files are immutable,
+        so ``df`` may read them while the new snapshot is written."""
         version = (self.current_version(name) or 0) + 1
-        manifest = {"version": version, "ts": time.time(), "op": op, "snap": snap_rel}
-        tmp = os.path.join(vdir, f".tmp-v{version:08d}-{os.getpid()}.json")
+        rel = f"{_SNAP}{version:08d}"
+        snap = os.path.join(self.path(name), rel)
+        if os.path.isdir(snap):  # orphan from a crashed commit: discard
+            shutil.rmtree(snap)
+        self._stage(df, snap, name, partition_by, keep)
+        manifest = {"version": version, "ts": time.time(), "op": op, "snap": rel}
+        tmp = os.path.join(self._vdir(name), f".tmp-v{version:08d}-{os.getpid()}.json")
         with open(tmp, "w") as f:
             json.dump(manifest, f)
             f.flush()
             os.fsync(f.fileno())
         os.rename(tmp, self._manifest_path(name, version))
-        return version
-
-    def _new_snap(self, name: str) -> tuple[str, str]:
-        version = (self.current_version(name) or 0) + 1
-        rel = f"{_SNAP}{version:08d}"
-        absdir = os.path.join(self.path(name), rel)
-        if os.path.isdir(absdir):  # orphan from a crashed commit: discard
-            shutil.rmtree(absdir)
-        os.makedirs(self.path(name), exist_ok=True)
-        return rel, absdir
-
-    @staticmethod
-    def _link_tree(src: str, dst: str, skip_partition_dirs: set[str]) -> None:
-        """Hard-link every parquet file under ``src`` into ``dst``,
-        preserving the relative (partition) layout, skipping files whose
-        partition subpath is in ``skip_partition_dirs``."""
-        for root, _dirs, files in os.walk(src):
-            rel = os.path.relpath(root, src)
-            rel = "" if rel == "." else rel
-            if rel in skip_partition_dirs:
-                continue
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                os.makedirs(os.path.join(dst, rel), exist_ok=True)
-                os.link(os.path.join(root, f), os.path.join(dst, rel, f))
-
-    @staticmethod
-    def _partition_subdirs(snap: str) -> set[str]:
-        """Relative paths of leaf partition directories actually present."""
-        out: set[str] = set()
-        for root, _dirs, files in os.walk(snap):
-            if any(f.endswith(".parquet") for f in files):
-                rel = os.path.relpath(root, snap)
-                if rel != ".":
-                    out.add(rel)
-        return out
-
-    # --------------------------------------------------------------- sinks
-
-    def write_full(
-        self,
-        df: DataFrame,
-        name: str,
-        partition_by: list[str] | None = None,
-        op: str = "overwrite",
-    ) -> None:
-        """CREATE TABLE AS / full refresh → a fresh full snapshot. The
-        result may read the table's current files; they are immutable, so
-        the write streams directly into the new snapshot dir (no staging
-        swap needed). ``op`` is the commit label recorded in the manifest:
-        callers that route a semantic MERGE / replace_scope / OPTIMIZE
-        through the full-rewrite path pass their own label so the version
-        history distinguishes them from a user full refresh (ADVICE r10)."""
-        with self._write_lock(name):
-            rel, snap = self._new_snap(name)
-            writer = df.write.mode("overwrite")
-            if partition_by and not df.isEmpty():
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(snap)
-            self._commit(name, rel, op)
-
-    def append(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
-    ) -> None:
-        """Insert-append commit: new files written, ALL previous files
-        hard-linked (metadata-only) into the new snapshot."""
-        if not self.exists(name):
-            self.write_full(df, name, partition_by)
-            return
-        with self._write_lock(name):
-            prev = self._snap_dir(name, self.current_version(name))
-            rel, snap = self._new_snap(name)
-            writer = df.write.mode("append")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(snap)
-            self._link_tree(prev, snap, skip_partition_dirs=set())
-            self._commit(name, rel, "append")
-
-    def insert_overwrite(
-        self, updates: DataFrame, name: str, partition_by: list[str]
-    ) -> None:
-        if not partition_by:
-            raise ValueError("insert_overwrite requires partition_by")
-        if not self.exists(name):
-            self.write_full(updates, name, partition_by)
-            return
-        with self._write_lock(name):
-            prev = self._snap_dir(name, self.current_version(name))
-            rel, snap = self._new_snap(name)
-            updates.write.mode("overwrite").partitionBy(*partition_by).parquet(snap)
-            # partitions the write produced = the overwritten set, as Spark
-            # encoded them; everything else carries over by hard link
-            self._link_tree(
-                prev, snap, skip_partition_dirs=self._partition_subdirs(snap)
-            )
-            self._commit(name, rel, "insert_overwrite")
-
-    def _merge_partitioned(
-        self,
-        updates: DataFrame,
-        name: str,
-        unique_key: list[str],
-        partition_by: list[str],
-        incremental_predicates: list[str] | None = None,
-    ) -> None:
-        """Partition-pruned MERGE commit: anti-join only the touched
-        partitions (read from the immutable previous snapshot — no
-        staging detour), write the merged slice into the new snapshot,
-        hard-link the untouched partitions."""
-        updates = updates.persist()
-        try:
-            touched = updates.select(*partition_by).distinct().collect()
-            if not touched:
-                return
-            pred = _touched_partition_predicate(touched, partition_by)
-
-            with self._write_lock(name):
-                prev = self._snap_dir(name, self.current_version(name))
-                old_slice = self.read(name).filter(pred)
-                old_slice, out_scope = _split_merge_scope(
-                    old_slice, incremental_predicates
-                )
-                kept = old_slice.join(
-                    updates.select(*unique_key).distinct(),
-                    on=unique_key,
-                    how="left_anti",
-                )
-                result = kept.unionByName(updates.select(*old_slice.columns))
-                if out_scope is not None:
-                    result = out_scope.unionByName(result)
-
-                rel, snap = self._new_snap(name)
-                result.write.mode("overwrite").partitionBy(*partition_by).parquet(snap)
-                self._link_tree(
-                    prev, snap, skip_partition_dirs=self._partition_subdirs(snap)
-                )
-                self._commit(name, rel, "merge")
-        finally:
-            updates.unpersist()
 
     def diff(
         self,
@@ -428,37 +291,6 @@ class VersionedTableStore(TableStore):
 
     # --------------------------------------------------------- maintenance
 
-    def _current_snap(self, name: str) -> str | None:
-        v = self.current_version(name)
-        return self._snap_dir(name, v) if v is not None else None
-
-    def file_count(self, name: str) -> int:
-        snap = self._current_snap(name)
-        if snap is None:
-            return 0
-        total = 0
-        for _root, _dirs, files in os.walk(snap):
-            total += sum(1 for f in files if f.endswith(".parquet"))
-        return total
-
-    def partition_cols(self, name: str) -> list[str]:
-        cols: list[str] = []
-        p = self._current_snap(name)
-        if p is None:
-            return cols
-        while True:
-            subs = [
-                f for f in os.listdir(p)
-                if "=" in f and os.path.isdir(os.path.join(p, f))
-            ]
-            if not subs:
-                return cols
-            cols.append(subs[0].split("=")[0])
-            p = os.path.join(p, subs[0])
-
-    def _has_partition_dirs(self, name: str) -> bool:
-        return bool(self.partition_cols(name))
-
     def vacuum(self, name: str, retain_hours: int = 168) -> None:
         """Prune versions past the retention window (reference
         ``vacuum_table.sql:3`` ``RETAIN 168 HOURS``): manifests whose
@@ -488,12 +320,6 @@ class VersionedTableStore(TableStore):
                 shutil.rmtree(os.path.join(tdir, f), ignore_errors=True)
         # stray Spark staging inside the table dir, and base-level staging
         super().vacuum(name, retain_hours)
-
-    def tables(self) -> list[str]:
-        base = self._base()
-        return sorted(
-            f for f in os.listdir(base) if not f.startswith(".") and self.exists(f)
-        )
 
     # ----------------------------------------------------- ad hoc time travel
 

@@ -1056,6 +1056,17 @@ def test_local_master_defaults_to_affinity_cpus(monkeypatch):
     assert local_cpus() == "3"
 
 
+def test_executor_pythonpath_carries_package_root(spark):
+    """Python workers import the package from any working directory:
+    ``get_spark`` puts the package's parent dir first on the executors'
+    ``PYTHONPATH``."""
+    import sample_deepbook_margin_dune_dbt_spark as pkg
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
+    conf = spark.sparkContext.getConf().get("spark.executorEnv.PYTHONPATH")
+    assert conf.split(os.pathsep)[0] == root
+
+
 @pytest.mark.parametrize(
     "val,deep",
     [(None, False), ("", False), ("0", False), ("false", False),
