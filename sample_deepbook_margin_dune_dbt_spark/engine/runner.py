@@ -6,14 +6,53 @@ Replaces ``dbt run --select +model`` / ``--full-refresh``
 
 from __future__ import annotations
 
+import heapq
+import time
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from datetime import datetime
 from graphlib import TopologicalSorter
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import SparkSession
 
 from .materialize import TableStore
 from .model import ModelConfig, ModelContext, all_models, enforce_contract
+
+
+def _reach(seeds, edges: dict[str, list[str]]) -> set[str]:
+    """``seeds`` plus every node reachable from them along ``edges``."""
+    seen: set[str] = set()
+    stack = list(seeds)
+    while stack:
+        m = stack.pop()
+        if m not in seen:
+            seen.add(m)
+            stack.extend(edges[m])
+    return seen
+
+
+def _upstream(seeds) -> set[str]:
+    """``seeds`` plus everything they transitively depend on."""
+    return _reach(seeds, {m: cfg.deps for m, cfg in all_models().items()})
+
+
+def _downstream(seeds) -> set[str]:
+    """``seeds`` plus every registered model that transitively depends on
+    one of them."""
+    children: dict[str, list[str]] = {m: [] for m in all_models()}
+    for m, cfg in all_models().items():
+        for d in cfg.deps:
+            if d in children:
+                children[d].append(m)
+    return _reach(seeds, children)
+
+
+class _TestsFailed(RuntimeError):
+    """``build``'s gate: the model built, but its data tests failed."""
+
+    def __init__(self, name: str, failures: dict[str, int]):
+        super().__init__(f"build stopped: tests failed on {name!r}: {failures}")
+        self.failures = failures
 
 
 class Runner:
@@ -55,7 +94,7 @@ class Runner:
         self.vars = dict(vars or {})
         #: dbt --state: path to a prior manifest.json for state:modified
         self.state = state
-        #: per-model outcomes of the most recent run() (see _run_one)
+        #: per-model outcomes of the most recent run/build/snapshot (see _record)
         self.last_run_results: list[dict] = []
 
     # ------------------------------------------------------------- selection
@@ -94,11 +133,6 @@ class Runner:
         if select is None:
             wanted = set(registry)
         else:
-            children: dict[str, list[str]] = {m: [] for m in registry}
-            for m, cfg in registry.items():
-                for d in cfg.deps:
-                    if d in children:
-                        children[d].append(m)
             selectors = [select] if isinstance(select, str) else list(select)
             wanted = set()
 
@@ -136,47 +170,19 @@ class Runner:
                                 f"{ename!r}; registered: {sorted(exposures)}"
                             )
                         continue
-                    stack = list(exposures[ename].depends_on)
-                    while stack:
-                        m = stack.pop()
-                        if m in wanted:
-                            continue
-                        wanted.add(m)
-                        stack.extend(registry[m].deps)
+                    wanted |= _upstream(exposures[ename].depends_on)
                 elif sel.startswith("tag:"):
                     tagged = {m for m, c in registry.items() if sel[4:] in c.tags}
                     if not tagged and strict:
                         raise KeyError(f"no models carry {sel!r}")
                     wanted |= tagged
                 elif sel.startswith("+"):
-                    if not _known(sel[1:], sel):
-                        continue
-                    stack = [sel[1:]]
-                    while stack:
-                        m = stack.pop()
-                        if m in wanted:
-                            continue
-                        wanted.add(m)
-                        stack.extend(registry[m].deps)
+                    if _known(sel[1:], sel):
+                        wanted |= _upstream([sel[1:]])
                 elif sel.endswith("+"):
-                    if not _known(sel[:-1], sel):
-                        continue
-                    stack = [sel[:-1]]
-                    seen: set[str] = set()
-                    while stack:
-                        m = stack.pop()
-                        if m in seen:
-                            continue
-                        seen.add(m)
-                        stack.extend(children[m])
-                    # downstream models still need their upstreams built
-                    stack = list(seen)
-                    while stack:
-                        m = stack.pop()
-                        if m in wanted:
-                            continue
-                        wanted.add(m)
-                        stack.extend(registry[m].deps)
+                    if _known(sel[:-1], sel):
+                        # downstream models still need their upstreams built
+                        wanted |= _upstream(_downstream([sel[:-1]]))
                 else:
                     if _known(sel, sel):
                         wanted.add(sel)
@@ -214,83 +220,28 @@ class Runner:
     ) -> list[str]:
         """Build the selected models in dependency order; returns the order.
 
-        ``threads > 1`` builds independent models concurrently (the
-        reference's dbt profile runs 4 threads, ``profiles.yml:14``): a
-        thread pool walks the DAG, submitting a model as soon as its deps
-        complete. Spark schedules jobs from multiple threads fine; each
-        model is still one job chain.
+        ``threads`` bounds how many models build at once (the reference's
+        dbt profile runs 4 threads, ``profiles.yml:14``): the walk starts
+        a model as soon as its deps complete and a thread is free, and
+        ready models wait in DAG order, so ``threads=1`` builds exactly the
+        selection order. Spark schedules jobs from multiple threads fine;
+        each model is still one job chain. With ``threads > 1`` the
+        returned list is the completion order.
 
-        ``fail_fast=False`` is dbt's keep-going walk: a failing model
-        marks its DOWNSTREAM closure ``skipped`` in run-results and the
-        walk continues through independent branches, raising one summary
-        error at the end — ``retry`` then resumes exactly the failed +
-        skipped set. The default raises at the first failure (the
-        conservative CI behavior this engine has always had).
+        ``fail_fast=False`` is dbt's keep-going walk, at any thread count:
+        a failing model marks its DOWNSTREAM closure ``skipped`` in
+        run-results and the walk continues through independent branches,
+        raising one summary error at the end — ``retry`` then resumes
+        exactly the failed + skipped set. The default starts nothing after
+        the first failure and re-raises it once the models in flight finish
+        (the conservative CI behavior this engine has always had).
         """
-        if not fail_fast and threads > 1:
-            # the threaded walk re-raises at the first failed future; a
-            # silently fail-fast "keep-going" run would also mis-record
-            # the invocation for retry
-            raise ValueError(
-                "fail_fast=False (--keep-going) requires threads=1; the "
-                "threaded DAG walk does not implement skip tracking"
-            )
-        order = self._closure(select, exclude)
-        registry = all_models()
-        self.last_run_results = []  # reset per invocation
-        self._last_args = {
-            "command": "run", "select": select, "exclude": exclude,
-            "full_refresh": full_refresh, "threads": threads,
-            "fail_fast": fail_fast, "vars": dict(self.vars),
-        }
-        try:
-            if threads > 1:
-                return self._run_threaded(order, registry, full_refresh, threads)
-            if fail_fast:
-                for name in order:
-                    self._run_one(registry[name], full_refresh)
-                return order
-            # keep-going: compute the downstream map once, skip transitively
-            children: dict[str, list[str]] = {m: [] for m in registry}
-            for m, cfg in registry.items():
-                for d in cfg.deps:
-                    if d in children:
-                        children[d].append(m)
-            failed: list[str] = []
-            skipped: set[str] = set()
-            for name in order:
-                if name in skipped:
-                    self.last_run_results.append(
-                        {
-                            "model": name,
-                            "status": "skipped",
-                            "error": "upstream failure",
-                            "execution_time_s": 0.0,
-                            "strategy": registry[name].incremental_strategy,
-                            "materialized": registry[name].materialized,
-                        }
-                    )
-                    continue
-                try:
-                    self._run_one(registry[name], full_refresh)
-                except Exception:
-                    failed.append(name)
-                    stack = list(children[name])
-                    while stack:
-                        m = stack.pop()
-                        if m in skipped:
-                            continue
-                        skipped.add(m)
-                        stack.extend(children[m])
-            if failed:
-                raise RuntimeError(
-                    f"run completed with failures: {failed} "
-                    f"(skipped downstream: {sorted(skipped & set(order))}); "
-                    "see run_results.json; `retry` resumes them"
-                )
-            return order
-        finally:
-            self._write_run_results(full_refresh)
+        if threads < 1:
+            raise ValueError(f"threads must be >= 1, got {threads}")
+        return self._invoke(
+            "run", select, exclude, full_refresh, self._build_one,
+            threads=threads, fail_fast=fail_fast,
+        )
 
     def snapshot(
         self,
@@ -302,22 +253,7 @@ class Runner:
         execute (their non-snapshot upstreams must already be
         materialized — dbt's contract too); run-results record each with
         ``materialized='snapshot'``. Returns the executed order."""
-        registry = all_models()
-        order = [
-            n for n in self._closure(select, exclude)
-            if registry[n].materialized == "snapshot"
-        ]
-        self.last_run_results = []
-        self._last_args = {
-            "command": "snapshot", "select": select, "exclude": exclude,
-            "vars": dict(self.vars),
-        }
-        try:
-            for name in order:
-                self._run_one(registry[name], full_refresh=False)
-            return order
-        finally:
-            self._write_run_results(False)
+        return self._invoke("snapshot", select, exclude, False, self._build_one)
 
     def retry(self) -> list[str]:
         """dbt ``retry``: resume the LAST recorded run/build/snapshot from
@@ -349,21 +285,23 @@ class Runner:
             # aborted walk leaves unattempted models, which the replayed
             # closure-minus-successes below would still catch — but a fully
             # green artifact means there is nothing to resume)
-            registry = all_models()
             attempted = {r["model"] for r in payload["results"]}
-            cmd = args["command"]
-            wanted = self._closure(args.get("select"), args.get("exclude"))
-            if cmd == "snapshot":
-                wanted = [
-                    n for n in wanted
-                    if registry[n].materialized == "snapshot"
-                ]
+            wanted = self._order(
+                args["command"], args.get("select"), args.get("exclude")
+            )
             if set(wanted) <= attempted:
                 return []
         exclude = args.get("exclude")
         exclude = [exclude] if isinstance(exclude, str) else list(exclude or [])
         exclude += succeeded
         cmd = args["command"]
+        steps = {
+            "run": self._build_one,
+            "build": self._build_gated,
+            "snapshot": self._build_one,
+        }
+        if cmd not in steps:
+            raise ValueError(f"retry: unknown recorded command {cmd!r}")
         # replay with the ORIGINAL invocation's vars (dbt retry reuses the
         # previous parameters) — a bare `retry` must not rebuild the failed
         # model with default var values
@@ -371,23 +309,11 @@ class Runner:
         if args.get("vars") is not None:
             self.vars = dict(args["vars"])
         try:
-            if cmd == "run":
-                return self.run(
-                    args.get("select"),
-                    full_refresh=bool(args.get("full_refresh")),
-                    threads=int(args.get("threads") or 1),
-                    exclude=exclude,
-                    fail_fast=bool(args.get("fail_fast", True)),
-                )
-            if cmd == "build":
-                return self.build(
-                    args.get("select"),
-                    full_refresh=bool(args.get("full_refresh")),
-                    exclude=exclude,
-                )
-            if cmd == "snapshot":
-                return self.snapshot(args.get("select"), exclude=exclude)
-            raise ValueError(f"retry: unknown recorded command {cmd!r}")
+            return self._invoke(
+                cmd, args.get("select"), exclude, bool(args.get("full_refresh")),
+                steps[cmd], threads=int(args.get("threads") or 1),
+                fail_fast=bool(args.get("fail_fast", True)),
+            )
         finally:
             self.vars = prev_vars
 
@@ -464,88 +390,162 @@ class Runner:
             }
         return out
 
-    def _run_threaded(
+    def _order(
         self,
-        order: list[str],
-        registry: dict[str, ModelConfig],
-        full_refresh: bool,
-        threads: int,
+        command: str,
+        select: str | list[str] | None,
+        exclude: str | list[str] | None,
     ) -> list[str]:
+        """The models ``command`` executes, in ``_closure`` order: the
+        selection, narrowed to snapshot nodes for ``snapshot``."""
+        order = self._closure(select, exclude)
+        if command == "snapshot":
+            registry = all_models()
+            order = [n for n in order if registry[n].materialized == "snapshot"]
+        return order
 
-        import concurrent.futures as cf
-        from graphlib import TopologicalSorter
+    def _invoke(
+        self,
+        command: str,
+        select: str | list[str] | None,
+        exclude: str | list[str] | None,
+        full_refresh: bool,
+        step: Callable[[ModelConfig, bool], None],
+        threads: int = 1,
+        fail_fast: bool = True,
+    ) -> list[str]:
+        """The one DAG walk behind ``run``, ``build`` and ``snapshot``.
 
-        wanted = set(order)
+        At most ``threads`` models are in flight on a thread pool; ready
+        models wait in ``_closure`` order, so one thread builds exactly
+        that order. ``step(cfg, full_refresh)`` builds one model, and each
+        attempt records one run-results row. Under ``fail_fast`` the first
+        failure stops new starts and is re-raised once the models in
+        flight finish. Otherwise each model in a failed model's downstream
+        closure is recorded ``skipped`` when its turn to start comes, and
+        one summary error is raised at the end. Returns the built models in
+        completion order; run-results are written whatever the outcome.
+        """
+        order = self._order(command, select, exclude)
+        registry = all_models()
+        rank = {m: i for i, m in enumerate(order)}
+        self.last_run_results = []  # reset per invocation
+        args = {"command": command, "select": select, "exclude": exclude}
+        if command != "snapshot":
+            args["full_refresh"] = full_refresh
+        if command == "run":
+            args.update(threads=threads, fail_fast=fail_fast)
+        self._last_args = {**args, "vars": dict(self.vars)}
+
         ts = TopologicalSorter(
-            {m: [d for d in registry[m].deps if d in wanted] for m in wanted}
+            {m: [d for d in registry[m].deps if d in rank] for m in order}
         )
         ts.prepare()
+        ready: list[int] = []  # heap of the ready models' ranks
+        running: dict[Future, str] = {}
         built: list[str] = []
-        with cf.ThreadPoolExecutor(max_workers=threads) as pool:
-            futures: dict[cf.Future, str] = {}
-            while ts.is_active():
-                for name in ts.get_ready():
-                    futures[pool.submit(self._run_one, registry[name], full_refresh)] = name
-                done, _ = cf.wait(list(futures), return_when=cf.FIRST_COMPLETED)
-                for f in done:
-                    name = futures.pop(f)
-                    f.result()  # re-raise model failures
-                    ts.done(name)
-                    built.append(name)
-        return built
-
-    def _run_one(self, cfg: ModelConfig, full_refresh: bool) -> None:
-        """Build one model, recording a run-results row (dbt's
-        run_results.json analog) whatever the outcome."""
-        import time as _time
-
-        t0 = _time.perf_counter()
+        failed: dict[str, BaseException] = {}
+        skip: set[str] = set()
+        t0 = time.perf_counter()
         try:
-            self._build_one(cfg, full_refresh)
+            with ThreadPoolExecutor(max_workers=threads) as pool:
+                while True:
+                    for name in ts.get_ready():
+                        heapq.heappush(ready, rank[name])
+                    if ready and len(running) < threads and not (fail_fast and failed):
+                        cfg = registry[order[heapq.heappop(ready)]]
+                        if cfg.name in skip:
+                            self._record(cfg, "skipped", 0.0, "upstream failure")
+                            ts.done(cfg.name)
+                        else:
+                            fut = pool.submit(self._attempt, step, cfg, full_refresh)
+                            running[fut] = cfg.name
+                        continue
+                    if not running:
+                        break
+                    finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                    for fut in sorted(finished, key=lambda f: rank[running[f]]):
+                        name = running.pop(fut)
+                        if fut.exception() is None:
+                            built.append(name)
+                        else:
+                            failed[name] = fut.exception()
+                            if fail_fast:
+                                continue
+                            skip |= _downstream([name]) - {name}
+                        ts.done(name)
+            if failed and fail_fast:
+                raise next(iter(failed.values()))
+            if failed:
+                skipped = sorted(
+                    r["model"] for r in self.last_run_results if r["status"] == "skipped"
+                )
+                raise RuntimeError(
+                    f"{command} completed with failures: {list(failed)} "
+                    f"(skipped downstream: {skipped}); "
+                    "see run_results.json; `retry` resumes them"
+                )
+            return built
+        finally:
+            self._write_run_results(full_refresh, time.perf_counter() - t0)
+
+    def _attempt(
+        self,
+        step: Callable[[ModelConfig, bool], None],
+        cfg: ModelConfig,
+        full_refresh: bool,
+    ) -> None:
+        """Run ``step`` on one model, recording its run-results row
+        whatever the outcome."""
+        t0 = time.perf_counter()
+        try:
+            step(cfg, full_refresh)
+        except _TestsFailed as e:
+            self._record(cfg, "test_failed", time.perf_counter() - t0, str(e.failures))
+            raise
         except Exception as e:  # record, then surface
-            self.last_run_results.append(
-                {
-                    "model": cfg.name,
-                    "status": "error",
-                    "error": f"{type(e).__name__}: {e}"[:500],
-                    "execution_time_s": round(_time.perf_counter() - t0, 3),
-                    "strategy": cfg.incremental_strategy,
-                    "materialized": cfg.materialized,
-                }
+            self._record(
+                cfg, "error", time.perf_counter() - t0, f"{type(e).__name__}: {e}"
             )
             raise
-        self.last_run_results.append(
-            {
-                "model": cfg.name,
-                "status": "success",
-                "execution_time_s": round(_time.perf_counter() - t0, 3),
-                "strategy": cfg.incremental_strategy,
-                "materialized": cfg.materialized,
-            }
-        )
+        self._record(cfg, "success", time.perf_counter() - t0)
 
-    def _write_run_results(self, full_refresh: bool) -> None:
+    def _record(
+        self,
+        cfg: ModelConfig,
+        status: str,
+        seconds: float,
+        error: Optional[str] = None,
+    ) -> None:
+        """Append one run-results row (dbt's run_results.json analog)."""
+        row: dict = {"model": cfg.name, "status": status}
+        if error is not None:
+            row["error"] = error[:500]
+        row["execution_time_s"] = round(seconds, 3)
+        row["strategy"] = cfg.incremental_strategy
+        row["materialized"] = cfg.materialized
+        self.last_run_results.append(row)
+
+    def _write_run_results(self, full_refresh: bool, elapsed_s: float) -> None:
         """Persist the invocation's per-model results next to the tables
         (``<warehouse>/_artifacts/run_results.json``) — the artifact CI
-        and orchestration read instead of scraping logs. Driver-side
-        metadata only: bytes written are O(models), never data-scale."""
+        and orchestration read instead of scraping logs. ``elapsed_s`` is
+        the invocation's wall time (dbt's ``elapsed_time``). Metadata
+        only, no Spark job: bytes written are O(models), never data-scale."""
         import json
         import os
-        import time as _time
 
         art_dir = self.store.path("_artifacts")
         os.makedirs(art_dir, exist_ok=True)
         payload = {
-            "generated_at_unix": round(_time.time(), 3),
+            "generated_at_unix": round(time.time(), 3),
             "profile": self.profile,
             "full_refresh": full_refresh,
             # the invoking command + its selection, so `retry` can resume
             # the same invocation from its point of failure (dbt records
             # args in run_results.json for the same reason)
             "args": getattr(self, "_last_args", None),
-            "elapsed_s": round(
-                sum(r["execution_time_s"] for r in self.last_run_results), 3
-            ),
+            "elapsed_s": round(elapsed_s, 3),
             "results": self.last_run_results,
         }
         with open(os.path.join(art_dir, "run_results.json"), "w") as f:
@@ -867,41 +867,14 @@ class Runner:
         everything built). Returns the build order; raises on the first
         test failure, with the failing checks in the message.
         """
-        order = self._closure(select, exclude)
-        registry = all_models()
-        self.last_run_results = []
-        self._last_args = {
-            "command": "build", "select": select, "exclude": exclude,
-            "full_refresh": full_refresh, "vars": dict(self.vars),
-        }
-        try:
-            for name in order:
-                self._run_one(registry[name], full_refresh)
-                failures = self.test(name)
-                if failures:
-                    # the build succeeded but the gate failed: the model's
-                    # run-results row must say test_failed, not success —
-                    # replace, don't append alongside (a CI consumer scans
-                    # for ONE row per model)
-                    self.last_run_results = [
-                        r for r in self.last_run_results if r["model"] != name
-                    ]
-                    self.last_run_results.append(
-                        {
-                            "model": name,
-                            "status": "test_failed",
-                            "error": str(failures)[:500],
-                            "execution_time_s": 0.0,
-                            "strategy": registry[name].incremental_strategy,
-                            "materialized": registry[name].materialized,
-                        }
-                    )
-                    raise RuntimeError(
-                        f"build stopped: tests failed on {name!r}: {failures}"
-                    )
-        finally:
-            self._write_run_results(full_refresh)
-        return order
+        return self._invoke("build", select, exclude, full_refresh, self._build_gated)
+
+    def _build_gated(self, cfg: ModelConfig, full_refresh: bool) -> None:
+        """``build``'s step: build the model, then gate on its data tests."""
+        self._build_one(cfg, full_refresh)
+        failures = self.test(cfg.name)
+        if failures:
+            raise _TestsFailed(cfg.name, failures)
 
     def test(
         self,

@@ -110,10 +110,11 @@ def test_retry_cli_drive(spark, tmp_path, chain):
     assert TableStore(spark, str(tmp_path / "wh")).exists("rt_c")
 
 
-def test_keep_going_skips_downstream_and_retries(spark, tmp_path):
+@pytest.mark.parametrize("threads", [1, 4])
+def test_keep_going_skips_downstream_and_retries(spark, tmp_path, threads):
     """dbt keep-going: a failure marks downstream skipped, independent
     branches still build, one summary error at the end — and retry
-    resumes exactly the failed + skipped set."""
+    resumes exactly the failed + skipped set, at any thread count."""
     calls = []
     fail = {"b": True}
 
@@ -143,7 +144,7 @@ def test_keep_going_skips_downstream_and_retries(spark, tmp_path):
         store = TableStore(spark, str(tmp_path / "wh"))
         runner = Runner(spark, store, {})
         with pytest.raises(RuntimeError, match="completed with failures"):
-            runner.run(["+kg_c", "kg_side"], fail_fast=False)
+            runner.run(["+kg_c", "kg_side"], fail_fast=False, threads=threads)
         # the independent branch built despite the failure
         assert "kg_side" in calls and store.exists("kg_side")
         assert "kg_c" not in calls
@@ -160,12 +161,6 @@ def test_keep_going_skips_downstream_and_retries(spark, tmp_path):
 
         for n in ("kg_a", "kg_b", "kg_c", "kg_side"):
             _REGISTRY.pop(n, None)
-
-
-def test_keep_going_rejects_threads(spark, tmp_path, chain):
-    runner = Runner(spark, TableStore(spark, str(tmp_path / "wh")), {})
-    with pytest.raises(ValueError, match="requires threads=1"):
-        runner.run("+rt_c", threads=4, fail_fast=False)
 
 
 def test_retry_replays_original_vars(spark, tmp_path):
