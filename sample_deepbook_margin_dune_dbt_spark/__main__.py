@@ -171,7 +171,11 @@ def main(argv: list[str] | None = None) -> int:
         "at the end (retry resumes the failed + skipped set)",
     )
 
-    test_p = sub.add_parser("test", help="run declared not_null assertions")
+    test_p = sub.add_parser(
+        "test",
+        help="run declared data tests (not_null, unique, accepted_values, "
+        "relationships)",
+    )
     add_common(test_p)
     test_p.add_argument(
         "--store-failures",
@@ -295,9 +299,7 @@ def main(argv: list[str] | None = None) -> int:
             # selector resolution is driver-side metadata: a store-less
             # Runner resolves the closure without a Spark session
             resolver = Runner(None, None, {})
-            wanted = set(resolver._resolve(args.select))
-            if args.exclude:
-                wanted -= resolver._resolve(args.exclude, strict=False)
+            wanted = set(resolver._closure(args.select, args.exclude))
             names = [n for n in names if n in wanted]
         for name in names:
             cfg = registry[name]
@@ -394,7 +396,7 @@ def main(argv: list[str] | None = None) -> int:
         # the reference's cheap correctness gate (`dbt compile`,
         # DEVELOPMENT.md:146-148): resolve refs/sources, build the DataFrame,
         # print schema + optimized plan — no execution, no writes
-        from .engine.model import ModelContext, get_model
+        from .engine.model import get_model
         from .plans import explain_str
 
         target = (args.select or "").lstrip("+")
@@ -402,11 +404,7 @@ def main(argv: list[str] | None = None) -> int:
             print("compile requires --select <model>", file=sys.stderr)
             return 2
         cfg = get_model(target)
-        ctx = ModelContext(
-            spark, store, _parse_sources(args.source), cfg,
-            backfill_days=args.backfill_days, lookback_days=args.lookback_days,
-            vars=_parse_vars(args.vars),
-        )
+        ctx = runner._context(cfg)
         df = cfg.builder(ctx)
         print(f"model: {target}")
         print(f"unique_key: {cfg.unique_key}  strategy: {cfg.incremental_strategy}")
@@ -458,8 +456,8 @@ def main(argv: list[str] | None = None) -> int:
         exclude=args.exclude,
     )
     if failures:
-        for col, n in failures.items():
-            print(f"FAIL not_null {col}: {n} nulls", file=sys.stderr)
+        for key, n in failures.items():
+            print(f"FAIL {key}: {n}", file=sys.stderr)
         return 1
     print("all assertions passed")
     return 0

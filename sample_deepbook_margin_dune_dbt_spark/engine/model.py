@@ -15,6 +15,13 @@ Maps the reference's control-plane operators (SURVEY §2.9) onto plain Python:
   own previous materialization)
 - ``ctx.now()``          ≈ ``now()``                      (F9 — injectable
   fixed clock so tests and golden hashes are deterministic)
+
+Each config dataclass (``ModelConfig``, ``ExposureConfig``, and
+``engine.unittests.UnitTestConfig``) is the only place its fields and
+defaults are written, and its ``__post_init__`` the only place they are
+checked. The registrars ``model``, ``snapshot``, ``exposure`` and
+``unit_test`` pass their keyword arguments straight through to it, so a
+config built directly is validated exactly like a decorated one.
 """
 
 from __future__ import annotations
@@ -107,117 +114,83 @@ class ModelConfig:
     bucket_by: list[str] = field(default_factory=list)
     n_buckets: int = 128
 
+    def __post_init__(self) -> None:
+        """The one place a model's config is validated, whichever
+        registrar (or test) constructs it."""
+        name = self.name
+        if self.materialized == "snapshot":
+            if not self.unique_key:
+                raise ValueError(f"snapshot {name!r}: unique_key is required")
+            snap = self.snapshot_strategy
+            if snap not in ("check", "timestamp"):
+                raise ValueError(
+                    f"snapshot {name!r}: strategy={snap!r}; expected 'check' or 'timestamp'"
+                )
+            if snap == "check" and not self.check_cols:
+                raise ValueError(f"snapshot {name!r}: strategy='check' requires check_cols")
+            if snap == "timestamp" and not self.updated_at:
+                raise ValueError(f"snapshot {name!r}: strategy='timestamp' requires updated_at")
+        elif self.materialized not in ("incremental", "table"):
+            raise ValueError(
+                f"model {name!r}: materialized={self.materialized!r}; expected "
+                "'incremental' or 'table'"
+            )
+        strategy = self.incremental_strategy
+        if strategy not in ("merge", "append", "insert_overwrite"):
+            # an unknown strategy must not silently materialize as merge
+            raise ValueError(
+                f"model {name!r}: incremental_strategy={strategy!r}; "
+                "expected 'merge', 'append', or 'insert_overwrite'"
+            )
+        if strategy == "insert_overwrite" and not self.partition_by:
+            raise ValueError(
+                f"model {name!r}: insert_overwrite replaces whole partitions — "
+                "partition_by is required"
+            )
+        if self.on_schema_change not in (
+            "ignore", "append_new_columns", "sync_all_columns", "fail"
+        ):
+            raise ValueError(
+                f"model {name!r}: on_schema_change={self.on_schema_change!r}; "
+                "expected 'ignore', 'append_new_columns', 'sync_all_columns', "
+                "or 'fail'"
+            )
+        if self.cluster_by and self.zorder_by:
+            raise ValueError(f"model {name!r}: choose cluster_by OR zorder_by, not both")
+        if self.zorder_by and len(self.zorder_by) != 2:
+            raise ValueError(f"model {name!r}: zorder_by takes exactly two columns")
+        if self.incremental_predicates and strategy != "merge":
+            raise ValueError(
+                f"model {name!r}: incremental_predicates only apply to the "
+                "'merge' strategy"
+            )
+        if self.bucket_by:
+            if self.n_buckets < 1:
+                raise ValueError(f"model {name!r}: n_buckets must be >= 1")
+            if self.materialized == "incremental" and strategy != "append":
+                raise ValueError(
+                    f"model {name!r}: bucket_by mirrors are append-maintained; "
+                    "MERGE/insert_overwrite rewrite rows the mirror cannot "
+                    "track — use materialized='table' or "
+                    "incremental_strategy='append'"
+                )
+
 
 _REGISTRY: dict[str, ModelConfig] = {}
 
 
-def model(
-    name: str,
-    unique_key: list[str] | None = None,
-    materialized: str = "incremental",
-    incremental_strategy: str = "merge",
-    on_schema_change: str = "ignore",
-    partition_by: list[str] | None = None,
-    deps: list[str] | None = None,
-    tags: list[str] | None = None,
-    not_null: list[str] | None = None,
-    unique: list[str] | None = None,
-    accepted_values: dict[str, list] | None = None,
-    relationships: list[tuple[str, str, str]] | None = None,
-    post_hooks: list[str] | None = None,
-    cluster_by: list[str] | None = None,
-    zorder_by: list[str] | None = None,
-    contract: dict[str, str] | None = None,
-    incremental_predicates: list[str] | None = None,
-    description: str = "",
-    bucket_by: list[str] | None = None,
-    n_buckets: int = 128,
-):
-    """Register a model builder. The builder is ``(ctx) -> DataFrame``."""
-    if materialized not in ("incremental", "table"):
-        raise ValueError(
-            f"model {name!r}: materialized={materialized!r}; expected "
-            "'incremental' or 'table'"
-        )
-    if incremental_strategy not in ("merge", "append", "insert_overwrite"):
-        # an unknown strategy must not silently materialize as merge
-        raise ValueError(
-            f"model {name!r}: incremental_strategy={incremental_strategy!r}; "
-            "expected 'merge', 'append', or 'insert_overwrite'"
-        )
-    if incremental_strategy == "insert_overwrite" and not partition_by:
-        raise ValueError(
-            f"model {name!r}: insert_overwrite replaces whole partitions — "
-            "partition_by is required"
-        )
-    if on_schema_change not in (
-        "ignore", "append_new_columns", "sync_all_columns", "fail"
-    ):
-        raise ValueError(
-            f"model {name!r}: on_schema_change={on_schema_change!r}; expected "
-            "'ignore', 'append_new_columns', 'sync_all_columns', or 'fail'"
-        )
-    if cluster_by and zorder_by:
-        raise ValueError(f"model {name!r}: choose cluster_by OR zorder_by, not both")
-    if zorder_by and len(zorder_by) != 2:
-        raise ValueError(f"model {name!r}: zorder_by takes exactly two columns")
-    if incremental_predicates and incremental_strategy != "merge":
-        raise ValueError(
-            f"model {name!r}: incremental_predicates only apply to the "
-            "'merge' strategy"
-        )
-    if bucket_by:
-        if n_buckets < 1:
-            raise ValueError(f"model {name!r}: n_buckets must be >= 1")
-        if materialized == "incremental" and incremental_strategy != "append":
-            raise ValueError(
-                f"model {name!r}: bucket_by mirrors are append-maintained; "
-                "MERGE/insert_overwrite rewrite rows the mirror cannot "
-                "track — use materialized='table' or "
-                "incremental_strategy='append'"
-            )
+def model(name: str, **config):
+    """Register a model builder, ``(ctx) -> DataFrame``; ``config`` is any
+    set of ``ModelConfig`` fields."""
 
     def deco(fn: Callable[["ModelContext"], DataFrame]):
-        _REGISTRY[name] = ModelConfig(
-            name=name,
-            builder=fn,
-            unique_key=unique_key or [],
-            materialized=materialized,
-            incremental_strategy=incremental_strategy,
-            on_schema_change=on_schema_change,
-            partition_by=partition_by,
-            deps=deps or [],
-            tags=tags or [],
-            not_null=not_null or [],
-            unique=unique or [],
-            accepted_values=accepted_values or {},
-            relationships=relationships or [],
-            post_hooks=post_hooks,
-            cluster_by=cluster_by or [],
-            zorder_by=zorder_by or [],
-            contract=contract,
-            incremental_predicates=incremental_predicates or [],
-            description=description,
-            bucket_by=bucket_by or [],
-            n_buckets=n_buckets,
-        )
+        _REGISTRY[name] = ModelConfig(name=name, builder=fn, **config)
         return fn
 
     return deco
 
 
-def snapshot(
-    name: str,
-    unique_key: list[str],
-    strategy: str = "check",
-    check_cols: list[str] | None = None,
-    updated_at: str | None = None,
-    invalidate_hard_deletes: bool = False,
-    deps: list[str] | None = None,
-    tags: list[str] | None = None,
-    post_hooks: list[str] | None = None,
-    description: str = "",
-):
+def snapshot(name: str, unique_key: list[str], strategy: str = "check", **config):
     """Register an SCD2 snapshot node (dbt ``{% snapshot %}`` / the
     ``dbt snapshot`` command; reference scaffold ``dbt_project.yml``
     ``snapshot-paths``). The builder returns the source's CURRENT state;
@@ -226,36 +199,16 @@ def snapshot(
     the same registry/DAG as models — selectors, manifest, run-results,
     and ``build`` all see them — and are never dropped by
     ``--full-refresh`` (history is the point; dbt behaves the same).
+    Unlike a model, a snapshot runs no post-hooks unless it lists them.
     """
-    if not unique_key:
-        raise ValueError(f"snapshot {name!r}: unique_key is required")
-    if strategy not in ("check", "timestamp"):
-        raise ValueError(
-            f"snapshot {name!r}: strategy={strategy!r}; expected 'check' or 'timestamp'"
-        )
-    if strategy == "check" and not check_cols:
-        raise ValueError(f"snapshot {name!r}: strategy='check' requires check_cols")
-    if strategy == "timestamp" and not updated_at:
-        raise ValueError(f"snapshot {name!r}: strategy='timestamp' requires updated_at")
-
-    def deco(fn: Callable[["ModelContext"], DataFrame]):
-        _REGISTRY[name] = ModelConfig(
-            name=name,
-            builder=fn,
-            unique_key=list(unique_key),
-            materialized="snapshot",
-            deps=deps or [],
-            tags=tags or [],
-            post_hooks=post_hooks if post_hooks is not None else [],
-            snapshot_strategy=strategy,
-            check_cols=check_cols or [],
-            updated_at=updated_at,
-            invalidate_hard_deletes=invalidate_hard_deletes,
-            description=description,
-        )
-        return fn
-
-    return deco
+    config.setdefault("post_hooks", [])
+    return model(
+        name,
+        unique_key=unique_key,
+        materialized="snapshot",
+        snapshot_strategy=strategy,
+        **config,
+    )
 
 
 @dataclass
@@ -273,37 +226,29 @@ class ExposureConfig:
     url: str = ""
     description: str = ""
 
+    def __post_init__(self) -> None:
+        name = self.name
+        if not self.depends_on:
+            raise ValueError(f"exposure {name!r}: depends_on must be non-empty")
+        if self.type not in _EXPOSURE_TYPES:
+            raise ValueError(
+                f"exposure {name!r}: type={self.type!r}; expected one of {_EXPOSURE_TYPES}"
+            )
+        missing = [d for d in self.depends_on if d not in _REGISTRY]
+        if missing:
+            raise ValueError(
+                f"exposure {name!r}: depends_on names unregistered model(s) {missing}"
+            )
+
 
 _EXPOSURES: dict[str, ExposureConfig] = {}
 
 _EXPOSURE_TYPES = ("dashboard", "notebook", "analysis", "ml", "application")
 
 
-def exposure(
-    name: str,
-    depends_on: list[str],
-    type: str = "application",
-    owner: str = "",
-    url: str = "",
-    description: str = "",
-) -> ExposureConfig:
+def exposure(name: str, **config) -> ExposureConfig:
     """Register a dbt-style exposure; returns its config."""
-    if not depends_on:
-        raise ValueError(f"exposure {name!r}: depends_on must be non-empty")
-    if type not in _EXPOSURE_TYPES:
-        raise ValueError(
-            f"exposure {name!r}: type={type!r}; expected one of {_EXPOSURE_TYPES}"
-        )
-    missing = [d for d in depends_on if d not in _REGISTRY]
-    if missing:
-        raise ValueError(
-            f"exposure {name!r}: depends_on names unregistered model(s) {missing}"
-        )
-    cfg = ExposureConfig(
-        name=name, depends_on=list(depends_on), type=type,
-        owner=owner, url=url, description=description,
-    )
-    _EXPOSURES[name] = cfg
+    cfg = _EXPOSURES[name] = ExposureConfig(name=name, **config)
     return cfg
 
 

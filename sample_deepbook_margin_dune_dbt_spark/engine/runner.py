@@ -13,7 +13,7 @@ from datetime import datetime
 from graphlib import TopologicalSorter
 from typing import Callable, Optional
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .materialize import TableStore
 from .model import ModelConfig, ModelContext, all_models, enforce_contract
@@ -360,9 +360,7 @@ class Runner:
         from pyspark.sql import functions as F
 
         probe_cfg = ModelConfig(name="_freshness_probe", builder=lambda ctx: None)
-        ctx = ModelContext(
-            self.spark, self.store, self.sources, probe_cfg, fixed_now=self.fixed_now
-        )
+        ctx = self._context(probe_cfg)
         now = self.fixed_now or _dt.utcnow()  # naive UTC, matching session tz
         out: dict[str, dict] = {}
         for key, cfg in freshness.items():
@@ -526,18 +524,29 @@ class Runner:
         row["materialized"] = cfg.materialized
         self.last_run_results.append(row)
 
-    def _write_run_results(self, full_refresh: bool, elapsed_s: float) -> None:
-        """Persist the invocation's per-model results next to the tables
-        (``<warehouse>/_artifacts/run_results.json``) — the artifact CI
-        and orchestration read instead of scraping logs. ``elapsed_s`` is
-        the invocation's wall time (dbt's ``elapsed_time``). Metadata
-        only, no Spark job: bytes written are O(models), never data-scale."""
+    def _write_artifact(self, filename: str, payload: dict) -> str:
+        """Write one JSON artifact to ``<warehouse>/_artifacts/<filename>``;
+        returns its path. Metadata only, no Spark job."""
         import json
         import os
 
         art_dir = self.store.path("_artifacts")
         os.makedirs(art_dir, exist_ok=True)
-        payload = {
+        path = os.path.join(art_dir, filename)
+        with open(path, "w") as f:
+            # default=str: vars may carry non-JSON types (dates, paths);
+            # stringifying keeps the artifact writable, and retry replays
+            # the recorded form
+            json.dump(payload, f, indent=1, default=str)
+        return path
+
+    def _write_run_results(self, full_refresh: bool, elapsed_s: float) -> None:
+        """Persist the invocation's per-model results next to the tables
+        (``<warehouse>/_artifacts/run_results.json``) — the artifact CI
+        and orchestration read instead of scraping logs. ``elapsed_s`` is
+        the invocation's wall time (dbt's ``elapsed_time``); bytes written
+        are O(models), never data-scale."""
+        self._write_artifact("run_results.json", {
             "generated_at_unix": round(time.time(), 3),
             "profile": self.profile,
             "full_refresh": full_refresh,
@@ -547,15 +556,13 @@ class Runner:
             "args": getattr(self, "_last_args", None),
             "elapsed_s": round(elapsed_s, 3),
             "results": self.last_run_results,
-        }
-        with open(os.path.join(art_dir, "run_results.json"), "w") as f:
-            # default=str: vars may carry non-JSON types (dates, paths);
-            # stringifying keeps the artifact writable — retry replays the
-            # recorded form
-            json.dump(payload, f, indent=1, default=str)
+        })
 
-    def _build_one(self, cfg: ModelConfig, full_refresh: bool) -> None:
-        ctx = ModelContext(
+    def _context(self, cfg: ModelConfig, full_refresh: bool = False) -> ModelContext:
+        """The builder context for ``cfg`` under this runner's settings —
+        the one place a runner hands its clock, windows, vars and defer
+        store to a model."""
+        return ModelContext(
             self.spark,
             self.store,
             self.sources,
@@ -568,6 +575,9 @@ class Runner:
             vars=self.vars,
             defer_store=self.defer_store,
         )
+
+    def _build_one(self, cfg: ModelConfig, full_refresh: bool) -> None:
+        ctx = self._context(cfg, full_refresh)
         if full_refresh and cfg.materialized != "snapshot":
             # snapshot history survives --full-refresh (dbt: snapshots are
             # append-only audit state, never rebuilt)
@@ -797,15 +807,7 @@ class Runner:
         exclude: str | list[str] | None = None,
     ) -> str:
         """Persist the manifest next to run_results.json; returns the path."""
-        import json
-        import os
-
-        art_dir = self.store.path("_artifacts")
-        os.makedirs(art_dir, exist_ok=True)
-        path = os.path.join(art_dir, "manifest.json")
-        with open(path, "w") as f:
-            json.dump(self.manifest(select, exclude), f, indent=1, default=str)
-        return path
+        return self._write_artifact("manifest.json", self.manifest(select, exclude))
 
     def catalog(
         self,
@@ -844,15 +846,7 @@ class Runner:
         exclude: str | list[str] | None = None,
     ) -> str:
         """Persist the catalog next to manifest.json; returns the path."""
-        import json
-        import os
-
-        art_dir = self.store.path("_artifacts")
-        os.makedirs(art_dir, exist_ok=True)
-        path = os.path.join(art_dir, "catalog.json")
-        with open(path, "w") as f:
-            json.dump(self.catalog(select, exclude), f, indent=1, default=str)
-        return path
+        return self._write_artifact("catalog.json", self.catalog(select, exclude))
 
     def build(
         self,

@@ -47,35 +47,25 @@ class UnitTestConfig:
     fixed_now: Optional[dt.datetime] = None
     tags: list[str] = field(default_factory=list)
 
+    def __post_init__(self) -> None:
+        for key in self.given:
+            if key != "this" and not key.startswith(("ref:", "source:")):
+                raise ValueError(
+                    f"unit test {self.name!r}: given key {key!r} must be 'this', "
+                    "'ref:<model>', or 'source:<db>.<table>'"
+                )
+        if self.incremental and "this" not in self.given:
+            raise ValueError(
+                f"unit test {self.name!r}: incremental=True requires a 'this' mock"
+            )
+
 
 _UNIT_TESTS: dict[str, UnitTestConfig] = {}
 
 
-def unit_test(
-    name: str,
-    model: str,
-    given: dict[str, MockData],
-    expect: MockData,
-    incremental: bool = False,
-    fixed_now: dt.datetime | None = None,
-    tags: list[str] | None = None,
-) -> UnitTestConfig:
+def unit_test(name: str, **config) -> UnitTestConfig:
     """Register a unit test; returns its config (also usable inline)."""
-    for key in given:
-        if key != "this" and not key.startswith(("ref:", "source:")):
-            raise ValueError(
-                f"unit test {name!r}: given key {key!r} must be 'this', "
-                "'ref:<model>', or 'source:<db>.<table>'"
-            )
-    if incremental and "this" not in given:
-        raise ValueError(
-            f"unit test {name!r}: incremental=True requires a 'this' mock"
-        )
-    cfg = UnitTestConfig(
-        name=name, model=model, given=dict(given), expect=expect,
-        incremental=incremental, fixed_now=fixed_now, tags=tags or [],
-    )
-    _UNIT_TESTS[name] = cfg
+    cfg = _UNIT_TESTS[name] = UnitTestConfig(name=name, **config)
     return cfg
 
 
