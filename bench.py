@@ -361,6 +361,17 @@ def force_full(df) -> int:
     return n
 
 
+def emit_stdout_line(line: str) -> None:
+    """Print the result line on a line of its own, flushed.
+
+    The leading newline ends any unterminated output before it — Spark's
+    console progress bar redraws with ``\r`` and never ends its line — so
+    the last ``\n``-separated line of stdout is always the JSON. Call it
+    last: nothing may follow it on either stream."""
+    sys.stderr.flush()
+    print("\n" + line, flush=True)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -379,7 +390,9 @@ def main() -> None:
         # The engine default keeps AQE ON; the bench at sf0.1 measures the
         # operators, not AQE overhead. Cluster runs: SPARK_GRAFT_BENCH_AQE=true.
         extra_conf={
-            "spark.sql.adaptive.enabled": os.environ.get("SPARK_GRAFT_BENCH_AQE", "false")
+            "spark.sql.adaptive.enabled": os.environ.get("SPARK_GRAFT_BENCH_AQE", "false"),
+            # the \r-redrawn stage bar would share stdout with the result
+            "spark.ui.showConsoleProgress": "false",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -436,32 +449,14 @@ def main() -> None:
     demo, _ = _time(DEMO_QUERIES)
     load_end = os.getloadavg()
     total = round(sum(timings.values()), 3)
-    # stdout carries ONLY the compact ms-integer line the driver parses
-    # (see module docstring; r6 AND r7 both overflowed the driver's
-    # 2000-char tail capture — the seconds-float + preamble rendering is
-    # gone for good, and test_bench_contract.py pins the budget).
-    print(
-        render_stdout_line(
-            total,
-            timings,
-            stdout_names=DRIVER_QUERY_ORDER,
-            load=load_pre_warmup[0],
-        )
-    )
     # quiet-machine gate (VERDICT r13 item 9): a contended box (1-min
     # pre-warmup load > 1 — this process's own threads haven't started
     # yet) produces timings that cost a clean round-over-round read
-    # (the r13 4.17-load artifact). The run still prints the stdout
-    # line the driver parses, but the COMMITTED sidecar is preserved:
-    # contended details land in BENCH_DETAIL.noisy.json (gitignored).
+    # (the r13 4.17-load artifact). The COMMITTED sidecar is preserved:
+    # contended details land in BENCH_DETAIL.noisy.json (gitignored), and
+    # the stdout line's ``load`` field carries the same signal.
     contended = load_pre_warmup[0] > 1.0
     detail_name = "BENCH_DETAIL.noisy.json" if contended else "BENCH_DETAIL.json"
-    if contended:
-        print(
-            f"bench: pre-warmup 1-min load {load_pre_warmup[0]:.2f} > 1 — "
-            f"writing {detail_name}, NOT the committed quiet artifact",
-            file=sys.stderr,
-        )
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), detail_name
     )
@@ -488,6 +483,16 @@ def main() -> None:
             indent=1,
         )
         f.write("\n")
+    # stdout carries ONLY the compact ms-integer line (see module
+    # docstring; test_bench_contract.py pins its length budget)
+    emit_stdout_line(
+        render_stdout_line(
+            total,
+            timings,
+            stdout_names=DRIVER_QUERY_ORDER,
+            load=load_pre_warmup[0],
+        )
+    )
 
 
 if __name__ == "__main__":

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .materialize import TableStore
+from .versioned import VersionedTableStore
 
 
 @dataclass
@@ -100,19 +101,6 @@ class ModelConfig:
     # NOT MATCHED and inserted, so predicates must cover every window
     # the incremental build can emit.
     incremental_predicates: list[str] = field(default_factory=list)
-    # r12: maintain a bucketed managed-table MIRROR of this model
-    # (``<schema>_<name>_bucketed``, ``bucketBy(n_buckets, *bucket_by)
-    # sortBy(*bucket_by)``) alongside the parquet store table. The
-    # mirror is what makes self-joins on the bucket key plan
-    # bucket-local (zero Exchange on the join — the PERF.md r11 Part B
-    # shape, 1 Exchange total with the downstream groupBy); incremental
-    # 'append' runs append only the new slice, so the projection build
-    # amortizes across every consumer (the dedup family's
-    # fingerprint self-join). Only 'table' and incremental 'append'
-    # models can carry a mirror: MERGE/insert_overwrite rewrite
-    # arbitrary rows, which an append-maintained mirror cannot track.
-    bucket_by: list[str] = field(default_factory=list)
-    n_buckets: int = 128
 
     def __post_init__(self) -> None:
         """The one place a model's config is validated, whichever
@@ -164,16 +152,6 @@ class ModelConfig:
                 f"model {name!r}: incremental_predicates only apply to the "
                 "'merge' strategy"
             )
-        if self.bucket_by:
-            if self.n_buckets < 1:
-                raise ValueError(f"model {name!r}: n_buckets must be >= 1")
-            if self.materialized == "incremental" and strategy != "append":
-                raise ValueError(
-                    f"model {name!r}: bucket_by mirrors are append-maintained; "
-                    "MERGE/insert_overwrite rewrite rows the mirror cannot "
-                    "track — use materialized='table' or "
-                    "incremental_strategy='append'"
-                )
 
 
 _REGISTRY: dict[str, ModelConfig] = {}
@@ -383,14 +361,13 @@ class ModelContext:
                 f"model {self.current.name!r} refs {name!r} but does not declare it in deps"
             )
         if as_of is not None or version is not None:
-            try:
-                return self.store.read(name, version=version, as_of_ts=as_of)
-            except TypeError:
+            if not isinstance(self.store, VersionedTableStore):
                 raise ValueError(
                     f"ref({name!r}, as_of/version=…) requires a versioned "
                     "store (run with --versioned); the plain TableStore "
                     "keeps no history"
-                ) from None
+                )
+            return self.store.read(name, version=version, as_of_ts=as_of)
         if (
             self.defer_store is not None
             and not self.store.exists(name)
@@ -426,8 +403,11 @@ class ModelContext:
     def watermark_ms(self, column: str = "timestamp_ms") -> int:
         """``select coalesce(max(col), 0) from {{ this }}`` (SURVEY §2.2 P4/A2).
 
-        A scalar aggregate over the target — one column scanned, footer-level
-        min/max at parquet/Delta level make this cheap even on huge tables.
+        A scalar aggregate over the target that scans the whole column:
+        ``spark.read.parquet`` is a V1 source and Spark pushes aggregates
+        down only into V2 sources, so the parquet footer min/max go unused.
+        Recording per-table statistics in the commit manifest is the
+        planned fix (ROADMAP item 3).
         """
         row = self.this().agg(F.max(F.col(column)).alias("wm")).first()
         return int(row["wm"]) if row["wm"] is not None else 0

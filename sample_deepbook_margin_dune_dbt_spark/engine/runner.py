@@ -13,7 +13,7 @@ from datetime import datetime
 from graphlib import TopologicalSorter
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from .materialize import TableStore
 from .model import ModelConfig, ModelContext, all_models, enforce_contract
@@ -351,8 +351,10 @@ class Runner:
         ``{"max_loaded_at", "age_s", "status"}`` with status
         pass/warn/error (error also when the source is empty — an empty
         feed is the stalest possible feed). The probe is one scalar MAX
-        per source — footer-level stats make it cheap on huge tables
-        (same shape as the incremental watermark). The clock is the
+        per source, which scans the whole column: a parquet source is a
+        V1 source and Spark pushes aggregates down only into V2 sources
+        (same cost as the incremental watermark; ROADMAP item 3 plans
+        manifest statistics as the fix). The clock is the
         runner's injectable ``fixed_now`` so tests are deterministic.
         """
         from datetime import datetime as _dt
@@ -606,15 +608,6 @@ class Runner:
             and ctx.store.exists(cfg.name)
             and not full_refresh
         )
-        if incremental_run and cfg.bucket_by:
-            # one materialization feeds BOTH the store append and the
-            # mirror append (ADVICE r12 item 2): without it the mirror
-            # sync re-executes the builder's plan AFTER the store append,
-            # and a builder whose incremental filter reads ctx.this()
-            # lazily (or is non-deterministic) would compute the mirror
-            # slice against the already-appended store — appending a
-            # wrong/empty slice and silently desyncing mirror from store
-            df = df.localCheckpoint(eager=True)
         if incremental_run:
             if cfg.incremental_strategy == "append":
                 self.store.append(df, cfg.name, cfg.partition_by)
@@ -631,75 +624,7 @@ class Runner:
                 )
         else:
             self.store.write_full(df, cfg.name, cfg.partition_by)
-        if cfg.bucket_by:
-            # the mirror append is only content-correct for the 'append'
-            # strategy — merge/insert_overwrite update or replace store
-            # rows, so the appended slice would desync the mirror and the
-            # reconcile would pay a wasted append + full rebuild every run
-            # (ADVICE r13 item 3); those strategies rebuild directly
-            self._sync_bucketed_mirror(
-                cfg,
-                df,
-                incremental_append=incremental_run
-                and cfg.incremental_strategy == "append",
-            )
         self._post_hooks(cfg)
-
-    def _sync_bucketed_mirror(
-        self, cfg: ModelConfig, df: DataFrame, incremental_append: bool
-    ) -> None:
-        """Maintain the model's bucketed managed-table mirror
-        (``bucket_by`` config; ``engine/bucketing.py``).
-
-        Incremental 'append' runs append ONLY the new slice — read from
-        the SAME eagerly-checkpointed DataFrame the store append consumed
-        (``run()`` materializes it once for bucket_by models; ADVICE r12
-        item 2), never re-projecting the accumulated table — so the
-        bucketed layout's write cost amortizes across runs the way the
-        reference's incremental MERGE amortizes the daily fact rebuild
-        (``models/fct_deepbook_margin_pool_daily.sql:33-35``). Fresh
-        builds and --full-refresh rebuild the mirror from the store
-        table. Appends keep the bucket spec (Spark validates) but leave
-        multiple files per bucket, so plans keep the Exchange-free join
-        and re-sort within tasks — the optimize post-hook analog for
-        mirrors is a full rebuild, which ``--full-refresh`` provides.
-
-        Store and mirror writes are not atomic, so every incremental
-        sync ends with a cheap RECONCILE (ADVICE r12 item 3): a crash
-        between the two appends — or any historical gap — leaves the
-        mirror permanently short, and nothing downstream would notice
-        until fp_rows consumers computed wrong pair sets; a row-count
-        compare (two parquet-stats scans) catches it and triggers the
-        full-rebuild branch.
-        """
-        from .bucketing import drop_bucketed_table, mirror_table_name, write_bucketed
-
-        spark = self.store.spark
-        tbl = mirror_table_name(cfg.name, self.store.schema_suffix, self.store.root)
-
-        def _rebuild() -> None:
-            drop_bucketed_table(spark, tbl)
-            # warehouse-keying (ADVICE r12 item 1) renamed mirrors; a mirror
-            # built before that under the un-keyed name is now unreachable
-            # by read_mirror and would leak in the session catalog + on
-            # disk forever — reclaim it here (ADVICE r13 item 2)
-            legacy = mirror_table_name(cfg.name, self.store.schema_suffix, None)
-            if legacy != tbl:
-                drop_bucketed_table(spark, legacy)
-            write_bucketed(
-                self.store.read(cfg.name), tbl, cfg.n_buckets, cfg.bucket_by,
-                sort_by=cfg.bucket_by, mode="overwrite",
-            )
-
-        if incremental_append and spark.catalog.tableExists(tbl):
-            write_bucketed(
-                df, tbl, cfg.n_buckets, cfg.bucket_by,
-                sort_by=cfg.bucket_by, mode="append",
-            )
-            if spark.table(tbl).count() != self.store.read(cfg.name).count():
-                _rebuild()
-        else:
-            _rebuild()
 
     def _post_hooks(self, cfg: ModelConfig) -> None:
         """Maintenance after a successful build: the reference's prod
@@ -757,8 +682,6 @@ class Runner:
                 "partition_by": cfg.partition_by or [],
                 "cluster_by": cfg.cluster_by,
                 "zorder_by": cfg.zorder_by,
-                "bucket_by": cfg.bucket_by,
-                "n_buckets": cfg.n_buckets,
                 "contract": cfg.contract,
                 "incremental_predicates": cfg.incremental_predicates,
                 "depends_on": cfg.deps,

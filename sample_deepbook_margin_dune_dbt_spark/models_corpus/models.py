@@ -1010,8 +1010,6 @@ def corpus_shard_export_audit(ctx: ModelContext) -> DataFrame:
     incremental_strategy="append",
     tags=["corpus"],
     not_null=["doc_id", "fp"],
-    bucket_by=["fp"],
-    n_buckets=32,
 )
 def corpus_fp_bucketed(ctx: ModelContext) -> DataFrame:
     """Maintained shingle-fingerprint projection: one (doc_id, fp) row
@@ -1021,21 +1019,15 @@ def corpus_fp_bucketed(ctx: ModelContext) -> DataFrame:
     consumer passing this table as ``fp_rows`` gets the same pairs
     without re-shingling anything (VERDICT r11 item 2).
 
-    The ``bucket_by=['fp']`` config makes the runner maintain a
-    BUCKETED managed-table mirror alongside the store table
-    (``engine/bucketing.py::mirror_table_name``); fed to
-    ``ngram_jaccard_pairs(..., fp_rows=mirror, join_strategy='merge')``
-    the shingle self-join plans bucket-local — ONE Exchange in the
-    whole pair plan (the downstream pair groupBy; PERF.md r11 Part B
-    measured this shape 3.5× faster end-to-end AND passing at the 8 GB
-    default heap where every shuffle strategy failed). Incremental runs
-    shingle ONLY docs above the doc_id watermark and APPEND — the
-    projection build amortizes across the jaccard / containment /
-    clusters / canonical family, the reference's incremental-
-    amortization pattern (``fct_deepbook_margin_pool_daily.sql:33-35``).
-    ``n_buckets=32`` matches the bench session's parallelism; a
-    warehouse deployment raises it with the cluster (the measured
-    fourth-decade probe used 128).
+    Incremental runs shingle ONLY docs above the doc_id watermark and
+    APPEND — the projection build amortizes across the jaccard /
+    containment / clusters / canonical family, the reference's
+    incremental-amortization pattern
+    (``fct_deepbook_margin_pool_daily.sql:33-35``). Consumers read it
+    with ``store.read("corpus_fp_bucketed")``, like every other table;
+    the name is kept from when the runner also kept a copy of it
+    bucketed on ``fp``, so ``--select`` and saved manifests still
+    resolve.
     """
     from ..operators.dedup import shingles_vectorized
 

@@ -194,13 +194,12 @@ def _intersect_shingle_rows(df, id_col, text_col, n):
 def _sh_rows_or_inline(df, id_col, text_col, n, fp_rows):
     """The (sh, sizes) pair for the exact-pair tiers: either the inline
     shingle projection (``_intersect_shingle_rows``) or a MAINTAINED
-    (id, fp) projection — the ``corpus_fp_bucketed`` mirror — whose
-    two columns are renamed positionally to (_id, _fp). A Project over
-    a bucketed scan preserves the hash output-partitioning through the
-    alias, so the downstream self-join stays bucket-local. Sizes come
-    from a map-side-combined per-doc count (one row per doc on the
-    wire; the inline path reads them free off the staged array — the
-    maintained path trades that for never re-shingling)."""
+    (id, fp) projection — the ``corpus_fp_bucketed`` store table, read
+    with ``store.read`` — whose two columns are renamed positionally to
+    (_id, _fp). Sizes come from a map-side-combined per-doc count (one
+    row per doc on the wire; the inline path reads them free off the
+    staged array — the maintained path trades that for never
+    re-shingling)."""
     if fp_rows is None:
         return _intersect_shingle_rows(df, id_col, text_col, n)
     sh = fp_rows.select(
@@ -211,72 +210,25 @@ def _sh_rows_or_inline(df, id_col, text_col, n, fp_rows):
     return sh, sizes
 
 
-def _shingle_self_intersections(
-    sh: DataFrame, strategy: str = "shuffle_hash"
-) -> DataFrame:
+def _shingle_self_intersections(sh: DataFrame) -> DataFrame:
     """Per-pair shingle intersection counts ``(id_a, id_b, n_inter)``
     from (_id, _fp) rows — the shared tail of the exact jaccard and
     containment tiers.
 
-    The self-join is hinted ``shuffle_hash`` by default: an unhinted SMJ
-    sorts both ~corpus-sized shingle sides, and the sort (not the join)
-    went superlinear at the 100× documents fixture (120 s for the
-    containment scan; ~30 s hashed) — the same SMJ-spill failure mode
-    the r9 cosine refine fix pinned. A per-partition hash build of
-    8-byte keys is flat in the second decade; hot stopword shingles
-    remain AQE-skew-split territory exactly as before.
-
-    ``strategy="merge"`` selects the spill-tolerant sort-merge plan
-    (r10): hash builds cannot spill, and at the 1000× fixture (~10⁹
-    fingerprints) they exhaust an 8 GB heap at ANY shuffle-partition
-    count. Measured honestly, merge is NOT a magic rescue either — at
-    8 GB ÷ 32 concurrent tasks (0.25 GB/task) the sort+agg working
-    pages also exhaust (PERF.md r10 finding 2 records the full
-    strategy × heap × partitions matrix; 48 GB completes). The knob
-    exists for the in-between regime where per-task memory covers sort
-    pages but not a resident hash build; below that floor the only
-    lever is memory ∝ data per core, which is how a real cluster is
-    sized.
-
-    ``strategy="bucketed"`` (r11) stages the (_id, _fp) projection ONCE as
-    a bucketed+sorted managed table (``bucketBy(_fp) sortBy(_fp)``) and
-    self-joins two reads of it: the join plans as a bucket-local
-    sort-merge — NO exchange, NO sort, NO resident hash build — which is
-    the measured fix for the fourth-decade per-task memory floor
-    (PERF.md r11: the 1000× fixture's self-join PASSES at the 8 GB heap
-    every shuffle strategy failed at, 1 Exchange in the whole plan). At
-    warehouse scale this is the "maintain the fingerprint projection as
-    a bucketed table" design — the write amortizes across every dedup
-    query that self-joins on the fingerprint.
+    The self-join is hinted ``shuffle_hash``: an unhinted SMJ sorts both
+    ~corpus-sized shingle sides, and the sort (not the join) went
+    superlinear at the 100× documents fixture (120 s for the containment
+    scan; ~30 s hashed) — the same SMJ-spill failure mode the r9 cosine
+    refine fix pinned. A per-partition hash build of 8-byte keys is flat
+    in the second decade; hot stopword shingles remain AQE-skew-split
+    territory. Hash builds cannot spill, so at the 1000× fixture (~10⁹
+    fingerprints) the build needs executor memory in proportion to the
+    exchange (PERF.md r10 finding 2 records the heap × partitions
+    matrix) — the cure is partitions and memory scaling with data, as
+    cluster sizing does.
     """
-    if strategy == "bucketed":
-        import os
-        import shutil
-
-        from ..engine.bucketing import write_bucketed
-
-        spark = sh.sparkSession
-        tbl = "_dedup_fp_bucketed_staging"
-        # a fresh session's in-memory catalog forgets the table but its
-        # warehouse dir survives on disk; clear both or the CTAS errors
-        # with LOCATION_ALREADY_EXISTS
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        stale = os.path.join(wh.removeprefix("file:"), tbl)
-        if os.path.isdir(stale):
-            shutil.rmtree(stale, ignore_errors=True)
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        write_bucketed(sh, tbl, n_buckets, ["_fp"], sort_by=["_fp"])
-        sh = spark.table(tbl)
-        a = sh.alias("a")
-        b = sh.alias("b")
-    elif strategy in ("shuffle_hash", "merge"):
-        a = sh.alias("a")
-        b = sh.hint(strategy).alias("b")
-    else:
-        raise ValueError(
-            f"strategy must be shuffle_hash|merge|bucketed, got {strategy!r}"
-        )
+    a = sh.alias("a")
+    b = sh.hint("shuffle_hash").alias("b")
     return (
         a.join(b, (F.col("a._fp") == F.col("b._fp")) & (F.col("a._id") < F.col("b._id")))
         .groupBy(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
@@ -290,7 +242,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    join_strategy: str = "shuffle_hash",
     fp_rows: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by exact Jaccard over word n-gram shingles.
@@ -306,23 +257,19 @@ def ngram_jaccard_pairs(
     candidates without the quadratic join.
 
     ``fp_rows`` (r12): a MAINTAINED (id, shingle-fp) projection — the
-    ``corpus_fp_bucketed`` DAG model's bucketed mirror — replaces the
-    inline shingling entirely; ``df``/``text_col``/``n`` are ignored.
-    Read from a ``bucketBy(fp) sortBy(fp)`` table, the self-join plans
-    bucket-local (ZERO Exchange on the join — the PERF.md r11 Part B
-    shape) and pair generation pays no re-shingling:
-    the projection cost amortizes across every dedup query, the way the
-    reference amortizes its daily fact
-    (``models/fct_deepbook_margin_pool_daily.sql:33-35``). Pass
-    ``join_strategy='merge'`` with a bucketed mirror — a hash-build
-    hint would discard the co-location. Measured honestly (PERF.md r12
-    addendum 3): at comfortable heaps the INLINE array staging is
-    FASTER than any mirror-fed form (35 vs 45–57 s at 100×) — the
-    mirror is the fourth-decade per-task-memory escape and the
-    cross-run amortization of shingling, not a same-session speedup.
+    ``corpus_fp_bucketed`` DAG model's store table — replaces the inline
+    shingling entirely; ``df``/``text_col``/``n`` are ignored. Pair
+    generation then pays no re-shingling: the incremental model shingles
+    only new documents, so the projection cost amortizes across runs the
+    way the reference amortizes its daily fact
+    (``models/fct_deepbook_margin_pool_daily.sql:33-35``). Measured
+    honestly (PERF.md r12 addendum 3): within one session the INLINE
+    array staging is faster than the row-form projection (35 vs 45 s at
+    100×) — the table buys cross-run amortization, not a same-session
+    speedup.
     """
     sh, sizes = _sh_rows_or_inline(df, id_col, text_col, n, fp_rows)
-    inter = _shingle_self_intersections(sh, join_strategy).withColumnRenamed("n_inter", "_inter")
+    inter = _shingle_self_intersections(sh).withColumnRenamed("n_inter", "_inter")
     sa = sizes.select(F.col("_id").alias("id_a"), F.col("_size").alias("_size_a"))
     sb = sizes.select(F.col("_id").alias("id_b"), F.col("_size").alias("_size_b"))
     return (
@@ -483,7 +430,6 @@ def jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     strategy: str = "auto",
-    join_strategy: str = "shuffle_hash",
     fp_rows: DataFrame | None = None,
     allow_approx: bool = False,
     n_docs: int | None = None,
@@ -519,9 +465,7 @@ def jaccard_pairs(
             n_docs = df.count()
         strategy = choose_jaccard_strategy(threshold, n_docs, allow_approx)
     if strategy == "self_join":
-        return ngram_jaccard_pairs(
-            df, id_col, text_col, n, threshold, join_strategy, fp_rows
-        )
+        return ngram_jaccard_pairs(df, id_col, text_col, n, threshold, fp_rows)
     if strategy == "prefix":
         return prefix_filter_jaccard_pairs(
             df, id_col, text_col, n, threshold, fp_rows
@@ -611,7 +555,6 @@ def shingle_containment_pairs(
     text_col: str,
     n: int = 3,
     threshold_e6: int = 800_000,
-    join_strategy: str = "shuffle_hash",
     fp_rows: DataFrame | None = None,
 ) -> DataFrame:
     """ASYMMETRIC near-duplicate pairs by shingle containment:
@@ -633,7 +576,7 @@ def shingle_containment_pairs(
     rather than running it corpus-wide.
     """
     sh, sizes = _sh_rows_or_inline(df, id_col, text_col, n, fp_rows)
-    inter = _shingle_self_intersections(sh, join_strategy)
+    inter = _shingle_self_intersections(sh)
     sa = sizes.select(F.col("_id").alias("id_a"), F.col("_size").alias("size_a"))
     sb = sizes.select(F.col("_id").alias("id_b"), F.col("_size").alias("size_b"))
     return (

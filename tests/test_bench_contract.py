@@ -97,6 +97,18 @@ def test_stdout_line_without_subset_carries_all_queries():
     assert parsed == {"total": 300, "nq": 2, "q": {"a": 100, "b": 200}}
 
 
+def test_stdout_line_survives_an_unterminated_progress_bar(capsys):
+    # Spark's console progress bar redraws with "\r" and never ends its
+    # line; a result printed right after it would be glued onto the bar
+    # and a last-line JSON parse would fail
+    sys.stdout.write("\r[Stage 3:=============>               (2 + 2) / 8]")
+    line = bench.render_stdout_line(0.3, {"a": 0.1, "b": 0.2}, load=0.5)
+    bench.emit_stdout_line(line)
+    out = capsys.readouterr().out
+    last = out.rstrip("\n").split("\n")[-1]
+    assert json.loads(last) == {"total": 300, "nq": 2, "load": 50, "q": {"a": 100, "b": 200}}
+
+
 def test_bench_names_resolve_and_are_unique():
     assert len(set(bench.BENCH_QUERIES)) == len(bench.BENCH_QUERIES)
     missing = [n for n in bench.BENCH_QUERIES + bench.DEMO_QUERIES if n not in FULL_QUERIES]

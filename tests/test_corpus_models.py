@@ -267,20 +267,11 @@ def test_despanned_documents_model(spark, sf_dir, tmp_path):
 
 
 def test_fp_bucketed_model_growth_mirror_and_plan(spark, sf_dir, tmp_path):
-    """VERDICT r11 item 2: the bucketed fingerprint projection as a DAG
-    model. Pins (a) N incremental appends ≡ one full rebuild, (b) the
-    bucketed mirror carries exactly the store table's rows, (c) the
-    model-fed shingle self-join plans with ONE Exchange total (the
-    downstream pair groupBy — the PERF.md r11 Part B shape; the join
-    itself is bucket-local), and (d) pair output is identical to the
-    inline-shingling path."""
-    from sample_deepbook_margin_dune_dbt_spark.engine.bucketing import (
-        drop_bucketed_table,
-        mirror_table_name,
-        read_mirror,
-    )
+    """VERDICT r11 item 2: the shingle fingerprint projection as a DAG
+    model. Pins (a) N incremental appends ≡ one full rebuild, and (d)
+    pair output from the store table fed as ``fp_rows`` is identical to
+    the inline-shingling path, for the self-join and the prefix tier."""
     from sample_deepbook_margin_dune_dbt_spark.operators import dedup as D
-    from sample_deepbook_margin_dune_dbt_spark.plans import explain_str
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cut = docs.agg(F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY doc_id)")).first()[0]
@@ -288,150 +279,59 @@ def test_fp_bucketed_model_growth_mirror_and_plan(spark, sf_dir, tmp_path):
     docs.filter(F.col("doc_id") <= cut).write.parquet(p1)
     docs.write.parquet(p2)
 
-    root_grown, root_full = str(tmp_path / "wh"), str(tmp_path / "wh_full")
-    tbl = mirror_table_name("corpus_fp_bucketed", store_root=root_grown)
-    tbl_full = mirror_table_name("corpus_fp_bucketed", store_root=root_full)
-    drop_bucketed_table(spark, tbl)
-    drop_bucketed_table(spark, tbl_full)
-    try:
-        store = TableStore(spark, root_grown)
-        # growth: batch 1 (full create) then the full corpus (append)
-        Runner(spark, store, {"main.documents": p1}).run("corpus_fp_bucketed")
-        Runner(spark, store, {"main.documents": p2}).run("corpus_fp_bucketed")
-        grown = sorted(map(tuple, store.read("corpus_fp_bucketed").collect()))
+    store = TableStore(spark, str(tmp_path / "wh"))
+    # growth: batch 1 (full create) then the full corpus (append)
+    Runner(spark, store, {"main.documents": p1}).run("corpus_fp_bucketed")
+    Runner(spark, store, {"main.documents": p2}).run("corpus_fp_bucketed")
+    grown = sorted(map(tuple, store.read("corpus_fp_bucketed").collect()))
 
-        # (a) N-growth ≡ full rebuild
-        store_full = TableStore(spark, root_full)
-        Runner(spark, store_full, {"main.documents": p2}).run("corpus_fp_bucketed")
-        rebuilt = sorted(map(tuple, store_full.read("corpus_fp_bucketed").collect()))
-        assert grown == rebuilt and len(grown) > 0
+    # (a) N-growth ≡ full rebuild
+    store_full = TableStore(spark, str(tmp_path / "wh_full"))
+    Runner(spark, store_full, {"main.documents": p2}).run("corpus_fp_bucketed")
+    rebuilt = sorted(map(tuple, store_full.read("corpus_fp_bucketed").collect()))
+    assert grown == rebuilt and len(grown) > 0
 
-        # (b) mirror rows == store rows — and mirrors are WAREHOUSE-keyed
-        # (ADVICE r12 item 1): each store owns its own mirror; building
-        # wh_full did NOT overwrite wh's, and both match their stores
-        mirror_full = read_mirror(spark, "corpus_fp_bucketed", store_root=root_full)
-        assert mirror_full is not None
-        assert sorted(map(tuple, mirror_full.collect())) == rebuilt
-        mirror = read_mirror(spark, "corpus_fp_bucketed", store_root=root_grown)
-        assert mirror is not None
-        assert sorted(map(tuple, mirror.collect())) == rebuilt
-
-        # (c) ONE Exchange in the model-fed self-intersection plan, and
-        # the join is sort-merge (bucket-local), not hash-built
-        sh = mirror.select(F.col("doc_id").alias("_id"), F.col("fp").alias("_fp"))
-        inter = D._shingle_self_intersections(sh, "merge")
-        # simple mode prints each node ONCE (formatted repeats nodes in
-        # the detail section, so a count there would read 1 node as 2)
-        simple = explain_str(inter, "simple")
-        assert simple.count("Exchange") == 1, simple
-        assert "SortMergeJoin" in simple, simple
-
-        # (d) identical pairs vs the inline-shingling path (jaccard
-        # doubles included: same integer inputs, same division)
-        inline = sorted(map(tuple, D.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=3, threshold=0.5
-        ).collect()))
-        fed = sorted(map(tuple, D.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=3, threshold=0.5,
-            join_strategy="merge", fp_rows=mirror.select("doc_id", "fp"),
-        ).collect()))
-        assert fed == inline and len(fed) > 0
-        # the prefix tier reads the same projection (r12): same pairs
-        fed_prefix = sorted(map(tuple, D.prefix_filter_jaccard_pairs(
-            docs, "doc_id", "text", n=3, threshold=0.5,
-            fp_rows=mirror.select("doc_id", "fp"),
-        ).collect()))
-        assert fed_prefix == inline
-    finally:
-        drop_bucketed_table(spark, tbl)
-        drop_bucketed_table(spark, tbl_full)
+    # (d) identical pairs vs the inline-shingling path (jaccard doubles
+    # included: same integer inputs, same division)
+    fp_rows = store.read("corpus_fp_bucketed").select("doc_id", "fp")
+    inline = sorted(map(tuple, D.ngram_jaccard_pairs(
+        docs, "doc_id", "text", n=3, threshold=0.5
+    ).collect()))
+    fed = sorted(map(tuple, D.ngram_jaccard_pairs(
+        docs, "doc_id", "text", n=3, threshold=0.5, fp_rows=fp_rows,
+    ).collect()))
+    assert fed == inline and len(fed) > 0
+    fed_prefix = sorted(map(tuple, D.prefix_filter_jaccard_pairs(
+        docs, "doc_id", "text", n=3, threshold=0.5, fp_rows=fp_rows,
+    ).collect()))
+    assert fed_prefix == inline
 
 
-def test_fp_bucketed_mirror_gap_reconciles(spark, sf_dir, tmp_path):
-    """ADVICE r12 item 3: store and mirror appends are not atomic — a
-    crash between them leaves the mirror permanently short, and
-    subsequent incremental runs used to keep appending only new slices
-    forever. The sync now reconciles row counts after every incremental
-    append and full-rebuilds on mismatch, so a planted gap self-heals
-    on the next run."""
-    from sample_deepbook_margin_dune_dbt_spark.engine.bucketing import (
-        drop_bucketed_table,
-        mirror_table_name,
-        read_mirror,
-        write_bucketed,
-    )
+def test_fp_bucketed_model_stays_in_the_store(spark, sf_dir, tmp_path):
+    """Every table lives in the TableStore: building
+    ``corpus_fp_bucketed`` (a create, then an append) adds nothing to
+    Spark's session catalog or to ``spark.sql.warehouse.dir``."""
+    import os
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    cut = docs.agg(
-        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY doc_id)")
-    ).first()[0]
+    cut = docs.agg(F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY doc_id)")).first()[0]
     p1, p2 = str(tmp_path / "docs1"), str(tmp_path / "docs2")
     docs.filter(F.col("doc_id") <= cut).write.parquet(p1)
     docs.write.parquet(p2)
 
-    root = str(tmp_path / "wh")
-    tbl = mirror_table_name("corpus_fp_bucketed", store_root=root)
-    drop_bucketed_table(spark, tbl)
-    try:
-        store = TableStore(spark, root)
-        Runner(spark, store, {"main.documents": p1}).run("corpus_fp_bucketed")
-        # plant the crash gap: mirror loses half its rows, store keeps all
-        full_mirror = spark.table(tbl)
-        n_store = store.read("corpus_fp_bucketed").count()
-        gapped = full_mirror.limit(n_store // 2).collect()
-        gapped_df = spark.createDataFrame(gapped, full_mirror.schema)
-        drop_bucketed_table(spark, tbl)
-        write_bucketed(gapped_df, tbl, 32, ["fp"], sort_by=["fp"])
-        assert spark.table(tbl).count() < n_store
-        # next incremental run appends its slice AND detects the gap
-        Runner(spark, store, {"main.documents": p2}).run("corpus_fp_bucketed")
-        mirror = read_mirror(spark, "corpus_fp_bucketed", store_root=root)
-        assert sorted(map(tuple, mirror.collect())) == sorted(
-            map(tuple, store.read("corpus_fp_bucketed").collect())
-        )
-    finally:
-        drop_bucketed_table(spark, tbl)
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
 
+    def session_state():
+        tables = sorted(t.name for t in spark.catalog.listTables())
+        entries = sorted(os.listdir(wh)) if os.path.isdir(wh) else []
+        return tables, entries
 
-def test_mirror_legacy_unkeyed_name_reclaimed(spark, sf_dir, tmp_path):
-    """ADVICE r13 item 2: warehouse-keying (r12) renamed every mirror,
-    orphaning mirrors built before it under the un-keyed catalog name —
-    unreachable by read_mirror, never dropped, leaking in the session
-    catalog and on disk. A rebuild now reclaims the legacy name."""
-    from sample_deepbook_margin_dune_dbt_spark.engine.bucketing import (
-        drop_bucketed_table,
-        mirror_table_name,
-        read_mirror,
-        write_bucketed,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = str(tmp_path / "docs")
-    docs.write.parquet(p)
-
-    root = str(tmp_path / "wh")
-    tbl = mirror_table_name("corpus_fp_bucketed", store_root=root)
-    legacy = mirror_table_name("corpus_fp_bucketed")  # pre-r12 un-keyed name
-    assert legacy != tbl
-    drop_bucketed_table(spark, tbl)
-    drop_bucketed_table(spark, legacy)
-    try:
-        # plant a pre-warehouse-keying orphan under the legacy name
-        write_bucketed(
-            docs.select(F.col("doc_id"), F.col("doc_id").alias("fp")).limit(5),
-            legacy, 32, ["fp"], sort_by=["fp"],
-        )
-        assert spark.catalog.tableExists(legacy)
-        store = TableStore(spark, root)
-        Runner(spark, store, {"main.documents": p}).run("corpus_fp_bucketed")
-        # the rebuild reclaimed the orphan and built the keyed mirror
-        assert not spark.catalog.tableExists(legacy)
-        mirror = read_mirror(spark, "corpus_fp_bucketed", store_root=root)
-        assert mirror is not None
-        assert mirror.count() == store.read("corpus_fp_bucketed").count()
-    finally:
-        drop_bucketed_table(spark, tbl)
-        drop_bucketed_table(spark, legacy)
+    before = session_state()
+    store = TableStore(spark, str(tmp_path / "wh"))
+    Runner(spark, store, {"main.documents": p1}).run("corpus_fp_bucketed")
+    Runner(spark, store, {"main.documents": p2}).run("corpus_fp_bucketed")
+    assert store.read("corpus_fp_bucketed").count() > 0
+    assert session_state() == before
 
 
 def test_leakage_report_model_vars_and_cli(spark, sf_dir, tmp_path, capsys):

@@ -436,19 +436,6 @@ def test_model_registration_validates_config():
         model("bad2", incremental_strategy="delete_insert")(lambda ctx: None)
     with pytest.raises(ValueError, match="on_schema_change"):
         model("bad3", on_schema_change="sync-all-columns")(lambda ctx: None)
-    # bucket_by mirrors are append-maintained (ADVICE r13 item 3): a
-    # merge/insert_overwrite model would desync its mirror on every run,
-    # so the combination is rejected at declaration — and the runner's
-    # _sync_bucketed_mirror additionally gates its append branch on the
-    # 'append' strategy (belt and braces for ad-hoc ModelConfigs)
-    with pytest.raises(ValueError, match="append-maintained"):
-        model(
-            "bad4",
-            materialized="incremental",
-            incremental_strategy="merge",
-            unique_key=["k"],
-            bucket_by=["k"],
-        )(lambda ctx: None)
 
 
 def test_insert_overwrite_replaces_touched_partitions(spark, tmp_path):

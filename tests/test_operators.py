@@ -1127,28 +1127,6 @@ def test_contaminated_spans_planted(spark):
     assert rows == {(1, 2, 7)}
 
 
-def test_jaccard_merge_strategy_parity(spark, sf_dir):
-    """``join_strategy="merge"`` (the memory-starved spill-tolerant
-    fallback of the shingle self-join — PERF.md r10 finding 2) must
-    produce the identical pair set as the default shuffle-hash plan."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(400)
-    a = {
-        (r["id_a"], r["id_b"])
-        for r in D.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5).collect()
-    }
-    b = {
-        (r["id_a"], r["id_b"])
-        for r in D.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.5, join_strategy="merge"
-        ).collect()
-    }
-    assert a == b and len(a) > 0
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="shuffle_hash|merge"):
-        D.ngram_jaccard_pairs(docs, "doc_id", "text", join_strategy="broadcast")
-
-
 def test_contaminated_spans_shuffled_fallback_parity(spark, sf_dir):
     """``broadcast_bench=False`` (the oversized-benchmark fallback the
     1000× probe forced — PERF.md r10) must produce the identical span
@@ -1366,48 +1344,6 @@ def test_ivf_n_lists_clamp_warns(spark):
         except ValueError:
             pass
         assert any("n_lists clamp binds" in str(x.message) for x in w)
-
-
-def test_jaccard_bucketed_strategy_parity_and_plan(spark, sf_dir, no_aqe):
-    """``join_strategy="bucketed"`` (the measured fourth-decade fix —
-    PERF.md r11: bucket-local SMJ passes the 8 GB heap every shuffle
-    strategy failed at) must produce the identical pair set, and its
-    self-join must plan WITHOUT an exchange between the bucketed scans
-    and the join."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(400)
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in D.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5).collect()
-    }
-    got_df = D.ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.5, join_strategy="bucketed"
-    )
-    got = {(r["id_a"], r["id_b"]) for r in got_df.collect()}
-    assert got == want and len(want) > 0
-
-    from sample_deepbook_margin_dune_dbt_spark.operators.dedup import (
-        _intersect_shingle_rows,
-        _shingle_self_intersections,
-    )
-
-    sh, _ = _intersect_shingle_rows(docs, "doc_id", "text", 3)
-    # at fixture scale Catalyst would broadcast the tiny bucketed table;
-    # disable broadcast to pin the CORPUS-scale plan shape (what the
-    # 1000x probe ran): bucket-local SMJ, no exchange before the join
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = (
-            _shingle_self_intersections(sh, "bucketed")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-    # one exchange total (the pair agg); the join children are bucketed scans
-    assert plan.count("Exchange") <= 1, plan
-    assert "SortMergeJoin" in plan, plan
 
 
 # ------------------------------------------------------- IR eval metrics

@@ -119,35 +119,6 @@ def test_incremental_models_no_shuffle(spark, tmp_path):
     assert a["has_pushed_filters"], "event_type + watermark filters must push down"
 
 
-def test_bucketed_join_no_shuffle(spark, sf_dir, tmp_path):
-    """Same-bucketed tables join without an Exchange on either side."""
-    from sample_deepbook_margin_dune_dbt_spark.engine.bucketing import (
-        bucketed_join,
-        write_bucketed,
-    )
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    write_bucketed(orders, "b_orders", 8, ["o_orderkey"], sort_by=["o_orderkey"])
-    write_bucketed(li, "b_lineitem", 8, ["o_orderkey"], sort_by=["o_orderkey"])
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = bucketed_join(spark, "b_orders", "b_lineitem", ["o_orderkey"])
-        plan = explain_str(j, "formatted")
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "bucketed join must not shuffle"
-        assert j.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_ivf_pq_scoring_joins_are_equijoins(spark, sf_dir):
     """IVF-PQ candidate scoring must flow through cell-id equi-joins (probe
     expansion is a UDF + explode, not a centroid cross join) and the refine

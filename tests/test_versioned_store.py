@@ -398,6 +398,34 @@ def test_ref_as_of_and_version_through_model_context(spark, tmp_path):
         ctx2.ref("up", version=1)
 
 
+@pytest.mark.parametrize("kind", ["plain", "versioned"])
+def test_ref_time_travel_error_names_its_cause(spark, tmp_path, kind):
+    """``ref(as_of=…)`` tells a plain store apart by its type, not by
+    catching ``TypeError``: a plain store still gets the ``--versioned``
+    hint, while a versioned store given a ``datetime`` (``as_of`` takes
+    epoch seconds) raises the store's own ``TypeError``."""
+    import datetime as dt
+
+    from sample_deepbook_margin_dune_dbt_spark.engine.model import ModelContext
+
+    cls = TableStore if kind == "plain" else VersionedTableStore
+    st = cls(spark, str(tmp_path / kind))
+    st.write_full(_df(spark, [(1, "a", "d1")]), "up")
+
+    class _M:
+        name = "down"
+        deps = ["up"]
+
+    ctx = ModelContext(spark, st, {}, _M())
+    when = dt.datetime(2026, 1, 1)
+    if kind == "plain":
+        with pytest.raises(ValueError, match="--versioned"):
+            ctx.ref("up", as_of=when)
+    else:
+        with pytest.raises(TypeError):
+            ctx.ref("up", as_of=when)
+
+
 def test_cli_show_as_of(spark, tmp_path, capsys):
     """CLI drive of the warehouse-wide TIMESTAMP AS OF: `show --versioned
     --as-of <ts>` runs the SQL against every table's snapshot at that
