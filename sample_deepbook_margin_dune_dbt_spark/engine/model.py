@@ -13,8 +13,12 @@ Maps the reference's control-plane operators (SURVEY §2.9) onto plain Python:
   target table exists and we're not in full-refresh)
 - ``ctx.this()``         ≈ ``{{ this }}``                 (C4 — the model's
   own previous materialization)
+- ``ctx.watermark(col)`` ≈ ``select max(col) from {{ this }}`` (P4/A2/P6 —
+  the one high-water-mark probe every incremental model reads; ``None`` on
+  a full build or an empty target)
 - ``ctx.now()``          ≈ ``now()``                      (F9 — injectable
-  fixed clock so tests and golden hashes are deterministic)
+  fixed clock so tests and golden hashes are deterministic; a naive
+  ``fixed_now`` is UTC, the session time zone ``get_spark`` pins)
 
 Each config dataclass (``ModelConfig``, ``ExposureConfig``, and
 ``engine.unittests.UnitTestConfig``) is the only place its fields and
@@ -392,25 +396,36 @@ class ModelContext:
     def now(self) -> F.Column:
         """``now()`` as a Column; fixed for deterministic tests (F9 caveat)."""
         if self.fixed_now is not None:
-            return F.lit(self.fixed_now).cast("timestamp")
+            return F.lit(self.now_dt()).cast("timestamp")
         return F.current_timestamp()
 
     def now_dt(self) -> datetime:
-        return self.fixed_now or datetime.now(timezone.utc)
+        """The run's clock, aware UTC: a naive ``fixed_now`` is read as UTC
+        whatever the host's local time zone."""
+        now = self.fixed_now or datetime.now(timezone.utc)
+        return now if now.tzinfo else now.replace(tzinfo=timezone.utc)
 
     # ------------------------------------------------- incremental predicates
 
-    def watermark_ms(self, column: str = "timestamp_ms") -> int:
-        """``select coalesce(max(col), 0) from {{ this }}`` (SURVEY §2.2 P4/A2).
+    def watermark(self, column: str):
+        """``select max(col) from {{ this }}`` (SURVEY §2.2 P4/A2/P6): the
+        high-water mark of the model's own previous materialization.
 
-        A scalar aggregate over the target that scans the whole column:
+        ``None`` on a non-incremental run or when the target holds no
+        non-null value, so a builder filters its input only when there is
+        a mark. The aggregate scans the whole column:
         ``spark.read.parquet`` is a V1 source and Spark pushes aggregates
-        down only into V2 sources, so the parquet footer min/max go unused.
-        Recording per-table statistics in the commit manifest is the
-        planned fix (ROADMAP item 3).
+        down only into V2 sources, so the parquet footer min/max go
+        unused. Recording per-table statistics in the commit manifest is
+        the planned fix (ROADMAP item 3).
         """
-        row = self.this().agg(F.max(F.col(column)).alias("wm")).first()
-        return int(row["wm"]) if row["wm"] is not None else 0
+        if not self.is_incremental():
+            return None
+        return self.this().agg(F.max(F.col(column)).alias("wm")).first()["wm"]
+
+    def watermark_ms(self, column: str = "timestamp_ms") -> int:
+        """``select coalesce(max(col), 0) from {{ this }}`` (SURVEY §2.2 P4/A2)."""
+        return int(self.watermark(column) or 0)
 
     def backfill_floor_ms(self) -> int:
         """First-run bound: ``to_unixtime(now() - interval '30' day) * 1000``
@@ -419,13 +434,10 @@ class ModelContext:
 
     def lookback_floor_date(self, date_column: str = "snapshot_date"):
         """``select date_add('day', -7, max(snapshot_date)) from {{ this }}``
-        (SURVEY §2.2 P6). Returns a python date or None when target is empty."""
-        row = (
-            self.this()
-            .agg(F.date_sub(F.max(F.col(date_column)), self.lookback_days).alias("floor"))
-            .first()
-        )
-        return row["floor"]
+        (SURVEY §2.2 P6). A python date, or None on a full build or an
+        empty target."""
+        wm = self.watermark(date_column)
+        return None if wm is None else wm - timedelta(days=self.lookback_days)
 
     def lag_input_floor_date(self, floor_date):
         """The widened input bound for lag()-bearing incremental models:

@@ -9,7 +9,7 @@ from __future__ import annotations
 import heapq
 import time
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
-from datetime import datetime
+from datetime import datetime, timezone
 from graphlib import TopologicalSorter
 from typing import Callable, Optional
 
@@ -355,15 +355,14 @@ class Runner:
         V1 source and Spark pushes aggregates down only into V2 sources
         (same cost as the incremental watermark; ROADMAP item 3 plans
         manifest statistics as the fix). The clock is the
-        runner's injectable ``fixed_now`` so tests are deterministic.
+        context's UTC ``now_dt()`` (the runner's injectable ``fixed_now``
+        when set, so tests are deterministic).
         """
-        from datetime import datetime as _dt
-
         from pyspark.sql import functions as F
 
         probe_cfg = ModelConfig(name="_freshness_probe", builder=lambda ctx: None)
         ctx = self._context(probe_cfg)
-        now = self.fixed_now or _dt.utcnow()  # naive UTC, matching session tz
+        now = ctx.now_dt()
         out: dict[str, dict] = {}
         for key, cfg in freshness.items():
             db, table = key.split(".", 1)
@@ -372,10 +371,11 @@ class Runner:
             if mx is None:
                 out[key] = {"max_loaded_at": None, "age_s": None, "status": "error"}
                 continue
-            if not isinstance(mx, _dt):  # DATE column → midnight datetime
-                import datetime as _dtm
-
-                mx = _dt.combine(mx, _dtm.time.min)
+            if isinstance(mx, datetime):
+                # PySpark collects a TIMESTAMP as a naive host-local datetime
+                mx = mx.astimezone(timezone.utc)
+            else:  # DATE column → midnight of that (session-UTC) day
+                mx = datetime.combine(mx, datetime.min.time(), tzinfo=timezone.utc)
             age = (now - mx).total_seconds()
             if age > cfg["error_after_s"]:
                 status = "error"
@@ -384,7 +384,7 @@ class Runner:
             else:
                 status = "pass"
             out[key] = {
-                "max_loaded_at": mx.isoformat(),
+                "max_loaded_at": mx.replace(tzinfo=None).isoformat(),
                 "age_s": round(age, 3),
                 "status": status,
             }

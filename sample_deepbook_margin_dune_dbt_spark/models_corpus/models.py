@@ -24,9 +24,8 @@ def stg_document_features(ctx: ModelContext) -> DataFrame:
     the watermark column — same P4 pattern, different column.)
     """
     docs = ctx.source("main", "documents")
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("doc_id").alias("wm")).first()
-        wm = row["wm"] if row["wm"] is not None else -1
+    wm = ctx.watermark("doc_id")
+    if wm is not None:
         docs = docs.filter(F.col("doc_id") > wm)
     return docs.select(
         "doc_id",
@@ -115,9 +114,8 @@ def corpus_scrubbed_documents(ctx: ModelContext) -> DataFrame:
     from ..functions import pii as P
 
     feats = ctx.ref("stg_document_features").select("doc_id", "quality")
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("doc_id").alias("wm")).first()
-        wm = row["wm"] if row["wm"] is not None else -1
+    wm = ctx.watermark("doc_id")
+    if wm is not None:
         feats = feats.filter(F.col("doc_id") > wm)
     keep = ctx.ref("corpus_dedup_groups").select(
         F.col("keep_doc_id").alias("doc_id")
@@ -164,9 +162,8 @@ def corpus_training_chunks(ctx: ModelContext) -> DataFrame:
     from ..operators.sampling import train_val_test_split
 
     docs = ctx.ref("corpus_scrubbed_documents").select("doc_id", "text_scrubbed")
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("doc_id").alias("wm")).first()
-        wm = row["wm"] if row["wm"] is not None else -1
+    wm = ctx.watermark("doc_id")
+    if wm is not None:
         docs = docs.filter(F.col("doc_id") > wm)
     chunks = chunk_documents(
         docs.withColumnRenamed("text_scrubbed", "text"),
@@ -247,9 +244,8 @@ def corpus_fingerprint_index(ctx: ModelContext) -> DataFrame:
     from ..operators.dedup import minhash_band_rows
 
     docs = ctx.source("main", "documents")
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("doc_id").alias("wm")).first()
-        wm = row["wm"] if row["wm"] is not None else -1
+    wm = ctx.watermark("doc_id")
+    if wm is not None:
         docs = docs.filter(F.col("doc_id") > wm)
     bands = minhash_band_rows(docs, "doc_id", "text")
     fp = docs.select("doc_id", T.fingerprint64(F.col("text")).alias("fingerprint"))
@@ -287,11 +283,8 @@ def corpus_neardup_pairs(ctx: ModelContext) -> DataFrame:
     model's upstream, no re-shingling).
     """
     idx = ctx.ref("corpus_fingerprint_index")
-    wm = -1
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("id_b").alias("wm")).first()
-        wm = row["wm"] if row["wm"] is not None else -1
-    new = idx.filter(F.col("doc_id") > wm)
+    wm = ctx.watermark("id_b")
+    new = idx if wm is None else idx.filter(F.col("doc_id") > wm)
     joined = (
         new.alias("n")
         .join(
@@ -351,11 +344,8 @@ def corpus_neardup_clusters_inc(ctx: ModelContext) -> DataFrame:
     from ..operators.dedup import incremental_cluster_fold
 
     pairs = ctx.ref("corpus_neardup_pairs")
-    wm = -1
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("doc_id").alias("wm")).first()
-        wm = row["wm"] if row["wm"] is not None else -1
-    new_pairs = pairs.filter(F.col("id_b") > wm)
+    wm = ctx.watermark("doc_id")
+    new_pairs = pairs if wm is None else pairs.filter(F.col("id_b") > wm)
     new_docs = new_pairs.filter(F.col("id_a") == F.col("id_b")).select(
         F.col("id_a").alias("doc_id")
     )
@@ -477,9 +467,8 @@ def corpus_embedding_index(ctx: ModelContext) -> DataFrame:
     from ..operators.quantize import int8_quantize, int8_scale
 
     emb = ctx.source("main", "embeddings")
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("vec_id").alias("wm")).first()
-        wm = row["wm"] if row["wm"] is not None else -1
+    wm = ctx.watermark("vec_id")
+    if wm is not None:
         emb = emb.filter(F.col("vec_id") > wm)
     centers = sorted(
         ctx.ref("corpus_index_centroids").collect(), key=lambda r: r["cell"]
@@ -605,9 +594,8 @@ def corpus_tokenized_documents(ctx: ModelContext) -> DataFrame:
 
     rules = ctx.ref("corpus_bpe_rules").orderBy("rank").collect()
     docs = ctx.source("main", "documents")
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("doc_id").alias("wm")).first()
-        wm = row["wm"] if row["wm"] is not None else -1
+    wm = ctx.watermark("doc_id")
+    if wm is not None:
         docs = docs.filter(F.col("doc_id") > wm)
     enc = B.bpe_encode(docs, "text", rules)
     return enc.select(
@@ -659,9 +647,8 @@ def corpus_lm_scores(ctx: ModelContext) -> DataFrame:
     from ..operators.ngram_lm import bigram_lm_score
 
     docs = ctx.source("main", "documents")
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("doc_id").alias("wm")).first()
-        wm = row["wm"] if row["wm"] is not None else -1
+    wm = ctx.watermark("doc_id")
+    if wm is not None:
         docs = docs.filter(F.col("doc_id") > wm)
     stats = ctx.ref("corpus_bigram_stats")
     scored = bigram_lm_score(docs, "doc_id", "text", stats)
@@ -753,9 +740,9 @@ def corpus_decontaminated_documents(ctx: ModelContext) -> DataFrame:
     if ctx.is_incremental():
         prev = ctx.this().select("benchmark_fp").first()
         if prev is not None and prev["benchmark_fp"] == bench_fp:
-            wm_row = ctx.this().agg(F.max("doc_id").alias("wm")).first()
-            wm = wm_row["wm"] if wm_row["wm"] is not None else -1
-            docs = docs.filter(F.col("doc_id") > wm)
+            wm = ctx.watermark("doc_id")
+            if wm is not None:
+                docs = docs.filter(F.col("doc_id") > wm)
         # else: benchmark content changed → re-scrub everything (the
         # MERGE on doc_id upserts every row under the new fingerprint)
 
@@ -897,10 +884,9 @@ def corpus_training_shards(ctx: ModelContext) -> DataFrame:
     n_shards = int(ctx.var("n_shards", 8))
     docs = ctx.source("main", "documents")
     incremental = ctx.is_incremental()
-    if incremental:
-        row = ctx.this().agg(F.max("max_doc_id").alias("wm")).first()
-        if row["wm"] is not None:
-            docs = docs.filter(F.col("doc_id") > F.lit(row["wm"]))
+    wm = ctx.watermark("max_doc_id")
+    if wm is not None:
+        docs = docs.filter(F.col("doc_id") > F.lit(wm))
 
     assigned = assign_shards(docs, "doc_id", n_shards)
     delta = shard_manifest(assigned, "shard_id").join(
@@ -1032,9 +1018,8 @@ def corpus_fp_bucketed(ctx: ModelContext) -> DataFrame:
     from ..operators.dedup import shingles_vectorized
 
     docs = ctx.source("main", "documents")
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("doc_id").alias("wm")).first()
-        wm = row["wm"] if row["wm"] is not None else -1
+    wm = ctx.watermark("doc_id")
+    if wm is not None:
         docs = docs.filter(F.col("doc_id") > wm)
     return docs.select(
         "doc_id",
@@ -1186,23 +1171,21 @@ def corpus_media_signature_index(ctx: ModelContext) -> DataFrame:
 
     arity = int(ctx.var("media_band_arity", 1))
     media = ctx.source("main", "media")
-    if ctx.is_incremental():
-        row = ctx.this().agg(
-            F.max("media_id").alias("wm"), F.max("band").alias("mb")
-        ).first()
-        wm = row["wm"] if row["wm"] is not None else -1
-        # arity-corruption guard: every signature emits ALL C(bands,
-        # arity) band combinations, so a non-empty index's max band id
-        # reveals the arity it was built at; merging rows banded at a
-        # DIFFERENT arity would silently miss cross-arity candidates
-        if row["mb"] is not None and row["mb"] != comb(MEDIA_BANDS, arity) - 1:
-            raise ValueError(
-                "corpus_media_signature_index was built at a different "
-                f"media_band_arity (stored max band {row['mb']}, arity "
-                f"{arity} implies {comb(MEDIA_BANDS, arity) - 1}); an "
-                "arity change requires --full-refresh of the index and "
-                "its dependents"
-            )
+    # arity-corruption guard: every signature emits ALL C(bands, arity)
+    # band combinations, so a non-empty index's max band id reveals the
+    # arity it was built at; merging rows banded at a DIFFERENT arity
+    # would silently miss cross-arity candidates
+    max_band = ctx.watermark("band")
+    if max_band is not None and max_band != comb(MEDIA_BANDS, arity) - 1:
+        raise ValueError(
+            "corpus_media_signature_index was built at a different "
+            f"media_band_arity (stored max band {max_band}, arity "
+            f"{arity} implies {comb(MEDIA_BANDS, arity) - 1}); an "
+            "arity change requires --full-refresh of the index and "
+            "its dependents"
+        )
+    wm = ctx.watermark("media_id")
+    if wm is not None:
         media = media.filter(F.col("media_id") > wm)
     return media_index_rows(
         _media_signatures(media), MEDIA_BANDS, arity
@@ -1240,11 +1223,8 @@ def corpus_media_neardup_pairs(ctx: ModelContext) -> DataFrame:
     from ..operators.multimodal import media_neardup_pairs_from_index
 
     idx = ctx.ref("corpus_media_signature_index")
-    wm = -1
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("id_b").alias("wm")).first()
-        wm = row["wm"] if row["wm"] is not None else -1
-    new = idx.filter(F.col("media_id") > wm)
+    wm = ctx.watermark("id_b")
+    new = idx if wm is None else idx.filter(F.col("media_id") > wm)
     pairs = media_neardup_pairs_from_index(new, idx, MEDIA_MAX_HAMMING)
     markers = new.select(
         F.col("media_id").alias("id_a"),
@@ -1273,11 +1253,10 @@ def corpus_media_neardup_clusters_inc(ctx: ModelContext) -> DataFrame:
     from ..operators.dedup import incremental_cluster_fold
 
     pairs = ctx.ref("corpus_media_neardup_pairs")
-    wm = -1
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("media_id").alias("wm")).first()
-        wm = row["wm"] if row["wm"] is not None else -1
-    new_pairs = pairs.filter(F.col("id_b") > wm).select("id_a", "id_b")
+    wm = ctx.watermark("media_id")
+    if wm is not None:
+        pairs = pairs.filter(F.col("id_b") > wm)
+    new_pairs = pairs.select("id_a", "id_b")
     new_docs = new_pairs.filter(F.col("id_a") == F.col("id_b")).select(
         F.col("id_a").alias("doc_id")
     )

@@ -78,7 +78,7 @@ def _volume_agg(
     not_null=["snapshot_date", "margin_pool_id"],
 )
 def fct_deepbook_margin_pool_daily(ctx: ModelContext) -> DataFrame:
-    floor_date = ctx.lookback_floor_date("snapshot_date") if ctx.is_incremental() else None
+    floor_date = ctx.lookback_floor_date("snapshot_date")
     # inputs read from the (possibly widened) lag-seed floor; output rows
     # below the true floor are trimmed at the end
     input_floor = ctx.lag_input_floor_date(floor_date)

@@ -20,8 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..engine.model import ModelContext, model
-from ..functions.json import json_extract_scalar
-from .common import PACKAGE
+from .common import PACKAGE, decode_json_fields, slice_floor_ms
 
 # (model name, event type suffix, [(out_col, json_path, cast_type | None)])
 # Field maps mirror the reference SELECT lists:
@@ -94,27 +93,16 @@ def _build_event_model(ctx: ModelContext, type_suffix: str, fields) -> DataFrame
     raw = ctx.source("sui", "events").filter(
         F.col("event_type") == f"{PACKAGE}::{type_suffix}"
     )
-    if ctx.is_incremental():
-        # watermark: timestamp_ms >= coalesce(max(timestamp_ms), 0) from this
-        raw = raw.filter(F.col("timestamp_ms") >= F.lit(ctx.watermark_ms()))
-    else:
-        # initial backfill bound: last 30 days
-        raw = raw.filter(F.col("timestamp_ms") >= F.lit(ctx.backfill_floor_ms()))
-
-    cols = [
+    raw = raw.filter(F.col("timestamp_ms") >= F.lit(slice_floor_ms(ctx)))
+    return raw.select(
         F.col("transaction_digest"),
         F.col("event_index"),
         F.col("timestamp_ms"),
         F.col("sender"),
         F.col("event_type"),
-    ]
-    for out_col, path, cast_t in fields:
-        c = json_extract_scalar(F.col("event_json"), path)
-        if cast_t:
-            c = c.try_cast(cast_t)
-        cols.append(c.alias(out_col))
-    cols.append(ctx.now().alias("updated_at"))
-    return raw.select(*cols)
+        *decode_json_fields("event_json", fields),
+        ctx.now().alias("updated_at"),
+    )
 
 
 def _register(name: str, type_suffix: str, fields) -> None:

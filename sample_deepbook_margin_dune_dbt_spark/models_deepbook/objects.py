@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..engine.model import ModelContext, model
-from ..functions.json import json_extract, json_extract_scalar
-from .common import PACKAGE
+from ..functions.json import json_extract
+from .common import PACKAGE, decode_json_fields, slice_floor_ms
 
 # (output column, json path, cast type | None) — reference :48-92
 _JSON_FIELDS: list[tuple[str, str, str | None]] = [
@@ -107,31 +107,20 @@ def stg_deepbook_margin_pool_object(ctx: ModelContext) -> DataFrame:
     raw = ctx.source("sui", "objects").filter(
         F.col("type_").like(f"{PACKAGE}::margin_pool::MarginPool<%")
     )
-    if ctx.is_incremental():
-        raw = raw.filter(F.col("timestamp_ms") >= F.lit(ctx.watermark_ms()))
-    else:
-        raw = raw.filter(F.col("timestamp_ms") >= F.lit(ctx.backfill_floor_ms()))
-
-    cols = [
+    raw = raw.filter(F.col("timestamp_ms") >= F.lit(slice_floor_ms(ctx)))
+    m = raw.select(
         F.col("object_id").cast("string").alias("object_id"),
         F.col("version"),
         F.col("type_").alias("type"),
         F.col("object_status"),
         F.col("timestamp_ms"),
         F.regexp_extract(F.col("type_"), "<(.+)>$", 1).alias("asset_type"),
-    ]
-    for out_col, path, cast_t in _JSON_FIELDS:
-        c = json_extract_scalar(F.col("object_json"), path)
-        if cast_t:
-            c = c.try_cast(cast_t)
-        cols.append(c.alias(out_col))
-    # JSON array kept serialized (F2/F3; reference :92)
-    cols.append(
+        *decode_json_fields("object_json", _JSON_FIELDS),
+        # JSON array kept serialized (F2/F3; reference :92)
         json_extract(F.col("object_json"), "$.allowed_deepbook_pools.contents").alias(
             "allowed_deepbook_pools_json"
-        )
+        ),
     )
-    m = raw.select(*cols)
 
     # J4: CASE-normalized join key precomputed, then broadcast equi-join
     # (reference :202-209). 5-row dim → broadcast hash join, zero shuffle.

@@ -32,10 +32,9 @@ def events_user_reach_daily(ctx: ModelContext) -> DataFrame:
     """
     ev = normalize_event_ts(ctx.source("main", "events"))
     daily = ev.select(F.to_date("ts").alias("d"), "user_id")
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("d").alias("wm")).first()
-        if row["wm"] is not None:
-            daily = daily.filter(F.col("d") >= F.lit(row["wm"]))
+    wm = ctx.watermark("d")
+    if wm is not None:
+        daily = daily.filter(F.col("d") >= F.lit(wm))
     return daily.groupBy("d").agg(
         F.hll_sketch_agg(F.col("user_id"), F.lit(14)).alias("user_sketch"),
         F.count_distinct("user_id").cast("long").alias("n_exact"),
@@ -69,10 +68,9 @@ def events_user_first_seen(ctx: ModelContext) -> DataFrame:
     ev = normalize_event_ts(ctx.source("main", "events"))
     act = ev.select("user_id", F.to_date("ts").alias("d"))
     incremental = ctx.is_incremental()
-    if incremental:
-        row = ctx.this().agg(F.max("last_seen").alias("wm")).first()
-        if row["wm"] is not None:
-            act = act.filter(F.col("d") >= F.lit(row["wm"]))
+    wm = ctx.watermark("last_seen")
+    if wm is not None:
+        act = act.filter(F.col("d") >= F.lit(wm))
     mins = act.groupBy("user_id").agg(
         F.min("d").alias("first_date"), F.max("d").alias("last_seen")
     )
@@ -123,10 +121,9 @@ def events_retention_daily(ctx: ModelContext) -> DataFrame:
     first = ctx.ref("events_user_first_seen").select(
         "user_id", F.col("first_date").alias("cohort_date")
     )
-    if ctx.is_incremental():
-        row = ctx.this().agg(F.max("activity_date").alias("wm")).first()
-        if row["wm"] is not None:
-            ud = ud.filter(F.col("d") >= F.lit(row["wm"]))
+    wm = ctx.watermark("activity_date")
+    if wm is not None:
+        ud = ud.filter(F.col("d") >= F.lit(wm))
     sizes = first.groupBy("cohort_date").agg(
         F.count(F.lit(1)).cast("long").alias("cohort_size")
     )

@@ -1069,3 +1069,45 @@ def test_deep_fuzz_env_parse(monkeypatch, val, deep):
     else:
         monkeypatch.setenv("SPARK_GRAFT_DEEP_FUZZ", val)
     assert fuzz_examples(8, 4) == (8 if deep else 4)
+
+
+def test_engine_clock_is_utc_on_every_host(spark, tmp_path, monkeypatch):
+    """A naive ``fixed_now`` is UTC (the session time zone ``get_spark``
+    pins), not the host's local time: the backfill floor, the stored
+    ``now()`` epoch and a source-freshness age are the same under
+    ``TZ=Asia/Tokyo`` as under UTC."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sample_deepbook_margin_dune_dbt_spark.engine.model import ModelConfig, ModelContext
+
+    src = tmp_path / "loaded.parquet"
+    pq.write_table(
+        pa.table({"ts": pa.array([dt.datetime(2026, 1, 31, 12)], pa.timestamp("us", tz="UTC"))}),
+        str(src),
+    )
+    store = TableStore(spark, str(tmp_path / "wh"))
+    cfg = ModelConfig(name="clock_probe", builder=lambda ctx: None)
+
+    def observe():
+        ctx = ModelContext(spark, store, {}, cfg, fixed_now=FIXED_NOW)
+        epoch = spark.range(1).select(ctx.now().cast("long").alias("e")).first()["e"]
+        fresh = Runner(spark, store, {"main.loaded": str(src)}, fixed_now=FIXED_NOW).source_freshness(
+            {"main.loaded": {"loaded_at_field": "ts", "warn_after_s": 3600, "error_after_s": 86400}}
+        )["main.loaded"]
+        return ctx.backfill_floor_ms(), epoch, fresh["age_s"], fresh["max_loaded_at"]
+
+    utc_now_s = int(FIXED_NOW.replace(tzinfo=dt.timezone.utc).timestamp())
+    expected = (utc_now_s * 1000 - 30 * 86400_000, utc_now_s, 43200.0, "2026-01-31T12:00:00")
+    monkeypatch.setenv("TZ", "UTC")
+    time.tzset()
+    try:
+        assert observe() == expected
+        monkeypatch.setenv("TZ", "Asia/Tokyo")
+        time.tzset()
+        assert observe() == expected
+    finally:
+        monkeypatch.undo()
+        time.tzset()
