@@ -50,7 +50,7 @@ def snapshot_scd2(
     """Fold the source's current state into the ``name`` history table.
 
     ``now`` stamps ``valid_from``/``valid_to`` for this run (injectable
-    for determinism, like the engine's ``fixed_now``).
+    for determinism, like the engine's ``fixed_now``; naive means UTC).
     """
     if strategy not in ("check", "timestamp"):
         raise ValueError(f"strategy={strategy!r}; expected 'check' or 'timestamp'")
@@ -58,9 +58,10 @@ def snapshot_scd2(
         raise ValueError("strategy='check' requires check_cols")
     if strategy == "timestamp" and not updated_at:
         raise ValueError("strategy='timestamp' requires updated_at")
-    ts = F.lit(now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)).cast(
-        "timestamp"
-    )
+    # a naive ``now`` is UTC (as in ``ModelContext.now_dt``): PySpark reads
+    # a naive literal in the host's local zone
+    now = now or dt.datetime.now(dt.timezone.utc)
+    ts = F.lit(now if now.tzinfo else now.replace(tzinfo=dt.timezone.utc)).cast("timestamp")
 
     if not store.exists(name):
         store.write_full(

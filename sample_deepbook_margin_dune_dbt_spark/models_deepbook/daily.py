@@ -3,13 +3,12 @@
 Reference: ``models/deepbook_margin/daily/fct_deepbook_margin_pool_daily.sql``.
 Grain: one row per (margin_pool_id, snapshot_date). Semantics reproduced:
 
-- 4 per-(day, pool) grouped SUM volume aggregates over the event models
-  (A1, ``:27-76``), each restricted to the 7-day lookback on incremental
-  runs (P6, ``:34,47,60,73``)
-- FULL OUTER join chain aligning the 4 aggregates with COALESCE-cascaded
-  keys and zero-filled measures (J1, ``:78-90``) — expressed as Spark
-  named-column full outer joins, which coalesce the join keys natively;
-  measures still get ``coalesce(x, 0)``
+- 4 per-(day, pool) grouped SUM volume aggregates (A1, ``:27-76``) aligned
+  by a zero-filled FULL OUTER join chain (J1, ``:78-90``), each restricted
+  to the 7-day lookback on incremental runs (P6, ``:34,47,60,73``) — built
+  as ONE ``groupBy`` over the kind-tagged union of the event refs with
+  ``sum(when(kind = …, amount))``; a kind with no rows sums to NULL, which
+  the volumes join's ``coalesce(x, 0)`` zero-fills as the FOJ's did
 - ``row_number()`` dedup to the latest object state per (pool, day)
   (W1, ``:92-119``) and the latest price per (day, symbol) (W2, ``:122-135``)
 - LEFT joins base→volumes (J2, ``:203-205``) and base→prices on
@@ -25,12 +24,11 @@ Grain: one row per (margin_pool_id, snapshot_date). Semantics reproduced:
   the floor purely to seed the lag, and the margin rows are trimmed
   before MERGE — incremental deltas then equal full-refresh deltas for
   pools whose snapshot gaps are ≤ N days.
-- final presentation sort (O1, ``:210``)
+- final sort (O1, ``:210``), which also writes each day as one file
 
-Scale notes: each volume agg is a partial-aggregated (map-side combine)
-hash aggregate shuffled on (date, pool); the FOJ chain and the
-volumes-join then reuse that same key, and the pools×days cardinality is
-tiny relative to events. The price dim after dedup is days×symbols —
+Scale notes: the volumes are one partial-aggregated (map-side combine)
+hash aggregate shuffled once on (date, pool); the pools×days cardinality
+is tiny relative to events. The price dim after dedup is days×symbols —
 broadcast. The W1 dedup shuffles the staging table on (pool, day) — the
 dominant shuffle, proportional to object mutations in the lookback window,
 not table history, thanks to the P6 filter reaching the parquet scan.
@@ -48,16 +46,24 @@ from ..engine.model import ModelContext, model
 _STABLE = ("USDC", "USDT", "AUSD")
 
 
-def _volume_agg(
-    ctx: ModelContext, ref_name: str, amount_col: str, out_col: str, floor_date
-) -> DataFrame:
-    ev = ctx.ref(ref_name)
+def _daily_volumes(ctx: ModelContext, floor_date) -> DataFrame:
+    """A1 + J1: the four volumes as one aggregate over a kind-tagged union."""
     day = F.to_date(F.timestamp_seconds(F.col("timestamp_ms") / F.lit(1000)))
-    ev = ev.select(day.alias("snapshot_date"), "margin_pool_id", amount_col)
+    kinds = {  # volume column -> (event model, amount column); reference :27-76
+        "supply_volume": ("deepbook_margin_pool_asset_supplied", "supply_amount"),
+        "withdraw_volume": ("deepbook_margin_pool_asset_withdrawn", "withdraw_amount"),
+        "borrow_volume": ("deepbook_margin_loan_borrowed", "loan_amount"),
+        "repay_volume": ("deepbook_margin_loan_repaid", "repay_amount"),
+    }
+    events = functools.reduce(DataFrame.union, [
+        ctx.ref(ref).select(day.alias("snapshot_date"), "margin_pool_id",
+                            F.lit(kind).alias("kind"), F.col(amount).alias("amount"))
+        for kind, (ref, amount) in kinds.items()
+    ])
     if floor_date is not None:
-        ev = ev.filter(F.col("snapshot_date") >= F.lit(floor_date))
-    return ev.groupBy("snapshot_date", "margin_pool_id").agg(
-        F.sum(amount_col).alias(out_col)
+        events = events.filter(F.col("snapshot_date") >= F.lit(floor_date))
+    return events.groupBy("snapshot_date", "margin_pool_id").agg(
+        *[F.sum(F.when(F.col("kind") == kind, F.col("amount"))).alias(kind) for kind in kinds]
     )
 
 
@@ -82,27 +88,6 @@ def fct_deepbook_margin_pool_daily(ctx: ModelContext) -> DataFrame:
     # inputs read from the (possibly widened) lag-seed floor; output rows
     # below the true floor are trimmed at the end
     input_floor = ctx.lag_input_floor_date(floor_date)
-
-    # --- 4 volume aggregates (A1) + FOJ chain (J1) -------------------------
-    vols = [
-        _volume_agg(ctx, "deepbook_margin_pool_asset_supplied", "supply_amount", "supply_volume", input_floor),
-        _volume_agg(ctx, "deepbook_margin_pool_asset_withdrawn", "withdraw_amount", "withdraw_volume", input_floor),
-        _volume_agg(ctx, "deepbook_margin_loan_borrowed", "loan_amount", "borrow_volume", input_floor),
-        _volume_agg(ctx, "deepbook_margin_loan_repaid", "repay_amount", "repay_volume", input_floor),
-    ]
-    # Spark's named-column full outer join coalesces the keys, replacing the
-    # reference's manual COALESCE cascade (:80-90)
-    daily_volume_agg = functools.reduce(
-        lambda l, r: l.join(r, on=["snapshot_date", "margin_pool_id"], how="full_outer"),
-        vols,
-    ).select(
-        "snapshot_date",
-        "margin_pool_id",
-        F.coalesce("supply_volume", F.lit(0.0)).alias("supply_volume"),
-        F.coalesce("withdraw_volume", F.lit(0.0)).alias("withdraw_volume"),
-        F.coalesce("borrow_volume", F.lit(0.0)).alias("borrow_volume"),
-        F.coalesce("repay_volume", F.lit(0.0)).alias("repay_volume"),
-    )
 
     # --- latest pool object state per (pool, day) (W1) ---------------------
     stg = ctx.ref("stg_deepbook_margin_pool_object").select(
@@ -148,7 +133,7 @@ def fct_deepbook_margin_pool_daily(ctx: ModelContext) -> DataFrame:
 
     # --- final join + measures (J2/J3/P10/F15/F16/W3) ----------------------
     p = pool_daily_base.alias("p")
-    v = daily_volume_agg.alias("v")
+    v = _daily_volumes(ctx, input_floor).alias("v")
     joined = p.join(v, on=["snapshot_date", "margin_pool_id"], how="left").join(
         F.broadcast(daily_prices),
         (F.col("price_date") == F.col("snapshot_date"))
@@ -202,4 +187,5 @@ def fct_deepbook_margin_pool_daily(ctx: ModelContext) -> DataFrame:
     # drop the lag-seed margin (no-op unless lag_widen_days > 0): those days
     # are already correct in the target and were read only to feed lag()
     out = ctx.trim_to_floor(out, floor_date, "snapshot_date")
+    # not cosmetic: the range sort keeps each snapshot_date in one file
     return out.orderBy(F.desc("snapshot_date"), F.desc_nulls_last("total_supply_normalized"))

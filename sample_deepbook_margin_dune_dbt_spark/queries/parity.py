@@ -397,8 +397,8 @@ def q_w3_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     #8): ``dod_change`` is the full-refresh truth; ``inc_dod_change``
     recomputes the same lag over ONLY a 7-day incremental slice widened
     one day below its floor (the engine knob's widen-then-trim mechanics,
-    ``engine/runner.py:36`` / ``models_deepbook/daily.py:202-204``
-    declared as a query); ``deltas_agree`` exposes incremental ≡
+    ``Runner(lag_widen_days=…)`` / ``ModelContext.lag_input_floor_date``
+    and ``trim_to_floor``, declared as a query); ``deltas_agree`` exposes incremental ≡
     full-refresh per row, so the hash match certifies the mechanism, not
     just the window function."""
     daily = (

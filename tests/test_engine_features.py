@@ -1111,3 +1111,33 @@ def test_engine_clock_is_utc_on_every_host(spark, tmp_path, monkeypatch):
     finally:
         monkeypatch.undo()
         time.tzset()
+
+
+def test_snapshot_clock_is_utc_on_every_host(spark, tmp_path, monkeypatch):
+    """A naive snapshot ``now`` is UTC too: ``valid_from``/``valid_to``
+    hold the same epoch under ``TZ=Asia/Tokyo`` as under UTC."""
+    import time
+
+    from sample_deepbook_margin_dune_dbt_spark.engine import snapshot_scd2
+
+    def observe(tz):
+        monkeypatch.setenv("TZ", tz)
+        time.tzset()
+        store = TableStore(spark, str(tmp_path / tz.replace("/", "_")))
+        for i, status in enumerate(["open", "closed"]):
+            src = spark.createDataFrame([(1, status)], "id long, status string")
+            snapshot_scd2(store, src, "snap", ["id"], check_cols=["status"],
+                          now=FIXED_NOW + dt.timedelta(days=i))
+        epochs = store.read("snap").select(
+            F.col("valid_from").cast("long"), F.col("valid_to").cast("long")
+        )
+        return sorted(tuple(r) for r in epochs.collect())
+
+    utc_now_s = int(FIXED_NOW.replace(tzinfo=dt.timezone.utc).timestamp())
+    expected = [(utc_now_s, utc_now_s + 86400), (utc_now_s + 86400, None)]
+    try:
+        assert observe("UTC") == expected
+        assert observe("Asia/Tokyo") == expected
+    finally:
+        monkeypatch.undo()
+        time.tzset()

@@ -119,6 +119,33 @@ def test_incremental_models_no_shuffle(spark, tmp_path):
     assert a["has_pushed_filters"], "event_type + watermark filters must push down"
 
 
+def test_daily_fact_volumes_are_one_aggregate(no_aqe, tmp_path):
+    """The fact's four daily volumes come from one aggregate over a union
+    of the event refs, full and incremental: no full outer join, and one
+    partial + final HashAggregate pair (the four-aggregate FOJ chain
+    planned 8 HashAggregates and 3 FullOuter joins)."""
+    import datetime as dt
+
+    from sample_deepbook_margin_dune_dbt_spark.engine import Runner, TableStore
+    from sample_deepbook_margin_dune_dbt_spark.engine.model import get_model
+    import sample_deepbook_margin_dune_dbt_spark.models_deepbook  # noqa: F401
+    from tests.fixtures import write_fixtures
+
+    runner = Runner(
+        no_aqe, TableStore(no_aqe, str(tmp_path / "wh")),
+        write_fixtures(str(tmp_path / "src")), fixed_now=dt.datetime(2026, 2, 1),
+    )
+    runner.run("+fct_deepbook_margin_pool_daily")
+    cfg = get_model("fct_deepbook_margin_pool_daily")
+    for full_refresh in (True, False):
+        ctx = runner._context(cfg, full_refresh)
+        assert ctx.is_incremental() is not full_refresh
+        plan = explain_str(cfg.builder(ctx), "simple")
+        assert plan.count("FullOuter") == 0
+        aggs = [l for l in plan.splitlines() if "HashAggregate" in l]
+        assert len(aggs) == 2 and sum("partial_sum" in l for l in aggs) == 1, aggs
+
+
 def test_ivf_pq_scoring_joins_are_equijoins(spark, sf_dir):
     """IVF-PQ candidate scoring must flow through cell-id equi-joins (probe
     expansion is a UDF + explode, not a centroid cross join) and the refine

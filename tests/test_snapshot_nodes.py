@@ -18,6 +18,18 @@ T0 = dt.datetime(2026, 1, 1)
 T1 = dt.datetime(2026, 1, 2)
 
 
+def _utc(ts):
+    """A collected timestamp (naive, host-local) as naive UTC."""
+    return ts and ts.astimezone(dt.timezone.utc).replace(tzinfo=None)
+
+
+def _history(store):
+    return {
+        (r["id"], r["status"]): (_utc(r["valid_from"]), _utc(r["valid_to"]))
+        for r in store.read("snap_orders").collect()
+    }
+
+
 def _register(rows):
     @snapshot("snap_orders", unique_key=["id"], check_cols=["status"])
     def snap_orders(ctx):
@@ -47,20 +59,14 @@ def test_snapshot_node_via_runner(spark, tmp_path):
         rows["v"] = [(1, "closed"), (2, "open")]
         runner2 = Runner(spark, store, {}, fixed_now=T1)
         runner2.run("snap_orders")
-        hist = {
-            (r["id"], r["status"]): (r["valid_from"], r["valid_to"])
-            for r in store.read("snap_orders").collect()
-        }
+        hist = _history(store)
         assert hist[(1, "open")] == (T0, T1)
         assert hist[(1, "closed")] == (T1, None)
         assert hist[(2, "open")] == (T0, None)
 
         # --full-refresh must NOT drop snapshot history
         runner2.run("snap_orders", full_refresh=True)
-        assert (T0, T1) == {
-            (r["id"], r["status"]): (r["valid_from"], r["valid_to"])
-            for r in store.read("snap_orders").collect()
-        }[(1, "open")]
+        assert _history(store)[(1, "open")] == (T0, T1)
 
         # manifest records the snapshot config, scoped to the node
         m = runner2.manifest("snap_orders")["models"]["snap_orders"]

@@ -18,11 +18,16 @@ def _src(spark, rows):
     return spark.createDataFrame(rows, "id long, status string, amount double")
 
 
+def _utc(ts):
+    """A collected timestamp (naive, host-local) as naive UTC."""
+    return ts and ts.astimezone(dt.timezone.utc).replace(tzinfo=None)
+
+
 def _versions(store, name):
     out = {}
     for r in store.read(name).collect():
         out.setdefault(r["id"], []).append(
-            (r["status"], r["valid_from"], r["valid_to"])
+            (r["status"], _utc(r["valid_from"]), _utc(r["valid_to"]))
         )
     return {k: sorted(v, key=lambda t: t[1]) for k, v in out.items()}
 

@@ -91,4 +91,5 @@ def test_registered_deepbook_unit_tests_pass(spark):
     assert {
         "loan_borrowed_first_run_decode",
         "loan_borrowed_incremental_watermark",
+        "pool_daily_volume_semantics",
     } <= set(all_unit_tests())
