@@ -51,6 +51,7 @@ from .similarity import (
     _cell_assign_udf,
     _train_ivf_centers,
 )
+from .topk import _grouped_top
 
 E6 = 1_000_000
 
@@ -70,7 +71,8 @@ def _anchor_topk_survivors(
     pass); here ONE pass emits, per Arrow batch, each B row's k best
     anchors (``fwd=false`` — complete: every anchor is in-batch) and
     each anchor's k best in-batch B rows (``fwd=true`` — a per-batch
-    partial whose global merge ``_ranked_directions`` finishes): if a pair ranks
+    partial whose global merge, the grouped ``topk`` in
+    ``_ranked_directions``, finishes): if a pair ranks
     in a query's global top-k, at most k−1 rows beat it in ANY batch, so
     it survives that batch's local cut — the `_ivf_cross_scored`
     emission argument. ≤ k·(|B| + |A|·n_batches) rows leave Python
@@ -80,7 +82,7 @@ def _anchor_topk_survivors(
     norm/dot accumulation, same division — identical doubles. Anchors
     are pre-sorted by id and batch rows sorted by id before the stable
     argsorts, so every local cut uses the exact (cos desc, id asc)
-    order of ``_bounded_topk``; NaN (zero-norm) sorts last under −cos
+    order of ``operators/topk.py``; NaN (zero-norm) sorts last under −cos
     and negatives rank below every non-negative, so the caller's
     ``cosine ≥ 0`` filter commutes with the local cut.
 
@@ -187,45 +189,24 @@ def _anchor_topk_survivors(
     )
 
 
-def _ranked_directions(pairs: DataFrame, k: int, n_salts: int = 32) -> DataFrame:
+def _ranked_directions(pairs: DataFrame, k: int) -> DataFrame:
     """BOTH directions' per-query top-k lists + the exact-integer
-    neighborhood average, in ONE two-level bounded aggregation (r15,
-    VERDICT r14 item 5: the per-direction ``_topk_e6`` trees re-ran the
-    staged candidate scan once per margin-tail consumer — 18 ExistingRDD
-    scans / 36 Exchanges in the r14 IVF after-plan).
+    neighborhood average, in ONE grouped top-k aggregation, so the
+    candidate generator runs once for all four margin-tail readers.
 
     Input: direction-tagged candidate rows ``(query_id, neighbor_id,
     cosine, fwd)``. Output: one row per (query, direction) —
     ``(query_id, fwd, _items array<struct<id, cos_e6>>, avg_e6)`` with
-    ``_items`` in the exact ``_bounded_topk`` order (cos desc, id asc —
-    same salt, same struct sort keys, same two-level slice, so the
-    selected SETS are byte-identical to the per-direction form) and
+    ``_items`` in ``topk`` order (cos desc, id asc; grouped on (query,
+    fwd), so each direction selects the rows a per-direction ``topk``
+    would) and
 
         avg_e6 = (Σ top-k cos_e6) div k_actual
 
-    computed from the selected array itself — the former ``avg_fwd`` /
-    ``avg_bwd`` groupBys over re-executed top-k trees collapse into a
-    projection (the e6 floor is applied AFTER selection, exactly like
-    ``_topk_e6``)."""
-    item = F.struct(
-        (-F.col("cosine")).alias("_key"),
-        F.col("neighbor_id").alias("_id"),
-        F.col("cosine").alias("_score"),
-    )
-    first = (
-        pairs.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(n_salts))
-        )
-        .groupBy("query_id", "fwd", "_salt")
-        .agg(F.slice(F.sort_array(F.collect_list(item)), 1, k).alias("_top"))
-    )
+    computed from the selected array itself (the e6 floor is applied
+    AFTER selection)."""
     return (
-        first.groupBy("query_id", "fwd")
-        .agg(
-            F.slice(
-                F.sort_array(F.flatten(F.collect_list("_top"))), 1, k
-            ).alias("_top")
-        )
+        _grouped_top(pairs, k, "cosine", "neighbor_id", by=["query_id", "fwd"])
         .select(
             "query_id",
             "fwd",
@@ -579,7 +560,7 @@ def _ivf_cross_scored(
                 # local top-k both directions: ids arrived sorted
                 # ascending (sort_array on the struct), so a STABLE
                 # argsort on -cos breaks ties on ascending id — the
-                # exact order _bounded_topk and the oracle use. NaN
+                # exact order topk and the oracle use. NaN
                 # (zero-norm) sorts last under -cos and is dropped by
                 # the >= 0 filter, matching the exact tier's scan
                 # filter semantics; negatives only survive selection

@@ -39,10 +39,10 @@ Scale shape (100 TB): features are the bigram fingerprints of
 regardless of corpus size — and broadcasts to the scoring join. ONE
 corpus scan (r15): the explode aggregates straight to staged
 per-(doc, bucket) counts that both the weight and score passes
-re-aggregate (see :func:`dsir_select`); selection is
-``orderBy().limit(k)`` → TakeOrderedAndProject (per-partition size-k
-heaps), never a global ``row_number`` window. No driver-side
-collection anywhere.
+re-aggregate (see :func:`dsir_select`); selection is the ungrouped
+``topk``: ``orderBy().limit(k)`` → TakeOrderedAndProject
+(per-partition size-k heaps), never a global ``row_number`` window. No
+driver-side collection anywhere.
 """
 
 from __future__ import annotations
@@ -51,7 +51,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .ngram_lm import bigram_fps_vectorized
-from .retrieval import _ranked_topk
+from .topk import topk
 
 DEFAULT_N_BUCKETS = 4096
 SCALE_E6 = 1_000_000
@@ -188,6 +188,6 @@ def dsir_select(
         )
         .withColumn("score_e6", F.expr("w_sum div n_feats"))
     )
-    return _ranked_topk(
-        scored, [F.desc("score_e6"), F.asc(id_col)], top_k
-    ).select(id_col, "n_feats", "score_e6", "rank")
+    return topk(scored, top_k, "score_e6", id_col, keep=["n_feats"]).select(
+        id_col, "n_feats", "score_e6", "rank"
+    )

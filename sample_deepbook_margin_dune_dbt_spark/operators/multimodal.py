@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .topk import topk
+
 BINARY_META_SCHEMA = (
     "id long, size_bytes long, md5_hex string, format string"
 )
@@ -1689,12 +1691,11 @@ def hamming_topk(
 
     Plan shape: corpus and query band rows meet in a (band, key)
     equi-join (both staged once); verification fetches the two packed
-    fingerprints by id equi-join; the rank window partitions by query
-    over CANDIDATES only — never a corpus-wide window. Corpus buckets
-    past ``max_bucket_size`` are dropped (the
+    fingerprints by id equi-join; the grouped ``topk`` ranks each
+    query's verified CANDIDATES only — no window, no corpus-wide sort.
+    Corpus buckets past ``max_bucket_size`` are dropped (the
     ``banded_hamming_bucket_stats`` companion accounts for the loss).
     Output: (query_id, id, hamming, rank)."""
-    from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
 
     if 64 % bands:
@@ -1755,12 +1756,7 @@ def hamming_topk(
         )
         .filter(F.col("hamming") <= max_hamming)
     )
-    w = Window.partitionBy("query_id").orderBy("hamming", "id")
-    return (
-        verified.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "hamming", "rank")
-    )
+    return topk(verified, k, "hamming", "id", by=["query_id"], ascending=True)
 
 
 def image_hamming_topk(

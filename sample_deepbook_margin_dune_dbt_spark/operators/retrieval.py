@@ -36,30 +36,15 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .topk import topk
 
 # k1 = 6/5 (1.2) and b = 3/4 (0.75) — the classic defaults, chosen as
 # exact rationals so the saturation denominator clears to integers.
 _IDF_SCALE = 10_000  # fixed-point 1e4 for the Robertson idf
 _TF_SCALE = 10_000  # fixed-point 1e4 for the saturation term
-
-
-def _ranked_topk(df: DataFrame, order: list[F.Column], k: int) -> DataFrame:
-    """Global top-``k`` with a dense 1..k ``rank`` column, scale-safely.
-
-    ``row_number() OVER (ORDER BY ...)`` with no partition key moves the
-    ENTIRE input to one task — the single-partition window that kills a
-    ranker at corpus scale. ``orderBy().limit(k)`` instead plans as
-    TakeOrderedAndProject (a size-k heap per partition, then a k-way
-    driver merge); the rank window that follows sees only the ≤ k
-    surviving rows, so its single partition is k-bounded by construction.
-    The ordering must be total (callers tie-break on the id column) so
-    both paths pick identical rows in identical order.
-    """
-    topk = df.orderBy(*order).limit(k)
-    w = Window.orderBy(*order)
-    return topk.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
 def bm25_scores(
@@ -142,11 +127,11 @@ def bm25_scores(
         F.sum("term_score_e8").cast("long").alias("bm25_e8"),
     )
 
-    # global top-k: orderBy+limit plans as TakeOrderedAndProject
+    # global top-k: topk's orderBy+limit plans as TakeOrderedAndProject
     # (per-partition heaps, no full sort, no corpus-sized single-partition
     # window) — the rank window then runs over only the k survivors
-    return _ranked_topk(
-        per_doc, [F.desc("bm25_e8"), F.asc("id")], top_k
+    return topk(
+        per_doc, top_k, "bm25_e8", "id", keep=["n_terms_hit", "dl"]
     ).select("id", "n_terms_hit", "dl", "bm25_e8", "rank")
 
 
@@ -184,9 +169,9 @@ def ql_scores(
     scored = q_tf.join(dl, "id").withColumn(
         "ql_e6", F.expr("q_tf * 1000000L div dl")
     )
-    return _ranked_topk(
-        scored, [F.desc("ql_e6"), F.asc("id")], top_k
-    ).select("id", "q_tf", "dl", "ql_e6", "rank")
+    return topk(scored, top_k, "ql_e6", "id", keep=["q_tf", "dl"]).select(
+        "id", "q_tf", "dl", "ql_e6", "rank"
+    )
 
 
 def hybrid_rrf(
@@ -240,8 +225,8 @@ def hybrid_rrf(
             ).cast("long"),
         )
     )
-    return _ranked_topk(
-        fused, [F.desc("rrf_e6"), F.asc("id")], k_out
+    return topk(
+        fused, k_out, "rrf_e6", "id", keep=["bm25_rank", "ql_rank"]
     ).select("id", "bm25_rank", "ql_rank", "rrf_e6", "rank")
 
 

@@ -27,8 +27,11 @@ import warnings
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .topk import topk
+
 
 def _plane_weights(dim: int, planes: int, plane_offset: int = 0) -> list[list[float]]:
     """Hyperplane weight matrix (planes × dim), computed once driver-side.
@@ -81,83 +84,6 @@ def cosine(a: F.Column, b: F.Column) -> F.Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _window_topk(
-    scored: DataFrame,
-    k: int,
-    score_col: str = "cosine",
-    ascending: bool = False,
-    id_col: str = "neighbor_id",
-) -> DataFrame:
-    """row_number-over-window ranking — the oracle twin of ``_bounded_topk``.
-
-    Buffers every candidate of a query in one sort partition; exactly the
-    shape the DuckDB oracle SQL expresses, so it stays as the
-    cross-checkable reference implementation (and the plan of record at
-    small candidate fan-in)."""
-    order = [
-        F.asc(score_col) if ascending else F.desc(score_col),
-        F.asc(id_col),
-    ]
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def _bounded_topk(
-    scored: DataFrame,
-    k: int,
-    score_col: str = "cosine",
-    ascending: bool = False,
-    id_col: str = "neighbor_id",
-    keep_cols: tuple[str, ...] = (),
-    n_salts: int = 32,
-) -> DataFrame:
-    """Per-query top-k by two-level bounded aggregation (VERDICT r2 #7).
-
-    ``row_number`` over ``Window.partitionBy(query_id)`` sorts and buffers
-    EVERY candidate of a query in one task — the failure mode at extreme
-    candidate fan-in (a hot query × a big bucket). Here candidates first
-    reduce within (query, salt-of-neighbor) cells — hash aggregation with
-    map-side partials, each cell keeping only its local top-k via
-    ``slice(sort_array(collect_list(...)))`` — then the ≤ k·n_salts
-    survivors per query merge to the final top-k. No full-candidate sort,
-    no unbounded window buffer; ties break on ascending ``id_col`` exactly
-    like the window twin, so results are row-identical (asserted in
-    tests/test_operators.py) and the driver's row_number-based oracle SQL
-    still hash-matches.
-
-    Caveat: a NaN score sorts FIRST under the window twin's ``desc`` but
-    LAST here (the negated key keeps NaN greatest under asc) — irrelevant
-    for cosine over non-zero vectors, where the score is never NaN.
-    """
-    sort_key = F.col(score_col) if ascending else -F.col(score_col)
-    item = F.struct(
-        sort_key.alias("_key"),
-        F.col(id_col).alias("_id"),
-        F.col(score_col).alias("_score"),
-        *[F.col(c).alias(c) for c in keep_cols],
-    )
-    first = (
-        scored.withColumn("_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)))
-        .groupBy("query_id", "_salt")
-        .agg(F.slice(F.sort_array(F.collect_list(item)), 1, k).alias("_top"))
-    )
-    return (
-        first.groupBy("query_id")
-        .agg(F.slice(F.sort_array(F.flatten(F.collect_list("_top"))), 1, k).alias("_top"))
-        .select("query_id", F.posexplode("_top").alias("_pos", "_it"))
-        .select(
-            "query_id",
-            F.col("_it._id").alias(id_col),
-            F.col("_it._score").alias(score_col),
-            *[F.col(f"_it.{c}").alias(c) for c in keep_cols],
-            (F.col("_pos") + 1).alias("rank"),
-        )
-    )
-
-
 def cosine_pairs(
     df: DataFrame,
     id_col: str,
@@ -198,15 +124,16 @@ def cosine_topk(
     """Exact top-k neighbors per query by cosine (brute force).
 
     Output: (query_id, neighbor_id, cosine, rank). Deterministic tie-break
-    on neighbor id. Every vector is scored against the closure-shipped
-    anchor matrix in one Arrow pass (bit-parity contract with the
-    ``_dot``/``_norm`` fold in :func:`_anchor_cosines_vectorized`).
+    on neighbor id; a zero-norm vector (NULL cosine) ranks last. Every
+    vector is scored against the closure-shipped anchor matrix in one
+    Arrow pass (bit-parity contract with the ``_dot``/``_norm`` fold in
+    :func:`_anchor_cosines_vectorized`).
     """
     anchors = queries.select(query_id_col, vec_col).collect()
     scored = _anchor_cosines_vectorized(vectors, id_col, vec_col, anchors).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    return _bounded_topk(scored, k).select("query_id", "neighbor_id", "cosine", "rank")
+    return topk(scored, k, "cosine", "neighbor_id", by=["query_id"])
 
 
 def _anchor_cosines_vectorized(
@@ -262,7 +189,10 @@ def _anchor_cosines_vectorized(
             acc = np.zeros(n_rows)
             for d in range(dim):
                 acc = acc + mt[d] * qv[d]
-            res[:, j] = acc / (qnorms[j] * norms)
+            # a zero-norm row scores 0/0 = NaN, which Arrow returns as
+            # NULL; topk ranks it last
+            with np.errstate(invalid="ignore"):
+                res[:, j] = acc / (qnorms[j] * norms)
         return pd.Series([row.tolist() for row in res])
 
     qid_arr = F.array(*[F.lit(q).cast("long") for q in qids])
@@ -394,9 +324,9 @@ def cosine_hard_negatives(
     scored = scored.withColumn(
         "cosine_e6", F.floor(F.col("cosine") * 1e6).cast("long")
     ).filter(F.col("cosine_e6") < max_cosine_e6)
-    return _bounded_topk(scored, k, keep_cols=("cosine_e6",)).select(
-        "query_id", "neighbor_id", "cosine_e6", "rank"
-    )
+    return topk(
+        scored, k, "cosine", "neighbor_id", by=["query_id"], keep=["cosine_e6"]
+    ).select("query_id", "neighbor_id", "cosine_e6", "rank")
 
 
 def ensure_k_neighbors(
@@ -1359,7 +1289,7 @@ def ivf_ann_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
         .withColumn("cosine", _dot(F.col("_vq"), F.col("_vn")) / (F.col("_nq") * F.col("_nn")))
     )
-    return _bounded_topk(scored, k).select("query_id", "neighbor_id", "cosine", "rank")
+    return topk(scored, k, "cosine", "neighbor_id", by=["query_id"])
 
 
 def lsh_ann_topk(
@@ -1412,7 +1342,7 @@ def lsh_ann_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
         .withColumn("cosine", _dot(F.col("_vq"), F.col("_vn")) / (F.col("_nq") * F.col("_nn")))
     )
-    return _bounded_topk(scored, k).select("query_id", "neighbor_id", "cosine", "rank")
+    return topk(scored, k, "cosine", "neighbor_id", by=["query_id"])
 
 
 # --------------------------------------------------------------- IVF-PQ tier
@@ -1598,12 +1528,14 @@ def ivf_pq_ann_topk(
     # with the same ADC value; dedup before the bounded top-k so the
     # shortlist holds k·refine_factor DISTINCT neighbors like the old
     # row_number-then-dropDuplicates form did after ranking
-    shortlist = _bounded_topk(
+    shortlist = topk(
         cand.dropDuplicates(["query_id", "neighbor_id"]),
         k * refine_factor,
-        score_col="_adc",
+        "_adc",
+        "neighbor_id",
+        by=["query_id"],
         ascending=True,
-        keep_cols=("_vq",),
+        keep=["_vq"],
     ).select("query_id", "_vq", "neighbor_id")
 
     # ---- 4. exact refine on the shortlist
@@ -1616,4 +1548,4 @@ def ivf_pq_ann_topk(
         "cosine",
         _dot(F.col("_vq"), F.col("_vn")) / (_norm(F.col("_vq")) * F.col("_nn")),
     )
-    return _bounded_topk(scored, k).select("query_id", "neighbor_id", "cosine", "rank")
+    return topk(scored, k, "cosine", "neighbor_id", by=["query_id"])

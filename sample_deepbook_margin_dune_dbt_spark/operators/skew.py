@@ -19,6 +19,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .topk import topk
+
 
 def with_salt(df: DataFrame, n_salts: int, salt_col: str = "_salt") -> DataFrame:
     """Deterministic row salt in [0, n_salts) — spreads rows without RNG
@@ -92,21 +94,17 @@ def hotness_report(df: DataFrame, key_col: str, top_k: int = 10) -> DataFrame:
     ~``share × parallelism`` salts, or confirm AQE's skew split engages.
 
     Two-level shape: the per-key count partial-aggregates map-side; the
-    top-k is a bounded ORDER BY + LIMIT (TakeOrdered — no global sort);
-    the rank window runs over ≤ top_k rows (the bounded-window pattern).
+    ungrouped ``topk`` is a bounded ORDER BY + LIMIT (TakeOrdered — no
+    global sort) whose rank window runs over ≤ top_k rows.
     """
     counts = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("n"))
     totals = counts.agg(
         F.sum("n").cast("long").alias("total_rows"),
         F.count(F.lit(1)).cast("long").alias("n_keys"),
     )
-    top = counts.orderBy(F.col("n").desc(), F.col(key_col).asc()).limit(top_k)
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.col("n").desc(), F.col(key_col).asc())
     return (
-        top.crossJoin(F.broadcast(totals))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
+        topk(counts, top_k, "n", key_col)
+        .crossJoin(F.broadcast(totals))
         .select(
             "rank",
             key_col,

@@ -504,9 +504,10 @@ driver query moved to ``EXTRA_QUERIES``:
   pairing, so the hash match proves the sequence-offset invariance);
   ``multimodal_phash_topk`` — perceptual image SEARCH (radius-limited
   exact Hamming top-k via ``hamming_topk``, multi-index Hamming search
-  on the shared banding; the oracle re-derives distance AND rank with
-  its own window, so the hash match certifies candidate generation,
-  verification, and ranking end to end).
+  on the shared banding, ranked by ``operators/topk.py``; the oracle
+  re-derives distance AND rank with its own window, so the hash match
+  certifies candidate generation, verification, and ranking end to
+  end).
 
 - round 15 (per VERDICT r14 item 7 — steady-state AGE cycle, round
   four; an optimization round, so the cycle only drains the documented

@@ -29,6 +29,7 @@ from ..functions import pii as P
 from ..functions import text as T
 from ..operators import bloom as B
 from ..operators import quantize as Q
+from ..operators.topk import topk
 from .common import load
 
 _SQL_FP64 = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
@@ -371,12 +372,10 @@ def q_text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     run to 10^8+ terms. Cost of the formulation: the tokenize→tf
     pipeline feeds both join sides, so the df branch recomputes it — at
     lake scale materialize tf once (the `corpus_features` model pattern)
-    and both branches read the one copy. The final top-3 window sorts
-    only each doc's own term list (bounded by the doc's vocabulary);
-    the corpus row count enters as a broadcast scalar.
+    and both branches read the one copy. The final top-3 is a grouped
+    ``topk`` over each doc's own term list (bounded by the doc's
+    vocabulary); the corpus row count enters as a broadcast scalar.
     """
-    from pyspark.sql import Window
-
     from ..operators.dedup import _spread
 
     docs = _spread(load(spark, sf_dir, "documents"), "doc_id")
@@ -394,11 +393,8 @@ def q_text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_docs))
         .withColumn("score", F.expr("tf * ((n_docs * 1000000L) div df)"))
     )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("word"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .select("doc_id", "word", "tf", "df", "score", "rank")
+    return topk(scored, 3, "score", "word", by=["doc_id"], keep=["tf", "df"]).select(
+        "doc_id", "word", "tf", "df", "score", "rank"
     )
 
 

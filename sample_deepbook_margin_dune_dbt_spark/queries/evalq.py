@@ -26,11 +26,12 @@ one query's matched postings (term-filtered, not the corpus).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import contamination as C
 from ..operators import ir_eval as IR
+from ..operators.topk import topk
 from .common import load
 
 # one literal spec for the eval run and its oracle — Spark and DuckDB
@@ -56,7 +57,7 @@ def _eval_run_and_qrels(
     ordering, so recall/nDCG measure something real. Both derive from
     one tokenize pass; the term filter is a broadcast literal (the
     corpus never shuffles on content), tf/dl are map-side-combined
-    grouped counts, and the top-k window partitions by query term.
+    grouped counts, and the top-k is grouped by query term.
     """
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
@@ -72,13 +73,8 @@ def _eval_run_and_qrels(
     scored = tf.join(dl, "doc_id").withColumn(
         "score_e6", F.expr("(tf * 1000000L) div dl")
     )
-    w = Window.partitionBy("word").orderBy(F.desc("score_e6"), F.asc("doc_id"))
-    run = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= EVAL_K)
-        .select(
-            F.col("word").alias("query_id"), "doc_id", "rank"
-        )
+    run = topk(scored, EVAL_K, "score_e6", "doc_id", by=["word"]).select(
+        F.col("word").alias("query_id"), "doc_id", "rank"
     )
     qrels = (
         tf.filter(F.col("tf") >= _REL1_TF)

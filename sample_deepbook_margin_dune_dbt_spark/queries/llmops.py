@@ -1605,7 +1605,8 @@ def q_multimodal_phash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image SEARCH (r14 continuation — the dedup family's
     retrieval sibling): radius-limited exact Hamming top-k over aHash
     signatures (``operators/multimodal.py::hamming_topk``, multi-index
-    Hamming search on the shared banding). Every doc carries the same
+    Hamming search on the shared banding, ranked by
+    ``operators/topk.py``). Every doc carries the same
     id-derivable pattern PNG the dedup query uses; queries are the
     ``doc_id % PHASH_TOPK_QMOD == 0`` subset, each retrieving its
     ``PHASH_TOPK_K`` nearest corpus images within Hamming ≤
@@ -1613,7 +1614,7 @@ def q_multimodal_phash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     arity 1; ties broken by id — a query retrieves itself at rank 1).
     The oracle recomputes pixels → bits → banding → distances → ranks
     arithmetically, so a hash match certifies candidate generation,
-    verification, AND the ranking window end to end."""
+    verification, AND the ranking end to end."""
     docs = M.attach_pattern_png(
         load(spark, sf_dir, "documents").repartition(
             spark.sparkContext.defaultParallelism, "doc_id"

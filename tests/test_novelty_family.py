@@ -208,7 +208,12 @@ def test_global_rankers_take_ordered_not_global_window(spark, sf_dir):
     (per-partition heaps); the rank window may only ever see the ≤ k
     surviving rows — never the corpus (the single-partition-window
     scale killer)."""
-    for name in ("text_bm25_topk", "retrieval_rrf_fusion"):
+    for name in (
+        "text_bm25_topk",
+        "retrieval_rrf_fusion",
+        "skew_hotness_report",
+        "corpus_dsir_select",
+    ):
         fn, _ = FULL_QUERIES[name]
         plan = audit_plan(fn(spark, sf_dir))["plan"]
         assert "TakeOrderedAndProject" in plan, name

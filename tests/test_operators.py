@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from sample_deepbook_margin_dune_dbt_spark.operators import dedup as D
 from sample_deepbook_margin_dune_dbt_spark.operators import multimodal as M
 from sample_deepbook_margin_dune_dbt_spark.operators import similarity as S
+from sample_deepbook_margin_dune_dbt_spark.operators.topk import topk
 
 
 @pytest.fixture(scope="module")
@@ -183,11 +184,37 @@ def test_cosine_pairs_lsh_matches_exact(spark, planted_near_dups):
         assert abs(c - exact[k]) < 1e-12
 
 
-def test_bounded_topk_matches_window_topk(spark, sf_dir):
-    """The salted two-level top-k aggregation must be row-identical to the
-    row_number window form (ranks, ids, scores) — it is the production
-    ranking inside every ANN tier while the window form remains the
-    oracle-SQL twin."""
+def _duckdb_topk(rows, k, by=("query_id",), score="cosine", id="neighbor_id",
+                 ascending=False):
+    """The oracle's ranking over already-scored rows: DuckDB's
+    ``row_number() OVER (PARTITION BY by ORDER BY score DESC, id)`` with
+    its default NULLS LAST, as (by…, id, score, rank) tuples."""
+    import duckdb
+    import pandas as pd
+
+    cols = [*by, id, score]
+    con = duckdb.connect()
+    con.register("scored", pd.DataFrame(rows, columns=cols))
+    part = f"PARTITION BY {', '.join(by)}" if by else ""
+    sql = f"""
+        SELECT {', '.join(cols)}, rank FROM (
+            SELECT *, row_number() OVER (
+                {part} ORDER BY {score} {'ASC' if ascending else 'DESC'}, {id}
+            ) AS rank FROM scored
+        ) WHERE rank <= {k}
+    """
+    out = con.execute(sql).fetchall()
+    # pandas carries a NULL double as NaN; hand it back as None
+    return sorted(
+        tuple(None if isinstance(v, float) and v != v else v for v in r)
+        for r in out
+    )
+
+
+def test_topk_matches_duckdb_row_number(spark, sf_dir):
+    """The grouped top-k (the ranking inside every ANN tier) must be
+    row-identical — ranks, ids, scores — to the oracle's row_number SQL
+    over the same scored frame."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 10)
     scored = (
@@ -199,11 +226,59 @@ def test_bounded_topk_matches_window_topk(spark, sf_dir):
         )
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine", S.cosine(F.col("_vq"), F.col("_vn")))
+        .select("query_id", "neighbor_id", "cosine")
     )
-    cols = ["query_id", "neighbor_id", "cosine", "rank"]
-    bounded = sorted(map(tuple, S._bounded_topk(scored, 7).select(*cols).collect()))
-    window = sorted(map(tuple, S._window_topk(scored, 7).select(*cols).collect()))
-    assert bounded == window and len(bounded) > 0
+    rows = [tuple(r) for r in scored.collect()]
+    got = sorted(
+        map(tuple, topk(scored, 7, "cosine", "neighbor_id", by=["query_id"]).collect())
+    )
+    assert got == _duckdb_topk(rows, 7) and len(got) == 70
+
+
+@pytest.mark.parametrize("ascending", [False, True])
+@pytest.mark.parametrize("by", [("g",), ()])
+def test_topk_ties_and_nulls_match_duckdb(spark, by, ascending):
+    """Tie-heavy scores (one decimal, so most groups hold several equal
+    scores), NULL scores, groups smaller than k and a group of only
+    NULLs: both plans — grouped and global — must equal DuckDB's
+    row_number ranking, ties on ascending id and NULL last in both
+    directions."""
+    import collections
+    import random
+
+    rnd = random.Random(11)
+    rows = []
+    for g in range(8):
+        for i in range(rnd.randint(1, 12)):
+            v = None if rnd.random() < 0.15 else round(rnd.random(), 1)
+            rows.append((g, 100 * g + i, v))
+    rows += [(8, 900, None), (8, 901, None)]
+    df = spark.createDataFrame(rows, "g long, id long, s double")
+    k = 4
+    got = sorted(map(tuple, topk(df, k, "s", "id", by=by, ascending=ascending).collect()))
+    picked = [r if by else r[1:] for r in rows]
+    want = _duckdb_topk(picked, k, by=by, score="s", id="id", ascending=ascending)
+    sizes = collections.Counter(g for g, _, _ in rows).values()
+    assert got == want and len(got) == (sum(min(k, n) for n in sizes) if by else k)
+
+
+def test_cosine_topk_ranks_zero_norm_vector_last(spark):
+    """A zero-norm vector scores cosine 0/0, which comes back NULL; it
+    must rank after every real neighbour, as in DuckDB's ``ORDER BY
+    cosine DESC``, not push the true rank-2 neighbour out of the top k."""
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0]), (4, [0.5, 0.5]), (5, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    q = vecs.filter(F.col("vec_id") == 1)
+    got = sorted(map(tuple, S.cosine_topk(vecs, q, "vec_id", "embedding", "vec_id", k=2).collect()))
+    assert [(qid, nid, rank) for qid, nid, _, rank in got] == [(1, 2, 1), (1, 4, 2)]
+    scored = S._anchor_cosines_vectorized(
+        vecs, "vec_id", "embedding", q.select("vec_id", "embedding").collect()
+    ).filter(F.col("query_id") != F.col("neighbor_id"))
+    rows = [(r["query_id"], r["neighbor_id"], r["cosine"]) for r in scored.collect()]
+    assert (1, 3, None) in rows
+    assert got == _duckdb_topk(rows, 2)
 
 
 def test_embedding_bucket_cap_observable(spark):
@@ -1731,9 +1806,9 @@ def test_bitext_mining_planted_pair(spark):
     assert all(r["cos_e6"] < 990_000 for r in out if r["id_a"] != 1)
 
 
-def test_bitext_ranked_directions_matches_bounded_topk(spark):
+def test_bitext_ranked_directions_matches_topk(spark):
     """``_ranked_directions`` (r15) must reproduce the per-direction
-    ``_bounded_topk`` selection EXACTLY — same sets, same (cos desc, id
+    ``topk`` selection EXACTLY — same sets, same (cos desc, id
     asc) order, same e6 floors — and its inline ``avg_e6`` must equal
     ``sum(cos_e6) div count(1)`` over the selected rows, for both
     directions, on adversarial data (cosine ties, sub-k groups)."""
@@ -1758,7 +1833,9 @@ def test_bitext_ranked_directions_matches_bounded_topk(spark):
         for r in BX._ranked_directions(pairs, k).collect()
     }
     for fwd in (True, False):
-        ref = S._bounded_topk(pairs.filter(F.col("fwd") == fwd), k)
+        ref = topk(
+            pairs.filter(F.col("fwd") == fwd), k, "cosine", "neighbor_id", by=["query_id"]
+        )
         by_q = {}
         for r in ref.collect():
             e6 = int(np.floor(r["cosine"] * 1_000_000))

@@ -172,13 +172,14 @@ def test_decontaminate_broadcast_probe(spark, sf_dir):
 
 
 def test_bounded_topk_plans_no_window_sort(spark, sf_dir):
-    """The production ANN ranking must not plan a Window over all
-    candidates: the bounded two-level aggregation shows up as
-    hash/object-hash aggregates, with no Window node and no global sort
-    of the scored candidates."""
-    fn, _ = ALL_QUERIES["ann_cosine_topk"]
-    plan = explain_str(fn(spark, sf_dir), "simple")
-    assert "Window" not in plan, "bounded top-k must not fall back to a window"
+    """A grouped ``topk`` must not plan a Window over all candidates: the
+    bounded two-level aggregation shows up as hash/object-hash
+    aggregates, with no Window node and no global sort of the scored
+    candidates — for the ANN ranking and for the Hamming search."""
+    for name in ("ann_cosine_topk", "multimodal_phash_topk"):
+        fn, _ = ALL_QUERIES[name]
+        plan = explain_str(fn(spark, sf_dir), "simple")
+        assert "Window" not in plan, f"{name}: bounded top-k must not fall back to a window"
 
 
 def test_cdc_chunking_is_narrow_map(spark, sf_dir):
