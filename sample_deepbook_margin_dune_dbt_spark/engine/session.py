@@ -17,8 +17,10 @@ Centralizes the configuration that the rest of the engine depends on:
 - **Executor import path** — Python workers get the package's parent dir
   on ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so ``mapInPandas``
   and UDF code that imports the package works from any working directory.
-- **Arrow** — every pandas interchange (Pandas UDFs in
-  ``operators/multimodal.py``, ``applyInPandas``) is Arrow-batched.
+- **Arrow** — every pandas interchange is Arrow-batched: the media
+  operators all run on one per-payload map
+  (``operators/multimodal.py::_map_payloads``), the batch-vectorized
+  kernels on ``mapInPandas`` / ``applyInPandas``.
 """
 
 from __future__ import annotations

@@ -1,19 +1,23 @@
 """Multimodal column plumbing: image/audio/video as opaque binary + metadata.
 
-The Spark-side design is real and tested — schemas, Arrow-batched Pandas
-processing via ``mapInPandas``, partitioning notes — while the actual
-codec work is stubbed (image/audio libraries are not in this container):
+Every media operator runs on one Arrow path, ``_map_payloads``: it
+selects ``(id, payload)``, streams the Arrow batches through
+``mapInPandas``, calls one per-payload function on each payload's bytes
+and types the output rows from the operator's declared DDL schema. The
+codec steps are those per-payload functions, so each is INJECTABLE:
 
-- ``extract_binary_metadata``  — real: size, md5, magic-byte format sniff,
-  computed in pandas batches (the pattern a real decoder plugs into).
+- ``extract_binary_metadata`` — real: size, md5, magic-byte format sniff
+  (the template a real decoder plugs into).
 - ``decode_image`` / ``sample_frames`` / ``resize_image`` /
-  ``extract_audio_features`` — deterministic fakes behind the same
-  ``mapInPandas`` plumbing. Each codec step is INJECTABLE: pass
-  ``decoder=``/``frame_extractor=``/``resizer=`` to swap in
-  PIL/ffmpeg/torchaudio on a cluster with codecs installed — a one-line
-  swap at the call site; the Arrow flow, schemas, and partitioning are
-  unchanged (`tests/test_operators.py` proves a custom decoder rides the
-  same plumbing).
+  ``extract_audio_features`` — deterministic fakes by default; pass
+  ``decoder=``/``frame_extractor=``/``resizer=``/``extractor=`` to swap
+  in PIL/ffmpeg/torchaudio on a cluster with codecs installed — a
+  one-line swap at the call site; the Arrow flow, schemas, and
+  partitioning are unchanged (`tests/test_operators.py` proves a custom
+  decoder rides the same plumbing).
+- ``image_ahash`` / ``audio_fingerprint`` / ``video_frame_ahash`` — real
+  stdlib PNG / PCM16 WAV / SVID decodes feeding the content hashes
+  (``decoder=``/``frame_parser=`` seams).
 
 Scale notes: binary payloads ride the shuffle, so partition count must keep
 ``partition_bytes ≈ rows_per_partition × avg_payload`` under executor
@@ -29,7 +33,7 @@ import hashlib
 import math
 import struct
 import zlib
-from typing import Callable, Iterator
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 
@@ -62,26 +66,52 @@ def _sniff_format(payload: bytes) -> str:
     return "unknown"
 
 
-def extract_binary_metadata(df: DataFrame, id_col: str, binary_col: str) -> DataFrame:
-    """Per-payload metadata (size, md5, sniffed format) via mapInPandas.
+def _map_payloads(
+    df: DataFrame,
+    id_col: str,
+    binary_col: str,
+    fn: Callable[[bytes], Iterable[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The one Arrow path of the media tier: ``fn(payload)`` returns the
+    output rows of one payload as tuples of the columns after ``id`` —
+    one tuple for a 1:1 operator, any number for an explode-shaped one.
+    ``schema`` is a flat ``"id long, <name> <type>, ..."`` DDL; it names
+    the columns and Arrow casts each to its declared type."""
+    names = [field.split()[0] for field in schema.split(",")]
 
-    Fully real (no stub): this is the template every decode operator
-    follows — Arrow batches in, vectorized pandas work, typed rows out.
-    """
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _map(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            payloads = pdf[binary_col]
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype("int64"),
-                    "size_bytes": payloads.map(len).astype("int64"),
-                    "md5_hex": payloads.map(lambda b: hashlib.md5(b).hexdigest()),
-                    "format": payloads.map(_sniff_format),
-                }
-            )
+            rows = [
+                (i, *row)
+                for i, payload in zip(pdf[id_col], pdf[binary_col])
+                for row in fn(bytes(payload))
+            ]
+            yield pd.DataFrame.from_records(rows, columns=names)
 
-    return df.select(id_col, binary_col).mapInPandas(_batches, BINARY_META_SCHEMA)
+    return df.select(id_col, binary_col).mapInPandas(_map, schema)
+
+
+def _pack64(bits: list[int]) -> tuple[int, int]:
+    """64 hash bits → (hi, lo): two NON-NEGATIVE 32-bit halves (lo = bits
+    0-31, hi = bits 32-63), so every value stays positive in signed-64
+    arithmetic — portable to engines that error on bigint overflow, the
+    same discipline as ``dedup.SIMHASH_BITS``."""
+    v = sum(bit << i for i, bit in enumerate(bits))
+    return v >> 32, v & 0xFFFFFFFF
+
+
+def extract_binary_metadata(df: DataFrame, id_col: str, binary_col: str) -> DataFrame:
+    """Per-payload metadata (size, md5, sniffed format). Fully real (no
+    stub): the template every decode operator follows — one function of
+    the payload bytes on the shared Arrow path."""
+    return _map_payloads(
+        df,
+        id_col,
+        binary_col,
+        lambda b: [(len(b), hashlib.md5(b).hexdigest(), _sniff_format(b))],
+        BINARY_META_SCHEMA,
+    )
 
 
 def synth_png(width: int, height: int, color_type: int = 2) -> bytes:
@@ -345,34 +375,16 @@ def image_ahash(
     decoder: Callable[[bytes], tuple[int, int, bytes]] = stdlib_png_pixel_decode,
 ) -> DataFrame:
     """Per-image perceptual hash → (id, ahash_hi, ahash_lo): the 64
-    average-hash bits packed into two NON-NEGATIVE 32-bit halves
-    (lo = bits 0-31, hi = bits 32-63) so every value stays positive in
-    signed-64 arithmetic — portable to engines that error on bigint
-    overflow, the same discipline as ``dedup.SIMHASH_BITS``. One
-    mapInPandas pass; ``decoder`` is the injectable codec seam
-    (``stdlib_png_pixel_decode`` is REAL for the grayscale-PNG path;
-    swap PIL for arbitrary formats)."""
+    average-hash bits packed by :func:`_pack64`. ``decoder`` is the
+    injectable codec seam (``stdlib_png_pixel_decode`` is REAL for the
+    grayscale-PNG path; swap PIL for arbitrary formats)."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            his, los = [], []
-            for payload in pdf[binary_col]:
-                w, h, px = decoder(bytes(payload))
-                bits = ahash_bits(px, w, h, grid)
-                lo = sum(bit << i for i, bit in enumerate(bits[:32]))
-                hi = sum(bit << i for i, bit in enumerate(bits[32:]))
-                his.append(hi)
-                los.append(lo)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype("int64"),
-                    "ahash_hi": pd.Series(his, dtype="int64"),
-                    "ahash_lo": pd.Series(los, dtype="int64"),
-                }
-            )
+    def _hash(b: bytes) -> list[tuple[int, int]]:
+        w, h, px = decoder(b)
+        return [_pack64(ahash_bits(px, w, h, grid))]
 
-    return df.select(id_col, binary_col).mapInPandas(
-        _batches, "id long, ahash_hi long, ahash_lo long"
+    return _map_payloads(
+        df, id_col, binary_col, _hash, "id long, ahash_hi long, ahash_lo long"
     )
 
 
@@ -728,27 +740,17 @@ def decode_image(
     STUB DECODER: the container has no image codecs, so width/height/
     channels are a deterministic fake derived from the payload md5 (stable
     across runs and engines). The Spark-side contract — input binary
-    column, Arrow batch flow, output schema — is the real one; replace
-    ``_fake_decode`` with ``PIL.Image.open(io.BytesIO(b)).size`` in
+    column, Arrow batch flow, output schema — is the real one; pass
+    ``decoder=`` (e.g. a ``PIL.Image.open(io.BytesIO(b))`` reader) in
     production.
     """
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf[binary_col]
-            decoded = payloads.map(decoder)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype("int64"),
-                    "size_bytes": payloads.map(len).astype("int64"),
-                    "md5_hex": payloads.map(lambda b: hashlib.md5(b).hexdigest()),
-                    "width": decoded.map(lambda t: t[0]).astype("int32"),
-                    "height": decoded.map(lambda t: t[1]).astype("int32"),
-                    "channels": decoded.map(lambda t: t[2]).astype("int32"),
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(_batches, IMAGE_META_SCHEMA)
+    return _map_payloads(
+        df,
+        id_col,
+        binary_col,
+        lambda b: [(len(b), hashlib.md5(b).hexdigest(), *decoder(b))],
+        IMAGE_META_SCHEMA,
+    )
 
 
 def fake_frame_extract(b: bytes, every_n_bytes: int, max_frames: int) -> list[str]:
@@ -778,25 +780,12 @@ def sample_frames(
     (id, frame_index, frame_md5). Output cardinality is bounded by
     ``max_frames`` so the operator's fan-out is predictable at scale.
     """
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, fps = [], [], []
-            for i, b in zip(pdf[id_col], pdf[binary_col]):
-                for f, fp in enumerate(frame_extractor(b, every_n_bytes, max_frames)):
-                    ids.append(i)
-                    idxs.append(f)
-                    fps.append(fp)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "frame_index": pd.Series(idxs, dtype="int32"),
-                    "frame_md5": pd.Series(fps, dtype="object"),
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        _batches, "id long, frame_index int, frame_md5 string"
+    return _map_payloads(
+        df,
+        id_col,
+        binary_col,
+        lambda b: enumerate(frame_extractor(b, every_n_bytes, max_frames)),
+        "id long, frame_index int, frame_md5 string",
     )
 
 
@@ -831,26 +820,12 @@ def resize_image(
         scale = min(target_w / w, target_h / h, 1.0)
         return max(1, int(w * scale)), max(1, int(h * scale))
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ws, hs, outs = [], [], [], []
-            for i, b in zip(pdf[id_col], pdf[binary_col]):
-                w, h = _fit(*decoder(b)[:2])
-                ids.append(i)
-                ws.append(w)
-                hs.append(h)
-                outs.append(resizer(b, w, h))
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "payload": pd.Series(outs, dtype="object"),
-                }
-            )
+    def _resize(b: bytes) -> list[tuple[int, int, bytes]]:
+        w, h = _fit(*decoder(b)[:2])
+        return [(w, h, resizer(b, w, h))]
 
-    return df.select(id_col, binary_col).mapInPandas(
-        _batches, "id long, width int, height int, payload binary"
+    return _map_payloads(
+        df, id_col, binary_col, _resize, "id long, width int, height int, payload binary"
     )
 
 
@@ -869,26 +844,20 @@ def extract_audio_features(
     soundfile/torchaudio-backed callable on a cluster that has them; the
     Arrow flow and schema are identical either way.
     """
+    extract = extractor or _no_audio_codec
+    return _map_payloads(
+        df,
+        id_col,
+        binary_col,
+        lambda b: [extract(b)],
+        "id long, duration_s double, sample_rate int, rms double",
+    )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if extractor is None:
-            raise NotImplementedError(
-                "audio decode requires soundfile/torchaudio; not available in this "
-                "environment (extractor=stdlib_wav_features handles PCM16 WAV)"
-            )
-        for pdf in it:
-            feats = [extractor(b) for b in pdf[binary_col]]
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype("int64"),
-                    "duration_s": pd.Series([f[0] for f in feats], dtype="float64"),
-                    "sample_rate": pd.Series([f[1] for f in feats], dtype="int32"),
-                    "rms": pd.Series([f[2] for f in feats], dtype="float64"),
-                }
-            )
 
-    return df.select(id_col, binary_col).mapInPandas(
-        _batches, "id long, duration_s double, sample_rate int, rms double"
+def _no_audio_codec(b: bytes) -> tuple[float, int, float]:
+    raise NotImplementedError(
+        "audio decode requires soundfile/torchaudio; not available in this "
+        "environment (extractor=stdlib_wav_features handles PCM16 WAV)"
     )
 
 
@@ -951,29 +920,15 @@ def audio_fingerprint(
     decoder: Callable[[bytes], tuple[int, int, list[int]]] = stdlib_wav_samples,
 ) -> DataFrame:
     """Per-clip audio fingerprint → (id, afp_hi, afp_lo): the 64
-    energy-sign bits packed into two non-negative 32-bit halves (the
-    ``image_ahash`` packing discipline). One mapInPandas pass;
-    ``decoder`` is the injectable codec seam (``stdlib_wav_samples`` is
-    REAL for PCM16 WAV; swap ffmpeg/torchaudio for compressed codecs)."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            his, los = [], []
-            for payload in pdf[binary_col]:
-                _, _, samples = decoder(bytes(payload))
-                bits = audio_sign_bits(samples, frames)
-                los.append(sum(bit << i for i, bit in enumerate(bits[:32])))
-                his.append(sum(bit << i for i, bit in enumerate(bits[32:])))
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype("int64"),
-                    "afp_hi": pd.Series(his, dtype="int64"),
-                    "afp_lo": pd.Series(los, dtype="int64"),
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        _batches, "id long, afp_hi long, afp_lo long"
+    energy-sign bits packed by :func:`_pack64`. ``decoder`` is the
+    injectable codec seam (``stdlib_wav_samples`` is REAL for PCM16 WAV;
+    swap ffmpeg/torchaudio for compressed codecs)."""
+    return _map_payloads(
+        df,
+        id_col,
+        binary_col,
+        lambda b: [_pack64(audio_sign_bits(decoder(b)[2], frames))],
+        "id long, afp_hi long, afp_lo long",
     )
 
 
@@ -1067,6 +1022,19 @@ def pattern_samples(
     return np.repeat(v * gain, frame_len).tolist()
 
 
+def _attach_from_id(
+    df: DataFrame, id_col: str, out_col: str, make: Callable[[int], bytes]
+) -> DataFrame:
+    """``df`` plus ``out_col = make(id)``: the one Arrow-batched UDF the
+    id-derivable payload attachers share."""
+
+    @F.pandas_udf("binary")
+    def _make(ids: pd.Series) -> pd.Series:
+        return ids.map(lambda x: make(int(x)))
+
+    return df.withColumn(out_col, _make(F.col(id_col)))
+
+
 def attach_pattern_wav(
     df: DataFrame,
     id_col: str,
@@ -1081,17 +1049,12 @@ def attach_pattern_wav(
     payloads (the gain multiplies every sample) with the SAME energy
     ordering — the content-vs-bytes distinction the audio dedup tier
     exists for."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _wav(i: pd.Series) -> pd.Series:
-        return i.map(
-            lambda x: synth_wav(
-                pattern_samples(int(x), frames, frame_len, keys, gains)
-            )
-        )
-
-    return df.withColumn(out_col, _wav(F.col(id_col)))
+    return _attach_from_id(
+        df,
+        id_col,
+        out_col,
+        lambda x: synth_wav(pattern_samples(x, frames, frame_len, keys, gains)),
+    )
 
 
 def pattern_pixels(
@@ -1155,20 +1118,14 @@ def attach_pattern_png(
     carry byte-DIFFERENT payloads, so any pair the pixel-level dedup
     finds is invisible to md5 — the content-vs-bytes distinction the
     operator exists for."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _png(i: pd.Series) -> pd.Series:
-        return i.map(
-            lambda x: synth_png_gray(
-                size,
-                size,
-                pattern_pixels(int(x), size, grid, keys, levels),
-                filter_type=int(x) % 3,
-            )
-        )
-
-    return df.withColumn(out_col, _png(F.col(id_col)))
+    return _attach_from_id(
+        df,
+        id_col,
+        out_col,
+        lambda x: synth_png_gray(
+            size, size, pattern_pixels(x, size, grid, keys, levels), filter_type=x % 3
+        ),
+    )
 
 
 def attach_text_payload(df: DataFrame, text_col: str, out_col: str = "payload") -> DataFrame:
@@ -1185,13 +1142,9 @@ def attach_synth_png(
     the id-derivable dims let an external oracle predict what a genuine
     header decode must return, turning the synthesize→parse round trip
     into a checkable contract."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _png(i: pd.Series) -> pd.Series:
-        return i.map(lambda x: synth_png(1 + int(x) % mod, 1 + (int(x) * 7) % mod))
-
-    return df.withColumn(out_col, _png(F.col(id_col)))
+    return _attach_from_id(
+        df, id_col, out_col, lambda x: synth_png(1 + x % mod, 1 + (x * 7) % mod)
+    )
 
 
 # ------------------------------------------------------------ video tier
@@ -1258,28 +1211,17 @@ def video_frame_ahash(
     one Arrow pass parses the container, decodes each frame, and hashes
     it with the image tier's integer aHash packing."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, his, los = [], [], [], []
-            for vid, payload in zip(pdf[id_col], pdf[binary_col]):
-                for f, fr in enumerate(frame_parser(bytes(payload))):
-                    w, h, px = decoder(fr)
-                    bits = ahash_bits(px, w, h, grid)
-                    ids.append(vid)
-                    idxs.append(f)
-                    los.append(sum(bit << i for i, bit in enumerate(bits[:32])))
-                    his.append(sum(bit << i for i, bit in enumerate(bits[32:])))
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "frame_index": pd.Series(idxs, dtype="int32"),
-                    "ahash_hi": pd.Series(his, dtype="int64"),
-                    "ahash_lo": pd.Series(los, dtype="int64"),
-                }
-            )
+    def _frames(b: bytes) -> Iterator[tuple[int, int, int]]:
+        for f, fr in enumerate(frame_parser(b)):
+            w, h, px = decoder(fr)
+            yield (f, *_pack64(ahash_bits(px, w, h, grid)))
 
-    return df.select(id_col, binary_col).mapInPandas(
-        _batches, "id long, frame_index int, ahash_hi long, ahash_lo long"
+    return _map_payloads(
+        df,
+        id_col,
+        binary_col,
+        _frames,
+        "id long, frame_index int, ahash_hi long, ahash_lo long",
     )
 
 
@@ -1462,27 +1404,22 @@ def attach_pattern_video(
     same-group videos are byte-different everywhere — rotated frame
     order, shifted brightness, different filters — yet min-Hamming 0 or
     near-0 in content."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _vid(i: pd.Series) -> pd.Series:
-        return i.map(
-            lambda x: synth_video(
-                [
-                    synth_png_gray(
-                        size,
-                        size,
-                        pattern_video_pixels(
-                            int(x), f, size, grid, n_frames, keys, levels
-                        ),
-                        filter_type=(int(x) + f) % 3,
-                    )
-                    for f in range(n_frames)
-                ]
-            )
-        )
-
-    return df.withColumn(out_col, _vid(F.col(id_col)))
+    return _attach_from_id(
+        df,
+        id_col,
+        out_col,
+        lambda x: synth_video(
+            [
+                synth_png_gray(
+                    size,
+                    size,
+                    pattern_video_pixels(x, f, size, grid, n_frames, keys, levels),
+                    filter_type=(x + f) % 3,
+                )
+                for f in range(n_frames)
+            ]
+        ),
+    )
 
 
 # --------------------------------------------------------------------------

@@ -129,7 +129,7 @@ def bm25_scores(
 
     # global top-k: topk's orderBy+limit plans as TakeOrderedAndProject
     # (per-partition heaps, no full sort, no corpus-sized single-partition
-    # window) — the rank window then runs over only the k survivors
+    # window) — only the k survivors are ranked
     return topk(
         per_doc, top_k, "bm25_e8", "id", keep=["n_terms_hit", "dl"]
     ).select("id", "n_terms_hit", "dl", "bm25_e8", "rank")

@@ -95,7 +95,7 @@ def hotness_report(df: DataFrame, key_col: str, top_k: int = 10) -> DataFrame:
 
     Two-level shape: the per-key count partial-aggregates map-side; the
     ungrouped ``topk`` is a bounded ORDER BY + LIMIT (TakeOrdered — no
-    global sort) whose rank window runs over ≤ top_k rows.
+    global sort) that ranks only the ≤ top_k survivors.
     """
     counts = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("n"))
     totals = counts.agg(

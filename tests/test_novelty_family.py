@@ -205,9 +205,9 @@ def test_source_gate_axes_are_independent(spark, tmp_path):
 
 def test_global_rankers_take_ordered_not_global_window(spark, sf_dir):
     """The corpus-sized global top-k must plan TakeOrderedAndProject
-    (per-partition heaps); the rank window may only ever see the ≤ k
-    surviving rows — never the corpus (the single-partition-window
-    scale killer)."""
+    (per-partition heaps); only the ≤ k surviving rows are ranked,
+    never the corpus (a single-partition rank window is the scale
+    killer)."""
     for name in (
         "text_bm25_topk",
         "retrieval_rrf_fusion",

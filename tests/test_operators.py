@@ -190,11 +190,12 @@ def _duckdb_topk(rows, k, by=("query_id",), score="cosine", id="neighbor_id",
     ``row_number() OVER (PARTITION BY by ORDER BY score DESC, id)`` with
     its default NULLS LAST, as (by…, id, score, rank) tuples."""
     import duckdb
-    import pandas as pd
+    import pyarrow as pa
 
     cols = [*by, id, score]
     con = duckdb.connect()
-    con.register("scored", pd.DataFrame(rows, columns=cols))
+    # Arrow keeps a NULL score apart from a NaN one (pandas would not)
+    con.register("scored", pa.table({c: [r[i] for r in rows] for i, c in enumerate(cols)}))
     part = f"PARTITION BY {', '.join(by)}" if by else ""
     sql = f"""
         SELECT {', '.join(cols)}, rank FROM (
@@ -203,12 +204,13 @@ def _duckdb_topk(rows, k, by=("query_id",), score="cosine", id="neighbor_id",
             ) AS rank FROM scored
         ) WHERE rank <= {k}
     """
-    out = con.execute(sql).fetchall()
-    # pandas carries a NULL double as NaN; hand it back as None
-    return sorted(
-        tuple(None if isinstance(v, float) and v != v else v for v in r)
-        for r in out
-    )
+    return _nan_tagged(con.execute(sql).fetchall())
+
+
+def _nan_tagged(rows):
+    """Sorted tuples with each NaN replaced by the string "NaN", so that
+    rows compare by value (NaN != NaN)."""
+    return sorted(tuple("NaN" if isinstance(v, float) and v != v else v for v in r) for r in rows)
 
 
 def test_topk_matches_duckdb_row_number(spark, sf_dir):
@@ -239,23 +241,24 @@ def test_topk_matches_duckdb_row_number(spark, sf_dir):
 @pytest.mark.parametrize("by", [("g",), ()])
 def test_topk_ties_and_nulls_match_duckdb(spark, by, ascending):
     """Tie-heavy scores (one decimal, so most groups hold several equal
-    scores), NULL scores, groups smaller than k and a group of only
-    NULLs: both plans — grouped and global — must equal DuckDB's
-    row_number ranking, ties on ascending id and NULL last in both
-    directions."""
+    scores), NULL and NaN scores, groups smaller than k and a group of
+    only NULLs: both plans — grouped and global — must equal DuckDB's
+    row_number ranking, ties on ascending id, NaN above every number and
+    NULL last in both directions."""
     import collections
     import random
 
+    nan = float("nan")
     rnd = random.Random(11)
     rows = []
     for g in range(8):
         for i in range(rnd.randint(1, 12)):
             v = None if rnd.random() < 0.15 else round(rnd.random(), 1)
             rows.append((g, 100 * g + i, v))
-    rows += [(8, 900, None), (8, 901, None)]
+    rows += [(8, 900, None), (8, 901, None), (9, 910, 0.5), (9, 911, nan), (3, 399, nan)]
     df = spark.createDataFrame(rows, "g long, id long, s double")
     k = 4
-    got = sorted(map(tuple, topk(df, k, "s", "id", by=by, ascending=ascending).collect()))
+    got = _nan_tagged(topk(df, k, "s", "id", by=by, ascending=ascending).collect())
     picked = [r if by else r[1:] for r in rows]
     want = _duckdb_topk(picked, k, by=by, score="s", id="id", ascending=ascending)
     sizes = collections.Counter(g for g, _, _ in rows).values()
@@ -727,6 +730,68 @@ def test_audio_stub_raises(spark):
     out = M.extract_audio_features(df, "id", "payload")
     with pytest.raises(Exception, match="NotImplementedError|audio decode"):
         out.collect()
+
+
+_PNG = M.synth_png_gray(32, 32, M.pattern_pixels(3))
+_WAV = M.synth_wav(M.pattern_samples(3))
+_SVID = M.synth_video([_PNG, M.synth_png_gray(32, 32, M.pattern_pixels(4))])
+
+#: each media operator → (call, payload, the output schema it declares)
+_MEDIA_OPERATORS = {
+    "extract_binary_metadata": (
+        M.extract_binary_metadata, _PNG, "id long, size_bytes long, md5_hex string, format string"
+    ),
+    "image_ahash": (M.image_ahash, _PNG, "id long, ahash_hi long, ahash_lo long"),
+    "decode_image": (
+        M.decode_image,
+        _PNG,
+        "id long, size_bytes long, md5_hex string, width int, height int, channels int",
+    ),
+    "sample_frames": (
+        lambda df, i, b: M.sample_frames(df, i, b, every_n_bytes=64),
+        _PNG,
+        "id long, frame_index int, frame_md5 string",
+    ),
+    "resize_image": (
+        lambda df, i, b: M.resize_image(df, i, b, 16, 16),
+        _PNG,
+        "id long, width int, height int, payload binary",
+    ),
+    "extract_audio_features": (
+        lambda df, i, b: M.extract_audio_features(df, i, b, extractor=M.stdlib_wav_features),
+        _WAV,
+        "id long, duration_s double, sample_rate int, rms double",
+    ),
+    "audio_fingerprint": (M.audio_fingerprint, _WAV, "id long, afp_hi long, afp_lo long"),
+    "video_frame_ahash": (
+        M.video_frame_ahash, _SVID, "id long, frame_index int, ahash_hi long, ahash_lo long"
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_MEDIA_OPERATORS))
+def test_media_operator_contract(spark, name):
+    """Every media operator runs on the shared per-payload Arrow map,
+    which types the output from the declared schema alone: the schema is
+    the declared DDL, collected values carry its types, and an empty
+    input split over several partitions returns no rows."""
+    op, payload, ddl = _MEDIA_OPERATORS[name]
+    want = spark.createDataFrame([], ddl).schema
+    df = spark.createDataFrame([(7, payload), (8, payload)], "id long, payload binary")
+    out = op(df, "id", "payload")
+    assert out.schema == want
+    rows = out.collect()
+    assert rows and {r["id"] for r in rows} == {7, 8}
+    py = {"LongType": int, "IntegerType": int, "StringType": str, "DoubleType": float,
+          "BinaryType": (bytes, bytearray)}
+    for r in rows:
+        for f in want.fields:
+            assert isinstance(r[f.name], py[type(f.dataType).__name__]), (f.name, r)
+    empty = spark.createDataFrame([], "id long, payload binary").repartition(3)
+    assert op(empty, "id", "payload").count() == 0
+    if name == "video_frame_ahash":
+        no_frames = M.video_frame_ahash(df, "id", "payload", frame_parser=lambda b: [])
+        assert no_frames.schema == want and no_frames.count() == 0
 
 
 def test_ivf_ann_recall_beats_lsh(spark, sf_dir):

@@ -7,6 +7,7 @@ and the LSH self-join is an equi-join (never a cartesian product).
 
 from __future__ import annotations
 
+from sample_deepbook_margin_dune_dbt_spark.operators.topk import topk
 from sample_deepbook_margin_dune_dbt_spark.plans import audit_plan, explain_str
 from sample_deepbook_margin_dune_dbt_spark.queries import FULL_QUERIES as ALL_QUERIES
 
@@ -175,11 +176,18 @@ def test_bounded_topk_plans_no_window_sort(spark, sf_dir):
     """A grouped ``topk`` must not plan a Window over all candidates: the
     bounded two-level aggregation shows up as hash/object-hash
     aggregates, with no Window node and no global sort of the scored
-    candidates — for the ANN ranking and for the Hamming search."""
+    candidates — for the ANN ranking and for the Hamming search. A
+    global ``topk`` plans TakeOrderedAndProject and numbers its ≤ k
+    survivors without a Window (an unpartitioned one moves its input to
+    a single partition)."""
     for name in ("ann_cosine_topk", "multimodal_phash_topk"):
         fn, _ = ALL_QUERIES[name]
         plan = explain_str(fn(spark, sf_dir), "simple")
         assert "Window" not in plan, f"{name}: bounded top-k must not fall back to a window"
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    plan = explain_str(topk(emb, 5, "vec_id", "vec_id", by=()), "simple")
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "Window" not in plan, plan
 
 
 def test_cdc_chunking_is_narrow_map(spark, sf_dir):
