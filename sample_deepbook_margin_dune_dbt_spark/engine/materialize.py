@@ -17,7 +17,11 @@ Every sink (``write_full``, ``append``, ``insert_overwrite``, ``merge``,
 ``replace_scope``) is one DataFrame expression plus one commit,
 ``_commit(df, name, partition_by, op, keep)``, which writes ``df`` into a
 fresh directory, hard-links the previous files the sink keeps, and
-publishes. ``keep`` says which previous files carry over:
+publishes. The fresh directory also gets ``_schema.json``, the data schema
+of what the commit wrote (``tablemeta.py``): readers use it instead of a
+schema-inference job, and the high-water-mark probe answers ``max(col)``
+from it, the directory names and the parquet footers without a job.
+``keep`` says which previous files carry over:
 
 - ``"none"``: full rewrite (``write_full``, ``replace_scope``, and a MERGE
   of an unpartitioned or schema-altering table);
@@ -58,6 +62,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import tablemeta
 
 
 def _split_merge_scope(
@@ -119,17 +125,6 @@ def _touched_partition_predicate(touched_rows, partition_by: list[str]) -> F.Col
     return pred
 
 
-def _partition_subdirs(d: str) -> set[str]:
-    """Relative paths of the leaf partition directories holding data under ``d``."""
-    out: set[str] = set()
-    for root, _dirs, files in os.walk(d):
-        if any(f.endswith(".parquet") for f in files):
-            rel = os.path.relpath(root, d)
-            if rel != ".":
-                out.add(rel)
-    return out
-
-
 def _link_tree(src: str, dst: str, skip_partition_dirs: set[str]) -> None:
     """Hard-link every parquet file under ``src`` into ``dst``, preserving
     the relative (partition) layout, skipping files whose partition
@@ -178,7 +173,7 @@ class TableStore:
         )
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(name))
+        return tablemeta.read(self.spark, self.path(name))
 
     # -------------------------------------------------------------- commits
 
@@ -198,7 +193,9 @@ class TableStore:
         """Write ``df`` into the new directory ``fresh``, then hard-link the
         current files ``keep`` retains: ``"none"``, ``"untouched"`` (every
         partition the write did not produce, as Spark encoded it — never
-        re-encoded in Python) or ``"all"``.
+        re-encoded in Python) or ``"all"``. Last, record ``df``'s data
+        schema in ``fresh/_schema.json`` (:func:`.tablemeta.write_schema`),
+        so it publishes with the files it describes.
 
         Empty-input edge: a *partitioned* write of zero rows produces no
         files at all (no partition dirs, no schema), so a full rewrite
@@ -214,8 +211,9 @@ class TableStore:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(fresh)
         if keep != "none":
-            skip = _partition_subdirs(fresh) if keep == "untouched" else set()
+            skip = tablemeta.partition_subdirs(fresh) if keep == "untouched" else set()
             _link_tree(self._data_dir(name), fresh, skip)
+        tablemeta.write_schema(fresh, df.schema)
 
     def _commit(
         self, df: DataFrame, name: str, partition_by: list[str] | None, op: str, keep: str
@@ -465,15 +463,12 @@ class TableStore:
 
     def partition_cols(self, name: str) -> list[str]:
         """Partition columns inferred from the on-disk ``col=value`` layout."""
-        cols: list[str] = []
-        p = self._data_dir(name)
-        while p and os.path.isdir(p):
-            subs = [f for f in os.listdir(p) if "=" in f and os.path.isdir(os.path.join(p, f))]
-            if not subs:
-                break
-            cols.append(subs[0].split("=")[0])
-            p = os.path.join(p, subs[0])
-        return cols
+        return tablemeta.partition_columns(self._data_dir(name))
+
+    def column_max(self, name: str, column: str):
+        """``max(column)`` of the current version from its metadata, or
+        :data:`~.tablemeta.NO_STATS` (see :func:`.tablemeta.column_max`)."""
+        return tablemeta.column_max(self.spark, self._data_dir(name), column)
 
     def optimize(
         self,

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .materialize import TableStore
+from .tablemeta import NO_STATS
 from .versioned import VersionedTableStore
 
 
@@ -413,18 +414,29 @@ class ModelContext:
 
         ``None`` on a non-incremental run or when the target holds no
         non-null value, so a builder filters its input only when there is
-        a mark. The aggregate scans the whole column:
-        ``spark.read.parquet`` is a V1 source and Spark pushes aggregates
-        down only into V2 sources, so the parquet footer min/max go
-        unused. Recording per-table statistics in the commit manifest is
-        the planned fix (ROADMAP item 3).
+        a mark. The store answers from the metadata its commit wrote
+        (:meth:`TableStore.column_max`): the directory values of a
+        partition column, the parquet footer statistics of an integral or
+        date column — no Spark job. Any other column, or a table committed
+        without ``_schema.json``, takes one aggregate job that scans the
+        column: Spark pushes aggregates down only into V2 sources, and
+        ``spark.read.parquet`` is V1.
         """
         if not self.is_incremental():
             return None
-        return self.this().agg(F.max(F.col(column)).alias("wm")).first()["wm"]
+        wm = self._stored_max(column)
+        if wm is NO_STATS:
+            wm = self.this().agg(F.max(F.col(column)).alias("wm")).first()["wm"]
+        return wm
+
+    def _stored_max(self, column: str):
+        """``max(column)`` of ``{{ this }}`` from the store's metadata, or
+        :data:`NO_STATS`."""
+        return self.store.column_max(self.current.name, column)
 
     def watermark_ms(self, column: str = "timestamp_ms") -> int:
-        """``select coalesce(max(col), 0) from {{ this }}`` (SURVEY §2.2 P4/A2)."""
+        """``select coalesce(max(col), 0) from {{ this }}`` (SURVEY §2.2
+        P4/A2), through :meth:`watermark`."""
         return int(self.watermark(column) or 0)
 
     def backfill_floor_ms(self) -> int:

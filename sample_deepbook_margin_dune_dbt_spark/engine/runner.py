@@ -352,11 +352,11 @@ class Runner:
         pass/warn/error (error also when the source is empty — an empty
         feed is the stalest possible feed). The probe is one scalar MAX
         per source, which scans the whole column: a parquet source is a
-        V1 source and Spark pushes aggregates down only into V2 sources
-        (same cost as the incremental watermark; ROADMAP item 3 plans
-        manifest statistics as the fix). The clock is the
-        context's UTC ``now_dt()`` (the runner's injectable ``fixed_now``
-        when set, so tests are deterministic).
+        V1 source and Spark pushes aggregates down only into V2 sources.
+        Sources are not committed by the store, so they carry none of the
+        metadata the watermark probe answers from (``tablemeta.py``). The
+        clock is the context's UTC ``now_dt()`` (the runner's injectable
+        ``fixed_now`` when set, so tests are deterministic).
         """
         from pyspark.sql import functions as F
 

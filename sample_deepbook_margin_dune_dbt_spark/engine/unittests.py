@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .materialize import TableStore
 from .model import ModelContext, get_model
+from .tablemeta import NO_STATS
 
 MockData = tuple[str, list]  # (schema DDL, rows)
 
@@ -112,6 +113,9 @@ class _MockedContext(ModelContext):
 
     def this(self) -> DataFrame:
         return self._mock("this")
+
+    def _stored_max(self, column: str):
+        return NO_STATS  # the probe aggregates the mocked ``this``
 
     def is_incremental(self) -> bool:
         return self._ut.incremental

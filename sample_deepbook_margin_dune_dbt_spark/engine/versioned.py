@@ -25,7 +25,8 @@ the reference actually relies on:
         _v/v00000001.json     # commit manifests: ts, op, snapshot dir
         _v/v00000002.json
         snap-00000001/        # immutable snapshot directories
-        snap-00000002/        # (parquet files / col=value partition dirs)
+        snap-00000002/        # (parquet files / col=value partition dirs,
+                              #  _schema.json: the data schema, tablemeta.py)
 
 A commit writes its snapshot directory first, then renames a complete
 manifest into ``_v/`` — the rename IS the commit (atomic on POSIX), so a
@@ -69,6 +70,7 @@ import time
 
 from pyspark.sql import DataFrame
 
+from . import tablemeta
 from .materialize import TableStore
 
 _VDIR = "_v"
@@ -175,7 +177,7 @@ class VersionedTableStore(TableStore):
                 f"version {version} of {name!r} not found "
                 f"(have {self._manifests(name)} — vacuumed?)"
             )
-        return self.spark.read.parquet(self._snap_dir(name, version))
+        return tablemeta.read(self.spark, self._snap_dir(name, version))
 
     def as_of(self, name: str, ts: float) -> DataFrame:
         return self.read(name, as_of_ts=ts)

@@ -573,25 +573,6 @@ def banded_hamming_bucket_stats(
     )
 
 
-def image_band_bucket_stats(
-    df: DataFrame,
-    id_col: str,
-    binary_col: str,
-    bands: int = 8,
-    grid: int = 8,
-    decoder: Callable[[bytes], tuple[int, int, bytes]] = stdlib_png_pixel_decode,
-    band_arity: int = 1,
-) -> DataFrame:
-    """``banded_hamming_bucket_stats`` over the aHash signatures
-    ``image_near_dup_pairs`` buckets on — same decoder, same grid, same
-    band slicing AND arity, so the report matches the pair tier's cap
-    exactly."""
-    sig = image_ahash(df, id_col, binary_col, grid=grid, decoder=decoder)
-    return banded_hamming_bucket_stats(
-        sig, "ahash_hi", "ahash_lo", bands, band_arity
-    )
-
-
 def _bucket_candidate_pairs(ex: DataFrame, max_bucket_size: int) -> DataFrame:
     """Distinct (id_a, id_b), a < b, from (_id, bk) band rows:
     bucket-collect + in-bucket pair expansion (the
@@ -964,25 +945,6 @@ def audio_near_dup_pairs(
     )
 
 
-def audio_band_bucket_stats(
-    df: DataFrame,
-    id_col: str,
-    binary_col: str,
-    bands: int = 8,
-    frames: int = 64,
-    decoder: Callable[[bytes], tuple[int, int, list[int]]] = stdlib_wav_samples,
-    band_arity: int = 1,
-) -> DataFrame:
-    """``banded_hamming_bucket_stats`` over the energy-sign fingerprints
-    ``audio_near_dup_pairs`` buckets on — same decoder, same frame
-    count, same band slicing AND arity, so the report matches the pair
-    tier's ``max_bucket_size`` cap exactly."""
-    sig = audio_fingerprint(df, id_col, binary_col, frames=frames, decoder=decoder)
-    return banded_hamming_bucket_stats(
-        sig, "afp_hi", "afp_lo", bands, band_arity
-    )
-
-
 def pattern_samples(
     doc_id: int,
     frames: int = 64,
@@ -1300,29 +1262,6 @@ def video_near_dup_pairs(
         .join(hb, "id_b")
         .select("id_a", "id_b", cross_min.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def video_band_bucket_stats(
-    df: DataFrame,
-    id_col: str,
-    binary_col: str,
-    bands: int = 8,
-    grid: int = 8,
-    frame_parser: Callable[[bytes], list[bytes]] = parse_video_frames,
-    decoder: Callable[[bytes], tuple[int, int, bytes]] = stdlib_png_pixel_decode,
-    band_arity: int = 1,
-) -> DataFrame:
-    """``banded_hamming_bucket_stats`` over the FRAME signatures
-    ``video_near_dup_pairs`` buckets on — bucket_size counts DISTINCT
-    videos per (band, key) at the same arity, exactly what the pair
-    tier's cap sees."""
-    sig = video_frame_ahash(
-        df, id_col, binary_col, grid=grid,
-        frame_parser=frame_parser, decoder=decoder,
-    )
-    return banded_hamming_bucket_stats(
-        sig, "ahash_hi", "ahash_lo", bands, band_arity
     )
 
 

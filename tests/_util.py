@@ -4,6 +4,7 @@ module importing them does not load conftest a second time)."""
 from __future__ import annotations
 
 import os
+import uuid
 
 
 def deep_fuzz_enabled() -> bool:
@@ -22,3 +23,16 @@ def fuzz_examples(deep: int, fast: int) -> int:
     example database still replays every previously-found failure in
     BOTH tiers, so regressions caught once stay caught."""
     return deep if deep_fuzz_enabled() else fast
+
+
+def spark_jobs(spark, fn, *args, **kwargs):
+    """``(fn(*args, **kwargs), ids of the Spark jobs it scheduled)``,
+    counted through a job group of its own."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group, False)
+    try:
+        out = fn(*args, **kwargs)
+    finally:
+        sc.setJobGroup("", "", False)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))

@@ -10,18 +10,25 @@ renames cannot be injected from inside the process and is not covered: it
 leaves the table missing, with its previous version intact under
 ``.old-<name>-*``.
 
-The last test pins that the store neither trusts nor mutates the session's
+The next test pins that the store neither trusts nor mutates the session's
 ``spark.sql.sources.partitionOverwriteMode``: under Spark's own STATIC
 default a partition-scoped commit still keeps every untouched partition.
+
+The last one pins, on both stores, that every sink commits the schema of
+what it wrote (``_schema.json``), so ``store.read`` equals a
+schema-inferring read of the same directory without running a job.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
-from sample_deepbook_margin_dune_dbt_spark.engine import TableStore
+from sample_deepbook_margin_dune_dbt_spark.engine import TableStore, VersionedTableStore
+from tests._util import spark_jobs
 
 BASE = [(1, "a", "d1"), (2, "b", "d2"), (3, "c", "d3")]
 UPDATES = [(2, "B", "d2"), (4, "d", "d4")]
@@ -118,3 +125,84 @@ def test_partition_scoped_commits_ignore_session_overwrite_mode(spark, tmp_path)
         assert spark.conf.get(key) == "static"
     finally:
         spark.conf.set(key, prev)
+
+
+# ---------------------------------------------------------------- reads
+
+READ_SCHEMA = "k INT, v STRING, ts TIMESTAMP, tags ARRAY<STRUCT<t: STRING>>, p BIGINT"
+
+
+def _typed(spark, rows):
+    """``(k, v, p)`` triples as rows of ``READ_SCHEMA``. ``p`` is the
+    partition column where a case declares one: a BIGINT whose small
+    values Spark infers back from the directory names as INT, so a read
+    that took the partition type from the written schema would differ."""
+    return spark.createDataFrame(
+        [(k, v, dt.datetime(2026, 1, k), [(v,)], p) for k, v, p in rows], READ_SCHEMA
+    )
+
+
+TYPED_BASE = [(1, "a", 1), (2, "b", 2), (3, "c", None)]
+TYPED_UPDATES = [(2, "B", 2), (4, "d", 4)]
+P = ["p"]
+
+READ_CASES = {
+    "write_full": [lambda s, df: s.write_full(df(TYPED_BASE), "t")],
+    "write_full_partitioned": [lambda s, df: s.write_full(df(TYPED_BASE), "t", P)],
+    "write_full_empty_partitioned": [lambda s, df: s.write_full(df([]), "t", P)],
+    "merge_partitioned": [
+        lambda s, df: s.write_full(df(TYPED_BASE), "t", P),
+        lambda s, df: s.merge(df(TYPED_UPDATES), "t", ["k"], partition_by=P),
+    ],
+    "merge_unpartitioned": [
+        lambda s, df: s.write_full(df(TYPED_BASE), "t"),
+        lambda s, df: s.merge(df(TYPED_UPDATES), "t", ["k"]),
+    ],
+    "merge_append_new_columns": [
+        lambda s, df: s.write_full(df(TYPED_BASE), "t", P),
+        lambda s, df: s.merge(
+            df(TYPED_UPDATES).withColumn("w", F.col("k") * 0.5), "t", ["k"],
+            partition_by=P, on_schema_change="append_new_columns",
+        ),
+    ],
+    "insert_overwrite": [
+        lambda s, df: s.insert_overwrite(df(TYPED_BASE), "t", P),
+        lambda s, df: s.insert_overwrite(df(TYPED_UPDATES), "t", P),
+    ],
+    "append": [
+        lambda s, df: s.append(df(TYPED_BASE), "t", P),
+        lambda s, df: s.append(df(TYPED_UPDATES), "t", P),
+    ],
+    "replace_scope": [
+        lambda s, df: s.write_full(df(TYPED_BASE), "t"),
+        lambda s, df: s.replace_scope(
+            df(TYPED_UPDATES), "t", df(TYPED_UPDATES).select("k"), ["k"]
+        ),
+    ],
+}
+
+
+@pytest.mark.parametrize("store_cls", [TableStore, VersionedTableStore])
+@pytest.mark.parametrize("case", list(READ_CASES))
+def test_read_matches_inference_without_a_job(spark, tmp_path, store_cls, case):
+    """Every sink commits its schema with its files: ``store.read`` gives
+    the schema and rows a schema-inferring read of the same directory
+    gives, and schedules no Spark job — for every version the versioned
+    store keeps."""
+    store = store_cls(spark, str(tmp_path / "wh"))
+    for step in READ_CASES[case]:
+        step(store, lambda rows: _typed(spark, rows))
+
+    if store_cls is VersionedTableStore:
+        reads = {
+            v: (lambda v=v: store.read("t", version=v), store._snap_dir("t", v))
+            for v in (m["version"] for m in store.versions("t"))
+        }
+    else:
+        reads = {"current": (lambda: store.read("t"), store.path("t"))}
+    for label, (read, data_dir) in reads.items():
+        df, jobs = spark_jobs(spark, read)
+        assert jobs == [], (label, jobs)
+        inferred = spark.read.parquet(data_dir)
+        assert df.schema == inferred.schema, label
+        assert sorted(map(repr, df.collect())) == sorted(map(repr, inferred.collect())), label

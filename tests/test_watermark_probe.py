@@ -1,15 +1,21 @@
 """The high-water-mark probe contract: ``ModelContext.watermark(col)`` is
 ``max(col)`` over ``{{ this }}`` — ``None`` on a full refresh and on an
-empty target — on both stores and under a mocked unit-test context; and
-no model builder hand-rolls the probe past it."""
+empty target — on both stores and under a mocked unit-test context; it
+runs no Spark job where the commit's metadata answers; and no model
+builder hand-rolls the probe past it."""
 
 from __future__ import annotations
 
 import ast
 import datetime as dt
+import math
+import os
 import pathlib
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from sample_deepbook_margin_dune_dbt_spark.engine import TableStore
 from sample_deepbook_margin_dune_dbt_spark.engine.model import (
@@ -23,6 +29,7 @@ from sample_deepbook_margin_dune_dbt_spark.engine.unittests import (
     run_unit_test,
 )
 from sample_deepbook_margin_dune_dbt_spark.engine.versioned import VersionedTableStore
+from tests._util import spark_jobs
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "sample_deepbook_margin_dune_dbt_spark"
 SCHEMA = "ts long, d date"
@@ -31,11 +38,22 @@ D = dt.date(2026, 1, 20)
 
 @pytest.mark.parametrize("store_cls", [TableStore, VersionedTableStore])
 def test_watermark_contract_on_both_stores(spark, tmp_path, store_cls):
+    """``watermark`` equals Spark's ``max`` and, wherever the commit's
+    metadata can answer, schedules no Spark job."""
     store = store_cls(spark, str(tmp_path / "wh"))
     cfg = ModelConfig(name="wm_target", builder=lambda ctx: None)
 
     def ctx(full_refresh=False):
         return ModelContext(spark, store, {}, cfg, full_refresh=full_refresh)
+
+    def probe(col, jobs=False):
+        """The mark, checked against Spark's max; ``jobs``: the probe must
+        fall back to the scan instead of answering from metadata."""
+        wm, ran = spark_jobs(spark, ctx().watermark, col)
+        assert bool(ran) == jobs, (col, ran)
+        want = store.read("wm_target").agg(F.max(col)).first()[0]
+        assert wm == want or (math.isnan(wm) and math.isnan(want)), (col, wm, want)
+        return wm
 
     # no target yet: a first build is not incremental
     assert ctx().watermark("ts") is None
@@ -45,7 +63,7 @@ def test_watermark_contract_on_both_stores(spark, tmp_path, store_cls):
         store.write_full(spark.createDataFrame(rows, SCHEMA), "wm_target")
         c = ctx()
         assert c.is_incremental()
-        assert c.watermark("ts") is None
+        assert probe("ts") is None and probe("d") is None
         assert c.watermark_ms("ts") == 0
         assert c.lookback_floor_date("d") is None
 
@@ -54,8 +72,8 @@ def test_watermark_contract_on_both_stores(spark, tmp_path, store_cls):
         "wm_target",
     )
     c = ctx()
-    assert c.watermark("ts") == 9
-    assert c.watermark("d") == D
+    assert probe("ts") == 9
+    assert probe("d") == D
     assert c.watermark_ms("ts") == 9
     assert c.lookback_floor_date("d") == D - dt.timedelta(days=7)
 
@@ -64,6 +82,35 @@ def test_watermark_contract_on_both_stores(spark, tmp_path, store_cls):
     assert c.watermark("ts") is None
     assert c.watermark_ms("ts") == 0
     assert c.lookback_floor_date("d") is None
+
+    # a date partition column with a NULL partition, and a double column
+    # holding NaN, which Spark orders above every number: only the double
+    # falls back to the scan
+    rows = [(5, D, 1.0, 1), (9, D - dt.timedelta(days=3), float("nan"), 2), (7, None, 2.0, 3)]
+    schema = "ts long, d date, x double, k int"
+    store.write_full(spark.createDataFrame(rows, schema), "wm_target", partition_by=["d"])
+    assert probe("d") == D and probe("ts") == 9
+    assert math.isnan(probe("x", jobs=True))
+
+    # a merge that replaces the max row with a lower value
+    store.merge(
+        spark.createDataFrame([(4, D - dt.timedelta(days=3), 0.5, 2)], schema),
+        "wm_target", ["k"], partition_by=["d"],
+    )
+    assert probe("ts") == 7 and probe("d") == D and probe("x", jobs=True) == 2.0
+
+    # a row group without statistics (a file written outside Spark) falls back
+    part = os.path.join(store._data_dir("wm_target"), f"d={D}")
+    pq.write_table(
+        pa.table({"ts": pa.array([11], pa.int64()), "x": [0.0], "k": pa.array([9], pa.int32())}),
+        os.path.join(part, "no-stats.parquet"),
+        write_statistics=False,
+    )
+    assert probe("ts", jobs=True) == 11 and probe("d") == D
+
+    # a table committed without _schema.json: every probe falls back
+    os.remove(os.path.join(store._data_dir("wm_target"), "_schema.json"))
+    assert probe("ts", jobs=True) == 11 and probe("d", jobs=True) == D
 
 
 def test_watermark_contract_under_a_mocked_unit_test(spark):
