@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import tablemeta
+from .staging import stage
 
 
 def _split_merge_scope(
@@ -366,8 +367,7 @@ class TableStore:
             altering = widen or bool(gone_cols)
 
             if partition_by and self.partition_cols(name) and not altering:
-                updates = updates.persist()
-                try:
+                with stage(updates) as updates:
                     touched = updates.select(*partition_by).distinct().collect()
                     if touched:
                         old = old.filter(_touched_partition_predicate(touched, partition_by))
@@ -376,8 +376,6 @@ class TableStore:
                             incremental_predicates=incremental_predicates,
                         )
                         self._commit(merged, name, partition_by, "merge", "untouched")
-                finally:
-                    updates.unpersist()
                 return
 
             # unpartitioned layout (incl. a table created empty that now

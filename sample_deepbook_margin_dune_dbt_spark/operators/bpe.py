@@ -20,9 +20,10 @@ story here:
   over the vocab-sized table (`pandas_udf`), left-to-right with
   non-overlap exactly like the reference algorithm;
 - each round ``localCheckpoint``s the rewritten sequences so the lineage
-  (and re-execution) doesn't grow with the merge count — the same loop
-  discipline as the connected-components operator
-  (``operators/dedup.py``).
+  (and re-execution) doesn't grow with the merge count, and releases the
+  previous round's checkpoint once the new one is materialized — the
+  same loop discipline as the connected-components operator
+  (``operators/dedup.py``). Only the returned sequences stay staged.
 
 Driver state is ``n_merges`` merge rules and one argmax row per round —
 bounded, never data-sized.
@@ -34,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
+
+from ..engine.staging import release
 
 __all__ = ["word_histogram", "learn_bpe", "bpe_merge_table", "bpe_encode"]
 
@@ -82,7 +85,8 @@ def learn_bpe(
     Returns ``(rules, final_seqs)``: rules are Rows of (rank, left,
     right, merged, pair_freq); ``final_seqs`` is the histogram with each
     word's post-merge symbol sequence (the input to vocabulary/token-id
-    assignment). Stops early when no adjacent pair remains.
+    assignment), a local checkpoint the caller owns. Stops early when no
+    adjacent pair remains.
     """
     seqs = word_freqs.select(
         "word",
@@ -129,11 +133,11 @@ def learn_bpe(
                 pair_freq=int(best["pair_freq"]),
             )
         )
-        old = seqs
-        seqs = seqs.withColumn(
+        merged = seqs.withColumn(
             "syms", _merge_udf(best["a"], best["b"])(F.col("syms"))
         ).localCheckpoint()
-        old.unpersist()
+        release(seqs)
+        seqs = merged
     return rules, seqs
 
 

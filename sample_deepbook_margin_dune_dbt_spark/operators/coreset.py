@@ -27,7 +27,8 @@ induction in ``operators/bpe.py``):
   chained column updates would otherwise stack k Arrow stages into one
   task's plan (the BPE lesson); the checkpoint holds only
   (id, vec, max_sim), the working set a 1000-executor cluster already
-  holds for the scan;
+  holds for the scan, and each round releases the one before it (the
+  result is built on the driver, so none outlives the call);
 - distances are cosine (vectors L2-normalized inside the scoring
   pass); selection compares ``floor(sim · 1e6)`` ints with id
   tiebreaks, so the chosen sequence is deterministic across runs,
@@ -41,6 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from ..engine.staging import release
 
 _E6 = 1_000_000
 
@@ -112,33 +115,38 @@ def kcenter_greedy(
         .localCheckpoint()
     )
 
-    seed = state.orderBy(F.asc("_id")).limit(1).collect()
-    if not seed:
-        raise ValueError("kcenter_greedy: empty vector set")
-    chosen = [(int(seed[0]["_id"]), 2 * _E6)]
-    center_vec = list(seed[0]["_vec"])
+    try:
+        seed = state.orderBy(F.asc("_id")).limit(1).collect()
+        if not seed:
+            raise ValueError("kcenter_greedy: empty vector set")
+        chosen = [(int(seed[0]["_id"]), 2 * _E6)]
+        center_vec = list(seed[0]["_vec"])
 
-    while len(chosen) < k:
-        sim = _cos_to_center(center_vec)(F.col("_vec"))
-        state = state.withColumn(
-            "_max_sim", F.greatest(F.col("_max_sim"), sim)
-        ).localCheckpoint()
-        chosen_ids = [c[0] for c in chosen]
-        cand = (
-            state.filter(~F.col("_id").isin(chosen_ids))
-            .withColumn(
-                "_dist_e6",
-                F.floor((F.lit(1.0) - F.col("_max_sim")) * _E6).cast("long"),
+        while len(chosen) < k:
+            sim = _cos_to_center(center_vec)(F.col("_vec"))
+            updated = state.withColumn(
+                "_max_sim", F.greatest(F.col("_max_sim"), sim)
+            ).localCheckpoint()
+            release(state)
+            state = updated
+            chosen_ids = [c[0] for c in chosen]
+            cand = (
+                state.filter(~F.col("_id").isin(chosen_ids))
+                .withColumn(
+                    "_dist_e6",
+                    F.floor((F.lit(1.0) - F.col("_max_sim")) * _E6).cast("long"),
+                )
+                .orderBy(F.desc("_dist_e6"), F.asc("_id"))
+                .limit(1)
+                .collect()
             )
-            .orderBy(F.desc("_dist_e6"), F.asc("_id"))
-            .limit(1)
-            .collect()
-        )
-        if not cand:
-            break  # fewer distinct points than k
-        row = cand[0]
-        chosen.append((int(row["_id"]), int(row["_dist_e6"])))
-        center_vec = list(row["_vec"])
+            if not cand:
+                break  # fewer distinct points than k
+            row = cand[0]
+            chosen.append((int(row["_id"]), int(row["_dist_e6"])))
+            center_vec = list(row["_vec"])
+    finally:
+        release(state)
 
     spark = vectors.sparkSession
     return spark.createDataFrame(

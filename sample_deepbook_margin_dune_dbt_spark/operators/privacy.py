@@ -87,22 +87,19 @@ def suppress_below_k(
     sensitive_col: str,
     k: int = 5,
     l_div: int = 1,
-    broadcast_census: bool = False,
 ) -> DataFrame:
     """Drop every row whose QI group fails the k-anonymity / l-diversity
     gate (cell suppression — the conservative release transform).
 
-    The verdict join is a plain equi-join on the QI key by default: at a
-    coarse grain AQE broadcasts the |QI|-row census side at runtime, and
-    at a FINE grain (|QI| approaching the corpus — exactly when privacy
-    risk is highest) a forced broadcast would OOM the driver, so the hint
-    is opt-in via ``broadcast_census`` for callers that know their grain.
-    Suppression is monotone in ``k``: raising ``k`` only removes rows.
+    The verdict join is a plain equi-join on the QI key: at a coarse
+    grain AQE broadcasts the |QI|-row census side at runtime, and at a
+    FINE grain (|QI| approaching the corpus — exactly when privacy risk
+    is highest) a forced broadcast would OOM the driver, so there is no
+    broadcast hint. Suppression is monotone in ``k``: raising ``k`` only
+    removes rows.
     """
     census = k_anonymity_census(df, qi_cols, sensitive_col, k=k, l_div=l_div)
     keep = census.filter((F.col("k_ok") == 1) & (F.col("l_ok") == 1)).select(*qi_cols)
-    if broadcast_census:
-        keep = F.broadcast(keep)
     return df.join(keep, on=qi_cols, how="inner")
 
 

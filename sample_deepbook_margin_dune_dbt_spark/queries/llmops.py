@@ -347,10 +347,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.ngram_jaccard_pairs(
         load(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.5
     )
-    # 'auto': label-prop (cheapest on near-clique dedup graphs), with the
-    # O(log n) star fallback if a pathological chain-shaped graph ever
-    # exceeds the round budget — correct output on ANY input
-    return D.duplicate_clusters(pairs, algorithm="auto")
+    return D.duplicate_clusters(pairs)
 
 
 # CTE body shared with the canonical-selection oracle
@@ -1432,7 +1429,7 @@ def q_dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = S.cosine_pairs_lsh(
         emb, "vec_id", "embedding", 0.9, dim=64, n_vectors=_augmented_count(raw)
     )
-    return D.duplicate_clusters(pairs.select("id_a", "id_b"), algorithm="auto")
+    return D.duplicate_clusters(pairs.select("id_a", "id_b"))
 
 
 SQL_EMB_CLUSTERS = """

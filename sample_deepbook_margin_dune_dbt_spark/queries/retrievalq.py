@@ -100,7 +100,7 @@ def q_dedup_canonical_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster costs a combine tree, not one task's buffer."""
     docs = load(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
-    clusters = D.duplicate_clusters(pairs, algorithm="auto")
+    clusters = D.duplicate_clusters(pairs)
     out = D.keep_best_per_cluster(clusters, docs, "doc_id", "n_chars")
     return out.select(
         "cluster_id",
@@ -241,7 +241,7 @@ def q_dedup_cluster_trust(spark: SparkSession, sf_dir: str) -> DataFrame:
     0."""
     docs = load(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
-    clusters = D.duplicate_clusters(pairs, algorithm="auto")
+    clusters = D.duplicate_clusters(pairs)
     out = D.cluster_trust(
         clusters, docs, "doc_id", F.col("source").isin(*_TRUSTED_SOURCES)
     )

@@ -171,7 +171,7 @@ def q_split_cluster_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = D.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
-    clusters = D.duplicate_clusters(pairs, algorithm="auto")
+    clusters = D.duplicate_clusters(pairs)
     keyed = (
         docs.join(clusters.withColumnRenamed("id", "doc_id"), "doc_id", "left")
         .withColumn("cluster_id", F.coalesce("cluster_id", F.col("doc_id")))

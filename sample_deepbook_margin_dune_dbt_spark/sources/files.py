@@ -10,7 +10,7 @@ models consume ordered, size-bounded shards. These close that loop:
   refused: it's an extra full pass and nondeterministic on dirty data.
 - :func:`quarantine` / :func:`quarantine_scope` — split a permissive
   read into (clean, bad) once; the scope form releases the shared parse
-  cache on exit.
+  on exit.
 - :func:`write_jsonl` — line-delimited JSON export (one object per line,
   the interchange format every tokenizer pipeline accepts).
 - :func:`write_training_shards` — rank-range sharding: range-partition
@@ -35,6 +35,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..engine.staging import stage
 
 CORRUPT_COL = "_corrupt_record"
 
@@ -96,16 +98,19 @@ def quarantine(
 
     Spark refuses plans over raw JSON/CSV scans that reference ONLY the
     corrupt-record column (QUERY_ONLY_CORRUPT_RECORD_COLUMN), so the
-    input is cached here — the parse runs once and both halves read the
-    materialized result. The cache lives until the caller releases it:
-    use :func:`quarantine_scope` (preferred — releases on exit) or call
-    ``.unpersist()`` on the parent of either returned frame. At
-    warehouse scale, prefer writing the permissive read to a staging
-    table and splitting from there; the semantics are identical.
+    input is staged here — a lazy local checkpoint: the parse runs once,
+    at the first action, and both halves read its rows. The checkpoint
+    is owned by the returned frames and freed once they are unreachable;
+    :func:`quarantine_scope` (preferred) frees its staged parse on exit
+    instead. At warehouse scale, prefer writing the permissive read to a
+    staging table and splitting from there; the semantics are identical.
     """
-    df = df.cache()
-    clean = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    bad = df.filter(F.col(corrupt_col).isNotNull()).select(corrupt_col)
+    return _split(df.localCheckpoint(eager=False), corrupt_col)
+
+
+def _split(staged: DataFrame, corrupt_col: str) -> tuple[DataFrame, DataFrame]:
+    clean = staged.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
+    bad = staged.filter(F.col(corrupt_col).isNotNull()).select(corrupt_col)
     return clean, bad
 
 
@@ -113,16 +118,11 @@ def quarantine(
 def quarantine_scope(
     df: DataFrame, corrupt_col: str = CORRUPT_COL
 ) -> Iterator[tuple[DataFrame, DataFrame]]:
-    """:func:`quarantine` with a bounded cache lifetime: yields
-    ``(clean, bad)`` and unpersists the shared parse cache on exit, so
-    executor storage memory is handed back the moment the split is
-    consumed (mirrors ``streaming/ingest.py``'s per-batch cache→unpersist
-    discipline)."""
-    cached = df.cache()
-    try:
-        yield quarantine(cached, corrupt_col)
-    finally:
-        cached.unpersist()
+    """:func:`quarantine` with a bounded lifetime: caches the parse, yields
+    ``(clean, bad)`` and releases the cache on exit, so executor storage
+    memory is handed back the moment the split is consumed."""
+    with stage(df) as cached:
+        yield _split(cached, corrupt_col)
 
 
 def write_jsonl(df: DataFrame, path: str, mode: str = "error") -> None:

@@ -8,7 +8,7 @@ landing directory; each micro-batch is exact-deduplicated WITHIN the
 batch (first id per content fingerprint survives) and AGAINST the
 accumulated index (content already in the corpus never re-enters),
 survivors MERGE into the corpus and their MinHash band rows into the
-index, and optionally the batch's band rows join the index to emit
+index, and the batch's band rows join the index to emit
 near-duplicate candidate pairs — all without ever re-shingling the
 accumulated corpus.
 
@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine.materialize import TableStore
+from ..engine.staging import stage
 
 INDEX_SUFFIX = "_fingerprint_index"
 PAIRS_SUFFIX = "_neardup_pairs"
@@ -60,21 +61,20 @@ def stream_dedup_ingest(
     pairs_table: str | None = None,
     dups_table: str | None = None,
     clusters_table: str | None = None,
-    emit_pairs: bool = True,
     emit_clusters: bool = False,
     num_hashes: int = 8,
     band_size: int = 2,
     shingle_n: int = 3,
     reader_options: dict[str, str] | None = None,
-    trigger_once: bool = True,
 ):
-    """Start the landing-dir → deduped-corpus stream; returns the query.
+    """Start the landing-dir → deduped-corpus stream; drains the files
+    present at start, then stops; returns the query.
 
     Tables (defaults derived from ``corpus_table``):
     - ``corpus_table``: surviving documents, MERGE on ``id_col``;
     - ``index_table``: (id, band, band_key, fingerprint), MERGE on
       (id, band) — same layout as ``corpus_fingerprint_index``;
-    - ``pairs_table`` (when ``emit_pairs``): (id_a, id_b) candidates;
+    - ``pairs_table``: (id_a, id_b) candidates;
     - ``dups_table``: audit of dropped duplicates with the surviving
       id and batch provenance — a dropped document is auditable data.
     """
@@ -85,8 +85,6 @@ def stream_dedup_ingest(
     prs_table = pairs_table or corpus_table + PAIRS_SUFFIX
     dup_table = dups_table or corpus_table + DUPS_SUFFIX
     clu_table = clusters_table or corpus_table + CLUSTERS_SUFFIX
-    if emit_clusters and not emit_pairs:
-        raise ValueError("emit_clusters requires emit_pairs")
 
     stream = (
         spark.readStream.schema(schema)
@@ -96,12 +94,11 @@ def stream_dedup_ingest(
     )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch = (
-            batch_df.dropDuplicates([id_col])
-            .withColumn("fingerprint", fingerprint64(F.col(text_col)))
-            .cache()
-        )
-        try:
+        with stage(
+            batch_df.dropDuplicates([id_col]).withColumn(
+                "fingerprint", fingerprint64(F.col(text_col))
+            )
+        ) as batch:
             # within-batch exact dedup: min id per content survives
             keep = batch.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
             unique = batch.join(keep, ["fingerprint", id_col], "left_semi")
@@ -140,39 +137,33 @@ def stream_dedup_ingest(
                 # audit idempotent while keeping per-batch provenance
                 store.merge(audit, dup_table, [id_col, "batch_id"])
 
-            survivors = survivors.cache()
-            try:
+            with stage(survivors) as survivors:
                 store.merge(survivors.drop("fingerprint"), corpus_table, [id_col])
                 bands = minhash_band_rows(
                     survivors, id_col, text_col, num_hashes, band_size, shingle_n
                 ).join(survivors.select(id_col, "fingerprint"), id_col)
                 store.merge(bands, idx_table, [id_col, "band"])
 
-                if emit_pairs:
-                    idx = store.read(idx_table)
-                    new_bands = bands.select(
-                        F.col(id_col).alias("_nid"), "band", "band_key"
+                idx = store.read(idx_table)
+                new_bands = bands.select(
+                    F.col(id_col).alias("_nid"), "band", "band_key"
+                )
+                pairs = (
+                    new_bands.join(idx, ["band", "band_key"])
+                    .filter(F.col("_nid") != F.col(id_col))
+                    .select(
+                        F.least("_nid", id_col).alias("id_a"),
+                        F.greatest("_nid", id_col).alias("id_b"),
                     )
-                    pairs = (
-                        new_bands.join(idx, ["band", "band_key"])
-                        .filter(F.col("_nid") != F.col(id_col))
-                        .select(
-                            F.least("_nid", id_col).alias("id_a"),
-                            F.greatest("_nid", id_col).alias("id_b"),
-                        )
-                        .distinct()
+                    .distinct()
+                )
+                if pairs.limit(1).count() > 0:
+                    store.merge(pairs, prs_table, ["id_a", "id_b"])
+                if emit_clusters:
+                    _fold_clusters(
+                        store, clu_table, pairs,
+                        survivors.select(F.col(id_col).alias("doc_id")),
                     )
-                    if pairs.limit(1).count() > 0:
-                        store.merge(pairs, prs_table, ["id_a", "id_b"])
-                    if emit_clusters:
-                        _fold_clusters(
-                            store, clu_table, pairs,
-                            survivors.select(F.col(id_col).alias("doc_id")),
-                        )
-            finally:
-                survivors.unpersist()
-        finally:
-            batch.unpersist()
 
     def _fold_clusters(store, clu_table, new_pairs, new_docs) -> None:
         """One contracted-graph CC step per micro-batch — the SHARED
@@ -188,14 +179,13 @@ def stream_dedup_ingest(
             ["doc_id"],
         )
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(_sink)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_decontaminate(
@@ -213,7 +203,6 @@ def stream_decontaminate(
     k: int = 8,
     spans_table: str | None = None,
     reader_options: dict[str, str] | None = None,
-    trigger_once: bool = True,
 ):
     """Streaming twin of the span-level decontamination tier
     (``decontaminate_spans`` detection + ``scrub_contaminated_spans``
@@ -256,11 +245,11 @@ def stream_decontaminate(
     )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.dropDuplicates([id_col]).cache()
-        spans = contaminated_spans(
-            batch, id_col, text_col, bench, bench_id_col, bench_text_col, k
-        ).withColumn("batch_id", F.lit(batch_id).cast("long")).cache()
-        try:
+        with stage(batch_df.dropDuplicates([id_col])) as batch, stage(
+            contaminated_spans(
+                batch, id_col, text_col, bench, bench_id_col, bench_text_col, k
+            ).withColumn("batch_id", F.lit(batch_id).cast("long"))
+        ) as spans:
             store.replace_scope(
                 spans, spn_table, batch.select(id_col), [id_col]
             )
@@ -274,15 +263,11 @@ def stream_decontaminate(
                 clean_table,
                 [id_col],
             )
-        finally:
-            spans.unpersist()
-            batch.unpersist()
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(_sink)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

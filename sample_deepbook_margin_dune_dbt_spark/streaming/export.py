@@ -66,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine.materialize import TableStore
+from ..engine.staging import stage
 
 DELTAS_SUFFIX = "_shard_deltas"
 MANIFEST_SUFFIX = "_shard_manifest"
@@ -177,8 +178,7 @@ def shard_export_batch(
             .select(id_col)
         )
         batch = batch.join(F.broadcast(seen), id_col, "left_anti")
-    new = assign_shards(batch, id_col, n_shards).cache()
-    try:
+    with stage(assign_shards(batch, id_col, n_shards)) as new:
         key_row = new.agg(
             F.bit_xor(F.xxhash64(F.col(id_col).cast("string"))).alias("x"),
             F.count(F.lit(1)).alias("n"),
@@ -197,8 +197,6 @@ def shard_export_batch(
             )
             store.merge(delta, dlt_table, ["shard_id", "batch_key"])
             store.merge(new, corpus_table, [id_col])
-    finally:
-        new.unpersist()
     # the manifest is ALWAYS the rollup of the ledger — running it even on
     # empty-new batches repairs a manifest left stale by a crash between
     # the corpus merge and the rollup of a prior attempt. The merge itself
@@ -240,9 +238,9 @@ def stream_shard_export(
     deltas_table: str | None = None,
     manifest_table: str | None = None,
     reader_options: dict[str, str] | None = None,
-    trigger_once: bool = True,
 ):
-    """Start the landing-dir → sharded-corpus stream; returns the query.
+    """Start the landing-dir → sharded-corpus stream; drains the files
+    present at start, then stops; returns the query.
 
     Tables (defaults derived from ``corpus_table``):
     - ``corpus_table``: ingested documents + their ``shard_id``, MERGE on
@@ -280,11 +278,10 @@ def stream_shard_export(
             n_shards, id_col, text_col,
         )
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(_sink)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -25,13 +25,12 @@ def merge_stream(
     partition_by: list[str] | None = None,
     transform: Optional[Callable[[DataFrame], DataFrame]] = None,
     checkpoint_dir: str | None = None,
-    trigger_once: bool = True,
 ):
     """Write a streaming DataFrame into a store table with MERGE semantics.
 
     Each micro-batch is (optionally) transformed and upserted on
     ``unique_key`` — exactly the batch models' sink, so batch and streaming
-    share one materialization path. ``trigger_once`` runs available data then
+    share one materialization path. The stream runs the available data then
     stops (the scheduled-batch pattern the reference uses, expressed as a
     stream).
     """
@@ -43,6 +42,4 @@ def merge_stream(
     writer = stream_df.writeStream.foreachBatch(_sink).outputMode("update")
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine.materialize import TableStore
+from ..engine.staging import stage
 from ..sources.files import CORRUPT_COL
 
 QUARANTINE_SCHEMA_SUFFIX = "_quarantine"
@@ -43,16 +44,14 @@ def stream_jsonl_ingest(
     checkpoint_dir: str,
     quarantine_table: str | None = None,
     reader_options: dict[str, str] | None = None,
-    trigger_once: bool = True,
     event_time_col: str | None = None,
     max_lateness: str | None = None,
 ):
     """Start the landing-dir → corpus ingestion stream.
 
     ``schema`` is the clean-row DDL (the corrupt column is appended
-    internally). Returns the StreamingQuery; with ``trigger_once`` the
-    stream drains available files and stops (the scheduled-batch
-    pattern), otherwise it runs continuously.
+    internally). Returns the StreamingQuery; the stream drains the
+    files present at start and stops (the scheduled-batch pattern).
 
     ``event_time_col`` + ``max_lateness`` (an INTERVAL literal body,
     e.g. ``"7 days"``) enable the reference's late-data contract
@@ -79,8 +78,7 @@ def stream_jsonl_ingest(
     stream = reader.json(landing_dir)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.cache()
-        try:
+        with stage(batch_df) as batch_df:
             clean = batch_df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
             if event_time_col and max_lateness and store.exists(corpus_table):
                 wm = (
@@ -117,14 +115,11 @@ def stream_jsonl_ingest(
             )
             if bad.limit(1).count() > 0:
                 store.append(bad, q_table)
-        finally:
-            batch_df.unpersist()
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(_sink)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

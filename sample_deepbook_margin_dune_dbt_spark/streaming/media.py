@@ -20,7 +20,10 @@ codec decode — the Python-side Arrow floor (PERF.md r14: ~25–40k
 payloads/s per 32-core executor) — touches ONLY the batch; candidate
 generation is the (kind, band, band_key) equi-join of batch band rows
 against the index; verification reads fingerprints already stored (no
-payload is ever re-decoded). A pair is produced by the batch that
+payload is ever re-decoded). The batch's decoded index rows are staged
+once (a DISK_ONLY local checkpoint: the index merge, the pair join and
+the cluster fold read them) and its pairs are cached; both are released
+when the batch ends. A pair is produced by the batch that
 introduces its LATER member, so MERGE on (id_a, id_b) accumulates
 exactly the full-rebuild pair set — the same induction as the batch
 model, lifted through frames for video (every frame of a payload enters
@@ -33,8 +36,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..engine.materialize import TableStore
+from ..engine.staging import stage
 
 MEDIA_SCHEMA = "media_id long, kind string, payload binary"
 
@@ -50,9 +55,9 @@ def stream_media_dedup(
     bands: int = 8,
     band_arity: int = 1,
     max_hamming: int = 6,
-    trigger_once: bool = True,
 ):
-    """Start the landing-dir → media-dedup stream; returns the query.
+    """Start the landing-dir → media-dedup stream; drains the files
+    present at start, then stops; returns the query.
 
     Tables (``media_index_rows`` layout — interoperable with the batch
     DAG models of the same names):
@@ -86,19 +91,21 @@ def stream_media_dedup(
     )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.storagelevel import StorageLevel
-
-        rows = media_index_rows(
-            media_signatures(batch_df.dropDuplicates(["media_id"])),
-            bands,
-            band_arity,
-        ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        try:
+        with stage(
+            media_index_rows(
+                media_signatures(batch_df.dropDuplicates(["media_id"])),
+                bands,
+                band_arity,
+            ),
+            checkpoint=True,
+            storage_level=StorageLevel.DISK_ONLY,
+        ) as rows:
             store.merge(rows, index_table, ["media_id", "frame_index", "band"])
-            pairs = media_neardup_pairs_from_index(
-                rows, store.read(index_table), max_hamming
-            ).cache()
-            try:
+            with stage(
+                media_neardup_pairs_from_index(
+                    rows, store.read(index_table), max_hamming
+                )
+            ) as pairs:
                 if pairs.limit(1).count() > 0:
                     store.merge(pairs, pairs_table, ["id_a", "id_b"])
                 if clusters_table is not None:
@@ -123,16 +130,11 @@ def stream_media_dedup(
                         clusters_table,
                         ["media_id"],
                     )
-            finally:
-                pairs.unpersist()
-        finally:
-            rows.unpersist()
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(_sink)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -35,7 +35,6 @@ def stream_tumbling_agg(
     value_col: str = "value",
     window_duration: str = "6 hours",
     watermark_delay: str = "1 hour",
-    trigger_once: bool = True,
     slide_duration: str | None = None,
 ):
     """Start a file-drop stream aggregating events into event-time windows.
@@ -83,11 +82,10 @@ def stream_tumbling_agg(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         store.merge(batch_df, table, ["bucket_start", key_col])
 
-    writer = (
+    return (
         agg.writeStream.foreachBatch(_sink)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

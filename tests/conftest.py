@@ -4,7 +4,6 @@ import os
 import sys
 
 import pytest
-from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -30,14 +29,6 @@ def spark():
             "spark.sql.adaptive.enabled": os.environ.get(
                 "SPARK_GRAFT_TEST_AQE", "true"
             ),
-            # the 683-test session accumulates localCheckpoint RDD blocks
-            # (staged frames, CC rounds) that the ContextCleaner only
-            # releases after a JVM GC notices the dead references — at the
-            # default 30min periodicGC interval the block manager bloats
-            # and late-running modules slow 3-5x (measured:
-            # test_streaming_joins 91 s in-suite vs 19 s standalone).
-            # bench.py GCs between rounds for the same reason.
-            "spark.cleaner.periodicGC.interval": "1min",
         },
     )
     yield s
@@ -55,25 +46,6 @@ def no_aqe(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     yield spark
     spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _drain_session_garbage(request):
-    """Per-module GC sweep (the bench.py between-rounds discipline):
-    collect Python refs first so dead DataFrame/RDD handles reach the
-    ContextCleaner, then ask the JVM to collect so checkpoint blocks
-    actually leave the block manager before the next module's timing-
-    sensitive work."""
-    yield
-    import gc
-
-    gc.collect()
-    s = SparkSession.getActiveSession()
-    if s is not None:
-        try:
-            s._jvm.System.gc()
-        except Exception:
-            pass
 
 
 @pytest.fixture(scope="session")

@@ -219,7 +219,7 @@ def test_cluster_safe_split_co_assigns_near_dups(spark):
     got_pairs = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got_pairs, "planted near-dup must pair"
 
-    clusters = D.duplicate_clusters(pairs, algorithm="auto")
+    clusters = D.duplicate_clusters(pairs)
     keyed = docs.join(
         clusters.withColumnRenamed("id", "doc_id"), "doc_id", "left"
     ).withColumn("cluster_id", F.coalesce("cluster_id", F.col("doc_id")))

@@ -154,7 +154,7 @@ def test_streaming_merge(spark, tmp_path):
     stream = spark.readStream.schema("id long, v double").parquet(src_dir)
     q = merge_stream(
         stream, store, "t", unique_key=["id"],
-        checkpoint_dir=str(tmp_path / "ckpt"), trigger_once=True,
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     assert {r["id"]: r["v"] for r in store.read("t").collect()} == {1: 10.0, 2: 20.0}
@@ -164,7 +164,7 @@ def test_streaming_merge(spark, tmp_path):
     df2.write.mode("append").parquet(src_dir)
     q2 = merge_stream(
         stream, store, "t", unique_key=["id"],
-        checkpoint_dir=str(tmp_path / "ckpt"), trigger_once=True,
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q2.awaitTermination(120)
     assert {r["id"]: r["v"] for r in store.read("t").collect()} == {1: 10.0, 2: 99.0, 3: 30.0}

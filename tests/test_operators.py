@@ -578,7 +578,8 @@ def test_duplicate_clusters_star_chain_graph(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(999)], "id_a long, id_b long"
     )
-    got = D.duplicate_clusters(pairs, algorithm="star", max_iters=20)
+    sym = D._symmetric_edges(pairs, "id_a", "id_b")
+    got = D._cc_alternating_star(sym, max_iters=20)
     dist = got.groupBy("cluster_id").count().collect()
     assert len(dist) == 1
     assert dist[0]["cluster_id"] == 0 and dist[0]["count"] == 1000
@@ -602,11 +603,9 @@ def test_duplicate_clusters_star_matches_label_prop(spark):
     pairs = spark.createDataFrame(
         [(a, b) for a, b in edges if a != b], "id_a long, id_b long"
     )
-    lp = {r["id"]: r["cluster_id"] for r in D.duplicate_clusters(pairs).collect()}
-    st = {
-        r["id"]: r["cluster_id"]
-        for r in D.duplicate_clusters(pairs, algorithm="star").collect()
-    }
+    sym = D._symmetric_edges(pairs, "id_a", "id_b")
+    lp = {r["id"]: r["cluster_id"] for r in D._cc_label_prop(sym, 20).collect()}
+    st = {r["id"]: r["cluster_id"] for r in D._cc_alternating_star(sym, 20).collect()}
     assert lp == st
 
 
@@ -995,17 +994,24 @@ def test_quality_logit_orders_planted_docs(spark):
 
 
 def test_duplicate_clusters_auto_falls_back_on_chains(spark):
-    """'auto' must self-heal on a high-diameter graph (label-prop hits the
-    round budget → star fallback), while the default raises loudly
-    instead of silently under-merging."""
+    """CC must self-heal on a high-diameter graph (label-prop hits the
+    round budget → star fallback), and raise loudly instead of silently
+    under-merging when the star construction misses its budget too."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(120)], "id_a long, id_b long"
     )
-    got = D.duplicate_clusters(pairs, algorithm="auto", max_iters=10)
+    assert D._cc_label_prop(D._symmetric_edges(pairs, "id_a", "id_b"), 10) is None
+    got = D.duplicate_clusters(pairs, max_iters=10)
     dist = got.groupBy("cluster_id").count().collect()
     assert len(dist) == 1 and dist[0]["count"] == 121
-    with pytest.raises(RuntimeError, match="did not converge"):
-        D.duplicate_clusters(pairs, max_iters=10)
+    # a 16-edge path is one 17-node component; 1 or 3 rounds of either
+    # construction leave it split
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(16)], "id_a long, id_b long"
+    )
+    for max_iters in (1, 3):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            D.duplicate_clusters(path, max_iters=max_iters)
 
 
 def test_histogram_fixed_edges(spark):

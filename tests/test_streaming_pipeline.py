@@ -71,7 +71,7 @@ def test_streaming_event_decode(spark, tmp_path):
         stream, store, "loan_borrowed_stream",
         unique_key=["transaction_digest", "event_index"],
         transform=_decode,
-        checkpoint_dir=str(tmp_path / "ckpt"), trigger_once=True,
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     rows = {r["transaction_digest"]: r for r in store.read("loan_borrowed_stream").collect()}
@@ -87,7 +87,7 @@ def test_streaming_event_decode(spark, tmp_path):
         stream, store, "loan_borrowed_stream",
         unique_key=["transaction_digest", "event_index"],
         transform=_decode,
-        checkpoint_dir=str(tmp_path / "ckpt"), trigger_once=True,
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q2.awaitTermination(120)
     rows = {r["transaction_digest"]: r for r in store.read("loan_borrowed_stream").collect()}
