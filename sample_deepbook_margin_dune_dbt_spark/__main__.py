@@ -20,7 +20,7 @@ from __future__ import annotations
 import argparse
 import sys
 
-from .engine import Runner, TableStore, VersionedTableStore, all_models, get_spark
+from .engine import Runner, TableStore, all_models, get_spark
 from . import models_deepbook  # noqa: F401  (registers the 7 reference models)
 from . import models_corpus  # noqa: F401  (registers the corpus-curation DAG)
 from . import models_events  # noqa: F401  (registers the event-analytics DAG)
@@ -139,9 +139,9 @@ def main(argv: list[str] | None = None) -> int:
         p.add_argument(
             "--versioned",
             action="store_true",
-            help="use the manifest-versioned table store (Delta-style "
-            "snapshots: time travel, snapshot-isolated reads, retention "
-            "vacuum — engine/versioned.py)",
+            help="keep every table version (Delta-style history: time "
+            "travel, snapshot-isolated reads, retention vacuum — "
+            "engine/materialize.py)",
         )
         p.add_argument("--backfill-days", type=int, default=30)
         p.add_argument("--lookback-days", type=int, default=7)
@@ -227,7 +227,7 @@ def main(argv: list[str] | None = None) -> int:
     show_p.add_argument(
         "--versioned",
         action="store_true",
-        help="read a manifest-versioned warehouse (enables --as-of)",
+        help="read a warehouse that keeps table history (enables --as-of)",
     )
     show_p.add_argument(
         "--as-of",
@@ -327,8 +327,12 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(app_name=f"engine-{args.cmd}")
     spark.sparkContext.setLogLevel("ERROR")
-    store_cls = VersionedTableStore if getattr(args, "versioned", False) else TableStore
-    store = store_cls(spark, args.warehouse, schema_suffix=args.schema_suffix)
+    store = TableStore(
+        spark,
+        args.warehouse,
+        schema_suffix=args.schema_suffix,
+        history=getattr(args, "versioned", False),
+    )
 
     if args.cmd == "docs":
         # dbt docs generate: manifest (declared DAG) + catalog (what is
@@ -345,7 +349,8 @@ def main(argv: list[str] | None = None) -> int:
         as_of = getattr(args, "as_of", None)
         if as_of is not None:
             if not getattr(args, "versioned", False):
-                print("--as-of requires --versioned (the plain store keeps no history)")
+                print("--as-of requires --versioned (a store without history "
+                      "keeps one version)")
                 return 2
             store.sql(args.inline, as_of_ts=_parse_as_of(as_of)).show(
                 args.limit, truncate=False

@@ -1,7 +1,6 @@
 from .session import get_spark
 from .model import model, snapshot, exposure, all_exposures, ModelConfig, ModelContext, get_model, all_models, clear_registry, enforce_contract
-from .materialize import TableStore
-from .versioned import VersionedTableStore
+from .materialize import ConcurrentWriteError, TableStore
 from .runner import Runner
 from .snapshots import snapshot_scd2
 from .unittests import unit_test, run_unit_tests, all_unit_tests
@@ -22,6 +21,6 @@ __all__ = [
     "all_models",
     "clear_registry",
     "TableStore",
-    "VersionedTableStore",
+    "ConcurrentWriteError",
     "Runner",
 ]

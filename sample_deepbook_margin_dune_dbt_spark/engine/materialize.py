@@ -1,4 +1,4 @@
-"""Incremental MERGE materialization over parquet table directories.
+"""Incremental MERGE materialization over manifest-committed parquet tables.
 
 Replaces the reference's dbt-trino incremental materializations (SURVEY §2.1
 S6-S10; reference config blocks e.g.
@@ -8,20 +8,21 @@ S6-S10; reference config blocks e.g.
 Design for scale
 ----------------
 The MERGE here is an **upsert on a composite natural key**. Without Delta Lake
-in the environment, a table is a parquet directory and MERGE is expressed as::
+in the environment, a table is a snapshot of parquet files and MERGE is
+expressed as::
 
     kept = old.join(new, on=unique_key, how="left_anti")   # rows not replaced
     result = kept.unionByName(new)
 
 Every sink (``write_full``, ``append``, ``insert_overwrite``, ``merge``,
 ``replace_scope``) is one DataFrame expression plus one commit,
-``_commit(df, name, partition_by, op, keep)``, which writes ``df`` into a
-fresh directory, hard-links the previous files the sink keeps, and
-publishes. The fresh directory also gets ``_schema.json``, the data schema
-of what the commit wrote (``tablemeta.py``): readers use it instead of a
-schema-inference job, and the high-water-mark probe answers ``max(col)``
-from it, the directory names and the parquet footers without a job.
-``keep`` says which previous files carry over:
+``_commit(df, name, partition_by, op, keep)``, which writes ``df`` into the
+table's next snapshot directory, hard-links the previous files the sink
+keeps, and publishes. The snapshot also gets ``_schema.json``, the data
+schema of what the commit wrote (``tablemeta.py``): readers use it instead
+of a schema-inference job, and the high-water-mark probe answers
+``max(col)`` from it, the directory names and the parquet footers without a
+job. ``keep`` says which previous files carry over:
 
 - ``"none"``: full rewrite (``write_full``, ``replace_scope``, and a MERGE
   of an unpartitioned or schema-altering table);
@@ -36,13 +37,55 @@ from it, the directory names and the parquet footers without a job.
 Only tables declaring ``partition_by`` get the slice-sized rewrite;
 unpartitioned tables take the full anti-join rewrite, which is fine for
 dimension-sized tables. No write lands in a live directory, so the
-session's partition-overwrite mode never matters. This store
-publishes by swapping directories: the live table directory moves aside,
-the fresh one moves in, and the old one is deleted only after that; a
-failure in between moves the old one back. Only a kill between the two
-renames leaves the table missing, with its previous version intact under
-``.old-<name>-*``. The versioned store (``versioned.py``) publishes the
-same fresh directory by a manifest rename instead.
+session's partition-overwrite mode never matters.
+
+Commits: immutable snapshots and an atomic manifest
+---------------------------------------------------
+A table is immutable data plus an atomic metadata pointer, the lake-format
+recipe (the Dremel retrospective, VLDB 2020). Layout per table::
+
+    <base>/<name>/
+        _v/LOCK               # the writer lock (flock), never deleted
+        _v/v00000001.json     # commit manifests: version, ts, op, snapshot dir
+        _v/v00000002.json
+        snap-00000001/        # immutable snapshot directories
+        snap-00000002/        # (parquet files / col=value partition dirs,
+                              #  _schema.json)
+
+A commit writes its snapshot directory first, then renames a complete
+manifest into ``_v/``. The rename IS the commit (atomic on POSIX), so the
+table reads its old or its new version at every instant, never neither.
+Readers resolve ``_v/`` → newest manifest → snapshot directory. A failed
+commit removes its partial snapshot; a killed one leaves a snapshot that no
+manifest references, invisible to readers and removed by the next commit or
+:meth:`TableStore.vacuum`. A manifest names its snapshot relative to the
+table directory, so a copied warehouse reads the same.
+
+``history`` decides what a commit keeps:
+
+- ``False`` (the default): one version. After the manifest rename the
+  commit deletes every other manifest and snapshot of the table — the
+  version it replaced and whatever a crashed commit left — so exactly one
+  snapshot is on disk after each commit.
+- ``True`` (CLI ``--versioned``): every version stays until ``vacuum``
+  expires it, as in Dune's Delta tables (reference
+  ``macros/dune_dbt_overrides/vacuum_table.sql:3`` retains 168 hours of
+  versions). That gives time travel (``read(version=)``, ``as_of``,
+  ``register_views``/``sql`` ``as_of_ts``, ``ModelContext.ref``),
+  snapshot-isolated reads (a DataFrame opened before a MERGE reads the
+  same rows after it) and :meth:`TableStore.diff` between versions.
+
+A partition-pruned commit hard-links the files it keeps from the previous
+snapshot (the local-filesystem analog of a lake manifest reusing unchanged
+data files: no data copy, and deleting an old snapshot only drops link
+counts).
+
+Single-writer per table is the contract, as in dbt (the reference's runs
+are serialized by its scheduler), and it enforces itself: every sink holds
+``flock(_v/LOCK)`` from its first read of the table to the end of its
+commit, so a racing second writer raises :class:`ConcurrentWriteError`
+instead of orphaning a snapshot. The kernel releases the lock when its
+holder exits, killed or not. Readers never take it.
 
 On a cluster with Delta/Iceberg available, ``TableStore`` is the single seam
 to swap: ``merge`` becomes ``MERGE INTO target USING updates ON <keys> WHEN
@@ -55,10 +98,11 @@ post-hooks ``macros/dune_dbt_overrides/optimize_table.sql:3``,
 from __future__ import annotations
 
 import contextlib
+import fcntl
+import json
 import os
 import shutil
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -142,19 +186,40 @@ def _link_tree(src: str, dst: str, skip_partition_dirs: set[str]) -> None:
             os.link(os.path.join(root, f), os.path.join(dst, rel, f))
 
 
+_VDIR = "_v"
+_SNAP = "snap-"
+_LOCK = "LOCK"
+
+
+class ConcurrentWriteError(RuntimeError):
+    """A second writer raced a table's commit window.
+
+    The store is single-writer per table (dbt serializes runs); this error
+    makes the contract enforce itself instead of letting the last manifest
+    rename win and orphaning the loser's snapshot.
+    """
+
+
 class TableStore:
-    """A named-table store rooted at a directory; tables are parquet dirs.
+    """A named-table store rooted at a directory (see the module docstring).
 
     The store plays the role of the warehouse the reference writes into
     (Dune's ``delta_prod`` Delta Lake; SURVEY §2.1 S4/S11). ``schema_suffix``
     reproduces the reference's dev/prod/PR schema isolation
     (``macros/dune_dbt_overrides/get_custom_schema.sql:9-24``).
+    ``history=True`` keeps every committed version until :meth:`vacuum`
+    expires it; the default keeps only the current one. A store without
+    history opened on a warehouse with history drops the older versions
+    of each table it commits to.
     """
 
-    def __init__(self, spark: SparkSession, root: str, schema_suffix: str = ""):
+    def __init__(
+        self, spark: SparkSession, root: str, schema_suffix: str = "", history: bool = False
+    ):
         self.spark = spark
         self.root = root
         self.schema_suffix = schema_suffix
+        self.history = history
         os.makedirs(self._base(), exist_ok=True)
 
     def _base(self) -> str:
@@ -163,30 +228,115 @@ class TableStore:
     def path(self, name: str) -> str:
         return os.path.join(self._base(), name)
 
-    def exists(self, name: str) -> bool:
-        p = self.path(name)
-        if not os.path.isdir(p):
-            return False
-        # a dir containing only _SUCCESS/_temporary is not a table yet
-        return any(
-            f.endswith(".parquet") or ("=" in f and os.path.isdir(os.path.join(p, f)))
-            for f in os.listdir(p)
-        )
+    # ------------------------------------------------------------ metadata
 
-    def read(self, name: str) -> DataFrame:
-        return tablemeta.read(self.spark, self.path(name))
+    def _vdir(self, name: str) -> str:
+        return os.path.join(self.path(name), _VDIR)
+
+    def _manifests(self, name: str) -> list[int]:
+        vdir = self._vdir(name)
+        if not os.path.isdir(vdir):
+            return []
+        out = []
+        for f in os.listdir(vdir):
+            if f.startswith("v") and f.endswith(".json"):
+                try:
+                    out.append(int(f[1:-5]))
+                except ValueError:
+                    continue
+        return sorted(out)
+
+    def _manifest_path(self, name: str, version: int) -> str:
+        return os.path.join(self._vdir(name), f"v{version:08d}.json")
+
+    def _load_manifest(self, name: str, version: int) -> dict:
+        with open(self._manifest_path(name, version)) as f:
+            return json.load(f)
+
+    def current_version(self, name: str) -> int | None:
+        vs = self._manifests(name)
+        return vs[-1] if vs else None
+
+    def versions(self, name: str) -> list[dict]:
+        """Commit history, oldest first: [{version, ts, op}, ...]."""
+        return [
+            {"version": v, **{k: m[k] for k in ("ts", "op")}}
+            for v in self._manifests(name)
+            for m in (self._load_manifest(name, v),)
+        ]
+
+    def _snap_dir(self, name: str, version: int) -> str:
+        return os.path.join(self.path(name), self._load_manifest(name, version)["snap"])
+
+    def _data_dir(self, name: str) -> str | None:
+        """The current snapshot directory (``None``: no table)."""
+        v = self.current_version(name)
+        return self._snap_dir(name, v) if v is not None else None
+
+    # ------------------------------------------------------------- readers
+
+    def exists(self, name: str) -> bool:
+        return self.current_version(name) is not None
+
+    def read(
+        self,
+        name: str,
+        version: int | None = None,
+        as_of_ts: float | None = None,
+    ) -> DataFrame:
+        """Read the table at the newest version (default), at an explicit
+        ``version``, or at the newest version committed at-or-before
+        ``as_of_ts`` (epoch seconds) — Delta's ``VERSION AS OF`` /
+        ``TIMESTAMP AS OF``."""
+        if version is not None and as_of_ts is not None:
+            raise ValueError("pass version OR as_of_ts, not both")
+        if as_of_ts is not None:
+            eligible = [
+                v for v in self._manifests(name)
+                if self._load_manifest(name, v)["ts"] <= as_of_ts
+            ]
+            if not eligible:
+                raise ValueError(
+                    f"no version of {name!r} existed at or before ts={as_of_ts}"
+                )
+            version = eligible[-1]
+        if version is None:
+            version = self.current_version(name)
+            if version is None:
+                raise FileNotFoundError(f"table {name!r} has no committed version")
+        elif version not in self._manifests(name):
+            raise ValueError(
+                f"version {version} of {name!r} not found "
+                f"(have {self._manifests(name)} — vacuumed?)"
+            )
+        return tablemeta.read(self.spark, self._snap_dir(name, version))
+
+    def as_of(self, name: str, ts: float) -> DataFrame:
+        return self.read(name, as_of_ts=ts)
 
     # -------------------------------------------------------------- commits
 
-    def _data_dir(self, name: str) -> str | None:
-        """Directory holding the table's current files (``None``: no table)."""
-        return self.path(name)
-
+    @contextlib.contextmanager
     def _write_lock(self, name: str):
-        """Held by every sink from its first read of the table to the
-        publish. The plain store's single-writer contract is not enforced;
-        the versioned store overrides this with a lockfile."""
-        return contextlib.nullcontext()
+        """Exclusive per-table writer lock, held by every sink from its
+        first read of the table to the end of its commit: a non-blocking
+        ``flock`` on ``_v/LOCK``. The file is never deleted; the kernel
+        drops the lock when the descriptor closes, also when the holder
+        is killed. A second holder, in this process or another, raises
+        :class:`ConcurrentWriteError`."""
+        os.makedirs(self._vdir(name), exist_ok=True)
+        fd = os.open(os.path.join(self._vdir(name), _LOCK), os.O_CREAT | os.O_WRONLY)
+        try:
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                raise ConcurrentWriteError(
+                    f"table {name!r} is locked by another writer; the store is "
+                    "single-writer per table — serialize the runs"
+                ) from None
+            yield
+        finally:
+            os.close(fd)
 
     def _stage(
         self, df: DataFrame, fresh: str, name: str, partition_by: list[str] | None, keep: str
@@ -219,31 +369,46 @@ class TableStore:
     def _commit(
         self, df: DataFrame, name: str, partition_by: list[str] | None, op: str, keep: str
     ) -> None:
-        """Stage ``df`` (see :meth:`_stage`) into ``.staging-*``, then swap
-        it in: the live directory moves aside, the staged one moves in, and
-        the old one is deleted only after that. A failure before the swap
-        leaves the live table untouched; a failed second rename moves the
-        old directory back. ``op`` is a label only the versioned store
-        records.
-        """
-        final = self.path(name)
-        tag = f"{name}-{uuid.uuid4().hex[:8]}"
-        staging, aside = self.path(f".staging-{tag}"), self.path(f".old-{tag}")
+        """Stage ``df`` (see :meth:`_stage`) into the next snapshot dir, then
+        rename a complete manifest into ``_v/`` — the atomic commit point.
+        The previous snapshot's files are immutable, so ``df`` may read
+        them while the new snapshot is written. A failure before the
+        rename removes the partial snapshot; without ``history``, the
+        commit then drops every other version of the table. ``op`` labels
+        the commit in the history."""
+        version = (self.current_version(name) or 0) + 1
+        rel = f"{_SNAP}{version:08d}"
+        snap = os.path.join(self.path(name), rel)
+        tmp = os.path.join(self._vdir(name), f".tmp-v{version:08d}.json")
         try:
-            self._stage(df, staging, name, partition_by, keep)
-            live = os.path.isdir(final)
-            if live:
-                os.replace(final, aside)
-            try:
-                os.replace(staging, final)
-            except BaseException:
-                if live:
-                    os.replace(aside, final)
-                raise
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        if live:
-            shutil.rmtree(aside)
+            if os.path.isdir(snap):  # orphan from a crashed commit: discard
+                shutil.rmtree(snap)
+            self._stage(df, snap, name, partition_by, keep)
+            with open(tmp, "w") as f:
+                json.dump({"version": version, "ts": time.time(), "op": op, "snap": rel}, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.rename(tmp, self._manifest_path(name, version))
+        except BaseException:
+            shutil.rmtree(snap, ignore_errors=True)
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+            raise
+        if not self.history:
+            self._prune(name, [v for v in self._manifests(name) if v != version])
+
+    def _prune(self, name: str, expired: list[int]) -> None:
+        """Delete the manifests of the ``expired`` versions, then every
+        snapshot directory no remaining manifest references — expired
+        versions and what crashed commits left. Callers hold the writer
+        lock, so no commit is in flight."""
+        for v in expired:
+            os.remove(self._manifest_path(name, v))
+        live = {self._load_manifest(name, v)["snap"] for v in self._manifests(name)}
+        tdir = self.path(name)
+        for f in os.listdir(tdir):
+            if f.startswith(_SNAP) and f not in live:
+                shutil.rmtree(os.path.join(tdir, f))
 
     # ------------------------------------------------------------------ sinks
 
@@ -262,9 +427,8 @@ class TableStore:
         Trino CTAS atomicity).
 
         ``op`` labels what the full rewrite IS semantically ("optimize",
-        …); the plain store ignores it, the versioned store records it in
-        the commit manifest so the history can distinguish it from a user
-        full refresh (ADVICE r10).
+        …); the commit manifest records it, so the history can tell it
+        from a user full refresh (ADVICE r10).
         """
         with self._write_lock(name):
             self._commit(df, name, partition_by, op, "none")
@@ -557,22 +721,60 @@ class TableStore:
             self.write_full(out, name, op="optimize")
 
     def vacuum(self, name: str, retain_hours: int = 168) -> None:
-        """Snapshot cleanup (reference ``vacuum_table.sql:1-6``).
-
-        Parquet dirs have no snapshots; clean stray staging dirs older than
-        the retention window.
-        """
-        cutoff = time.time() - retain_hours * 3600
-        base = self._base()
-        for f in os.listdir(base):
-            p = os.path.join(base, f)
-            if f.startswith(".staging-") and os.path.isdir(p) and os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
+        """Snapshot cleanup (reference ``vacuum_table.sql:1-6``, Delta
+        ``VACUUM <table> RETAIN n HOURS``): under the writer lock, remove
+        the manifests committed before the retention window — always
+        keeping the current version — then every snapshot no surviving
+        manifest references (expired versions, and orphans of crashed
+        commits). Files hard-linked into surviving snapshots stay (their
+        link count just drops)."""
+        if not os.path.isdir(self.path(name)):
+            return
+        with self._write_lock(name):
+            cur = self.current_version(name)
+            cutoff = time.time() - retain_hours * 3600
+            self._prune(name, [
+                v for v in self._manifests(name)
+                if v != cur and self._load_manifest(name, v)["ts"] < cutoff
+            ])
 
     def drop(self, name: str) -> None:
         p = self.path(name)
         if os.path.isdir(p):
             shutil.rmtree(p)
+
+    def diff(
+        self,
+        name: str,
+        id_col: str,
+        content_cols: list[str],
+        v_old: int | None = None,
+        v_new: int | None = None,
+    ) -> DataFrame:
+        """Per-id diff between two committed versions (defaults: previous
+        vs current) — the lakehouse "what changed in this commit?" audit,
+        built on :func:`~..operators.snapshot.snapshot_diff` over the two
+        immutable snapshots. Both sides reduce to (id, fingerprint)
+        narrow maps before one full-outer equi-join; payloads never
+        shuffle."""
+        from ..operators.snapshot import snapshot_diff
+
+        vs = self._manifests(name)
+        if not vs:
+            raise ValueError(f"table {name!r} has no committed versions to diff")
+        if v_new is None:
+            v_new = vs[-1]
+        if v_old is None:
+            older = [v for v in vs if v < v_new]
+            if not older:
+                raise ValueError(f"{name!r} has no version before {v_new}")
+            v_old = older[-1]
+        return snapshot_diff(
+            self.read(name, version=v_old),
+            self.read(name, version=v_new),
+            id_col,
+            content_cols,
+        )
 
     # --------------------------------------------------------------- ad hoc
 
@@ -583,16 +785,24 @@ class TableStore:
             if not f.startswith(".") and self.exists(f)  # readable tables only
         )
 
-    def register_views(self) -> list[str]:
+    def register_views(self, as_of_ts: float | None = None) -> list[str]:
         """Register every materialized table as a temp view for spark.sql —
         the ad-hoc SELECT layer (reference lifecycle entry point 3:
-        ``dbt show --inline`` / Dune UI queries, ``DEVELOPMENT.md:149-151``)."""
-        names = self.tables()
-        for name in names:
-            self.read(name).createOrReplaceTempView(name)
+        ``dbt show --inline`` / Dune UI queries, ``DEVELOPMENT.md:149-151``).
+        With ``as_of_ts`` every view reads its table as it was at that
+        instant (Delta ``TIMESTAMP AS OF`` applied to the whole
+        warehouse); a table with no version by then is skipped."""
+        names: list[str] = []
+        for name in self.tables():
+            try:
+                df = self.read(name, as_of_ts=as_of_ts)
+            except ValueError:  # no version existed at that instant
+                continue
+            df.createOrReplaceTempView(name)
+            names.append(name)
         return names
 
-    def sql(self, query: str) -> DataFrame:
+    def sql(self, query: str, as_of_ts: float | None = None) -> DataFrame:
         """Run ad-hoc SQL over the registered warehouse tables."""
-        self.register_views()
+        self.register_views(as_of_ts)
         return self.spark.sql(query)

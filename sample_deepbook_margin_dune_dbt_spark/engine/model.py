@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 from .materialize import TableStore
 from .tablemeta import NO_STATS
-from .versioned import VersionedTableStore
 
 
 @dataclass
@@ -355,18 +354,18 @@ class ModelContext:
         as_of: float | None = None,
         version: int | None = None,
     ) -> DataFrame:
-        """dbt ``ref()``; on a versioned store it additionally accepts the
+        """dbt ``ref()``; on a store with history it additionally accepts the
         Delta time-travel selectors (``SELECT … TIMESTAMP AS OF`` /
         ``VERSION AS OF`` — the "build against yesterday's upstream"
-        move): ``as_of`` (epoch seconds) or ``version``. On a plain store
-        a time-travel request fails loudly rather than silently reading
-        the current table."""
+        move): ``as_of`` (epoch seconds) or ``version``. On a store without
+        history a time-travel request fails loudly rather than silently
+        reading the current table."""
         if name not in self.current.deps:
             raise ValueError(
                 f"model {self.current.name!r} refs {name!r} but does not declare it in deps"
             )
         if as_of is not None or version is not None:
-            if not isinstance(self.store, VersionedTableStore):
+            if not self.store.history:
                 raise ValueError(
                     f"ref({name!r}, as_of/version=…) requires a versioned "
                     "store (run with --versioned); the plain TableStore "

@@ -31,7 +31,6 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .materialize import TableStore
 from .model import ModelContext, get_model
 from .tablemeta import NO_STATS
 
@@ -121,9 +120,10 @@ class _MockedContext(ModelContext):
         return self._ut.incremental
 
 
-class _RefusingStore(TableStore):
-    """A unit test must never touch real storage; any store access that
-    slips past the mocked context fails loudly."""
+class _RefusingStore:
+    """Stands in for the ``TableStore``: a unit test must never touch real
+    storage, so any store access that slips past the mocked context fails
+    loudly."""
 
     def __init__(self, spark: SparkSession, test_name: str):
         self._test_name = test_name

@@ -64,5 +64,20 @@ def try_cast_scalar(col: Column, dtype: str) -> Column:
     model casts free-form text (only JSON-extracted id/number fields), so
     the divergence is unreachable in the pipeline; the property test
     carves these spellings out of the strict parity claim.
+
+    Three more spellings differ; the property test pins Spark's values
+    for each:
+
+    - a decimal or exponent spelling cast to BIGINT (``'0.'``, ``'1.5'``,
+      ``'1e2'``): Spark accepts integer syntax only and returns NULL,
+      DuckDB rounds to the nearest integer (``'0.'`` → 0, ``'1.5'`` → 2);
+    - a Java type suffix ``d``/``D``/``f``/``F`` (``'0D'``, ``'1.5f'``):
+      Spark's DOUBLE cast parses it as Java's ``Double.parseDouble`` does
+      (``'0D'`` → 0.0), DuckDB returns NULL; both NULL it as BIGINT;
+    - ``_`` digit separators (``'1_000'``): DuckDB reads 1000, Spark NULL.
+
+    None of these is JSON number text (JSON allows no trailing dot, type
+    suffix or separator), so they are engine divergences the pipeline
+    cannot reach, not faults of it.
     """
     return col.try_cast(dtype)

@@ -651,16 +651,16 @@ _VDIFF_STORE_CACHE: dict[str, object] = {}
 
 
 def q_corpus_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Version-diff THROUGH the manifest-versioned store's commit history
+    """Version-diff THROUGH the table store's commit history
     (VERDICT r10 item 4): the same two deterministic corpus snapshots as
     :func:`q_corpus_snapshot_diff`, but committed as VERSION 1 and
-    VERSION 2 of one ``VersionedTableStore`` table and diffed via
+    VERSION 2 of one ``TableStore(history=True)`` table and diffed via
     ``store.diff(v_old=1, v_new=2)`` — the lakehouse "what changed in
     this commit?" audit as a consumer-facing query. The oracle is
     byte-identical to the path-pair variant's, so a driver/parity hash
     match pins ``diff(v1, v2) ≡ snapshot_diff`` of materialized copies.
 
-    The tiny versioned warehouse is cached per-process per sf_dir (same
+    The tiny warehouse with history is cached per-process per sf_dir (same
     lifecycle discipline as ``q_corpus_shard_audit``): versions are
     immutable, so later invocations and earlier lazy DataFrames all read
     the same committed snapshots.
@@ -670,14 +670,14 @@ def q_corpus_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..engine.versioned import VersionedTableStore
+    from ..engine.materialize import TableStore
 
     key = os.path.abspath(sf_dir)
     store = _VDIFF_STORE_CACHE.get(key)
     if store is None:
         root = tempfile.mkdtemp(prefix="corpus_version_diff_")
         atexit.register(shutil.rmtree, root, True)
-        store = VersionedTableStore(spark, root)
+        store = TableStore(spark, root, history=True)
         docs = load(spark, sf_dir, "documents")
         old = docs.filter(F.col("doc_id") % 13 != 0).select(
             "doc_id",

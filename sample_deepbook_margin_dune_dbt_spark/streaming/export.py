@@ -202,7 +202,7 @@ def shard_export_batch(
     # the corpus merge and the rollup of a prior attempt. The merge itself
     # is guarded by a tiny (n_shards-row) no-change compare so an
     # at-least-once REPLAY of an identical batch writes nothing — on a
-    # VersionedTableStore that is what keeps version count == distinct
+    # store with history that is what keeps version count == distinct
     # effective batches (VERDICT r10 item 7) instead of one no-op version
     # per redelivery.
     if store.exists(dlt_table):

@@ -36,7 +36,7 @@ def test_merge_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
         "id long, day date, v double",
     )
     store.write_full(base, "t", partition_by=["day"])
-    p1 = os.path.join(store.path("t"), "day=2026-01-02")
+    p1 = os.path.join(store._data_dir("t"), "day=2026-01-02")
     mtime_before = max(os.path.getmtime(os.path.join(p1, f)) for f in os.listdir(p1))
 
     updates = spark.createDataFrame([(1, d1, 99.0)], "id long, day date, v double")
@@ -47,6 +47,7 @@ def test_merge_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
     assert rows[(2, d1)] == 20.0
     assert rows[(3, d2)] == 30.0
     # the untouched partition's files were not rewritten
+    p1 = os.path.join(store._data_dir("t"), "day=2026-01-02")
     mtime_after = max(os.path.getmtime(os.path.join(p1, f)) for f in os.listdir(p1))
     assert mtime_after == mtime_before
 
@@ -55,28 +56,29 @@ def test_optimize_compacts_files(spark, tmp_path):
     store = TableStore(spark, str(tmp_path))
     df = spark.range(0, 10000).repartition(16).withColumn("v", F.rand(seed=1))
     store.write_full(df, "t")
-    n_before = len([f for f in os.listdir(store.path("t")) if f.endswith(".parquet")])
+    n_before = len([f for f in os.listdir(store._data_dir("t")) if f.endswith(".parquet")])
     store.optimize("t", target_files=2)
-    n_after = len([f for f in os.listdir(store.path("t")) if f.endswith(".parquet")])
+    n_after = len([f for f in os.listdir(store._data_dir("t")) if f.endswith(".parquet")])
     assert n_after < n_before and n_after <= 2
     assert store.read("t").count() == 10000
 
 
 def test_vacuum_removes_stale_staging(spark, tmp_path):
+    """A commit killed before its manifest rename leaves a staged snapshot
+    no manifest references; vacuum removes it and keeps the current one."""
     store = TableStore(spark, str(tmp_path))
-    stale = store.path(".staging-old-deadbeef")
+    store.write_full(spark.createDataFrame([(1, "a")], "id long, v string"), "t")
+    current = store._data_dir("t")
+    stale = store.path("t") + "/snap-00000002"
     os.makedirs(stale)
-    os.utime(stale, (0, 0))  # very old
-    fresh = store.path(".staging-new-cafebabe")
-    os.makedirs(fresh)
     store.vacuum("t", retain_hours=1)
     assert not os.path.isdir(stale)
-    assert os.path.isdir(fresh)
+    assert os.path.isdir(current) and store.read("t").count() == 1
 
 
 def test_prod_profile_runs_post_hooks(spark, tmp_path):
     """The prod profile must optimize (compact, layout-preserving) and
-    vacuum (stale staging cleanup) after every build — the reference's
+    vacuum (orphan-snapshot cleanup) after every build — the reference's
     target.name == 'prod' post-hooks — while dev builds skip both and a
     per-model post_hooks=[] opts out even under prod."""
     import os
@@ -94,10 +96,11 @@ def test_prod_profile_runs_post_hooks(spark, tmp_path):
     model(name="_hook_probe", materialized="table", partition_by=["day"])(_many_files)
     model(name="_hook_probe_optout", materialized="table", post_hooks=[])(_many_files)
     try:
-        store = TableStore(spark, str(tmp_path))
-        stale = store.path(".staging-old-dead")
+        # with history, only vacuum removes what a killed commit left (a
+        # store without history also drops it at its next commit)
+        store = TableStore(spark, str(tmp_path), history=True)
+        stale = store.path("_hook_probe") + "/snap-99999999"
         os.makedirs(stale)
-        os.utime(stale, (0, 0))
 
         Runner(spark, store, {}, profile="dev").run("_hook_probe")
         n_dev = store.file_count("_hook_probe")
@@ -111,7 +114,7 @@ def test_prod_profile_runs_post_hooks(spark, tmp_path):
             "optimize must preserve the partition layout"
         )
         assert store.read("_hook_probe").count() == 2000
-        assert not os.path.isdir(stale), "prod vacuum must clean stale staging"
+        assert not os.path.isdir(stale), "prod vacuum must clean orphan snapshots"
 
         prod.run("_hook_probe_optout")
         assert store.file_count("_hook_probe_optout") > 4, (
@@ -290,7 +293,7 @@ def test_optimize_cluster_by_enables_file_skipping(spark, tmp_path):
     store.write_full(df, "t")
     store.optimize("t", target_files=8, cluster_by=["k"])
 
-    files = sorted(glob.glob(str(tmp_path / "t" / "*.parquet")))
+    files = sorted(glob.glob(os.path.join(store._data_dir("t"), "*.parquet")))
     assert len(files) >= 4
     ranges = []
     for f in files:
@@ -316,7 +319,7 @@ def test_optimize_cluster_by_enables_file_skipping(spark, tmp_path):
 
     # semantics preserved under re-clustering
     hit = (
-        spark.read.parquet(str(tmp_path / "t"))
+        spark.read.parquet(store._data_dir("t"))
         .filter((F.col("k") >= 1000) & (F.col("k") < 3000))
     )
     assert hit.count() == 2000
@@ -451,7 +454,7 @@ def test_insert_overwrite_replaces_touched_partitions(spark, tmp_path):
         "id long, day date, v double",
     )
     store.insert_overwrite(base, "t", ["day"])  # first run = create
-    p2 = os.path.join(store.path("t"), "day=2026-01-02")
+    p2 = os.path.join(store._data_dir("t"), "day=2026-01-02")
     mtime_before = max(os.path.getmtime(os.path.join(p2, f)) for f in os.listdir(p2))
 
     # rewrite day 1 with DIFFERENT keys: id 2 must vanish (wholesale
@@ -463,6 +466,7 @@ def test_insert_overwrite_replaces_touched_partitions(spark, tmp_path):
     )
     rows = {(r["id"], r["day"]): r["v"] for r in store.read("t").collect()}
     assert rows == {(9, d1): 99.0, (3, d2): 30.0}
+    p2 = os.path.join(store._data_dir("t"), "day=2026-01-02")
     mtime_after = max(os.path.getmtime(os.path.join(p2, f)) for f in os.listdir(p2))
     assert mtime_after == mtime_before, "untouched partition must not rewrite"
 

@@ -7,11 +7,12 @@ batch does the fuzzing work).
 
 from __future__ import annotations
 
+import os
 import re
 
 import duckdb
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from tests._util import fuzz_examples
 from pyspark.sql import functions as F
@@ -42,10 +43,17 @@ def test_fingerprint64_matches_duckdb(spark, texts):
         assert got[t] == expected, t
 
 
+# a decimal number spelling, as both engines trim it
+NUMBER = r"[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?"
+
+
 @settings(max_examples=5, deadline=None)
 @given(st.lists(TEXT, min_size=1, max_size=50, unique=True))
+@example(["0.", "0D", "1.5", "1_000", "0"])
 def test_try_cast_matches_duckdb(spark, texts):
-    """try_cast(s AS BIGINT/DOUBLE) NULL-on-failure parity with DuckDB."""
+    """try_cast(s AS BIGINT/DOUBLE) NULL-on-failure parity with DuckDB,
+    except on the spellings where the engines differ; there Spark's own
+    values are pinned."""
     df = spark.createDataFrame([(t,) for t in texts], "t string")
     got = {
         r["t"]: (r["i"], r["d"])
@@ -70,12 +78,28 @@ def test_try_cast_matches_duckdb(spark, texts):
         # a bare sign — the data the pipeline actually casts is JSON scalar
         # text. Divergence documented at functions/json.py (try_cast notes).
         sign_only = re.fullmatch(r"\s*[+-]\s*", t) is not None
-        if t.isascii() and t.isprintable() and not sign_only:
+        if not (t.isascii() and t.isprintable()) or sign_only:
+            continue
+        s = t.strip(" ")
+        if re.fullmatch(NUMBER + "[dDfF]", s):
+            # a Java type suffix ('0D', '1.5f'): Spark's DOUBLE cast parses
+            # it, DuckDB NULLs it
+            assert (gi, gd) == (None, float(s[:-1])), (t, gi, gd)
+            continue
+        if "_" in s:
+            # DuckDB reads '_' as a digit separator ('1_000'); Spark NULLs
+            assert (gi, gd) == (None, None), (t, gi, gd)
+            continue
+        if re.fullmatch(NUMBER, s) and re.search("[.eE]", s):
+            # a decimal or exponent spelling ('0.', '1.5', '1e2') as BIGINT:
+            # Spark takes integer syntax only and NULLs it, DuckDB rounds it
+            assert gi is None, (t, gi)
+        else:
             assert gi == ei, (t, gi, ei)
-            if ed is None or gd is None:
-                assert gd == ed, (t, gd, ed)
-            else:
-                assert gd == pytest.approx(ed, nan_ok=True), (t, gd, ed)
+        if ed is None or gd is None:
+            assert gd == ed, (t, gd, ed)
+        else:
+            assert gd == pytest.approx(ed, nan_ok=True), (t, gd, ed)
 
 
 @settings(max_examples=fuzz_examples(8, 4), deadline=None)
@@ -443,7 +467,7 @@ def test_strip_spans_match_reference(spark, token_docs, k):
     assert got == expected
 
 
-# ------------------------------------------------ versioned store (r11)
+# ------------------------------------------------ store history (r11)
 
 _OPS = st.lists(
     st.tuples(
@@ -470,19 +494,15 @@ def test_versioned_store_equals_plain_under_random_interleavings(
 ):
     """VERDICT r10 item 8: for ANY interleaving of merge / append /
     insert_overwrite / vacuum over a partitioned table (null partition
-    values included), the versioned store's CURRENT content equals the
-    plain store's after every step, every committed version remains
-    readable, and ops/labels are consistent."""
+    values included), the CURRENT content with history equals the
+    content without after every step, every committed version remains
+    readable, ops/labels are consistent, and without history exactly one
+    snapshot is on disk."""
     import tempfile
-
-    from sample_deepbook_margin_dune_dbt_spark.engine import (
-        TableStore,
-        VersionedTableStore,
-    )
 
     root = tempfile.mkdtemp(dir=str(tmp_path_factory.mktemp("vprop")))
     plain = TableStore(spark, root + "/p")
-    vers = VersionedTableStore(spark, root + "/v")
+    vers = TableStore(spark, root + "/v", history=True)
 
     def df(rows):
         return spark.createDataFrame(
@@ -523,6 +543,8 @@ def test_versioned_store_equals_plain_under_random_interleavings(
             map(tuple, vers.read("t").select("k", "v", "day").collect()), key=key
         )
         assert got_v == got_p, f"diverged after {op}({rows})"
+        snaps = [f for f in os.listdir(plain.path("t")) if f.startswith("snap-")]
+        assert len(snaps) == 1, snaps
     if seeded:
         # every surviving version stays readable; labels match known ops
         for ver in vers.versions("t"):

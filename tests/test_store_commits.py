@@ -1,21 +1,27 @@
-"""Commit safety of the plain ``TableStore`` (``engine/materialize.py``).
+"""Commit safety of ``TableStore`` (``engine/materialize.py``).
 
-Every sink stages its output into a fresh ``.staging-*`` directory and
-publishes it with two renames: the live table directory moves aside, then
-the staged one moves in. These tests inject a failure at each step —
-inside the Spark write, at the first rename and at the second rename — for
-every sink, and pin that the table then reads exactly as before and that
-nothing is left next to it. A kill (SIGKILL, power loss) BETWEEN the two
-renames cannot be injected from inside the process and is not covered: it
-leaves the table missing, with its previous version intact under
-``.old-<name>-*``.
+Every sink stages its output into the table's next ``snap-*`` directory and
+publishes it by renaming a complete manifest into ``_v/``; a store without
+history then deletes the snapshot it superseded. For every sink, these
+tests inject a failure at each step:
+
+- inside the Spark write, and at the manifest rename: the table reads
+  exactly as before, and no partial snapshot is left;
+- while deleting the superseded snapshot: the table reads the new content.
+
+A kill (SIGKILL, power loss) can stop a commit anywhere. It leaves one of
+two states on disk, which the kill tests build directly: a complete
+snapshot whose manifest was never renamed in (the table reads the old
+version), or the previous snapshot and manifest still beside the new ones
+(the table reads the new version). In both, the next commit succeeds and
+leaves one snapshot.
 
 The next test pins that the store neither trusts nor mutates the session's
 ``spark.sql.sources.partitionOverwriteMode``: under Spark's own STATIC
 default a partition-scoped commit still keeps every untouched partition.
 
-The last one pins, on both stores, that every sink commits the schema of
-what it wrote (``_schema.json``), so ``store.read`` equals a
+The last one pins, with and without history, that every sink commits the
+schema of what it wrote (``_schema.json``), so ``store.read`` equals a
 schema-inferring read of the same directory without running a job.
 """
 
@@ -23,15 +29,17 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from sample_deepbook_margin_dune_dbt_spark.engine import TableStore, VersionedTableStore
+from sample_deepbook_margin_dune_dbt_spark.engine import TableStore
 from tests._util import spark_jobs
 
 BASE = [(1, "a", "d1"), (2, "b", "d2"), (3, "c", "d3")]
 UPDATES = [(2, "B", "d2"), (4, "d", "d4")]
+UPSERTED = [(1, "a", "d1"), (2, "B", "d2"), (3, "c", "d3"), (4, "d", "d4")]
 
 
 def _df(spark, rows):
@@ -42,39 +50,56 @@ def _content(store, name="t"):
     return sorted(map(tuple, store.read(name).select("k", "v", "day").collect()))
 
 
+def _snaps(store, name="t"):
+    return sorted(f for f in os.listdir(store.path(name)) if f.startswith("snap-"))
+
+
+# sink -> (partition_by, apply, content after applying UPDATES to BASE)
 SINKS = {
-    "write_full": (["day"], lambda s, d: s.write_full(d, "t", partition_by=["day"])),
-    "merge_partitioned": (
-        ["day"], lambda s, d: s.merge(d, "t", ["k"], partition_by=["day"])
+    "write_full": (
+        ["day"], lambda s, d: s.write_full(d, "t", partition_by=["day"]), sorted(UPDATES)
     ),
-    "merge_unpartitioned": (None, lambda s, d: s.merge(d, "t", ["k"])),
-    "insert_overwrite": (["day"], lambda s, d: s.insert_overwrite(d, "t", ["day"])),
-    "append": (["day"], lambda s, d: s.append(d, "t", ["day"])),
+    "merge_partitioned": (
+        ["day"], lambda s, d: s.merge(d, "t", ["k"], partition_by=["day"]), UPSERTED
+    ),
+    "merge_unpartitioned": (None, lambda s, d: s.merge(d, "t", ["k"]), UPSERTED),
+    "insert_overwrite": (
+        ["day"], lambda s, d: s.insert_overwrite(d, "t", ["day"]), UPSERTED
+    ),
+    "append": (
+        ["day"], lambda s, d: s.append(d, "t", ["day"]), sorted(BASE + UPDATES)
+    ),
 }
 
 
-def _fail_rename(monkeypatch, base: str, nth: int) -> None:
-    """Make the ``nth`` ``os.replace`` of a path under ``base`` raise."""
-    real = os.replace
-    calls = []
+def _fail(monkeypatch, module, fn: str, when) -> None:
+    """Make ``module.fn`` raise ``OSError`` on the calls ``when`` accepts."""
+    real = getattr(module, fn)
 
-    def replace(src, dst, *a, **k):
-        if str(src).startswith(base):
-            calls.append(src)
-            if len(calls) == nth:
-                raise OSError(f"injected failure at rename {nth}")
-        return real(src, dst, *a, **k)
+    def wrapped(*a, **k):
+        if when(*a):
+            raise OSError(f"injected failure in {fn}")
+        return real(*a, **k)
 
-    monkeypatch.setattr(os, "replace", replace)
+    monkeypatch.setattr(module, fn, wrapped)
+
+
+def _base_store(spark, tmp_path, partition_by):
+    store = TableStore(spark, str(tmp_path / "wh"))
+    store.write_full(_df(spark, BASE), "t", partition_by=partition_by)
+    return store
 
 
 @pytest.mark.parametrize("sink", list(SINKS))
 def test_failed_commit_leaves_old_table(spark, tmp_path, monkeypatch, sink):
-    partition_by, apply = SINKS[sink]
-    store = TableStore(spark, str(tmp_path / "wh"))
-    store.write_full(_df(spark, BASE), "t", partition_by=partition_by)
-    before = _content(store)
-    base = store._base()
+    partition_by, apply, after = SINKS[sink]
+    store = _base_store(spark, tmp_path, partition_by)
+    before, snaps = _content(store), _snaps(store)
+
+    def unchanged():
+        assert _content(store) == before and _snaps(store) == snaps
+        assert os.listdir(store._base()) == ["t"] and store.tables() == ["t"]
+        assert sorted(os.listdir(store._vdir("t"))) == ["LOCK", "v00000001.json"]
 
     # a Spark job of the sink fails (the write, or a job planning it)
     bad = _df(spark, UPDATES).selectExpr(
@@ -82,29 +107,76 @@ def test_failed_commit_leaves_old_table(spark, tmp_path, monkeypatch, sink):
     )
     with pytest.raises(Exception, match="assert_true|k < 0"):
         apply(store, bad)
-    assert _content(store) == before
-    assert os.listdir(base) == ["t"] and store.tables() == ["t"]
+    unchanged()
 
-    # the first rename (live table aside) and the second (staged table in)
-    for nth in (1, 2):
-        with monkeypatch.context() as m:
-            _fail_rename(m, base, nth)
-            with pytest.raises(OSError, match=f"rename {nth}"):
-                apply(store, _df(spark, UPDATES))
-        assert _content(store) == before, f"rename {nth}"
-        assert os.listdir(base) == ["t"] and store.tables() == ["t"]
+    # the manifest rename fails
+    with monkeypatch.context() as m:
+        _fail(m, os, "rename", lambda src, dst: str(dst).endswith(".json"))
+        with pytest.raises(OSError, match="injected failure in rename"):
+            apply(store, _df(spark, UPDATES))
+    unchanged()
 
     # the table is still writable, and the same commit now succeeds
     apply(store, _df(spark, UPDATES))
-    assert _content(store) != before
-    assert os.listdir(base) == ["t"]
+    assert _content(store) == after and len(_snaps(store)) == 1
+
+
+@pytest.mark.parametrize("sink", list(SINKS))
+def test_failed_cleanup_keeps_new_table(spark, tmp_path, monkeypatch, sink):
+    """Deleting the superseded snapshot fails after the manifest rename:
+    the commit has happened, and the next one removes the leftover."""
+    partition_by, apply, after = SINKS[sink]
+    store = _base_store(spark, tmp_path, partition_by)
+    old = _snaps(store)
+    with monkeypatch.context() as m:
+        _fail(m, shutil, "rmtree", lambda p, *a: os.path.basename(p) in old)
+        with pytest.raises(OSError, match="injected failure in rmtree"):
+            apply(store, _df(spark, UPDATES))
+    assert _content(store) == after
+    assert len(_snaps(store)) == 2
+
+    store.write_full(_df(spark, BASE), "t", partition_by=partition_by)
+    assert _content(store) == sorted(BASE) and len(_snaps(store)) == 1
+
+
+def test_kill_before_the_manifest_rename_reads_the_old_version(spark, tmp_path):
+    """A complete snapshot with no manifest (and the manifest's temp file
+    beside it) is invisible; the next commit replaces it."""
+    store = _base_store(spark, tmp_path, ["day"])
+    _df(spark, UPDATES).write.partitionBy("day").parquet(
+        os.path.join(store.path("t"), "snap-00000002")
+    )
+    with open(os.path.join(store._vdir("t"), ".tmp-v00000002.json"), "w") as f:
+        f.write('{"version": 2')
+    assert _content(store) == sorted(BASE)
+
+    store.merge(_df(spark, UPDATES), "t", ["k"], partition_by=["day"])
+    assert _content(store) == UPSERTED
+    assert _snaps(store) == ["snap-00000002"]
+    assert sorted(os.listdir(store._vdir("t"))) == ["LOCK", "v00000002.json"]
+
+
+def test_kill_after_the_manifest_rename_reads_the_new_version(spark, tmp_path):
+    """The previous snapshot and manifest left beside the new ones: the
+    table reads the new version, and the next commit drops the old."""
+    root = str(tmp_path / "wh")
+    kept = TableStore(spark, root, history=True)  # commits without the cleanup
+    kept.write_full(_df(spark, BASE), "t", partition_by=["day"])
+    kept.write_full(_df(spark, UPDATES), "t", partition_by=["day"])
+    store = TableStore(spark, root)
+    assert _snaps(store) == ["snap-00000001", "snap-00000002"]
+    assert _content(store) == sorted(UPDATES)
+
+    store.merge(_df(spark, BASE), "t", ["k"], partition_by=["day"])
+    assert _content(store) == sorted(BASE + [(4, "d", "d4")])
+    assert _snaps(store) == ["snap-00000003"]
+    assert sorted(os.listdir(store._vdir("t"))) == ["LOCK", "v00000003.json"]
 
 
 def _mtimes(store, part):
-    d = os.path.join(store.path("t"), f"day={part}")
+    d = os.path.join(store._data_dir("t"), f"day={part}")
     return {f: os.stat(os.path.join(d, f)).st_mtime_ns
             for f in os.listdir(d) if f.endswith(".parquet")}
-
 
 def test_partition_scoped_commits_ignore_session_overwrite_mode(spark, tmp_path):
     key = "spark.sql.sources.partitionOverwriteMode"
@@ -182,27 +254,22 @@ READ_CASES = {
 }
 
 
-@pytest.mark.parametrize("store_cls", [TableStore, VersionedTableStore])
+@pytest.mark.parametrize("history", [False, True], ids=["TableStore", "history"])
 @pytest.mark.parametrize("case", list(READ_CASES))
-def test_read_matches_inference_without_a_job(spark, tmp_path, store_cls, case):
+def test_read_matches_inference_without_a_job(spark, tmp_path, history, case):
     """Every sink commits its schema with its files: ``store.read`` gives
     the schema and rows a schema-inferring read of the same directory
-    gives, and schedules no Spark job — for every version the versioned
-    store keeps."""
-    store = store_cls(spark, str(tmp_path / "wh"))
+    gives, and schedules no Spark job — for every version the store
+    keeps (only the current one without history)."""
+    store = TableStore(spark, str(tmp_path / "wh"), history=history)
     for step in READ_CASES[case]:
         step(store, lambda rows: _typed(spark, rows))
 
-    if store_cls is VersionedTableStore:
-        reads = {
-            v: (lambda v=v: store.read("t", version=v), store._snap_dir("t", v))
-            for v in (m["version"] for m in store.versions("t"))
-        }
-    else:
-        reads = {"current": (lambda: store.read("t"), store.path("t"))}
-    for label, (read, data_dir) in reads.items():
-        df, jobs = spark_jobs(spark, read)
-        assert jobs == [], (label, jobs)
-        inferred = spark.read.parquet(data_dir)
-        assert df.schema == inferred.schema, label
-        assert sorted(map(repr, df.collect())) == sorted(map(repr, inferred.collect())), label
+    versions = [m["version"] for m in store.versions("t")]
+    assert len(versions) == (len(READ_CASES[case]) if history else 1)
+    for v in versions:
+        df, jobs = spark_jobs(spark, lambda: store.read("t", version=v))
+        assert jobs == [], (v, jobs)
+        inferred = spark.read.parquet(store._snap_dir("t", v))
+        assert df.schema == inferred.schema, v
+        assert sorted(map(repr, df.collect())) == sorted(map(repr, inferred.collect())), v

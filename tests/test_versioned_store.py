@@ -1,5 +1,5 @@
-"""VersionedTableStore (``engine/versioned.py``): Delta-style snapshot
-semantics over parquet — the table-version behaviors the reference's Dune
+"""``TableStore(history=True)`` (``engine/materialize.py``): Delta-style
+snapshot semantics over parquet — the table-version behaviors the reference's Dune
 Delta warehouse provides natively (``fct_deepbook_margin_pool_daily.sql:5``
 ``incremental_strategy='merge'``; ``vacuum_table.sql:3`` ``RETAIN 168
 HOURS``). Pins:
@@ -7,29 +7,31 @@ HOURS``). Pins:
 - every sink commits a new version; ``read(version=N)`` / ``as_of(ts)``
   time-travel to any retained snapshot;
 - snapshot isolation: a DataFrame opened before a MERGE still collects
-  the pre-MERGE content after the MERGE commits (the plain in-place store
-  cannot do this — its files are deleted under the reader);
+  the pre-MERGE content after the MERGE commits (without history the
+  commit deletes the files under the reader);
 - partition-pruned MERGE reuses untouched partitions by hard link (same
   inode across snapshots), rewriting only the touched slice;
 - vacuum removes exactly the expired versions (never the current one)
   plus crash-orphaned snapshots, and time-travel to a vacuumed version
   raises;
-- the full model DAG builds identically on the versioned store.
+- the full model DAG builds identically with and without history;
+- the writer lock refuses a second writer and frees itself when its
+  holder dies.
 """
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
+import subprocess
+import sys
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from sample_deepbook_margin_dune_dbt_spark.engine import (
-    TableStore,
-    VersionedTableStore,
-)
+from sample_deepbook_margin_dune_dbt_spark.engine import ConcurrentWriteError, TableStore
 
 
 def _df(spark, rows, cols=("k", "v", "day")):
@@ -38,7 +40,7 @@ def _df(spark, rows, cols=("k", "v", "day")):
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    return VersionedTableStore(spark, str(tmp_path / "vwh"))
+    return TableStore(spark, str(tmp_path / "vwh"), history=True)
 
 
 def _content(df):
@@ -77,8 +79,8 @@ def test_as_of_timestamp(spark, store):
 
 def test_snapshot_isolation_read_during_merge(spark, store):
     """A reader holding the pre-MERGE version collects consistent data
-    AFTER the MERGE replaced its rows — the Delta behavior the in-place
-    store cannot emulate."""
+    AFTER the MERGE replaced its rows — the Delta behavior a store
+    without history cannot give."""
     store.write_full(_df(spark, [(1, "a", "d1"), (2, "b", "d1")]), "t")
     reader = store.read("t")  # lazy: pinned to snapshot 1's files
     store.merge(_df(spark, [(1, "MUTATED", "d1"), (9, "new", "d9")]), "t", ["k"])
@@ -172,10 +174,10 @@ def test_hard_linked_files_survive_vacuum_of_old_version(spark, store):
 
 
 def test_incremental_equivalence_with_plain_store(spark, tmp_path):
-    """N merges on the versioned store ≡ the same merges on the plain
-    store ≡ full refresh — the S6 contract is store-independent."""
+    """N merges with history ≡ the same merges without ≡ full refresh —
+    the S6 contract does not depend on what the store keeps."""
     plain = TableStore(spark, str(tmp_path / "p"))
-    vers = VersionedTableStore(spark, str(tmp_path / "v"))
+    vers = TableStore(spark, str(tmp_path / "v"), history=True)
     steps = [
         [(1, "a", "d1"), (2, "b", "d2")],
         [(2, "B", "d2"), (3, "c", "d3")],
@@ -189,8 +191,8 @@ def test_incremental_equivalence_with_plain_store(spark, tmp_path):
 
 
 def test_full_dag_builds_on_versioned_store(spark, tmp_path):
-    """The 7-model reference DAG runs unchanged on the versioned store and
-    produces the same fact table as on the plain store."""
+    """The 7-model reference DAG runs unchanged on a store with history
+    and produces the same fact table as without."""
     import datetime as dt
 
     from sample_deepbook_margin_dune_dbt_spark.engine import Runner
@@ -199,8 +201,8 @@ def test_full_dag_builds_on_versioned_store(spark, tmp_path):
 
     src = write_fixtures(str(tmp_path / "src"))
     out = {}
-    for cls, sub in ((TableStore, "p"), (VersionedTableStore, "v")):
-        store = cls(spark, str(tmp_path / sub))
+    for history, sub in ((False, "p"), (True, "v")):
+        store = TableStore(spark, str(tmp_path / sub), history=history)
         # select the deepbook DAG explicitly: under the full suite other
         # test modules have registered the corpus/events DAGs, whose
         # sources this fixture set does not provide
@@ -214,8 +216,8 @@ def test_full_dag_builds_on_versioned_store(spark, tmp_path):
 
 
 def test_cli_versioned_flag(spark, tmp_path, sf_dir):
-    """``run --versioned`` materializes through the snapshot store: the
-    table has a manifest history and time-travels across two runs."""
+    """``run --versioned`` keeps the history: the table has a manifest
+    per commit and time-travels across two runs."""
     from sample_deepbook_margin_dune_dbt_spark.__main__ import main
 
     wh = str(tmp_path / "vcli")
@@ -226,7 +228,7 @@ def test_cli_versioned_flag(spark, tmp_path, sf_dir):
     ]
     assert main(argv) == 0
     assert main(argv) == 0  # incremental no-growth rerun
-    store = VersionedTableStore(spark, wh)
+    store = TableStore(spark, wh, history=True)
     vs = store.versions("corpus_training_shards")
     assert len(vs) >= 1 and store.read("corpus_training_shards").count() > 0
 
@@ -268,13 +270,13 @@ def test_null_partition_values_survive_partitioned_merge(spark, tmp_path):
     """A NULL partition value lands in __HIVE_DEFAULT_PARTITION__; a merge
     touching that partition must carry its NON-updated keys forward
     (plain `=` partition predicates never match NULL and silently dropped
-    them — ADVICE r10). Checked on BOTH stores against a full-refresh
-    oracle."""
+    them — ADVICE r10). Checked with and without history against a
+    full-refresh oracle."""
     rows0 = [(1, "a", "d1"), (2, "b", None), (3, "c", None), (4, "d", "d2")]
     upd = [(2, "B", None), (5, "e", "d1")]
     want_df = None
-    for cls, sub in ((TableStore, "p"), (VersionedTableStore, "v")):
-        store = cls(spark, str(tmp_path / sub))
+    for history, sub in ((False, "p"), (True, "v")):
+        store = TableStore(spark, str(tmp_path / sub), history=history)
         store.write_full(_df(spark, rows0), "t", partition_by=["day"])
         store.merge(_df(spark, upd), "t", ["k"], partition_by=["day"])
         got = _content(store.read("t").select("k", "v", "day"))
@@ -282,7 +284,7 @@ def test_null_partition_values_survive_partitioned_merge(spark, tmp_path):
         assert got == [
             (1, "a", "d1"), (2, "B", None), (3, "c", None),
             (4, "d", "d2"), (5, "e", "d1"),
-        ], f"{cls.__name__}: null-partition rows lost"
+        ], f"history={history}: null-partition rows lost"
         if want_df is None:
             want_df = got
         else:
@@ -291,58 +293,54 @@ def test_null_partition_values_survive_partitioned_merge(spark, tmp_path):
 
 def test_concurrent_second_writer_fails_loudly(spark, store):
     """VERDICT r10 item 3: the single-writer contract is self-enforcing —
-    a lock held by another (live) process makes every sink raise
+    a lock held through another descriptor (another writer in this
+    process or any other) makes every sink, and vacuum, raise
     ConcurrentWriteError instead of silently orphaning a snapshot."""
-    from sample_deepbook_margin_dune_dbt_spark.engine.versioned import (
-        ConcurrentWriteError,
-    )
-
     store.write_full(_df(spark, [(1, "a", "d1")]), "t")
-    # simulate a live concurrent writer: a lock owned by THIS pid but held
-    # by a DIFFERENT store instance (instance-level re-entrancy must not
-    # bypass the file check)
-    lock = store._lock_path("t")
-    with open(lock, "w") as f:
-        f.write(f"pid={os.getpid()} ts={time.time()}")
+    fd = os.open(os.path.join(store._vdir("t"), "LOCK"), os.O_WRONLY)
+    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
     try:
-        other = VersionedTableStore(spark, store.root)
+        other = TableStore(spark, store.root, history=True)
         with pytest.raises(ConcurrentWriteError, match="locked by another writer"):
             other.write_full(_df(spark, [(2, "b", "d1")]), "t")
         with pytest.raises(ConcurrentWriteError):
             other.merge(_df(spark, [(2, "b", "d1")]), "t", ["k"])
         with pytest.raises(ConcurrentWriteError):
             other.append(_df(spark, [(2, "b", "d1")]), "t")
+        with pytest.raises(ConcurrentWriteError):
+            other.vacuum("t")
     finally:
-        os.remove(lock)
+        os.close(fd)
     # lock released → writes proceed, history is clean
     store.merge(_df(spark, [(2, "b", "d1")]), "t", ["k"])
     assert len(store.versions("t")) == 2
 
 
-def test_stale_lock_reclaimed_by_vacuum(spark, store):
-    """A lock left by a CRASHED writer (dead pid) blocks writes until
-    vacuum reclaims it; a lock with a LIVE owner survives vacuum."""
-    from sample_deepbook_margin_dune_dbt_spark.engine.versioned import (
-        ConcurrentWriteError,
-    )
-
+def test_lock_of_a_killed_writer_is_free_at_once(spark, store):
+    """A writer killed while it holds the lock (here a plain Python
+    process, SIGKILLed) leaves the lock file behind but not the lock:
+    the next write succeeds with no cleanup step."""
     store.write_full(_df(spark, [(1, "a", "d1")]), "t")
-    lock = store._lock_path("t")
-    with open(lock, "w") as f:
-        f.write("pid=999999999 ts=0")  # no such pid
-    other = VersionedTableStore(spark, store.root)
-    with pytest.raises(ConcurrentWriteError):
-        other.write_full(_df(spark, [(2, "b", "d1")]), "t")
-    store.vacuum("t")  # dead owner → reclaimed
-    assert not os.path.exists(lock)
-    other.write_full(_df(spark, [(2, "b", "d1")]), "t")
+    holder = subprocess.Popen(
+        [sys.executable, "-c",
+         "import fcntl, os, sys, time\n"
+         "fd = os.open(sys.argv[1], os.O_WRONLY)\n"
+         "fcntl.flock(fd, fcntl.LOCK_EX)\n"
+         "print('locked', flush=True)\n"
+         "time.sleep(600)\n",
+         os.path.join(store._vdir("t"), "LOCK")],
+        stdout=subprocess.PIPE, text=True,
+    )
+    try:
+        assert holder.stdout.readline().strip() == "locked"
+        with pytest.raises(ConcurrentWriteError):
+            store.merge(_df(spark, [(2, "b", "d1")]), "t", ["k"])
+    finally:
+        holder.kill()
+        holder.wait(timeout=30)
+        holder.stdout.close()
+    store.merge(_df(spark, [(2, "b", "d1")]), "t", ["k"])
     assert len(store.versions("t")) == 2
-    # live-owner lock: vacuum must NOT touch it
-    with open(lock, "w") as f:
-        f.write(f"pid={os.getpid()} ts={time.time()}")
-    store.vacuum("t")
-    assert os.path.exists(lock)
-    os.remove(lock)
 
 
 def test_crash_inside_locked_commit_releases_lock(spark, store):
@@ -352,7 +350,6 @@ def test_crash_inside_locked_commit_releases_lock(spark, store):
     bad = _df(spark, [(2, "b", "d1")]).selectExpr("k", "assert_true(k < 0) as v", "day")
     with pytest.raises(Exception):
         store.merge(bad, "t", ["k"])
-    assert not os.path.exists(store._lock_path("t"))
     store.merge(_df(spark, [(2, "b", "d1")]), "t", ["k"])
     assert len(store.versions("t")) == 2
 
@@ -372,11 +369,11 @@ def test_replace_scope_op_label(spark, store):
 def test_ref_as_of_and_version_through_model_context(spark, tmp_path):
     """VERDICT r10 item 4: time travel through the MODEL surface —
     ctx.ref(name, version=N) / ref(name, as_of=ts) read an upstream's
-    past snapshot while the current one exists; on a plain store the
+    past snapshot while the current one exists; without history the
     request fails loudly."""
     from sample_deepbook_margin_dune_dbt_spark.engine.model import ModelContext
 
-    vers = VersionedTableStore(spark, str(tmp_path / "v"))
+    vers = TableStore(spark, str(tmp_path / "v"), history=True)
     vers.write_full(_df(spark, [(1, "a", "d1")]), "up")
     t_between = time.time()
     time.sleep(0.02)
@@ -400,16 +397,15 @@ def test_ref_as_of_and_version_through_model_context(spark, tmp_path):
 
 @pytest.mark.parametrize("kind", ["plain", "versioned"])
 def test_ref_time_travel_error_names_its_cause(spark, tmp_path, kind):
-    """``ref(as_of=…)`` tells a plain store apart by its type, not by
-    catching ``TypeError``: a plain store still gets the ``--versioned``
-    hint, while a versioned store given a ``datetime`` (``as_of`` takes
-    epoch seconds) raises the store's own ``TypeError``."""
+    """``ref(as_of=…)`` tells a store without history apart by its
+    ``history`` flag, not by catching ``TypeError``: it still gets the
+    ``--versioned`` hint, while a store with history given a ``datetime``
+    (``as_of`` takes epoch seconds) raises the store's own ``TypeError``."""
     import datetime as dt
 
     from sample_deepbook_margin_dune_dbt_spark.engine.model import ModelContext
 
-    cls = TableStore if kind == "plain" else VersionedTableStore
-    st = cls(spark, str(tmp_path / kind))
+    st = TableStore(spark, str(tmp_path / kind), history=kind == "versioned")
     st.write_full(_df(spark, [(1, "a", "d1")]), "up")
 
     class _M:
@@ -433,7 +429,7 @@ def test_cli_show_as_of(spark, tmp_path, capsys):
     from sample_deepbook_margin_dune_dbt_spark.__main__ import main
 
     wh = str(tmp_path / "vwh")
-    store = VersionedTableStore(spark, wh)
+    store = TableStore(spark, wh, history=True)
     store.write_full(_df(spark, [(1, "old", "d1")]), "t")
     t_between = time.time()
     time.sleep(0.02)
@@ -447,5 +443,5 @@ def test_cli_show_as_of(spark, tmp_path, capsys):
         "--as-of", str(t_between), "--inline", q,
     ]) == 0
     assert "old" in capsys.readouterr().out
-    # plain store + --as-of: loud failure, not a silent current read
+    # --as-of without --versioned: loud failure, not a silent current read
     assert main(["show", "--warehouse", wh, "--as-of", str(t_between), "--inline", q]) == 2

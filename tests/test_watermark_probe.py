@@ -1,6 +1,6 @@
 """The high-water-mark probe contract: ``ModelContext.watermark(col)`` is
 ``max(col)`` over ``{{ this }}`` — ``None`` on a full refresh and on an
-empty target — on both stores and under a mocked unit-test context; it
+empty target — on a store with and without history, and under a mocked unit-test context; it
 runs no Spark job where the commit's metadata answers; and no model
 builder hand-rolls the probe past it."""
 
@@ -28,7 +28,6 @@ from sample_deepbook_margin_dune_dbt_spark.engine.unittests import (
     UnitTestConfig,
     run_unit_test,
 )
-from sample_deepbook_margin_dune_dbt_spark.engine.versioned import VersionedTableStore
 from tests._util import spark_jobs
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "sample_deepbook_margin_dune_dbt_spark"
@@ -36,11 +35,11 @@ SCHEMA = "ts long, d date"
 D = dt.date(2026, 1, 20)
 
 
-@pytest.mark.parametrize("store_cls", [TableStore, VersionedTableStore])
-def test_watermark_contract_on_both_stores(spark, tmp_path, store_cls):
+@pytest.mark.parametrize("history", [False, True], ids=["TableStore", "history"])
+def test_watermark_contract_on_both_stores(spark, tmp_path, history):
     """``watermark`` equals Spark's ``max`` and, wherever the commit's
     metadata can answer, schedules no Spark job."""
-    store = store_cls(spark, str(tmp_path / "wh"))
+    store = TableStore(spark, str(tmp_path / "wh"), history=history)
     cfg = ModelConfig(name="wm_target", builder=lambda ctx: None)
 
     def ctx(full_refresh=False):

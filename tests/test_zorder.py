@@ -140,7 +140,7 @@ def test_optimize_zorder_by_lays_out_both_dims(spark, tmp_path):
     )
     store.write_full(grid.repartition(16), "t")
     store.optimize("t", target_files=16, zorder_by=["x", "y"])
-    path = store.path("t")
+    path = store._data_dir("t")
     for col in ("x", "y"):
         frac = _hit_fraction(_file_stats(path, col), 8, 15)
         assert frac <= 0.5, (col, frac)
@@ -172,7 +172,7 @@ def test_optimize_zorder_normalizes_wide_ranges(spark, tmp_path):
     )
     store.write_full(grid.repartition(16), "t")
     store.optimize("t", target_files=16, zorder_by=["ts_ms", "big_id"])
-    path = store.path("t")
+    path = store._data_dir("t")
     # a 1/8 slice of each dimension's actual range must prune files
     for col, lo, hi in (
         ("ts_ms", base_ts + 8 * 3_600_000, base_ts + 15 * 3_600_000),
