@@ -18,14 +18,17 @@ Every sink (``write_full``, ``append``, ``insert_overwrite``, ``merge``,
 ``replace_scope``) is one DataFrame expression plus one commit,
 ``_commit(df, name, partition_by, op, keep)``, which writes ``df`` into the
 table's next snapshot directory, hard-links the previous files the sink
-keeps, and publishes. The snapshot also gets ``_schema.json``, the data
-schema of what the commit wrote (``tablemeta.py``): readers use it instead
-of a schema-inference job, and the high-water-mark probe answers
-``max(col)`` from it, the directory names and the parquet footers without a
-job. ``keep`` says which previous files carry over:
+keeps, and publishes. The publishing manifest is the table's one metadata
+record: it also holds the schema of what the commit wrote and its partition
+layout (``partition_by``). Reads use that schema instead of an inference
+job (a STRING partition value ``"007"`` stays ``"007"``), ``merge`` picks
+its path from the layout, and the high-water-mark probe answers
+``max(col)`` from both plus the directory names and parquet footers
+(``tablemeta.py``). ``keep`` says which previous files carry over:
 
 - ``"none"``: full rewrite (``write_full``, ``replace_scope``, and a MERGE
-  of an unpartitioned or schema-altering table);
+  of an unpartitioned or schema-altering table, or one whose declared
+  ``partition_by`` differs from the committed layout);
 - ``"untouched"``: every partition the write did not produce
   (``insert_overwrite``, and the partitioned MERGE, whose ``df`` is the
   merged slice of the touched partitions only). New data for 7 days out
@@ -33,6 +36,10 @@ job. ``keep`` says which previous files carry over:
   proportional to the incremental slice (Delta's MERGE file pruning /
   Hive's insert-overwrite of touched partitions);
 - ``"all"``: ``append``.
+
+A commit that keeps files must declare the committed layout (two layouts
+in one snapshot cannot be read) or raises ``ValueError`` before writing;
+only a full rewrite changes the layout.
 
 Only tables declaring ``partition_by`` get the slice-sized rewrite;
 unpartitioned tables take the full anti-join rewrite, which is fine for
@@ -46,19 +53,18 @@ recipe (the Dremel retrospective, VLDB 2020). Layout per table::
 
     <base>/<name>/
         _v/LOCK               # the writer lock (flock), never deleted
-        _v/v00000001.json     # commit manifests: version, ts, op, snapshot dir
-        _v/v00000002.json
+        _v/v00000001.json     # commit manifests: version, ts, op, snapshot
+        _v/v00000002.json     #  dir, schema, partition_by
         snap-00000001/        # immutable snapshot directories
-        snap-00000002/        # (parquet files / col=value partition dirs,
-                              #  _schema.json)
+        snap-00000002/        # (parquet files / col=value partition dirs)
 
 A commit writes its snapshot directory first, then renames a complete
 manifest into ``_v/``. The rename IS the commit (atomic on POSIX), so the
 table reads its old or its new version at every instant, never neither.
-Readers resolve ``_v/`` → newest manifest → snapshot directory. A failed
-commit removes its partial snapshot; a killed one leaves a snapshot that no
-manifest references, invisible to readers and removed by the next commit or
-:meth:`TableStore.vacuum`. A manifest names its snapshot relative to the
+Readers resolve ``_v/`` → newest manifest → snapshot directory and schema.
+A failed commit removes its partial snapshot; a killed one leaves a
+snapshot that no manifest references, invisible to readers and removed by
+the next commit or :meth:`TableStore.vacuum`. A manifest names its snapshot relative to the
 table directory, so a copied warehouse reads the same.
 
 ``history`` decides what a commit keeps:
@@ -106,6 +112,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import tablemeta
 from .staging import stage
@@ -265,13 +272,23 @@ class TableStore:
             for m in (self._load_manifest(name, v),)
         ]
 
-    def _snap_dir(self, name: str, version: int) -> str:
-        return os.path.join(self.path(name), self._load_manifest(name, version)["snap"])
+    def _snapshot(
+        self, name: str, version: int | None = None
+    ) -> tuple[str, StructType, list[str]] | None:
+        """``(directory, schema, partition_by)`` of ``version`` (default: the
+        current one), as its manifest records them (``None``: no table)."""
+        if version is None:
+            version = self.current_version(name)
+            if version is None:
+                return None
+        m = self._load_manifest(name, version)
+        d = os.path.join(self.path(name), m["snap"])
+        return d, StructType.fromJson(m["schema"]), m["partition_by"]
 
     def _data_dir(self, name: str) -> str | None:
         """The current snapshot directory (``None``: no table)."""
-        v = self.current_version(name)
-        return self._snap_dir(name, v) if v is not None else None
+        snap = self._snapshot(name)
+        return snap[0] if snap else None
 
     # ------------------------------------------------------------- readers
 
@@ -287,7 +304,8 @@ class TableStore:
         """Read the table at the newest version (default), at an explicit
         ``version``, or at the newest version committed at-or-before
         ``as_of_ts`` (epoch seconds) — Delta's ``VERSION AS OF`` /
-        ``TIMESTAMP AS OF``."""
+        ``TIMESTAMP AS OF``. The version's manifest supplies the schema,
+        so the read runs no schema-inference job."""
         if version is not None and as_of_ts is not None:
             raise ValueError("pass version OR as_of_ts, not both")
         if as_of_ts is not None:
@@ -309,7 +327,8 @@ class TableStore:
                 f"version {version} of {name!r} not found "
                 f"(have {self._manifests(name)} — vacuumed?)"
             )
-        return tablemeta.read(self.spark, self._snap_dir(name, version))
+        d, schema, _ = self._snapshot(name, version)
+        return self.spark.read.schema(schema).parquet(d)
 
     def as_of(self, name: str, ts: float) -> DataFrame:
         return self.read(name, as_of_ts=ts)
@@ -344,38 +363,41 @@ class TableStore:
         """Write ``df`` into the new directory ``fresh``, then hard-link the
         current files ``keep`` retains: ``"none"``, ``"untouched"`` (every
         partition the write did not produce, as Spark encoded it — never
-        re-encoded in Python) or ``"all"``. Last, record ``df``'s data
-        schema in ``fresh/_schema.json`` (:func:`.tablemeta.write_schema`),
-        so it publishes with the files it describes.
-
-        Empty-input edge: a *partitioned* write of zero rows produces no
-        files at all (no partition dirs, no schema), so a full rewrite
-        (``keep="none"``, the only commit that can create a table) of zero
-        rows is written unpartitioned — one empty, schema-bearing parquet
-        file — and the table upgrades to the partitioned layout on the
-        first non-empty full rewrite (``merge`` detects the layout on
-        disk). Under the other ``keep`` values the previous files carry
-        the schema, and an empty write changes nothing.
-        """
+        re-encoded in Python) or ``"all"``. A partitioned write of zero
+        rows leaves no data file; the manifest's schema still reads it."""
         writer = df.write.mode("overwrite")
-        if partition_by and (keep != "none" or not df.isEmpty()):
+        if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(fresh)
         if keep != "none":
             skip = tablemeta.partition_subdirs(fresh) if keep == "untouched" else set()
             _link_tree(self._data_dir(name), fresh, skip)
-        tablemeta.write_schema(fresh, df.schema)
 
     def _commit(
         self, df: DataFrame, name: str, partition_by: list[str] | None, op: str, keep: str
     ) -> None:
         """Stage ``df`` (see :meth:`_stage`) into the next snapshot dir, then
         rename a complete manifest into ``_v/`` — the atomic commit point.
+        The manifest records the layout and ``df``'s schema in the column
+        order a read returns (partition columns last, in layout order).
         The previous snapshot's files are immutable, so ``df`` may read
         them while the new snapshot is written. A failure before the
         rename removes the partial snapshot; without ``history``, the
         commit then drops every other version of the table. ``op`` labels
-        the commit in the history."""
+        the commit in the history. Unless ``keep`` is ``"none"``,
+        ``partition_by`` must be the committed layout."""
+        parts = list(partition_by or [])
+        if keep != "none":
+            committed = self.partition_cols(name)
+            if committed != parts:
+                raise ValueError(
+                    f"{op} into {name!r} declares partition_by={parts}, but the "
+                    f"table's committed layout is {committed}; only a full "
+                    "rewrite changes the layout"
+                )
+        schema = StructType(
+            [f for f in df.schema.fields if f.name not in parts] + [df.schema[c] for c in parts]
+        )
         version = (self.current_version(name) or 0) + 1
         rel = f"{_SNAP}{version:08d}"
         snap = os.path.join(self.path(name), rel)
@@ -385,7 +407,10 @@ class TableStore:
                 shutil.rmtree(snap)
             self._stage(df, snap, name, partition_by, keep)
             with open(tmp, "w") as f:
-                json.dump({"version": version, "ts": time.time(), "op": op, "snap": rel}, f)
+                json.dump({
+                    "version": version, "ts": time.time(), "op": op, "snap": rel,
+                    "schema": schema.jsonValue(), "partition_by": parts,
+                }, f)
                 f.flush()
                 os.fsync(f.fileno())
             os.rename(tmp, self._manifest_path(name, version))
@@ -471,12 +496,13 @@ class TableStore:
         several rows for one key, all are kept (same as the reference, whose
         MERGE sources are already key-unique by construction).
 
-        A table with partition dirs on disk merges partition-pruned: the
-        (small) set of partitions the slice touches — bounded by the
-        lookback window, never by table size — is collected, only those
-        partitions of the target are read and merged, and the commit
-        keeps every other partition's files as they are. Any other table
-        is rewritten in full.
+        A merge whose ``partition_by`` is the table's committed layout
+        merges partition-pruned: the (small) set of partitions the slice
+        touches — bounded by the lookback window, never by table size — is
+        collected, only those partitions of the target are read and
+        merged, and the commit keeps every other partition's files as they
+        are. Any other merge rewrites the table in full, in the declared
+        layout: an unpartitioned table or a changed ``partition_by``.
 
         ``on_schema_change`` mirrors dbt's contract for schema drift:
         ``'ignore'`` (default, the reference's effective setting) drops
@@ -530,7 +556,7 @@ class TableStore:
             )
             altering = widen or bool(gone_cols)
 
-            if partition_by and self.partition_cols(name) and not altering:
+            if partition_by and list(partition_by) == self.partition_cols(name) and not altering:
                 with stage(updates) as updates:
                     touched = updates.select(*partition_by).distinct().collect()
                     if touched:
@@ -542,9 +568,8 @@ class TableStore:
                         self._commit(merged, name, partition_by, "merge", "untouched")
                 return
 
-            # unpartitioned layout (incl. a table created empty that now
-            # receives its first real rows) or a schema-altering merge:
-            # full rewrite, upgrading to the partitioned layout when declared
+            # unpartitioned, a changed layout, or a schema-altering
+            # merge: full rewrite in the declared layout
             if gone_cols:
                 old = old.drop(*gone_cols)
             if widen:
@@ -624,13 +649,17 @@ class TableStore:
         return total
 
     def partition_cols(self, name: str) -> list[str]:
-        """Partition columns inferred from the on-disk ``col=value`` layout."""
-        return tablemeta.partition_columns(self._data_dir(name))
+        """The partition layout the current version was committed with
+        (``[]``: unpartitioned or no table)."""
+        snap = self._snapshot(name)
+        return snap[2] if snap else []
 
     def column_max(self, name: str, column: str):
-        """``max(column)`` of the current version from its metadata, or
-        :data:`~.tablemeta.NO_STATS` (see :func:`.tablemeta.column_max`)."""
-        return tablemeta.column_max(self.spark, self._data_dir(name), column)
+        """``max(column)`` of the current version from its manifest and
+        files, or :data:`~.tablemeta.NO_STATS` (see
+        :func:`.tablemeta.column_max`)."""
+        snap = self._snapshot(name)
+        return tablemeta.column_max(*snap, column) if snap else tablemeta.NO_STATS
 
     def optimize(
         self,

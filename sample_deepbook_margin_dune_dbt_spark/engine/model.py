@@ -37,6 +37,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.catalog import SourceCatalog
 from .materialize import TableStore
 from .tablemeta import NO_STATS
 
@@ -334,19 +335,9 @@ class ModelContext:
     # --------------------------------------------------------------- dbt-isms
 
     def source(self, database: str, table: str) -> DataFrame:
-        key = f"{database}.{table}"
-        if key not in self._sources:
-            raise KeyError(f"source {key!r} not registered (have: {sorted(self._sources)})")
-        spec = self._sources[key]
-        if isinstance(spec, str):  # plain parquet path (the common case)
-            return self.spark.read.parquet(spec)
-        # SourceCatalog-style spec: {"path", "format", "schema", "options"}
-        reader = self.spark.read.format(spec.get("format", "parquet")).options(
-            **spec.get("options", {})
-        )
-        if spec.get("schema"):
-            reader = reader.schema(spec["schema"])
-        return reader.load(spec["path"])
+        """dbt ``source()``: the registered path or spec, read by
+        :meth:`SourceCatalog.read`."""
+        return SourceCatalog(self._sources).read(self.spark, database, table)
 
     def ref(
         self,
@@ -413,13 +404,13 @@ class ModelContext:
 
         ``None`` on a non-incremental run or when the target holds no
         non-null value, so a builder filters its input only when there is
-        a mark. The store answers from the metadata its commit wrote
-        (:meth:`TableStore.column_max`): the directory values of a
-        partition column, the parquet footer statistics of an integral or
-        date column — no Spark job. Any other column, or a table committed
-        without ``_schema.json``, takes one aggregate job that scans the
-        column: Spark pushes aggregates down only into V2 sources, and
-        ``spark.read.parquet`` is V1.
+        a mark. The store answers from its commit manifest, which records
+        the schema and the partition layout (:meth:`TableStore.column_max`):
+        the directory values of a partition column, the parquet footer
+        statistics of an integral or date column — no Spark job. Any other
+        column takes one aggregate job that scans the column: Spark pushes
+        aggregates down only into V2 sources, and ``spark.read.parquet`` is
+        V1.
         """
         if not self.is_incremental():
             return None

@@ -353,10 +353,11 @@ class Runner:
         feed is the stalest possible feed). The probe is one scalar MAX
         per source, which scans the whole column: a parquet source is a
         V1 source and Spark pushes aggregates down only into V2 sources.
-        Sources are not committed by the store, so they carry none of the
-        metadata the watermark probe answers from (``tablemeta.py``). The
-        clock is the context's UTC ``now_dt()`` (the runner's injectable
-        ``fixed_now`` when set, so tests are deterministic).
+        Sources are not committed by the store, so they have no commit
+        manifest (schema, partition layout) for the watermark probe's
+        metadata answer (``tablemeta.py``) to read. The clock is the
+        context's UTC ``now_dt()`` (the runner's injectable ``fixed_now``
+        when set, so tests are deterministic).
         """
         from pyspark.sql import functions as F
 

@@ -1,33 +1,26 @@
-"""Table metadata read from the files a store commit wrote, without Spark jobs.
+"""``max(col)`` of a committed table read from its files, without a Spark job.
 
-A plain ``spark.read.parquet(dir)`` runs a Spark job to infer the schema
-from a footer, and ``max(col)`` over it scans the column: Spark pushes
-aggregates down only into V2 sources, and the parquet reader is V1. Both
-answers are already on disk beside the data, so the store reads them on the
-driver instead (the Dremel retrospective's split of metadata from immutable
-storage; Delta keeps the same facts in its log):
+``max(col)`` over ``spark.read.parquet(dir)`` scans the column: Spark pushes
+aggregates down only into V2 sources, and the parquet reader is V1. For the
+types whose order and decoding are exact, the answer is already on disk
+beside the data, so the store reads it on the driver instead (the Dremel
+retrospective's split of metadata from immutable storage; Delta keeps the
+same facts in its log):
 
-- ``_schema.json``: every commit writes the data schema of what it wrote —
-  the partition columns of the directory layout left out, so Spark still
-  infers their types from the directory names — into the fresh directory,
-  which commits atomically with the files (:func:`write_schema`);
-- the partition values are the ``col=value`` directory names;
+- a partition column's values are the ``col=value`` directory names;
 - each parquet footer holds per-row-group min/max statistics.
 
-A directory without ``_schema.json`` (written before the store recorded
-it, or by hand) has no metadata here: readers fall back to inference and
-``column_max`` to the scan. Spark's file listing skips names that start
-with ``_``, so the sidecar is never read as data.
+Which columns are partition columns, and every column's type, come from the
+commit manifest (``TableStore``'s ``_v/v<N>.json``), which records the
+schema and the partition layout of what the commit wrote.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import json
 import os
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ByteType,
     DataType,
@@ -39,7 +32,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-SCHEMA_FILE = "_schema.json"
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 # Footer min/max and directory values give Spark's max() only for types
 # whose order and decoding are exact: no NaN (Spark sorts it above every
@@ -66,38 +58,6 @@ def partition_subdirs(d: str) -> set[str]:
             if rel != ".":
                 out.add(rel)
     return out
-
-
-def partition_columns(d: str | None) -> list[str]:
-    """Partition columns of the on-disk ``col=value`` layout under ``d``."""
-    cols: list[str] = []
-    p = d
-    while p and os.path.isdir(p):
-        subs = [f for f in os.listdir(p) if "=" in f and os.path.isdir(os.path.join(p, f))]
-        if not subs:
-            break
-        cols.append(subs[0].split("=")[0])
-        p = os.path.join(p, subs[0])
-    return cols
-
-
-def write_schema(d: str, schema: StructType) -> None:
-    """Record ``schema`` minus the partition columns of ``d``'s layout."""
-    parts = set(partition_columns(d))
-    data = StructType([f for f in schema.fields if f.name not in parts])
-    with open(os.path.join(d, SCHEMA_FILE), "w") as f:
-        json.dump(data.jsonValue(), f)
-
-
-def read_schema(d: str | None) -> StructType | None:
-    """The data schema recorded in ``d`` (``None``: no sidecar)."""
-    if d is None:
-        return None
-    try:
-        with open(os.path.join(d, SCHEMA_FILE)) as f:
-            return StructType.fromJson(json.load(f))
-    except (FileNotFoundError, NotADirectoryError):
-        return None
 
 
 def _footer_max(d: str, field: StructField):
@@ -136,7 +96,7 @@ def _footer_max(d: str, field: StructField):
 
 
 def _partition_max(d: str, column: str, dtype: DataType):
-    """Max of ``column``'s directory values, typed as Spark infers ``dtype``."""
+    """Max of ``column``'s directory values, parsed as Spark casts them to ``dtype``."""
     if isinstance(dtype, _INTEGRAL):
         parse = int
     elif isinstance(dtype, DateType):
@@ -155,27 +115,16 @@ def _partition_max(d: str, column: str, dtype: DataType):
         return NO_STATS
 
 
-def read(spark: SparkSession, d: str) -> DataFrame:
-    """The parquet table under ``d``, read with its recorded schema when it
-    has one (no inference job) and by inference otherwise."""
-    schema = read_schema(d)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(d)
-
-
-def column_max(spark: SparkSession, d: str | None, column: str):
+def column_max(d: str, schema: StructType, partition_by: list[str], column: str):
     """``max(column)`` over the table files under ``d`` from metadata alone:
     the directory values for a partition column, the footer statistics for
-    an integral or date data column. ``None`` when no row holds a value;
-    :data:`NO_STATS` when metadata cannot answer (no sidecar, another type,
-    a row group without statistics). Runs no Spark job: the partition
-    column's type comes from the read schema, which only lists files.
+    an integral or date data column. ``schema`` and ``partition_by`` are
+    the commit's record. ``None`` when no row holds a value;
+    :data:`NO_STATS` when metadata cannot answer (another type, a row group
+    without statistics).
     """
-    schema = read_schema(d)
-    if schema is None:
+    if column not in schema.names:
         return NO_STATS
-    if column in schema.names:
-        return _footer_max(d, schema[column])
-    if column in partition_columns(d):
-        return _partition_max(d, column, read(spark, d).schema[column].dataType)
-    return NO_STATS
+    if column in partition_by:
+        return _partition_max(d, column, schema[column].dataType)
+    return _footer_max(d, schema[column])

@@ -47,7 +47,10 @@ class SourceCatalog:
         return self
 
     def _spec(self, database: str, table: str) -> dict:
-        raw = self._mapping[f"{database}.{table}"]
+        key = f"{database}.{table}"
+        if key not in self._mapping:
+            raise KeyError(f"source {key!r} not registered (have: {sorted(self._mapping)})")
+        raw = self._mapping[key]
         if isinstance(raw, str):
             return {"path": raw, "format": "parquet", "schema": None, "options": {}}
         return {"schema": None, "options": {}, "format": "parquet", **raw}

@@ -20,9 +20,12 @@ The next test pins that the store neither trusts nor mutates the session's
 ``spark.sql.sources.partitionOverwriteMode``: under Spark's own STATIC
 default a partition-scoped commit still keeps every untouched partition.
 
-The last one pins, with and without history, that every sink commits the
-schema of what it wrote (``_schema.json``), so ``store.read`` equals a
-schema-inferring read of the same directory without running a job.
+Then the manifest as the table's one metadata record: with and without
+history, every sink commits the schema and the partition layout of what it
+wrote, and ``store.read`` returns that schema, partition columns typed as
+written, without running a job; a merge may change the layout (it rewrites
+in full), a commit that keeps files may not; and a partitioned full rewrite
+schedules no job beyond Spark's own write.
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from sample_deepbook_margin_dune_dbt_spark.engine import TableStore
 from tests._util import spark_jobs
@@ -201,16 +205,21 @@ def test_partition_scoped_commits_ignore_session_overwrite_mode(spark, tmp_path)
 
 # ---------------------------------------------------------------- reads
 
-READ_SCHEMA = "k INT, v STRING, ts TIMESTAMP, tags ARRAY<STRUCT<t: STRING>>, p BIGINT"
+READ_SCHEMA = (
+    "k INT, v STRING, ts TIMESTAMP, tags ARRAY<STRUCT<t: STRING>>, p BIGINT, s STRING"
+)
 
 
 def _typed(spark, rows):
-    """``(k, v, p)`` triples as rows of ``READ_SCHEMA``. ``p`` is the
-    partition column where a case declares one: a BIGINT whose small
-    values Spark infers back from the directory names as INT, so a read
-    that took the partition type from the written schema would differ."""
+    """``(k, v, p)`` triples as rows of ``READ_SCHEMA``, with ``s`` the
+    zero-padded string ``"007"``, ``"010"``, ... of ``3k + 4``. ``p`` and
+    ``s`` are the partition columns where a case declares them: Spark
+    would infer both back from the directory names as INT (BIGINT ``1``
+    as INT, STRING ``"007"`` as INT ``7``), so only a read that takes
+    their types from the committed schema gives back what was written."""
     return spark.createDataFrame(
-        [(k, v, dt.datetime(2026, 1, k), [(v,)], p) for k, v, p in rows], READ_SCHEMA
+        [(k, v, dt.datetime(2026, 1, k), [(v,)], p, f"{3 * k + 4:03d}") for k, v, p in rows],
+        READ_SCHEMA,
     )
 
 
@@ -222,6 +231,11 @@ READ_CASES = {
     "write_full": [lambda s, df: s.write_full(df(TYPED_BASE), "t")],
     "write_full_partitioned": [lambda s, df: s.write_full(df(TYPED_BASE), "t", P)],
     "write_full_empty_partitioned": [lambda s, df: s.write_full(df([]), "t", P)],
+    "write_full_string_partitioned": [lambda s, df: s.write_full(df(TYPED_BASE), "t", ["s"])],
+    "merge_bigint_string_partitioned": [
+        lambda s, df: s.write_full(df(TYPED_BASE), "t", ["p", "s"]),
+        lambda s, df: s.merge(df(TYPED_UPDATES), "t", ["k"], partition_by=["p", "s"]),
+    ],
     "merge_partitioned": [
         lambda s, df: s.write_full(df(TYPED_BASE), "t", P),
         lambda s, df: s.merge(df(TYPED_UPDATES), "t", ["k"], partition_by=P),
@@ -254,22 +268,94 @@ READ_CASES = {
 }
 
 
+def _reference(spark, snap, schema, partition_by):
+    """The rows under ``snap`` with every partition value read as its raw
+    directory string, then cast to its ``schema`` type."""
+    raw = StructType(
+        [StructField(f.name, StringType()) if f.name in partition_by else f for f in schema]
+    )
+    return spark.read.schema(raw).parquet(snap).select(
+        *[F.col(f.name).cast(f.dataType) for f in schema]
+    )
+
+
 @pytest.mark.parametrize("history", [False, True], ids=["TableStore", "history"])
 @pytest.mark.parametrize("case", list(READ_CASES))
 def test_read_matches_inference_without_a_job(spark, tmp_path, history, case):
-    """Every sink commits its schema with its files: ``store.read`` gives
-    the schema and rows a schema-inferring read of the same directory
-    gives, and schedules no Spark job — for every version the store
-    keeps (only the current one without history)."""
+    """Every sink commits its schema and partition layout in its manifest:
+    ``store.read`` gives the committed schema, in which every column of
+    ``READ_SCHEMA`` keeps its written type (partition columns too), and
+    the rows of the files with the partition values cast to those types,
+    and it schedules no Spark job — for every version the store keeps
+    (only the current one without history)."""
     store = TableStore(spark, str(tmp_path / "wh"), history=history)
     for step in READ_CASES[case]:
         step(store, lambda rows: _typed(spark, rows))
 
+    written = _typed(spark, []).schema
     versions = [m["version"] for m in store.versions("t")]
     assert len(versions) == (len(READ_CASES[case]) if history else 1)
     for v in versions:
         df, jobs = spark_jobs(spark, lambda: store.read("t", version=v))
         assert jobs == [], (v, jobs)
-        inferred = spark.read.parquet(store._snap_dir("t", v))
-        assert df.schema == inferred.schema, v
-        assert sorted(map(repr, df.collect())) == sorted(map(repr, inferred.collect())), v
+        assert [df.schema[f.name].dataType for f in written] == [
+            f.dataType for f in written
+        ], v
+        snap, committed, partition_by = store._snapshot("t", v)
+        assert df.schema == committed, v
+        ref = _reference(spark, snap, committed, partition_by)
+        assert sorted(map(repr, df.collect())) == sorted(map(repr, ref.collect())), v
+
+
+def test_merge_with_a_changed_partition_by_rewrites_in_its_layout(spark, tmp_path):
+    """A merge declaring another layout than the committed one rewrites the
+    table in full in the declared layout: it stays readable, upserts, and
+    records the new layout — to another column, and to none."""
+    store = _base_store(spark, tmp_path, ["day"])
+    store.merge(_df(spark, UPDATES), "t", ["k"], partition_by=["v"])
+    assert _content(store) == UPSERTED
+    assert store.partition_cols("t") == ["v"]
+    assert sorted(f for f in os.listdir(store._data_dir("t")) if "=" in f) == [
+        "v=B", "v=a", "v=c", "v=d"
+    ]
+
+    store.merge(_df(spark, [(5, "e", "d5")]), "t", ["k"])
+    assert _content(store) == UPSERTED + [(5, "e", "d5")]
+    assert store.partition_cols("t") == []
+    assert not [f for f in os.listdir(store._data_dir("t")) if "=" in f]
+
+
+@pytest.mark.parametrize(
+    "layout, sink, declared",
+    [
+        (["day"], "append", None),
+        (["day"], "append", ["v"]),
+        (["day"], "insert_overwrite", ["v"]),
+        (None, "append", ["day"]),
+    ],
+    ids=["append-missing", "append-other", "insert_overwrite-other", "append-unpartitioned"],
+)
+def test_commit_keeping_files_in_another_layout_raises(spark, tmp_path, layout, sink, declared):
+    """``append`` and ``insert_overwrite`` keep the committed files, so they
+    must declare the committed layout: any other raises ``ValueError``
+    before writing, and the table reads as it was."""
+    store = _base_store(spark, tmp_path, layout)
+    before, snaps = _content(store), _snaps(store)
+    with pytest.raises(ValueError, match="partition_by"):
+        getattr(store, sink)(_df(spark, UPDATES), "t", declared)
+    assert _content(store) == before and _snaps(store) == snaps
+    assert store.partition_cols("t") == (layout or [])
+    assert sorted(os.listdir(store._vdir("t"))) == ["LOCK", "v00000001.json"]
+
+
+def test_partitioned_write_full_adds_no_spark_job(spark, tmp_path):
+    """A partitioned full rewrite of a sorted frame schedules no job beyond
+    what Spark's own partitioned write of the same frame schedules."""
+    df = spark.range(0, 200).selectExpr("id", "CAST(id % 5 AS STRING) AS day").orderBy("day")
+    store = TableStore(spark, str(tmp_path / "wh"))
+    _, committed = spark_jobs(spark, store.write_full, df, "t", partition_by=["day"])
+    _, plain = spark_jobs(
+        spark, lambda: df.write.partitionBy("day").parquet(str(tmp_path / "plain"))
+    )
+    assert store.read("t").count() == 200
+    assert len(committed) <= len(plain), (committed, plain)

@@ -99,7 +99,7 @@ def test_partitioned_merge_hard_links_untouched_partitions(spark, store):
     assert _content(store.read("t", version=1)) == _content(base)
 
     def _inodes(version, part):
-        snap = store._snap_dir("t", version)
+        snap, _, _ = store._snapshot("t", version)
         d = os.path.join(snap, f"day={part}")
         return {os.stat(os.path.join(d, f)).st_ino
                 for f in os.listdir(d) if f.endswith(".parquet")}

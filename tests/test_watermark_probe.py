@@ -107,10 +107,6 @@ def test_watermark_contract_on_both_stores(spark, tmp_path, history):
     )
     assert probe("ts", jobs=True) == 11 and probe("d") == D
 
-    # a table committed without _schema.json: every probe falls back
-    os.remove(os.path.join(store._data_dir("wm_target"), "_schema.json"))
-    assert probe("ts", jobs=True) == 11 and probe("d", jobs=True) == D
-
 
 def test_watermark_contract_under_a_mocked_unit_test(spark):
     """The unit-test context serves ``this`` from a mock; the probe reads
